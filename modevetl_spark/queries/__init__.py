@@ -589,9 +589,9 @@ def prep(spark: SparkSession) -> SparkSession:
     # Newer testdata drops isAdjustedToUTC on its µs parquet timestamps,
     # which Spark 4 would otherwise surface as TIMESTAMP_NTZ; the engine
     # (and the DuckDB oracle) works in session-UTC TIMESTAMP everywhere.
-    # Session-level config belongs here, not in the per-table loader;
-    # catalog._normalize_ts stays as the per-read safety net for sessions
-    # that skip prep.
+    # Catalog tables are read with their declared schema (catalog.SCHEMAS)
+    # and never infer; this pin covers the reads that do, e.g. of sinks
+    # and state directories.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     _ship_package(spark)
     return spark

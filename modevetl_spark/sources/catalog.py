@@ -5,6 +5,13 @@ the table; here the table is a parquet path. The scan is declarative
 (``spark.read.parquet``) so Catalyst gets predicate pushdown + column
 pruning for free — the Spark-native equivalent of the reference pushing
 ``fields``/filters into the ES query DSL (SURVEY.md §4).
+
+Every table's schema is declared once in ``SCHEMAS``, so a read launches no
+Spark job to infer it from the file footer. Timestamps are declared
+``TIMESTAMP_LTZ`` (session-UTC, as the engine and the DuckDB oracle work),
+spelled out so a session's ``spark.sql.timestampType`` cannot turn them
+into NTZ. tests/test_testdata_canary.py checks every declaration against
+the files at every SF.
 """
 
 from __future__ import annotations
@@ -13,58 +20,37 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": "c_custkey BIGINT, c_name STRING, c_nationkey INT, "
+    "c_acctbal DOUBLE, c_mktsegment STRING",
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, "
+    "s_acctbal DOUBLE",
+    "part": "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+    "p_size INT, p_retailprice DOUBLE",
+    "orders": "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+    "o_totalprice DOUBLE, o_orderdate TIMESTAMP_LTZ, o_orderpriority STRING",
+    "lineitem": "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, "
+    "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, "
+    "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, "
+    "l_linestatus STRING, l_shipdate TIMESTAMP_LTZ",
+    "events": "event_id BIGINT, ts TIMESTAMP_LTZ, user_id BIGINT, "
+    "event_type STRING, value DOUBLE, props STRING",
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, "
+    "n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+TABLES = tuple(SCHEMAS)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    if table not in TABLES:
+    if table not in SCHEMAS:
         raise KeyError(f"unknown table {table!r}; known: {TABLES}")
-    if table == "events":
-        return _normalize_ts(_load_events(spark, sf_dir))
-    return _normalize_ts(spark.read.parquet(f"{sf_dir}/{table}.parquet"))
-
-
-def _normalize_ts(df: DataFrame) -> DataFrame:
-    """Cast any TIMESTAMP_NTZ column to TIMESTAMP (value-preserving under
-    the UTC session timezone) so downstream `unix_micros`/`window`/interval
-    arithmetic sees one timestamp flavor regardless of how the parquet
-    writer flagged its timestamps."""
-    from pyspark.sql import functions as F
-
-    ntz = [c for c, t in df.dtypes if t == "timestamp_ntz"]
-    if not ntz:
-        return df
-    return df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})
-
-
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Historical testdata wrote events.ts as TIMESTAMP(NANOS), which
-    Spark 4 refuses to read as a timestamp ([PARQUET_TYPE_ILLEGAL]); read
-    nanos as long and truncate to a µs timestamp with *integer* division
-    (a double division at ~1.7e18 ns would lose µs precision past 2^53).
-    DuckDB's ``CAST(ts AS TIMESTAMP)`` truncates identically in oracle
-    SQL. Current testdata is already µs; the shim is then a no-op.
-    """
-    from pyspark.sql import functions as F
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return spark.read.schema(SCHEMAS[table]).parquet(f"{sf_dir}/{table}.parquet")
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -16,28 +16,19 @@ from pyspark.sql import functions as F
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events as an unbounded source. Parquet streaming source needs an
-    explicit schema; reuse the batch reader's (post ns->us conversion the
-    stream sees the same µs timestamps)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Pin NTZ inference off BEFORE deriving the schema: the current
-    # testdata's µs timestamps carry no isAdjustedToUTC flag, and a
-    # TIMESTAMP_NTZ event-time column is rejected by withWatermark
-    # ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE]). Without this, the stream
-    # only worked if some earlier caller had already run queries.prep()
-    # on the session — an order dependence, not a contract.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    """events as an unbounded source. The parquet streaming source needs an
+    explicit schema; it takes the catalog's declared one, so the stream
+    sees the same session-UTC TIMESTAMP event time as a batch read (a
+    TIMESTAMP_NTZ column would be rejected by withWatermark)."""
+    from modevetl_spark.sources.catalog import SCHEMAS
+
     # the file-stream source requires a directory; glob-filter to the one
     # table file inside the sf dir
-    stream = (
-        spark.readStream.schema(raw_schema)
+    return (
+        spark.readStream.schema(SCHEMAS["events"])
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream
 
 
 def tumbling_counts(stream: DataFrame, watermark_delay: str = "1 hour") -> DataFrame:

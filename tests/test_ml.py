@@ -246,39 +246,46 @@ def test_dec_fold_sum_stepwise_semantics_vs_duckdb_mirror(spark):
 def test_range_search_oracle_replays_stepwise_fold(spark, tmp_path):
     """The r14 boundary differential the verdict asked for: a crafted
     2-vector fixture where the engine's stepwise dot fold lands exactly
-    on a .5 tail at 11dp, so the cosine ROUNDs to 0.624691 while an
-    exact-SUM dot (the r13 oracle pairing) yields 0.624690 — the r13
-    oracle FAILS on it, the r14 stepwise oracle MATCHES. Construction:
-    v_a = [1, 0] (norm folds to exactly 1), v_b = [0.312345249995, b2]
-    with b2 chosen so v_b's norm folds to exactly 0.25 (sqrt = 0.5
-    exact), making cosine = 2 · dot with dot = fold(0.312345249995) =
-    0.31234525000 stepwise vs 0.312345249995 exact."""
-    import math
+    on a .5 tail at 11dp, so the cosine ROUNDs to 0.312698 while an
+    exact-SUM dot (the earlier oracle pairing) yields 0.312697 — that
+    oracle FAILS on it, the stepwise oracle MATCHES. Construction,
+    in float32 (the catalog's ``embedding ARRAY<FLOAT>``): v_a =
+    [1, 0, 0] (norm folds to exactly 1), v_b = [b1, b2, b3] with b1 the
+    float32 whose 12dp rounding is 0.156348749995, and b2, b3 chosen so
+    v_b's norm folds to exactly 0.25 (sqrt = 0.5 exact), making cosine =
+    2 · dot with dot = fold(0.156348749995) = 0.15634875000 stepwise vs
+    0.156348749995 exact."""
     from decimal import ROUND_HALF_UP, Decimal
 
     import duckdb
+    import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from modevetl_spark.queries import all_oracle
 
-    b1 = 0.312345249995
-    t1 = Decimal(repr(b1 * b1)).quantize(
-        Decimal("1E-12"), rounding=ROUND_HALF_UP
-    )
-    s1 = t1.quantize(Decimal("1E-11"), rounding=ROUND_HALF_UP)
-    t2 = Decimal("0.25") - s1
-    b2 = math.sqrt(float(t2))
-    assert Decimal(repr(b2 * b2)).quantize(
-        Decimal("1E-12"), rounding=ROUND_HALF_UP
-    ) == t2, "fixture construction drifted — pick a new b1"
+    b1, b2, b3 = 0.15634874999523163, 0.47476109862327576, 0.012528670951724052
+
+    def q(x, places):
+        return x.quantize(Decimal(places), rounding=ROUND_HALF_UP)
+
+    def fold(terms):  # dec_fold_sum: HALF_UP at 11dp after every add
+        acc = Decimal(0)
+        for t in terms:
+            acc = q(acc + t, "1E-11")
+        return acc
+
+    assert all(float(np.float32(b)) == b for b in (b1, b2, b3))
+    assert q(Decimal(repr(b1)), "1E-12") == Decimal("0.156348749995")
+    norm = fold(q(Decimal(repr(b * b)), "1E-12") for b in (b1, b2, b3))
+    assert norm == Decimal("0.25"), "fixture construction drifted"
 
     pq.write_table(
         pa.table(
             {
                 "vec_id": pa.array([0, 1], type=pa.int64()),
                 "embedding": pa.array(
-                    [[1.0, 0.0], [b1, b2]], type=pa.list_(pa.float64())
+                    [[1.0, 0.0, 0.0], [b1, b2, b3]], type=pa.list_(pa.float32())
                 ),
                 "label": pa.array([7, 7], type=pa.int32()),
             }
@@ -289,7 +296,7 @@ def test_range_search_oracle_replays_stepwise_fold(spark, tmp_path):
     assert len(got) == 1
     row = got[0]
     assert (row.a_id, row.b_id, row.label) == (0, 1, 7)
-    assert row.cosine == 0.624691, row  # the stepwise value
+    assert row.cosine == 0.312698, row  # the stepwise value
 
     con = duckdb.connect()
     con.execute(
@@ -297,7 +304,7 @@ def test_range_search_oracle_replays_stepwise_fold(spark, tmp_path):
         f"read_parquet('{tmp_path}/embeddings.parquet')"
     )
     new_oracle = con.execute(all_oracle()["q_sim_range_search"]).fetchall()
-    assert new_oracle == [(0, 1, 7, 0.624691)], new_oracle
+    assert new_oracle == [(0, 1, 7, 0.312698)], new_oracle
 
     # the r13 pairing (exact SUM in place of the fold) fails here: the
     # witness that the fragility was real, kept as the regression guard
@@ -327,7 +334,7 @@ pairs AS (
 SELECT ROUND(dot / (sqrt(na) * sqrt(nb)), 6) AS cosine FROM pairs
 """
     ).fetchall()
-    assert old_oracle == [(0.62469,)], old_oracle  # differs from the engine
+    assert old_oracle == [(0.312697,)], old_oracle  # differs from the engine
 
 
 def test_range_search_threshold_contract(spark, sf_dir):

@@ -322,7 +322,7 @@ def test_linkage_weights_differential(spark, tmp_path_factory, rows):
             "c_mktsegment": [s for _, s, _ in rows],
             "c_acctbal": [float(b) for _, _, b in rows],
         }
-    ).to_parquet(str(tmp / "customer.parquet"))
+    ).astype({"c_nationkey": "int32"}).to_parquet(str(tmp / "customer.parquet"))
 
     recs = {
         i + 1: (n, s, b * 100 + _LINK_SHIFT)

@@ -2,20 +2,24 @@
 
 The driver regenerated /root/testdata between rounds 3 and 4, silently
 flipping events.ts from TIMESTAMP(NANOS) to µs-without-UTC-flag
-(TIMESTAMP_NTZ to Spark 4) — which broke every event-time query until
-the catalog normalization landed. These tests pin the *post-load*
-contract so any future physical-format drift fails loudly here instead
-of as a cryptic analysis error deep in a query.
+(TIMESTAMP_NTZ to Spark 4) — which broke every event-time query. These
+tests pin the *post-load* contract, and check every schema the catalog
+declares against the files' own, so any future physical-format drift
+fails loudly here instead of being misread or failing as a cryptic
+analysis error deep in a query.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+
 import pytest
 
-from modevetl_spark.sources.catalog import TABLES, load
+from modevetl_spark.sources.catalog import SCHEMAS, TABLES, load
 
-# The dtypes every query in the registry is written against (after
-# catalog.load normalization, regardless of the parquet writer's
+# The dtypes every query in the registry is written against (as
+# catalog.load returns them, regardless of the parquet writer's
 # timestamp flavor or physical int widths for these columns).
 _EXPECTED = {
     "events": {
@@ -65,13 +69,44 @@ def test_loaded_dtypes_stable(spark, sf_dir, table):
         assert col in got, f"{table}.{col} vanished from testdata"
         assert got[col] == want, (
             f"{table}.{col}: loaded as {got[col]}, queries expect {want} — "
-            f"testdata format changed; extend catalog normalization"
+            f"testdata format changed; update catalog.SCHEMAS"
         )
 
 
 def test_no_ntz_survives_load(spark, sf_dir):
     """TIMESTAMP_NTZ must never escape catalog.load — downstream
-    unix_micros/window/interval arithmetic rejects it."""
-    for t in TABLES:
-        bad = [c for c, ty in load(spark, sf_dir, t).dtypes if "ntz" in ty]
-        assert not bad, f"{t}: NTZ columns leaked through load(): {bad}"
+    unix_micros/window/interval arithmetic rejects it — not even on a
+    session whose default timestamp type is NTZ."""
+    try:
+        for ts_type in ("TIMESTAMP_LTZ", "TIMESTAMP_NTZ"):
+            spark.conf.set("spark.sql.timestampType", ts_type)
+            for t in TABLES:
+                got = load(spark, sf_dir, t).dtypes
+                bad = [c for c, ty in got if "ntz" in ty]
+                assert not bad, (
+                    f"{t}: NTZ columns leaked through load() under {ts_type}: {bad}"
+                )
+    finally:
+        spark.conf.unset("spark.sql.timestampType")
+
+
+@pytest.mark.parametrize("table", TABLES)
+def test_declared_schema_matches_files(spark, sf_dir, table):
+    """Drift guard: catalog.load reads with the declared schema and never
+    looks at the file footer, so a regenerated table whose schema moved
+    would be misread silently. Compare the declared read against Spark's
+    own inference (on a prep()-ed session, as every query runs) in the
+    test SF directory and every ``sf*`` directory beside it."""
+    from modevetl_spark.queries import prep
+
+    prep(spark)
+    siblings = glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*"))
+    for d in sorted({sf_dir, *siblings}):
+        path = f"{d}/{table}.parquet"
+        declared = spark.read.schema(SCHEMAS[table]).parquet(path).schema
+        inferred = spark.read.parquet(path).schema
+        assert declared == inferred, (
+            f"{table} at {os.path.basename(d)}: declared "
+            f"{declared.simpleString()}, files hold {inferred.simpleString()} "
+            f"— update catalog.SCHEMAS"
+        )

@@ -307,7 +307,7 @@ class TestLinkageWeights:
                 "c_mktsegment": ["A", "A", "B", "B", "A", "B"],
                 "c_acctbal": [1.00, 2.00, 101.00, 102.00, 500.00, 500.00],
             }
-        ).to_parquet(str(tmp_path / "customer.parquet"))
+        ).astype({"c_nationkey": "int32"}).to_parquet(str(tmp_path / "customer.parquet"))
         got = {
             (r["cust_a"], r["cust_b"]): r["score_microbits"]
             for r in linkage_weights(spark, str(tmp_path)).collect()

@@ -46,6 +46,9 @@ class TestMmrRerank:
         e0 copy (id tie-break), and the sim=1 penalty (0.3 under
         lambda=0.7) then drops the twin's score to 0.7/sqrt(3)-0.3 ~
         0.104, far below the orthogonal candidates' untouched 0.404."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
         e0 = [1.0, 0.0, 0.0, 0.0]
         e1 = [0.0, 1.0, 0.0, 0.0]
         e2 = [0.0, 0.0, 1.0, 0.0]
@@ -56,14 +59,18 @@ class TestMmrRerank:
             [0.1, -0.9, 0.0, 0.0],
         ]
         q = [1.0, 1.0, 1.0, 0.0]
-        pdf = pd.DataFrame(
-            {
-                "vec_id": [0, 100, 101, 104, 105, 102, 103, 106, 107],
-                "embedding": [q, e0, e0, e1, e2] + fillers,
-                "label": 0,
-            }
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array([0, 100, 101, 104, 105, 102, 103, 106, 107]),
+                    "embedding": pa.array(
+                        [q, e0, e0, e1, e2] + fillers, type=pa.list_(pa.float32())
+                    ),
+                    "label": pa.array([0] * 9, type=pa.int32()),
+                }
+            ),
+            str(tmp_path / "embeddings.parquet"),
         )
-        pdf.to_parquet(str(tmp_path / "embeddings.parquet"))
         rows = sim_mmr_rerank(spark, str(tmp_path)).collect()
         picks = [
             r["neighbor_id"]
@@ -506,7 +513,7 @@ class TestKAnonymity:
                 "c_mktsegment": ["AUTO", "AUTO", "AUTO", "AUTO"],
                 "c_acctbal": [100.0, 200.0, 1500.0, 100.0],
             }
-        ).to_parquet(str(tmp_path / "customer.parquet"))
+        ).astype({"c_nationkey": "int32"}).to_parquet(str(tmp_path / "customer.parquet"))
         got = {
             (r["level"], r["class_size"]): (r["n_classes"], r["n_rows"])
             for r in privacy_kanonymity(spark, str(tmp_path)).collect()
