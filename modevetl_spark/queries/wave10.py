@@ -1,9 +1,4 @@
-"""Round-9 wave: corpus-statistics and linkage operators.
-
-Built and verified during round 7, staged behind the whole round-8
-window (the since-retired ``_STAGED_R9`` tier), and draining through
-the round-9 grading window as never-graded keys — the same two-step
-staging pattern wave7 and wave9 used.
+"""Corpus-statistics and linkage operators.
 
 - ``q_sketch_hll`` — deterministic HyperLogLog (Flajolet et al. 2007):
   the canonical production cardinality sketch beside the KMV estimator

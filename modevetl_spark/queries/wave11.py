@@ -1,7 +1,4 @@
-"""Round-9 wave, part 2: ranking-comparison and evaluation operators
-(built in round 8, staged behind the round-8 window with the wave10
-keys via the since-retired ``_STAGED_R9`` tier, draining through the
-round-9 grading window as never-graded keys).
+"""Ranking-comparison and evaluation operators.
 
 - ``q_rank_rbo`` — rank-biased overlap (Webber, Moffat & Zobel 2010):
   the standard top-weighted similarity between two indefinite rankings

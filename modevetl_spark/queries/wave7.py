@@ -1,11 +1,5 @@
-"""Round-7 breadth wave, STAGED during round 6.
-
-Eight operators rounding out families the registry already carries —
-implemented, oracle-gated and driver-sim verified in round 6, but held
-OUT of the round-6 grading window behind the never-graded drain cohort
-(the staging priority was retired with the round-7 bookkeeping in
-``queries/__init__``); they enter the round-7 window as ordinary
-never-graded keys.
+"""Breadth wave: eight operators rounding out families the registry
+already carries, each oracle-gated.
 
 Contents:
 

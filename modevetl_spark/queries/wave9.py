@@ -1,9 +1,4 @@
-"""Round-8 staged wave: serving-tier diversification + runtime pruning.
-
-Built and verified during round 7, staged behind the round-7 window via
-``_STAGED_R8``; that set retired in round 8 bookkeeping, so these keys
-now drain through the grading window as ordinary never-graded keys
-(exactly the wave7 pattern from round 6→7).
+"""Serving-tier diversification + runtime pruning.
 
 - ``q_sim_mmr_rerank`` — Maximal Marginal Relevance (Carbonell &
   Goldstein 1998) diversified top-k: the standard serving-tier rerank

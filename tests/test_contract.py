@@ -5,9 +5,14 @@ CORRECTNESS gate — run at sf0.001 for speed (the driver uses sf0.01).
 
 from __future__ import annotations
 
+import functools
+import json
+import os
+
 import pytest
 
 import __spark_entry__ as entrymod
+from scripts import grading_evidence as GE
 from tests.oracle import compare
 
 _QUERIES = entrymod.queries()
@@ -37,67 +42,67 @@ def test_rows_only(spark, sf_dir, name):
     assert df.count() >= 0
 
 
-def test_grading_bookkeeping_consistent():
-    """The hand-maintained evidence-allocation sets in
-    queries/__init__.py must stay consistent with the registry: every
-    recorded graded/deferred key exists (a typo would silently
-    misprioritize the driver's 50-key window), and every changed-but-
-    deferred key holds prior green evidence (deferral is only legal for
-    keys the driver has already graded)."""
+@functools.lru_cache(maxsize=None)
+def _live_fingerprints(seed: str) -> dict:
+    return GE.fingerprint_tree(GE.ROOT, {**os.environ, "PYTHONHASHSEED": seed})
+
+
+def _committed_grading() -> dict:
+    def once(pairs):
+        assert len(pairs) == len(dict(pairs)), "grading.json repeats a key"
+        return dict(pairs)
+
+    with open(GE.GRADING) as f:
+        return json.load(f, object_pairs_hook=once)
+
+
+def test_emission_order_follows_grading_priority():
+    """The driver grades the first 50 emitted keys: the order must be the
+    derived priority, so every key never graded or changed since graded
+    sits in that window before any rotation slot."""
     from modevetl_spark import queries as Q
 
-    keys = set(_QUERIES)
-    for rnd, graded in (
-        (1, Q._GRADED_R1),
-        (2, Q._GRADED_R2),
-        (3, Q._GRADED_R3),
-        (4, Q._GRADED_R4),
-        (5, Q._GRADED_R5),
-        (6, Q._GRADED_R6),
-        (7, Q._GRADED_R7),
-        (8, Q._GRADED_R8),
-        (9, Q._GRADED_R9),
-        (10, Q._GRADED_R10),
-        (11, Q._GRADED_R11),
-        (12, Q._GRADED_R12),
-    ):
-        missing = graded - keys
-        assert not missing, (rnd, sorted(missing))
-    assert Q._CHANGED_R13_PIN <= keys
-    for k in Q._CHANGED_R13_PIN:
-        assert Q._freshest_round(k) > 0, k
-    # the grading window (first 50 emitted keys) must be exactly the
-    # highest-priority cohort prefix: no rotated key may outrank a
-    # never-graded or changed-pinned key
-    order = list(_QUERIES)
-    prios = [Q._grading_priority(k) for k in order]
-    assert prios == sorted(prios), "emission order violates priority"
-    # round-13 window composition: the registry is saturated (no staged
-    # tier, zero never-graded keys), so the window is the changed-key
-    # re-pins (0.5 — the compat-fold try-conversion blast radius, the
-    # 6 numerics-twin oracle-hardening keys, and the 9-key inline-fold
-    # try-conversion cohort landed late in the round) followed by pure
-    # stalest-evidence rotation
-    window = order[:50]
-    never_graded = [k for k in order if Q._grading_priority(k) == 0]
-    assert len(never_graded) + len(Q._CHANGED_R13_PIN) <= 50
-    assert set(never_graded) <= set(window)
-    assert Q._CHANGED_R13_PIN <= set(window)
-    assert len(Q._CHANGED_R13_PIN) == 39
-    # the rotation slots must refresh the STALEST evidence — with 39
-    # changed-key pins, 11 rotation slots remain: the whole 8-key
-    # r5-vintage residue plus the head of the r6 cohort (the rest of
-    # r6 carries to round 14 as the stalest tier)
-    assert not [k for k in order if 1 <= Q._freshest_round(k) <= 4]
-    rotation = [k for k in window if k not in Q._CHANGED_R13_PIN]
-    assert len(rotation) == 11
-    # every r5-vintage key refreshes this round — 4 of the 8 are compat
-    # consumers and refresh via the pin set; the other 4 rotate
-    r5_vintage = [k for k in order if Q._freshest_round(k) == 5]
-    assert len(r5_vintage) == 8, len(r5_vintage)
-    assert set(r5_vintage) <= set(window)
-    assert all(Q._freshest_round(k) in (5, 6) for k in rotation), rotation
-    # no rotated r6 key may be skipped ahead of a staler r6 key: the
-    # rotation must be the exact head of the stalest-first ordering
-    graded_tail = [k for k in order[50:] if Q._grading_priority(k) >= 1]
-    assert all(Q._freshest_round(k) >= 6 for k in graded_tail)
+    grading = _committed_grading()
+    prios = [Q._grading_priority(grading.get(k)) for k in _QUERIES]
+    assert prios == sorted(prios), "emission order violates grading priority"
+    n_first = sum(1 for p in prios if not p[0])
+    assert all(not p[0] for p in prios[: min(50, n_first)])
+
+
+def test_grading_evidence_current():
+    """grading.json is derived, never hand-edited: one entry per registry
+    key, each round equal to the one the committed CORRECTNESS files give,
+    each fp equal to the live fingerprint of the working tree."""
+    grading = _committed_grading()
+    rerun = "re-run `python scripts/grading_evidence.py` and commit grading.json"
+    assert set(grading) == set(_QUERIES), (
+        f"entries without a key {sorted(set(grading) - set(_QUERIES))}, "
+        f"keys without an entry {sorted(set(_QUERIES) - set(grading))}: {rerun}"
+    )
+    rounds = GE.graded_rounds()
+    stale_rounds = sorted(k for k, e in grading.items() if e["round"] != rounds.get(k, 0))
+    assert not stale_rounds, f"round is stale for {stale_rounds}: {rerun}"
+    live = _live_fingerprints("1")
+    stale_fps = sorted(k for k, e in grading.items() if e["fp"] != live[k])
+    assert not stale_fps, f"fp is stale for {stale_fps}: {rerun}"
+
+
+def test_fingerprints_independent_of_hash_seed():
+    """Set iteration order and the repr of callables change with
+    PYTHONHASHSEED; a fingerprint must not (aggstate._PARTIAL is a dict of
+    lambdas, skew._SALTED_JOIN_HOWS a frozenset)."""
+    one, two = _live_fingerprints("1"), _live_fingerprints("2")
+    assert len(one) == len(_QUERIES)
+    assert one == two, sorted(k for k in one if one[k] != two.get(k))
+    entry = _committed_grading()["q_agg_incremental_state"]
+    assert entry["round"] > 0 and entry["graded"] == one["q_agg_incremental_state"]
+
+
+def test_load_all_raises_on_missing_module(monkeypatch):
+    """A query module that fails to import must fail the registry load,
+    not silently drop its keys from the graded registry."""
+    from modevetl_spark import queries as Q
+
+    monkeypatch.setattr(Q, "_MODULES", [*Q._MODULES, "no_such_module"])
+    with pytest.raises(ModuleNotFoundError):
+        Q.all_queries()

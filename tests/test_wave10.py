@@ -1,7 +1,6 @@
-"""Unit tests for the round-9 staged wave (queries/wave10.py):
-full python replays of the deterministic sketches, merge laws,
-plan-shape gates, and the two-tier staging contract (wave10 keys must
-sit behind BOTH the round-7 window and the round-8 staged wave).
+"""Unit tests for the wave10 keys (queries/wave10.py): full python
+replays of the deterministic sketches, merge laws, plan-shape gates, and
+the registration contract.
 """
 
 from __future__ import annotations
@@ -15,21 +14,14 @@ from modevetl_spark.queries.wave10 import QUERIES
 
 
 def test_wave10_drained_into_the_window():
-    """Round-10 staging contract, post-drain: every wave10 key was first
-    graded by round 9 (q_sketch_hll in round 10 after its oracle
-    NULL-key fix) and rotates by evidence vintage like any other key —
-    the freshest-round assert is a FLOOR, not an exact pin, because
-    later rounds legitimately re-grade cohort members (q_linkage_weights
-    re-pinned into the round-11 window via _CHANGED_R11_PIN after its
-    decimal fold gained the extreme-numerics try_cast guard)."""
+    """Every wave10 key is registered with an oracle (their graded
+    evidence is checked registry-wide by
+    test_contract.py::test_grading_evidence_current)."""
     from modevetl_spark import queries as Q
 
     qs, oracle = Q.all_queries(), Q.all_oracle()
+    assert set(QUERIES) <= set(qs)
     assert set(QUERIES) <= set(oracle)
-    for k in QUERIES:
-        assert Q._freshest_round(k) >= 9, k
-    assert Q._freshest_round("q_sketch_hll") >= 10
-    assert "q_linkage_weights" in Q._GRADED_R11
 
 
 class TestHll:
