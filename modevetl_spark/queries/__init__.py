@@ -7,6 +7,7 @@ SQL string. ``__spark_entry__.py`` re-exports the merged registry.
 
 from __future__ import annotations
 
+import functools
 import importlib
 import json
 import os
@@ -61,7 +62,10 @@ def _grading_priority(entry: dict | None) -> tuple[bool, int]:
     return entry["graded"] == entry["fp"], entry["round"]
 
 
+@functools.cache
 def _load_all() -> tuple[dict[str, QueryFn], dict[str, str]]:
+    """The registry, built once per process; callers get copies (see
+    all_queries/all_oracle)."""
     queries: dict[str, QueryFn] = {}
     oracle: dict[str, str] = {}
     for mod_name in _MODULES:
@@ -81,11 +85,11 @@ def _load_all() -> tuple[dict[str, QueryFn], dict[str, str]]:
 
 
 def all_queries() -> dict[str, QueryFn]:
-    return _load_all()[0]
+    return dict(_load_all()[0])
 
 
 def all_oracle() -> dict[str, str]:
-    return _load_all()[1]
+    return dict(_load_all()[1])
 
 
 def prep(spark: SparkSession) -> SparkSession:

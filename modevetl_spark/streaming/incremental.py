@@ -174,7 +174,14 @@ def upsert_parquet(
 
     Unpartitioned sink: full rewrite into a temp dir, then a rename-aside
     swap (new -> live only after old -> backup) so no crash point leaves
-    the sink absent or half-written.
+    the sink absent or half-written. The rewrite keeps the sink's read
+    splits as its output partitions, folding the delta into them.
+
+    The existing sink is read with ``incoming``'s schema, so no schema-
+    inference job runs; a sink whose columns differ from ``incoming``'s
+    raises before anything is written (checked on one file footer, on
+    the driver). The key probe is ``incoming``'s key columns as they
+    are: duplicate keys change neither a semi- nor an anti-join.
     """
     # Crash recovery: a crash between the swap's two renames leaves the
     # sink absent but its backup intact — restore it before anything else,
@@ -191,16 +198,20 @@ def upsert_parquet(
     # delete_parquet's guard); the swap below still rename-asides the
     # marker-only dir.
     exists = os.path.exists(sink_path) and _has_parquet_files(sink_path)
-    if exists and partition_by:
-        _upsert_partitioned(spark, incoming, sink_path, keys, partition_by)
-        return
-
     if exists:
-        existing = spark.read.parquet(sink_path)
+        existing = _read_sink(spark, incoming, sink_path, partition_by)
+        if partition_by:
+            _upsert_partitioned(existing, incoming, sink_path, keys, partition_by)
+            return
         kept = _null_safe_key_join(
-            existing, incoming.select(*keys).distinct(), keys, "left_anti"
+            existing, incoming.select(*keys), keys, "left_anti"
         )
-        merged = kept.unionByName(incoming)
+        # Fold the delta into the sink's own read splits (at least one per
+        # core), so a rewrite does not grow the sink by the delta's files.
+        splits = max(
+            existing.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism
+        )
+        merged = kept.unionByName(incoming).coalesce(splits)
     else:
         merged = incoming
 
@@ -223,8 +234,35 @@ def upsert_parquet(
     shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _upsert_partitioned(
+def _read_sink(
     spark: SparkSession,
+    incoming: DataFrame,
+    sink_path: str,
+    partition_by: list[str] | None,
+) -> DataFrame:
+    """The existing sink, read with ``incoming``'s schema (no inference
+    job). Its columns (one data file's footer plus the partition
+    columns) must match ``incoming``'s, as ``unionByName`` would demand
+    of an inferred read; a mismatch raises before anything is written."""
+    import pyarrow.parquet as pq
+
+    footer = next(
+        os.path.join(d, f)
+        for d, _, files in os.walk(sink_path)
+        for f in sorted(files)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    have = {*pq.read_schema(footer).names, *(partition_by or ())}
+    if {c.lower() for c in have} != {c.lower() for c in incoming.columns}:
+        raise ValueError(
+            f"upsert into {sink_path}: sink columns {sorted(have)} differ "
+            f"from incoming columns {sorted(incoming.columns)}"
+        )
+    return spark.read.schema(incoming.schema).parquet(sink_path)
+
+
+def _upsert_partitioned(
+    existing: DataFrame,
     incoming: DataFrame,
     sink_path: str,
     keys: list[str],
@@ -246,8 +284,6 @@ def _upsert_partitioned(
     place) also removes the self-read-overwrite hazard, so no checkpoint
     is needed to cut lineage.
     """
-    existing = spark.read.parquet(sink_path)
-
     # Partitions to rewrite: where incoming rows land, plus where colliding
     # keys currently live (a key may move partitions between runs). The
     # semi-join probe reads only key + partition columns (column pruning)
@@ -259,7 +295,7 @@ def _upsert_partitioned(
     collide_parts = (
         _null_safe_key_join(
             existing.select(*{*keys, *partition_by}),
-            incoming.select(*keys).distinct(),
+            incoming.select(*keys),
             keys,
             "left_semi",
         )
@@ -276,7 +312,7 @@ def _upsert_partitioned(
     # columns prunes at the parquet-directory level, so untouched
     # partitions are never even read here.
     kept = _null_safe_key_join(
-        existing.where(touched), incoming.select(*keys).distinct(), keys, "left_anti"
+        existing.where(touched), incoming.select(*keys), keys, "left_anti"
     )
     merged = kept.unionByName(incoming.select(*existing.columns))
 
@@ -492,12 +528,11 @@ def run_incremental(
     daily job O(day), not O(history)."""
     wm = Watermark(state_path, spark=spark)
     pending = pull_newer(source, ts_col, wm.read())
-    n = pending.count()
+    n, new_mark = pending.agg(F.count(F.lit(1)), F.max(ts_col)).collect()[0]
     if n == 0:
         return 0
     result = transform(pending)
     upsert_parquet(spark, result, sink_path, keys, partition_by)
-    new_mark = pending.agg(F.max(ts_col)).collect()[0][0]
     if new_mark is not None:
         if hasattr(new_mark, "isoformat"):
             new_mark = new_mark.isoformat(sep=" ")

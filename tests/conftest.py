@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -93,6 +94,26 @@ def spark():
     s = get_spark(app_name="modevetl-tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_launched(spark):
+    """``jobs_launched(fn)``: the Spark jobs ``fn()`` launches, counted
+    under a job group of its own. Job counts do not move with host load,
+    so they make exact regression gates."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job-count gate")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -94,15 +94,35 @@ def test_fingerprints_independent_of_hash_seed():
     one, two = _live_fingerprints("1"), _live_fingerprints("2")
     assert len(one) == len(_QUERIES)
     assert one == two, sorted(k for k in one if one[k] != two.get(k))
+    # grading.json's fp was computed in the script's own process, under
+    # its own hash seed
     entry = _committed_grading()["q_agg_incremental_state"]
-    assert entry["round"] > 0 and entry["graded"] == one["q_agg_incremental_state"]
+    assert entry["round"] > 0 and entry["fp"] == one["q_agg_incremental_state"]
 
 
-def test_load_all_raises_on_missing_module(monkeypatch):
+def test_load_all_raises_on_missing_module(monkeypatch, request):
     """A query module that fails to import must fail the registry load,
     not silently drop its keys from the graded registry."""
     from modevetl_spark import queries as Q
 
     monkeypatch.setattr(Q, "_MODULES", [*Q._MODULES, "no_such_module"])
+    Q._load_all.cache_clear()
+    request.addfinalizer(Q._load_all.cache_clear)
     with pytest.raises(ModuleNotFoundError):
         Q.all_queries()
+
+
+def test_registry_loads_once_returns_copies():
+    """The import loop, grading.json read and sort run once per process;
+    every call hands out its own dicts."""
+    from modevetl_spark import queries as Q
+
+    Q.all_queries()
+    misses = Q._load_all.cache_info().misses
+    a, b = Q.all_queries(), Q.all_queries()
+    oa = Q.all_oracle()
+    assert Q._load_all.cache_info().misses == misses
+    assert a == b and a is not b and list(a) == list(b)
+    a.pop(next(iter(a)))
+    oa.clear()
+    assert Q.all_queries() == b and Q.all_oracle()

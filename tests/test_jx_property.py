@@ -474,6 +474,48 @@ def test_scd2_incremental_any_time_split_equals_full(
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "late",
+    [(5, "a"), (None, "b")],
+    ids=["older-same-state", "null-ts-other-state"],
+)
+def test_scd2_late_event_leaves_closed_rows(spark, tmp_path, late):
+    """An event that sorts before the open interval (older ts, or NULL
+    ts, which sorts first) breaks the append-only precondition, but the
+    merge must still only rewrite the open tail: every closed interval
+    stays as it was. With the seed's own state, the change filter drops
+    the seed row, and its version offset must survive that."""
+    import datetime as dt
+
+    from modevetl_spark.operators.scd2 import merge_scd2_state
+
+    def at(s):
+        return None if s is None else dt.datetime(2024, 1, 1) + dt.timedelta(seconds=s)
+
+    schema = "ts timestamp, event_id long, user_id long, event_type string"
+    state = str(tmp_path / "state")
+    merge_scd2_state(
+        spark,
+        spark.createDataFrame(
+            [(at(0), 0, 1, "a"), (at(10), 1, 1, "b"), (at(20), 2, 1, "a")], schema
+        ),
+        state,
+    )
+    def rows():
+        return {tuple(r) for r in spark.read.parquet(state).collect()}
+
+    closed = {r for r in rows() if r[3] is not None}
+    assert len(closed) == 2
+    merge_scd2_state(
+        spark,
+        spark.createDataFrame([(at(late[0]), 3, 1, late[1]), (at(30), 4, 1, "b")], schema),
+        state,
+    )
+    after = rows()
+    assert closed <= after
+    assert sorted(r[4] for r in after) == list(range(1, len(after) + 1))
+
+
 @settings(
     max_examples=10,
     deadline=None,

@@ -406,6 +406,48 @@ def test_scd2_single_exchange(spark, sf_dir):
     assert tree.count("- Window (") == 2, tree
 
 
+def test_scd2_merge_single_exchange(spark, tmp_path, monkeypatch):
+    """SCD-2 merge: wherever the merge runs its rebuild of seed ∪ batch
+    (the frame it materializes or hands to the upsert), both windows run
+    on ONE user_id hash exchange and the state is scanned once: each
+    seed row carries its version offset, so no second join is needed."""
+    import datetime as dt
+
+    from modevetl_spark.operators.scd2 import merge_scd2_state
+    from modevetl_spark.streaming import incremental
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (t0 + dt.timedelta(seconds=i), i, i % 3, "ab"[i % 2]) for i in range(12)
+    ]
+    schema = "ts timestamp, event_id long, user_id long, event_type string"
+    state = str(tmp_path / "state")
+    merge_scd2_state(spark, spark.createDataFrame(rows[:6], schema), state)
+
+    frames = []
+    cls = type(spark.range(1))
+    checkpoint = cls.localCheckpoint
+
+    def spy_checkpoint(df, *a, **k):
+        frames.append(df)
+        return checkpoint(df, *a, **k)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy_checkpoint)
+    monkeypatch.setattr(
+        incremental, "upsert_parquet", lambda _s, df, *a, **k: frames.append(df)
+    )
+    merge_scd2_state(spark, spark.createDataFrame(rows[6:], schema), state)
+    rebuilds = [p for p in map(plan, frames) if "- Window (" in p]
+    assert rebuilds
+    for p in rebuilds:
+        # an executed adaptive plan prints its final plan, then its initial one
+        tree = p.split("\n\n(1) ")[0].split("== Initial Plan ==")[0]
+        assert tree.count("- Exchange (") == 1, tree
+        assert "Arguments: hashpartitioning(user_id" in p, p
+        assert tree.count("- Window (") == 2, tree
+        assert tree.count("Scan parquet") == 1, tree
+
+
 def test_weighted_sample_is_take_ordered(spark, sf_dir):
     """Sequential Poisson sampling: integer priority per row + global
     top-k must plan as TakeOrderedAndProject with zero exchanges — each

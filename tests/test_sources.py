@@ -3,8 +3,6 @@ catalog's no-job read gate."""
 
 from __future__ import annotations
 
-import uuid
-
 import pyspark.sql.functions as F
 import pytest
 
@@ -184,35 +182,22 @@ def test_write_zordered_prunes_both_dimensions(spark, tmp_path):
     assert z_touched * 2 <= r_touched, (z_touched, r_touched)
 
 
-def _jobs_launched(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted under a job group of its own."""
-    sc = spark.sparkContext
-    group = f"job-count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job-count gate")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("table", TABLES)
-def test_catalog_load_launches_no_job(spark, sf_dir, table):
+def test_catalog_load_launches_no_job(spark, sf_dir, table, jobs_launched):
     """Declared schemas mean a table read plans from metadata: no
     schema-inference job per read. Job counts do not move with host load,
     so this is an exact regression gate."""
-    assert _jobs_launched(spark, lambda: load(spark, sf_dir, table)) == 0
+    assert jobs_launched(lambda: load(spark, sf_dir, table)) == 0
 
 
 @pytest.mark.parametrize(
     "key",
     ["q_flagship_revenue_cube", "q_tpch_local_supplier", "q_tpch_volume_shipping"],
 )
-def test_query_build_launches_no_job(spark, sf_dir, key):
+def test_query_build_launches_no_job(spark, sf_dir, key, jobs_launched):
     """Building (not executing) these multi-table keys — 5-6 catalog reads
     each — launches no Spark job."""
     from modevetl_spark.queries import all_queries
 
     build = all_queries()[key]
-    assert _jobs_launched(spark, lambda: build(spark, sf_dir)) == 0
+    assert jobs_launched(lambda: build(spark, sf_dir)) == 0

@@ -1152,3 +1152,77 @@ def test_streaming_scd2_equals_full_build(spark, sf_dir, tmp_path):
     want = scd2_build(ev)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
+
+
+def _one_tick_jobs(spark, sf_dir, tmp_path, job, jobs_launched) -> int:
+    """Spark jobs of one ``job`` tick on a growing event log, landed the
+    way perfbench's etl_ticks lands it: ``events.parquet`` is a directory
+    of part files. The first 70 % of the log (event_id order) is loaded
+    untimed; the rest lands as a second part file and one tick runs."""
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{sf_dir}/events.parquet").sort_by("event_id")
+    parts = tmp_path / "sf" / "events.parquet"
+    parts.mkdir(parents=True)
+    cut = events.num_rows * 7 // 10
+    pq.write_table(events.slice(0, cut), parts / "part-00000.parquet")
+    args = (
+        spark,
+        str(tmp_path / "sf"),
+        str(tmp_path / "sink"),
+        str(tmp_path / "state.json"),
+    )
+    assert job(*args) == cut
+    pq.write_table(events.slice(cut), parts / "part-00001.parquet")
+    n = []
+    jobs = jobs_launched(lambda: n.append(job(*args)))
+    assert n == [events.num_rows - cut]
+    return jobs
+
+
+def test_scd2_tick_job_count(spark, sf_dir, tmp_path, jobs_launched):
+    """One scd2_job tick builds the touched users' tail once and reads
+    its stores without schema inference: 9 jobs (24 before)."""
+    from modevetl_spark.plans.jobs import scd2_job
+
+    assert _one_tick_jobs(spark, sf_dir, tmp_path, scd2_job, jobs_launched) <= 9
+
+
+def test_reviews_tick_job_count(spark, sf_dir, tmp_path, jobs_launched):
+    """One reviews_job tick takes count and mark from one aggregate and
+    reads its sink without schema inference: 6 jobs (9 before)."""
+    assert _one_tick_jobs(spark, sf_dir, tmp_path, reviews_job, jobs_launched) <= 6
+
+
+@pytest.mark.parametrize("partition_by", [None, ["p"]], ids=["flat", "partitioned"])
+@pytest.mark.parametrize(
+    "drifted",
+    ["id long, w string, p int", "id long, p int"],
+    ids=["renamed", "missing"],
+)
+def test_upsert_column_drift_raises_sink_unchanged(
+    spark, tmp_path, partition_by, drifted
+):
+    """An upsert whose columns differ from the sink's raises before
+    anything is written: the sink is read with the incoming schema, so
+    the column check is all that stands between a drifted batch and a
+    sink silently rewritten with NULLs."""
+    from pyspark.errors import AnalysisException
+
+    sink = str(tmp_path / "sink")
+    base = spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 1)], "id long, v string, p int"
+    )
+    upsert_parquet(spark, base, sink, keys=["id"], partition_by=partition_by)
+
+    def rows():
+        got = spark.read.parquet(sink).select("id", "v", "p").collect()
+        return sorted(tuple(r) for r in got)
+
+    before = rows()
+    incoming = spark.createDataFrame(
+        [(1, "z", 0)] if "w" in drifted else [(1, 0)], drifted
+    )
+    with pytest.raises((AnalysisException, ValueError)):
+        upsert_parquet(spark, incoming, sink, keys=["id"], partition_by=partition_by)
+    assert rows() == before == [(1, "a", 0), (2, "b", 1)]

@@ -1,5 +1,5 @@
-"""Edge-case unit tests for the round-7 staged wave (queries/wave7.py +
-operators/sketches.histogram_quantiles): degenerate inputs the fixture
+"""Edge-case unit tests for queries/wave7.py and
+operators/sketches.histogram_quantiles: degenerate inputs the fixture
 tables never produce, and rewrite-equivalence proofs against the classic
 window formulations.
 """

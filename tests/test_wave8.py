@@ -1,7 +1,6 @@
-"""Unit tests for the round-7 wave (queries/wave8.py +
-operators/similarity.ivf_sq_topk): rank-bound / losslessness /
-sub-linearity properties on adversarial inputs the fixture never
-produces, plus plan-shape gates.
+"""Unit tests for queries/wave8.py and operators/similarity.ivf_sq_topk:
+rank-bound / losslessness / sub-linearity properties on adversarial
+inputs the fixture never produces, plus plan-shape gates.
 """
 
 from __future__ import annotations
