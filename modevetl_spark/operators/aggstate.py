@@ -4,11 +4,9 @@ the stored state — materialized-view maintenance for the mergeable
 aggregate family (count / sum / min / max, and anything derivable from
 them, e.g. avg = sum/count).
 
-This is the generic form of what the frontier-incremental hierarchy job
-does by hand: a daily 100 TB pipeline keeps per-domain document counts,
-per-source token totals, per-label vector counts — recomputing the full
-group-by every tick is O(history); merging the tick's partials is
-O(delta).
+A daily 100 TB pipeline keeps per-domain document counts, per-source
+token totals, per-label vector counts — recomputing the full group-by
+every tick is O(history); merging the tick's partials is O(delta).
 
 Scale shape per tick: one partial aggregation of the delta (map-side
 combined, delta-sized shuffle), one left-semi probe of the state for the
@@ -20,10 +18,12 @@ delta touches.
 
 Replay discipline: a tick is NOT idempotent (replaying the same delta
 double-counts: merge assumes exactly-once deltas). Pair it with a
-watermark pull, and make the mark replay-safe the way the hierarchy job
-does — derive it from the sink (store ``max(mark_col)`` as a measure via
-``("max", mark_col)`` and pull strictly newer rows), so a crashed tick
-that merged-but-didn't-advance replays nothing.
+watermark pull whose mark lives in the state itself: store
+``max(mark_col)`` as a measure via ``("max", mark_col)``, take the mark
+as that column's max over the state before each tick, and pull rows
+strictly newer than it. The mark then advances in the same swap that
+merges the delta, so a tick that crashes before the swap replays its
+delta and one that crashes after it replays nothing.
 
 Float sums are accumulated as DECIMAL(28,9) (exact, order-free) and
 stored that way, so repeated merges cannot drift; read them back with
@@ -89,7 +89,11 @@ def merge_aggregate_state(
     `count` is stored as a BIGINT, `sum` as DECIMAL(28,9).
     """
     from modevetl_spark.sources.fs import fs_has_parquet_files, has_scheme
-    from modevetl_spark.streaming.incremental import upsert_parquet
+    from modevetl_spark.streaming.incremental import (
+        _null_safe_key_join,
+        _read_sink,
+        upsert_parquet,
+    )
 
     if has_scheme(state_path):
         # the underlying upsert swap is an atomic DIRECTORY RENAME —
@@ -116,17 +120,16 @@ def merge_aggregate_state(
             return 0
         # data-aware existence: a just-created empty dir is a fresh store
         if fs_has_parquet_files(spark, state_path):
-            from modevetl_spark.streaming.incremental import (
-                _null_safe_key_join,
-            )
-
-            state = spark.read.parquet(state_path)
+            # read with the partials' schema (no inference job), checked
+            # against one file footer like upsert_parquet's own read
+            state = _read_sink(spark, partial, state_path, partition_by)
             # NULL-safe probe: a plain on=keys semi-join never matches
             # NULL = NULL, so a nullable group key's stored row would be
-            # dropped from the merge and its history silently reset
+            # dropped from the merge and its history silently reset.
+            # Duplicate probe keys change no semi-join: no distinct.
             touched_state = _null_safe_key_join(
-                state, partial.select(*keys).distinct(), keys, "left_semi"
-            ).select(*state.columns)
+                state, partial.select(*keys), keys, "left_semi"
+            )
             merge_aggs = [
                 _merge_expr(out, fn) for out, (fn, _) in measures.items()
             ]

@@ -90,66 +90,6 @@ def _frontier_edge_join(
     )
 
 
-def ancestors_of(
-    frontier: DataFrame,
-    edges: DataFrame,
-    node: str = "node",
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 50,
-    salt_hot_hubs: bool = False,
-    target_rows_per_salt: int = 1_000_000,
-    max_salts: int = 64,
-) -> DataFrame:
-    """All (node, ancestor) pairs for nodes in ``frontier`` only — the
-    incremental form of the closure: instead of closing the whole graph,
-    walk just the frontier's ancestor chains up the (src -> dst) edges.
-
-    This is exactly ``hierarchy.py``'s incremental pattern: get_pending
-    yields the changed docs; only their ancestor chains need updating.
-    Cost per run is O(|frontier| * depth) rows instead of O(|V| * depth).
-    """
-    edges = edges.select(src, dst).distinct().cache()
-    # level 1: direct parents of the frontier
-    current = (
-        frontier.select(F.col(node))
-        .distinct()
-        .join(edges.withColumnRenamed(src, node), on=node)
-        .select(F.col(node), F.col(dst).alias("ancestor"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    acc = current
-    try:
-        with _tuned_shuffle(edges, current.count()):
-            for _ in range(max_iterations):
-                nxt = (
-                    _frontier_edge_join(
-                        current.withColumnRenamed("ancestor", "__mid"),
-                        edges.withColumnRenamed(src, "__mid"),
-                        salt_hot_hubs,
-                        node,
-                        target_rows_per_salt,
-                        max_salts,
-                    )
-                    .select(F.col(node), F.col(dst).alias("ancestor"))
-                    .join(acc, on=[node, "ancestor"], how="left_anti")
-                    .distinct()
-                    .localCheckpoint(eager=True)
-                )
-                if nxt.isEmpty():
-                    return acc
-                acc = acc.union(nxt).localCheckpoint(eager=True)
-                current = nxt
-        raise RuntimeError(
-            f"ancestor walk did not converge in {max_iterations} iterations"
-        )
-    finally:
-        # unpersist on EVERY exit — the non-convergence raise must not leak
-        # the cached edge set into the session's block manager
-        edges.unpersist()
-
-
 def transitive_closure(
     edges: DataFrame,
     src: str = "src",

@@ -575,82 +575,3 @@ def _kmeans_fast(
 
 
 # --- standing mini-batch face (composes operators/aggstate.py) ----------
-
-
-def centroid_partial_triples(assigned: DataFrame, vec_col: str = "v") -> DataFrame:
-    """(cluster, dim, x) triples from an assignment that kept its vector
-    — the mergeable-partial form of centroid mass (sum + count per
-    (cluster, dim) is exactly the aggstate count/sum family)."""
-    return assigned.select(
-        "cluster", F.posexplode(F.col(vec_col)).alias("dim", "x")
-    )
-
-
-def centroids_from_state(state: DataFrame, quantize_dp: int = 9) -> DataFrame:
-    """-> (cluster, cv): centroids as the decimal-exact mean of the
-    accumulated (s, n) state, rounded to ``quantize_dp`` — the same
-    davg shape the batch operator uses."""
-    means = state.select(
-        "cluster",
-        "dim",
-        F.round(F.col("s").cast("double") / F.col("n"), quantize_dp).alias("m"),
-    )
-    return means.groupBy("cluster").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("dim").alias("pos"), "m"))),
-            lambda t: t.m,
-        ).alias("cv")
-    )
-
-
-def run_kmeans_assign_tick(
-    spark,
-    batch: DataFrame,
-    state_path: str,
-    k: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    quantize_dp: int = 9,
-) -> DataFrame:
-    """One tick of the standing clustering job (mini-batch k-means,
-    decay-free): assign the arriving batch against the centroids AS OF
-    TICK START (read from the persisted per-(cluster, dim) sum/count
-    state; seeded from the batch's first k ids on the first tick), then
-    merge the batch's mass into the state O(delta) via
-    aggstate.merge_aggregate_state. Returns the batch's assignment
-    (id, cluster, dist).
-
-    Semantics are ONLINE k-means: centroids drift as mass accumulates,
-    so the final state depends on arrival order — that is inherent to
-    the mini-batch family, not a bug; the batch operator
-    (:func:`kmeans_lloyd`) is the order-free full-recompute twin.
-    Invariant that IS order-free (pytest-gated): the state's total
-    count mass equals rows-processed × dims, and each tick's
-    assignment is a pure function of (batch, state-at-tick-start).
-    Replay discipline matches aggstate: a tick is not idempotent —
-    pair it with a watermark pull so a crashed tick replays nothing.
-
-    Scale shape per tick: centroid read is k×dims rows; assignment is
-    the broadcast cross-join fold (batch never shuffles); the state
-    merge shuffles delta-sized partials only."""
-    from modevetl_spark.operators.aggstate import merge_aggregate_state
-    from modevetl_spark.sources.fs import fs_has_parquet_files
-
-    if fs_has_parquet_files(spark, state_path):
-        cent = centroids_from_state(spark.read.parquet(state_path), quantize_dp)
-    else:
-        cent = batch.where(F.col(id_col) < k).select(
-            F.col(id_col).cast("int").alias("cluster"),
-            F.col(vec_col).alias("cv"),
-        )
-    assigned = _assign(batch, cent, id_col, vec_col).localCheckpoint(eager=True)
-    merge_aggregate_state(
-        spark,
-        centroid_partial_triples(assigned, vec_col),
-        state_path,
-        keys=["cluster", "dim"],
-        measures={"s": ("sum", "x"), "n": ("count", "x")},
-    )
-    return assigned.select(
-        id_col, "cluster", F.round(F.col("d").cast("double"), 8).alias("dist")
-    )

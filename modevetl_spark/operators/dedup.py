@@ -5,8 +5,9 @@ shuffle-conscious DataFrame compositions:
 
 - **Exact**: group on sha2(text); at 100 TB this is one hash-partitioned
   shuffle of (hash, id) pairs only — never the payload.
-- **MinHash+LSH**: per-doc signature (k minhashes) computed in one
-  projection over the shingle array (no explode of the corpus); banding
+- **MinHash+LSH**: per-doc signature (k minhashes) from one hash
+  aggregation over the exploded shingles (each shingle hashed once,
+  partial aggregation before the shuffle); banding
   explodes to b rows/doc; candidate pairs come from a self-join on
   (band_id, band_hash) — the classic sub-quadratic near-dup path.
 - **SimHash**: 64 weighted-bit sums per doc in a single aggregation;
@@ -33,28 +34,6 @@ def exact_dedup_key(text: Column | str) -> Column:
     return F.sha2(c, 256)
 
 
-def minhash_signature(shingles: Column, k: int = 16) -> Column:
-    """k-permutation MinHash signature over a shingle array (expression
-    form, for composing inside a single projection on modest arrays).
-
-    For corpus-scale signature computation prefer the exploded row form in
-    :func:`minhash_signatures` — vectorized hash aggregation with map-side
-    combine beats per-row array folds by an order of magnitude (measured
-    13-36 s vs ~2 s over 5k docs at sf0.1).
-    """
-    base = F.transform(shingles, lambda s: F.xxhash64(s))
-
-    def perm(i: int):
-        # single-arg lambda on purpose: a two-arg lambda would be bound as
-        # (element, array_index) by transform(), shadowing the permutation id
-        return lambda h: F.xxhash64(F.lit(i), h)
-
-    return F.when(
-        F.size(shingles) > 0,
-        F.array(*[F.array_min(F.transform(base, perm(i))) for i in range(k)]),
-    )
-
-
 def minhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -66,8 +45,7 @@ def minhash_signatures(
     hashed exactly once into a long; the k permutations are cheap
     (int, long) hashes aggregated with ``min`` (whole-stage codegen'd
     hash-agg; partial aggregation collapses to one row per doc before the
-    shuffle). Docs with no shingles drop out (same contract as the NULL
-    signature of the expression form).
+    shuffle). Docs with no shingles drop out: they have no signature.
 
     Returns (id_col, m0..m{k-1}).
     """
@@ -188,11 +166,11 @@ def minhash_candidates_md5(
     bands: int = 4,
 ) -> DataFrame:
     """Candidate near-duplicate pairs (id_a < id_b) via md5-family MinHash
-    LSH — identical banded self-join shape to :func:`minhash_candidates`,
-    but every hash is reproducible in DuckDB SQL so downstream queries can
-    be oracle-graded end to end. Use the xxhash64 variant when portability
-    isn't needed: one JVM-intrinsic hash per shingle beats md5-hex +
-    string slicing + base-16 conv."""
+    LSH — the banded self-join over :func:`build_minhash_index`'s
+    xxhash64 rows, but every hash is reproducible in DuckDB SQL so
+    downstream queries can be oracle-graded end to end. Use the xxhash64
+    rows when portability isn't needed: one JVM-intrinsic hash per
+    shingle beats md5-hex + string slicing + base-16 conv."""
     bk = minhash_band_keys_md5(docs, id_col, text_col, shingle_n, k, bands)
     return _banded_pairs(bk, id_col, ["band", "band_key"])
 
@@ -224,24 +202,6 @@ def lsh_bands(sig: Column, bands: int, rows: int) -> Column:
             for b in range(bands)
         ]
     )
-
-
-def minhash_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    k: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """Candidate near-duplicate pairs (id_a < id_b) via MinHash LSH.
-
-    Banding goes through :func:`build_minhash_index` — the SAME rows the
-    persisted-index incremental path stores — so the incremental-equals-
-    full equivalence is true by construction, not by parallel
-    implementations staying in sync."""
-    banded = build_minhash_index(docs, id_col, text_col, shingle_n, k, bands)
-    return _banded_pairs(banded, id_col, ["band_id", "band_hash"])
 
 
 def jaccard_pairs(
@@ -446,8 +406,9 @@ def incremental_minhash_candidates(
     - ``pairs`` — (id_a, id_b) with id_a < id_b, the union of
       batch-vs-index collisions and batch-internal collisions. Because
       banding is a pure function of the text, this equals the pairs a
-      full-corpus :func:`minhash_candidates` run would emit restricted to
-      pairs touching the batch (equivalence pytest-gated).
+      banded self-join of the full corpus's :func:`build_minhash_index`
+      rows would emit restricted to pairs touching the batch
+      (equivalence pytest-gated).
     - ``new_index_rows`` — the batch's band rows. The standing job
       (:func:`run_dedup_incremental`) appends ALL of them to the stored
       index — indexing every arriving doc is what keeps the
@@ -499,8 +460,9 @@ def run_dedup_incremental(
     pairs.
 
     Invariant (pytest-gated): after any batch split of a corpus, the
-    union of every run's pairs equals the full-corpus
-    :func:`minhash_candidates` pair set — each pair (a, b) surfaces on
+    union of every run's pairs equals the pair set of a banded self-join
+    over the full corpus's :func:`build_minhash_index` rows — each pair
+    (a, b) surfaces on
     the run where the later of the two docs arrives. Indexing every
     arriving doc (not just dedup survivors) is REQUIRED for this
     invariant; see :func:`incremental_minhash_candidates`.
@@ -511,11 +473,9 @@ def run_dedup_incremental(
     idempotent under duplication). Re-ingesting an id with CHANGED text
     appends the new band rows while the superseded ones remain, so the
     old content keeps generating candidate pairs; bound that staleness
-    by periodically rewriting the index for re-ingested ids
-    (``delete_parquet(spark, changed_ids, index_path, [id_col])`` before
-    the run — note delete_parquet's swap is local/HDFS-rename, so on an
-    object store bound the staleness by a periodic index rewrite
-    instead) — candidate pairs are verification inputs, so stale rows
+    by periodically rewriting the index without the re-ingested ids'
+    old band rows (an anti-join on ``id_col``) — candidate pairs are
+    verification inputs, so stale rows
     cost extra verify work, never a wrong final answer. Downstream,
     verify pairs with :func:`jaccard_pairs` against a doc store and
     collapse clusters with :func:`dedup_corpus` — candidates need no

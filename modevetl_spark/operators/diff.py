@@ -6,8 +6,9 @@ reconciliation as a first-class operator).
 One full-outer join on the key, presence flags to disambiguate all-null
 value rows, IS DISTINCT FROM per value column for null-safe change
 detection. At 100 TB both sides shuffle once on the key (or zero times
-if both snapshots are bucketed/range-laid-out on it — see
-sources/formats.py); the diff predicate is one codegen'd projection.
+if both snapshots are bucketed or range-laid-out on it, e.g. by
+``DataFrameWriter.bucketBy``); the diff predicate is one codegen'd
+projection.
 """
 
 from __future__ import annotations

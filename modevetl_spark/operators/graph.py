@@ -215,135 +215,6 @@ def pagerank(
     return ranks
 
 
-def hits(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iterations: int = 8,
-) -> DataFrame:
-    """-> (node, authority, hub): Kleinberg's HITS with L1 (sum-to-one)
-    normalization per half-step — the hub/authority complement to
-    :func:`pagerank` (authorities = heavily-pointed-to pages, hubs =
-    pages pointing at strong authorities; the second classic
-    crawl-prioritization signal).
-
-    Recurrence (k = 1..iterations), both halves L1-normalized the way
-    NetworkX's ``hits`` does (sum, not the original paper's L2 — the
-    fixpoint direction is the same, the scalar discipline simpler):
-
-        in_k(v)  = Σ_{u→v} h_{k-1}(u)      a_k = in_k  / Σ in_k
-        out_k(u) = Σ_{u→v} a_k(v)          h_k = out_k / Σ out_k
-
-    with h_0 uniform. Nodes without in-edges carry authority 0, without
-    out-edges hub 0.
-
-    Scale shape per iteration: one src-keyed join + dst-keyed agg (the
-    authority half), one dst-keyed join + src-keyed agg (the hub half);
-    both normalization scalars are broadcast ONE-ROW aggregates inside
-    the same jobs — no driver traffic. Lineage truncates per round via
-    localCheckpoint like the pagerank/closure loops.
-
-    Determinism contract (the pagerank 9dp discipline, bit-replayable by
-    the DuckDB oracle): every per-edge term entering an order-sensitive
-    sum is a 9dp-rounded double cast to DECIMAL(18,9) (exact,
-    association-free), every scalar (the L1 norms) is itself a
-    9dp-rounded decimal sum, and every stored score is re-rounded to
-    9dp — so iteration k is a deterministic function of iteration k-1
-    on any engine applying the same recurrence.
-
-    Measured negative result (kept for the record): folding the
-    authority half-step lazily into the hub checkpoint job — 1 job per
-    iteration instead of 2 — is SLOWER (7.3–8.3 s vs 6.1–6.6 s warm at
-    sf0.1, same load): ``outk`` is referenced by both its L1-norm scalar
-    and the hub join, so un-materializing ``a`` re-evaluates the
-    ink→a→outk subtree twice inside the job, which costs more than the
-    checkpoint it saves. Two eager checkpoints per iteration is the
-    measured optimum for this dataflow shape (same lesson as the k-means
-    lazy-uncached tradeoff note).
-    """
-    dec = "decimal(18,9)"
-
-    def _r(col):
-        return F.round(col, 9)
-
-    e = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .distinct()
-        .cache()
-    )
-    n_edges = e.count()
-    if n_edges == 0:
-        return e.select(
-            F.col("s").cast("long").alias("node"),
-            F.lit(0.0).alias("authority"),
-            F.lit(0.0).alias("hub"),
-        )
-    with _tuned_shuffle(e, n_edges):
-        verts = (
-            e.select(F.col("s").alias("node"))
-            .union(e.select(F.col("d").alias("node")))
-            .distinct()
-            .cache()
-        )
-        n = verts.count()
-        try:
-            h = verts.select(
-                "node", _r(F.lit(1.0 / n)).alias("val")
-            ).localCheckpoint(eager=True)
-            a = None
-            for _ in range(iterations):
-                ink = (
-                    e.join(h, e.s == h.node)
-                    .groupBy(F.col("d").alias("node"))
-                    .agg(
-                        _r(F.sum(F.col("val").cast(dec)).cast("double")).alias("v")
-                    )
-                )
-                sa = ink.agg(
-                    _r(F.sum(F.col("v").cast(dec)).cast("double")).alias("norm")
-                )
-                a = (
-                    verts.join(ink, "node", "left")
-                    .crossJoin(F.broadcast(sa))
-                    .select(
-                        "node",
-                        F.coalesce(
-                            _r(F.col("v") / F.col("norm")), F.lit(0.0)
-                        ).alias("val"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                outk = (
-                    e.join(a, e.d == a.node)
-                    .groupBy(F.col("s").alias("node"))
-                    .agg(
-                        _r(F.sum(F.col("val").cast(dec)).cast("double")).alias("v")
-                    )
-                )
-                sh = outk.agg(
-                    _r(F.sum(F.col("v").cast(dec)).cast("double")).alias("norm")
-                )
-                h = (
-                    verts.join(outk, "node", "left")
-                    .crossJoin(F.broadcast(sh))
-                    .select(
-                        "node",
-                        F.coalesce(
-                            _r(F.col("v") / F.col("norm")), F.lit(0.0)
-                        ).alias("val"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-        finally:
-            e.unpersist()
-            verts.unpersist()
-    return (
-        a.withColumnRenamed("val", "authority")
-        .join(h.withColumnRenamed("val", "hub"), "node")
-        .select("node", "authority", "hub")
-    )
-
-
 def kcore(
     edges: DataFrame,
     src: str = "src",

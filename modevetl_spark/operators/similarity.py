@@ -34,16 +34,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            a,
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-    )
-
-
 def sq_norm(vec: Column | str) -> Column:
     """Sum of squares of an array<numeric> column (JVM-side fold)."""
     c = F.col(vec) if isinstance(vec, str) else vec
@@ -53,9 +43,9 @@ def sq_norm(vec: Column | str) -> Column:
 
 
 def nrm(vec: Column | str) -> Column:
-    """Per-row vector norm: sqrt of the sq_norm fold — the SAME fold in
-    the SAME IEEE order norm()/cosine() use, so precomputing it per row
-    and scoring with cosine_pre() is bit-identical to cosine()."""
+    """Per-row vector norm: sqrt of the sq_norm fold, so precomputing it
+    per row and scoring with cosine_pre() is bit-identical to folding
+    both norms inside the pair loop."""
     c = F.col(vec) if isinstance(vec, str) else vec
     return F.sqrt(sq_norm(c))
 
@@ -65,9 +55,11 @@ def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
     form: each side's norm is folded once per ROW before the scoring
     join instead of once per (query × candidate) PAIR, cutting the
     inner-loop fold work from N·Q·2D to (N+Q)·D (r11 verdict #1).
-    Value-identical to cosine(): sqrt(fold(a)) * sqrt(fold(b)) is the
-    same IEEE tree whether the sqrt happens before or after the join,
-    and try_divide keeps the degenerate (zero-norm → NULL) contract."""
+    sqrt(fold(a)) * sqrt(fold(b)) is the same IEEE tree whether the sqrt
+    happens before or after the join. An all-zero (or otherwise
+    zero-norm) vector has no defined cosine: try_divide yields NULL
+    rather than aborting the job under ANSI DIVIDE_BY_ZERO, and NULL
+    scores sort last under every desc ranking consumer."""
     return F.try_divide(dot(a, b), na * nb)
 
 
@@ -107,16 +99,6 @@ CLEAN_EMB_SQL = (
     " AND list_dot_product(CAST(embedding AS DOUBLE[]),"
     " CAST(embedding AS DOUBLE[])) > 0"
 )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity with a try_divide guard: an all-zero (or
-    otherwise zero-norm) vector has no defined cosine — it yields NULL
-    rather than aborting the whole job under ANSI DIVIDE_BY_ZERO (one
-    degenerate embedding row must never kill a 100 TB stage; r10
-    ADVICE). NULL scores sort last under every desc ranking consumer,
-    so degenerate vectors simply never rank."""
-    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 def brute_force_topk(

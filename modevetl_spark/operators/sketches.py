@@ -240,76 +240,6 @@ def heavy_hitters_grouped_exact(
     )
 
 
-def run_heavy_hitters_tick(
-    spark, batch: DataFrame, col: str, k: int, state_path: str
-) -> None:
-    """Standing-job tick: fold one arriving batch into a persisted
-    Misra–Gries summary of at most ``k`` counters (plus one total-count
-    row). Mergeable-summaries semantics end to end: the batch folds to
-    per-partition summaries (one mapInPandas pass, no shuffle), those
-    merge with the stored summary by counter addition (candidate counts
-    re-counted EXACTLY from the batch — tighter than carrying the MG
-    under-estimates), and the combined state trims with the
-    (k+1)-th-largest decrement. Error accounting: a batch's
-    never-added mass per item is bounded by its internal fold trims
-    (≤ n_batch/(k+1) summed over the batch) and state-level trims
-    remove ≥ (k+1)·m mass each, so the LIFETIME undercount per item is
-    ≤ 2·n_total/(k+1) — every item with lifetime frequency
-    > 2·n_total/(k+1) has a positive counter after any tick sequence
-    (size the job with k ≥ 2·denom for an n/denom detection target);
-    ``n_total`` is tracked exactly in the sentinel row.
-
-    The state is ≤ k+1 rows BY CONFIG, so the trim runs driver-side on
-    a bounded collect and the store is a tiny overwrite — this is the
-    one standing job whose state does not grow with the corpus at all.
-    A consumer answers "current heavy-hitter candidates" from the state
-    alone, and exact-verifies them with one broadcast-filtered count
-    over the corpus when precision matters (the
-    :func:`heavy_hitters_exact` second pass).
-
-    Replay contract: NOT idempotent (replaying a batch double-counts) —
-    pair with a watermark pull exactly like
-    ``operators/aggstate.merge_aggregate_state`` documents.
-    """
-    from modevetl_spark.sources.fs import fs_has_parquet_files
-
-    summ = mg_summary(batch, col, k)
-    rows = summ.collect()
-    state: dict[str, int] = {}
-    total = 0
-    if fs_has_parquet_files(spark, state_path):
-        for r in spark.read.parquet(state_path).collect():
-            if r["tok"] is None:
-                total += int(r["cnt"])
-            else:
-                state[r["tok"]] = int(r["cnt"])
-    for r in rows:
-        if r["tok"] is None:
-            total += int(r["n_part"])
-        else:
-            # per-partition batch summaries carry no counts (candidates
-            # only) — re-count the batch's candidate occurrences exactly
-            # in one filtered pass below
-            state.setdefault(r["tok"], 0)
-    batch_cands = [t for t in state]
-    if batch_cands:
-        cnts = (
-            batch.where(F.col(col).isin(batch_cands))
-            .groupBy(col)
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-        for r in cnts:
-            state[r[col]] = state.get(r[col], 0) + int(r["c"])
-    if len(state) > k:
-        m = sorted(state.values(), reverse=True)[k]
-        state = {t: c - m for t, c in state.items() if c > m}
-    out = [(t, c) for t, c in state.items()] + [(None, total)]
-    spark.createDataFrame(out, f"tok string, cnt long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(state_path)
-
-
 def kmv_state(hashed: DataFrame, k: int) -> DataFrame:
     """One sketch pass of the K-minimum-values distinct sketch (Bar-Yossef
     et al. 2002; the theta-sketch lineage): per physical partition, fold
@@ -454,51 +384,6 @@ def kmv_distinct_grouped(
             F.col("rel_err") <= F.lit(3.0) / F.sqrt(F.lit(float(k - 2))),
         )
     )
-
-
-def run_kmv_tick(spark, batch: DataFrame, col: str, k: int, state_path: str) -> None:
-    """Standing-job tick: fold one arriving batch into a persisted KMV
-    distinct sketch — the incremental shape of :func:`kmv_distinct`.
-
-    The batch folds to its own ≤ k·P-row candidate union (one
-    mapInPandas pass, no shuffle), which merges with the stored k-min
-    set by the sketch's one merge operation: union the value sets,
-    re-take the k smallest. The state is ≤ k rows BY CONFIG, so the
-    merge runs driver-side on a bounded collect and the store is a tiny
-    overwrite — like the Misra–Gries tick, state size never grows with
-    the corpus.
-
-    Replay contract: IDEMPOTENT, unlike the MG tick — set union is, so
-    re-delivering a batch leaves the state bit-identical and no
-    watermark discipline is required for correctness (pair with one
-    anyway to avoid wasted scans). A consumer estimates the lifetime
-    distinct count from the state alone: (k−1)·2³²/max(h) when full,
-    |state| exactly when not.
-    """
-    import numpy as np
-
-    from modevetl_spark.sources.fs import fs_has_parquet_files
-
-    hashed = batch.select(
-        F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        .alias("h")
-    ).where(F.col("h").isNotNull())
-    incoming = np.array(
-        [r["h"] for r in kmv_state(hashed, k).collect()], dtype="int64"
-    )
-    if fs_has_parquet_files(spark, state_path):
-        stored = np.array(
-            [r["h"] for r in spark.read.parquet(state_path).collect()],
-            dtype="int64",
-        )
-        incoming = np.union1d(incoming, stored)
-    else:
-        incoming = np.unique(incoming)
-    merged = incoming[:k]  # sorted uniques -> k smallest
-    spark.createDataFrame(
-        [(int(h),) for h in merged], "h long"
-    ).coalesce(1).write.mode("overwrite").parquet(state_path)
 
 
 def kmv_distinct(df: DataFrame, col, k: int = 256) -> DataFrame:
@@ -787,8 +672,8 @@ def hll_state(df: DataFrame, key_col: str, b: int = 6) -> DataFrame:
     ).cast("bigint")
     # NULL keys are excluded like every sketch here (COUNT DISTINCT
     # semantics): md5(NULL) is NULL, which would otherwise emit a
-    # j=NULL/mj=NULL register row that crashes run_hll_tick's int()
-    # fold and pollutes the register table for the estimator.
+    # j=NULL/mj=NULL register row that pollutes the register table for
+    # the estimator.
     jr = df.where(F.col(key_col).isNotNull()).select(
         (h32 / F.lit(1 << wbits)).cast("bigint").alias("j"),
         (h32 % F.lit(1 << wbits)).alias("w"),
@@ -797,230 +682,3 @@ def hll_state(df: DataFrame, key_col: str, b: int = 6) -> DataFrame:
         F.lit(wbits + 1) - F.length(F.bin("w")).cast("bigint")
     )
     return jr.groupBy("j").agg(F.max(rho).alias("mj"))
-
-
-def run_hll_tick(spark, batch: DataFrame, col: str, state_path: str, b: int = 6) -> None:
-    """Standing-job tick: fold one arriving batch into a persisted
-    HyperLogLog register table — the incremental shape of
-    :func:`hll_state`.
-
-    The batch reduces to its own ≤ 2^b register rows (one
-    map-side-combined max aggregate), which merge with the stored
-    registers by the sketch's one merge operation: per-register MAX.
-    State is ≤ 2^b rows BY CONFIG, so the merge is a bounded collect
-    and a tiny overwrite — state size never grows with the corpus.
-
-    Replay contract: IDEMPOTENT (max is), like the KMV tick and unlike
-    Misra–Gries — re-delivering a batch leaves the registers
-    bit-identical, so no watermark discipline is required for
-    correctness. A consumer estimates the lifetime distinct count from
-    the state alone via the harmonic form (exact powers of two; see
-    queries/wave10.q_sketch_hll).
-    """
-    from modevetl_spark.sources.fs import fs_has_parquet_files
-
-    incoming = {
-        r["j"]: r["mj"] for r in hll_state(batch, col, b=b).collect()
-    }
-    if fs_has_parquet_files(spark, state_path):
-        for r in spark.read.parquet(state_path).collect():
-            j = r["j"]
-            incoming[j] = max(incoming.get(j, 0), r["mj"])
-    spark.createDataFrame(
-        sorted((int(j), int(mj)) for j, mj in incoming.items()),
-        "j long, mj long",
-    ).coalesce(1).write.mode("overwrite").parquet(state_path)
-
-
-def rank_sample_state(
-    df: DataFrame, val_col: str, key_col: str, eps: float = 0.03125, p: int = 16
-) -> DataFrame:
-    """One batch's mergeable rank-quantile sketch (the deterministic
-    Munro–Paterson/MRL-family member of ``queries/wave8.
-    q_sketch_merge_quantiles``, factored as an operator): rows hash
-    (shared md5 on ``key_col``) into ``p`` cells; each cell sorts by
-    ``(v, key)`` and keeps the MINIMUM of every step-sized rank block
-    (step = max(1, ⌊eps·n_cell⌋)) with the block size as its weight.
-
-    Output: ``(v double, w long)`` — ≤ p·(1/eps + 1) rows, weights sum
-    to the batch rowcount EXACTLY, and for any threshold t the sketch
-    cumulative weight satisfies
-    ``true_count(v ≤ t) ≤ sketch_cum(t) ≤ true_count(v ≤ t) + ⌊eps·n⌋``
-    (each kept row is its block's minimum, so only the one straddling
-    block per cell overcounts, by ≤ step−1). Sketches MERGE by plain
-    union — the error ledgers add.
-
-    Plan shape: one batch-sized exchange on the hash cell, windows
-    partitioned per cell (balanced, spill-aware — never a global sort);
-    the output is config-bounded.
-    """
-    from pyspark.sql import Window
-
-    pid = (
-        F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        % p
-    )
-    # NULLs are excluded from the sketch (and so from the weight total),
-    # matching the mg_summary_grouped defense: a NULL v would sort first
-    # under the block window (kept as a block minimum forever), crash the
-    # tick's float(None) fold, and collide with the v-IS-NULL meta-row
-    # sentinel in persisted state (round-9 advice).
-    src = df.where(
-        F.col(val_col).isNotNull() & F.col(key_col).isNotNull()
-    ).select(
-        F.col(val_col).cast("double").alias("v"),
-        F.col(key_col).cast("string").alias("tk"),
-        pid.alias("pid"),
-    )
-    w_rank = Window.partitionBy("pid").orderBy("v", "tk")
-    w_cell = Window.partitionBy("pid")
-    numbered = src.select(
-        "pid",
-        "v",
-        F.row_number().over(w_rank).alias("rn"),
-        F.count(F.lit(1)).over(w_cell).alias("n_p"),
-    ).withColumn(
-        "step",
-        F.greatest(
-            F.lit(1).cast("bigint"),
-            F.floor(F.lit(float(eps)) * F.col("n_p")).cast("bigint"),
-        ),
-    )
-    return numbered.where((F.col("rn") - 1) % F.col("step") == 0).select(
-        "v",
-        F.least(F.col("step"), F.col("n_p") - F.col("rn") + 1).alias("w"),
-    )
-
-
-def _mrl_compact(
-    pts: list[tuple[float, int]], w_total: int, eps: float
-) -> tuple[list[tuple[float, int]], int]:
-    """Driver-side compaction of a bounded merged point set: sort by v,
-    replace every step-weight block by its minimum v carrying the
-    block's exact total weight. Returns (points, added_error): block
-    cumulative weights at kept points are EXACT partial sums of the
-    input, so per threshold only the one straddling block overcounts,
-    by ≤ (W_block − w_first) — the returned ledger increment is the max
-    over blocks."""
-    step = max(1, int(eps * w_total))
-    pts = sorted(pts)
-    out: list[tuple[float, int]] = []
-    added_err = 0
-    bv, bw, bfirst = None, 0, 0
-    for v, w in pts:
-        if bv is None:
-            bv, bw, bfirst = v, int(w), int(w)
-        else:
-            bw += int(w)
-        if bw >= step:
-            out.append((bv, bw))
-            added_err = max(added_err, bw - bfirst)
-            bv, bw, bfirst = None, 0, 0
-    if bv is not None:
-        out.append((bv, bw))
-        added_err = max(added_err, bw - bfirst)
-    return out, added_err
-
-
-def run_mrl_tick(
-    spark,
-    batch: DataFrame,
-    val_col: str,
-    key_col: str,
-    state_path: str,
-    eps: float = 0.03125,
-    p: int = 16,
-    k_max: int = 2048,
-) -> None:
-    """Standing-job tick: fold one arriving batch into a persisted
-    mergeable rank-quantile sketch — the incremental shape of
-    ``q_sketch_merge_quantiles``, completing the tick family (MG, KMV
-    and HLL ticks exist; the rank sketch didn't — round-8 verdict).
-
-    The batch reduces to its own ≤ p·(1/eps+1) sample rows
-    (:func:`rank_sample_state` — one batch-sized exchange, nothing
-    corpus-sized), which MERGE with the stored points by plain union;
-    when the union exceeds ``k_max`` rows it re-compacts driver-side
-    (:func:`_mrl_compact`). State is bounded BY CONFIG at k_max points
-    + one meta row no matter how many ticks run.
-
-    HONEST ERROR LEDGER, stored as state: every batch adds ⌊eps·n_b⌋
-    and every compaction adds its measured max block excess; the
-    consumer-facing guarantee (asserted by the pytest differential
-    against exact ranks) is
-    ``count(v < est) < target`` and ``count(v ≤ est) ≥ target − err``
-    for est = :func:`mrl_quantile_estimates`'s answer at target =
-    ⌈q·n_total⌉. Size eps/k_max so the ledger stays inside the target
-    rank tolerance for the expected batch count (err grows by ≤
-    ⌊eps·n_b⌋ + max-block-excess per tick, i.e. O(eps·n_total) for
-    balanced batch sizes).
-
-    State schema: ``v double, w long, err long`` — data rows carry
-    (v, w, NULL); the single meta row carries (NULL, n_total,
-    err_bound).
-
-    Replay contract: NOT idempotent (replaying a batch re-adds its
-    weight) — pair with a watermark pull exactly like the Misra–Gries
-    tick documents; the KMV/HLL ticks are the idempotent members.
-    """
-    from modevetl_spark.sources.fs import fs_has_parquet_files
-
-    new = rank_sample_state(batch, val_col, key_col, eps=eps, p=p).collect()
-    pts = [(float(r["v"]), int(r["w"])) for r in new]
-    n_b = sum(w for _, w in pts)
-    n_total, err_bound = n_b, int(eps * n_b)
-    if fs_has_parquet_files(spark, state_path):
-        for r in spark.read.parquet(state_path).collect():
-            if r["v"] is None:
-                n_total += int(r["w"])
-                err_bound += int(r["err"])
-            else:
-                pts.append((float(r["v"]), int(r["w"])))
-    if len(pts) > k_max:
-        pts, added = _mrl_compact(pts, n_total, eps)
-        err_bound += added
-    out = [(v, w, None) for v, w in sorted(pts)] + [(None, n_total, err_bound)]
-    spark.createDataFrame(out, "v double, w long, err long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(state_path)
-
-
-def mrl_quantile_estimates(
-    spark, state_path: str, probs: list[float]
-) -> list[dict]:
-    """Answer quantile queries from a persisted :func:`run_mrl_tick`
-    state alone (bounded read, no corpus access): est(q) = the minimum
-    stored point whose cumulative weight reaches target = ⌈q·n_total⌉.
-    Returns one dict per prob: {p, target, est, n_total, err_bound} —
-    the ledger rides along so the consumer knows the rank tolerance the
-    estimate carries."""
-    import math
-
-    pts, n_total, err_bound = [], 0, 0
-    for r in spark.read.parquet(state_path).collect():
-        if r["v"] is None:
-            n_total, err_bound = int(r["w"]), int(r["err"])
-        else:
-            pts.append((float(r["v"]), int(r["w"])))
-    pts.sort()
-    out = []
-    for q_ in probs:
-        target = max(1, math.ceil(q_ * n_total))
-        cum = 0
-        est = pts[-1][0] if pts else None
-        for v, w in pts:
-            cum += w
-            if cum >= target:
-                est = v
-                break
-        out.append(
-            {
-                "p": q_,
-                "target": target,
-                "est": est,
-                "n_total": n_total,
-                "err_bound": err_bound,
-            }
-        )
-    return out

@@ -19,13 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from modevetl_spark.operators.closure import ancestors_of, transitive_closure
+from modevetl_spark.operators.closure import transitive_closure
 from modevetl_spark.sources.catalog import load
 from modevetl_spark.streaming.incremental import (
     Watermark,
     pull_newer,
     run_incremental,
-    upsert_parquet,
 )
 
 
@@ -73,100 +72,6 @@ def hierarchy_job(
         keys=["ancestor"],
         state_path=state_path,
     )
-
-
-def hierarchy_job_incremental(
-    spark: SparkSession,
-    sf_dir: str,
-    sink_path: str,
-    state_path: str,
-    upper_bound: int | None = None,
-) -> int:
-    """True frontier-incremental hierarchy (insert-only edge stream):
-    walk ONLY the pending nodes' ancestor chains (``ancestors_of``) and
-    merge the count deltas into the sink — O(|pending| * depth) per run
-    instead of a full-closure recompute. This is the shape that survives
-    a 100 TB edge table with a trickle of daily changes.
-
-    Matches :func:`hierarchy_job`'s full recompute exactly for insert-only
-    workloads (asserted in tests); edge deletions/moves require the full
-    recompute path.
-    """
-    import os
-
-    from pyspark.sql import functions as SF
-
-    part = load(spark, sf_dir, "part")
-    edges = part.where(F.col("p_partkey") >= 2).select(
-        F.col("p_partkey").alias("node"),
-        F.expr("p_partkey div 2").alias("ancestor"),
-        F.col("p_partkey").alias("modified_seq"),
-    )
-    wm = Watermark(state_path, spark=spark)
-    mark = wm.read()
-    # Replay safety: the delta merge is NOT idempotent, so a stale/lost
-    # state file must not re-add already-counted nodes. Like the reference
-    # (which asks the ES sink for its max modified_ts), derive a second
-    # mark from the sink itself and take the max — a replayed batch then
-    # pulls nothing.
-    from modevetl_spark.sources.fs import fs_exists
-
-    if fs_exists(spark, sink_path):
-        sink_mark = (
-            spark.read.parquet(sink_path).agg(SF.max("max_node")).collect()[0][0]
-        )
-        if sink_mark is not None:
-            mark = sink_mark if mark is None else max(mark, sink_mark)
-    pending = pull_newer(edges, "modified_seq", mark)
-    if upper_bound is not None:  # simulate a partial batch (tests/demos)
-        pending = pending.where(F.col("modified_seq") <= upper_bound)
-    n = pending.count()
-    if n == 0:
-        return 0
-
-    chains = ancestors_of(
-        pending.select("node"),
-        edges.select(F.col("node").alias("src"), F.col("ancestor").alias("dst")),
-        node="node",
-        src="src",
-        dst="dst",
-    )
-    deltas = chains.groupBy("ancestor").agg(
-        SF.count(SF.lit(1)).alias("d_descendants"),
-        SF.min("node").alias("d_min"),
-        SF.max("node").alias("d_max"),
-    )
-    if os.path.exists(sink_path):
-        prev = spark.read.parquet(sink_path)
-        merged = (
-            prev.join(deltas, on="ancestor", how="full")
-            .select(
-                "ancestor",
-                (
-                    SF.coalesce("n_descendants", SF.lit(0))
-                    + SF.coalesce("d_descendants", SF.lit(0))
-                ).alias("n_descendants"),
-                SF.least(
-                    SF.coalesce("min_node", SF.lit((1 << 62))), SF.coalesce("d_min", SF.lit(1 << 62))
-                ).alias("min_node"),
-                SF.greatest(
-                    SF.coalesce("max_node", SF.lit(-(1 << 62))),
-                    SF.coalesce("d_max", SF.lit(-(1 << 62))),
-                ).alias("max_node"),
-            )
-        )
-    else:
-        merged = deltas.select(
-            "ancestor",
-            F.col("d_descendants").alias("n_descendants"),
-            F.col("d_min").alias("min_node"),
-            F.col("d_max").alias("max_node"),
-        )
-    upsert_parquet(spark, merged, sink_path, keys=["ancestor"])
-    new_mark = pending.agg(F.max("modified_seq")).collect()[0][0]
-    if new_mark is not None:
-        wm.write(int(new_mark))
-    return n
 
 
 def reviews_transform(events: DataFrame) -> DataFrame:

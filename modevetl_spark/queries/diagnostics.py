@@ -763,11 +763,13 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hits_oracle_sql(iterations: int = 8) -> str:
-    """Unrolls operators/graph.hits's recurrence into chained CTEs, one
-    pair of half-steps per iteration — the q_graph_pagerank replay
-    pattern: every order-sensitive sum is ROUND-9dp + DECIMAL(18,9)
-    (exact), every scalar norm is itself a rounded decimal sum, so both
-    engines walk the identical IEEE double sequence."""
+    """Unrolls the HITS recurrence (authority = sum of in-neighbours'
+    hub scores, hub = sum of out-neighbours' authority scores, each
+    L1-normalized) into chained CTEs, one pair of half-steps per
+    iteration — the q_graph_pagerank replay pattern: every
+    order-sensitive sum is ROUND-9dp + DECIMAL(18,9) (exact), every
+    scalar norm is itself a rounded decimal sum, so both engines walk
+    the identical IEEE double sequence."""
     sql = ["""WITH edges AS (
     SELECT DISTINCT p_partkey AS s, (p_partkey * p_partkey) % 97 AS d
     FROM part WHERE p_partkey >= 2
@@ -825,8 +827,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     generalizes to mutually-recursive score vectors with per-step
     normalization.
 
-    Determinism: fixed 8 iterations of the
-    :func:`modevetl_spark.operators.graph.hits` recurrence — every
+    Determinism: fixed 8 iterations of the HITS recurrence — every
     order-sensitive sum is ROUND-9dp + DECIMAL(18,9) (exact), every L1
     norm a rounded decimal sum — replayed bit-identically (see
     ``_hits_replay``); the oracle unrolls the same recurrence
@@ -878,7 +879,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     src96 = {int(r.key) for r in stats if r.tag == 1}
     out_schema = "node bigint, authority double, hub double"
     if not cnt:
-        # mirror operators.graph.hits's n_edges == 0 early return
+        # an empty edge list scores no node
         return spark.createDataFrame([], out_schema)
     a8, h8 = _hits_replay(cnt, src96, iterations=8)
     rows = [
@@ -908,8 +909,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hits_replay(
     cnt: dict[int, int], src96: set[int], iterations: int = 8
 ) -> tuple[dict[int, float], dict[int, float]]:
-    """Driver-side replay of :func:`modevetl_spark.operators.graph.hits`
-    over the class-collapsed state — bit-identical to the in-DAG form:
+    """Driver-side replay of the HITS recurrence over the class-collapsed
+    state — bit-identical to the per-node in-DAG form the oracle unrolls:
     ``_round9`` is Spark's ROUND(double, 9) (HALF_UP on the double's
     SHORTEST decimal repr — the JVM's ``BigDecimal.valueOf`` path, see
     the ``_round9`` docstring and probe battery), ``_dec9`` the

@@ -26,7 +26,6 @@ from modevetl_spark.operators.dedup import (
     dedup_corpus,
     exact_dedup_key,
     jaccard_pairs,
-    minhash_candidates,
     minhash_candidates_md5,
     simhash_candidates,
 )
@@ -146,8 +145,9 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L1 near-dup: MinHash signatures + LSH banding -> candidate pairs,
     verified with exact Jaccard. Runs on the md5 affine hash family
     (minhash_candidates_md5) so the oracle replays signature, banding,
-    candidate join AND verification; minhash_candidates keeps the
-    xxhash64 fast path for when portability isn't needed."""
+    candidate join AND verification; the standing dedup job keeps the
+    xxhash64 fast path (build_minhash_index) for when portability isn't
+    needed."""
     prep(spark)
     from modevetl_spark.operators.dedup import (
         _banded_pairs,
@@ -1237,16 +1237,17 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# md5-based MinHash twin: the production minhash_candidates uses xxhash64
-# (fastest JVM hash, no DuckDB twin -> rows-only). This variant computes
-# the SAME signature/banding pipeline from md5 (shared by both engines,
-# 32-bit prefix via base-16 conv) with an explicit affine hash family
-# mh_i = (a_i*h + b_i) mod P, so the driver hash-verifies the entire
-# signature computation — upgrading the MinHash family's evidence from
-# rows-only to oracle-graded. Constants: P = 2^31-1; a_i, b_i derived
-# from i with the same arithmetic in both engines (products stay < 2^63:
-# a_i < P, h < 2^32, so a_i*h <= 9.222e18 < 2^63-1 — no overflow in
-# Spark's wrapping or DuckDB's checked bigint math).
+# md5-based MinHash twin: the standing dedup job's build_minhash_index
+# uses xxhash64 (fastest JVM hash, no DuckDB twin -> rows-only). This
+# variant computes the SAME signature/banding pipeline from md5 (shared
+# by both engines, 32-bit prefix via base-16 conv) with an explicit
+# affine hash family mh_i = (a_i*h + b_i) mod P, so the driver
+# hash-verifies the entire signature computation — upgrading the
+# MinHash family's evidence from rows-only to oracle-graded. Constants:
+# P = 2^31-1; a_i, b_i derived from i with the same arithmetic in both
+# engines (products stay < 2^63: a_i < P, h < 2^32, so a_i*h <=
+# 9.222e18 < 2^63-1 — no overflow in Spark's wrapping or DuckDB's
+# checked bigint math).
 _MINHASH_SIG_ORACLE = """
 WITH t AS (
     SELECT doc_id,
@@ -1281,7 +1282,7 @@ FROM m GROUP BY doc_id, band
 @q("q_minhash_signatures", oracle_sql=_MINHASH_SIG_ORACLE)
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L1: oracle-graded MinHash signatures + LSH band keys (k=16 hashes,
-    4 bands of 4) — md5-twin of ``minhash_candidates``'s xxhash64 path.
+    4 bands of 4) — md5-twin of ``build_minhash_index``'s xxhash64 path.
     Same plan shape as production: explode shingles, one vectorized
     hash-agg computes all k mins with map-side combine (the measured-fast
     pattern), then one agg per (doc, band) folds the band key. Docs

@@ -193,8 +193,8 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH/IVF dedup family, with the blocking key here a trusted metadata
     column. The per-pair dot product is a JVM-side fold (no explode, no
     UDF). At 100 TB you'd bucket the table by label once
-    (write_bucketed) and this join becomes exchange-free; a block too
-    hot to pair-expand is exactly the IVF-cell-split problem and is
+    (``DataFrameWriter.bucketBy``) and this join becomes exchange-free;
+    a block too hot to pair-expand is exactly the IVF-cell-split problem and is
     handled upstream of this operator."""
     prep(spark)
     from modevetl_spark.operators.clustering import dec_fold_sum

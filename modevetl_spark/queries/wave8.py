@@ -637,7 +637,7 @@ def join_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-keyed equi-join probe-prefix × full-postings; verification
     joins the ≤|cand| pairs back to the per-doc token arrays by id and
     intersects in-task. At 100 TB postings would be bucketed by token
-    (``sources/formats.write_bucketed``) making the candidate join
+    (``DataFrameWriter.bucketBy``) making the candidate join
     co-located."""
     from modevetl_spark.operators._util import spread
     from modevetl_spark.operators.text import tokens, word_shingles

@@ -62,14 +62,3 @@ def quiet_bounded_window_warnings(spark: SparkSession) -> None:
         "org.apache.spark.sql.execution.window.WindowExec",
         jvm.org.apache.logging.log4j.Level.ERROR,
     )
-
-
-def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs on a session we did not create (the driver's).
-
-    Only session-level SQL confs here — cluster confs are immutable after
-    JVM start.
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    return spark

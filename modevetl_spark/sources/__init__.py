@@ -1,3 +1,3 @@
-from modevetl_spark.sources.catalog import TABLES, load, load_all
+from modevetl_spark.sources.catalog import TABLES, load
 
-__all__ = ["TABLES", "load", "load_all"]
+__all__ = ["TABLES", "load"]

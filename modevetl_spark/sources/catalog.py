@@ -16,8 +16,6 @@ the files at every SF.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 SCHEMAS = {
@@ -44,14 +42,8 @@ SCHEMAS = {
 
 TABLES = tuple(SCHEMAS)
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table not in SCHEMAS:
         raise KeyError(f"unknown table {table!r}; known: {TABLES}")
     return spark.read.schema(SCHEMAS[table]).parquet(f"{sf_dir}/{table}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}

@@ -153,17 +153,6 @@ def fs_rename_into_dir(
     return dest.toString()
 
 
-def fs_delete(spark: SparkSession | None, path: str) -> None:
-    """Delete one file, following the path's scheme."""
-    if not _require_session(spark, path):
-        if os.path.exists(path):
-            os.remove(path)
-        return
-    fs, hpath = _fs_and_path(spark, path)
-    if fs.exists(hpath):
-        fs.delete(hpath, False)
-
-
 def read_json_state(spark: SparkSession | None, path: str):
     """Small JSON state file -> dict, or None if absent.
 

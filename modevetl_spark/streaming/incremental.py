@@ -30,17 +30,16 @@ backup-restore recovery on the next run.
 
 Object-store boundary (honest): watermark state, existence probes, and
 every READ path go through :mod:`modevetl_spark.sources.fs` and accept
-``s3a://``/``hdfs://`` URIs. The upsert/delete SWAP itself relies on
-atomic directory rename, which object stores don't provide — on a
-lakehouse the managed-table MERGE (Delta/Iceberg, jars absent in this
-container) replaces exactly this layer; on HDFS the rename contract
-holds as-is. The swap is deliberately the one local-semantics component,
-isolated behind ``upsert_parquet`` / ``delete_parquet``.
+``s3a://``/``hdfs://`` URIs. The upsert SWAP itself relies on atomic
+directory rename, which object stores don't provide — on a lakehouse
+the managed-table MERGE (Delta/Iceberg, jars absent in this container)
+replaces exactly this layer; on HDFS the rename contract holds as-is.
+The swap is deliberately the one local-semantics component, isolated
+behind ``upsert_parquet``.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -99,8 +98,8 @@ def _null_safe_key_join(
 
 def _has_parquet_files(path: str) -> bool:
     """True if any .parquet data file exists under ``path`` — a sink
-    fully emptied by deletes has only markers left, and schema inference
-    over it would fail. Delegates to the FS seam's single implementation
+    directory holding only markers (``_SUCCESS``) has no schema to read.
+    Delegates to the FS seam's single implementation
     (local branch: this module's sinks are local/HDFS-rename stores)."""
     from modevetl_spark.sources.fs import fs_has_parquet_files
 
@@ -108,9 +107,7 @@ def _has_parquet_files(path: str) -> bool:
 
 
 def _touched_predicate(parts: list[dict], partition_by: list[str]) -> Column:
-    """NULL-safe predicate selecting exactly the given partitions —
-    shared by the upsert and delete partition-scoped rewrites so the
-    partition-addressing logic cannot diverge between them."""
+    """NULL-safe predicate selecting exactly the given partitions."""
 
     def part_pred(p: dict) -> Column:
         cond = F.lit(True)
@@ -192,10 +189,10 @@ def upsert_parquet(
         os.rename(backup, sink_path)
     _recover_partitioned(sink_path)
 
-    # A sink emptied by deletes keeps markers (_SUCCESS) but no data
-    # files — schema inference over it raises UNABLE_TO_INFER_SCHEMA and
-    # every later run keeps failing. Treat it as nonexistent (mirror of
-    # delete_parquet's guard); the swap below still rename-asides the
+    # A sink directory with markers (_SUCCESS) but no data files (its
+    # rows deleted outside this module) has no schema to read: reading it
+    # raises UNABLE_TO_INFER_SCHEMA and every later run keeps failing.
+    # Treat it as nonexistent; the swap below still rename-asides the
     # marker-only dir.
     exists = os.path.exists(sink_path) and _has_parquet_files(sink_path)
     if exists:
@@ -332,12 +329,9 @@ def _swap_touched_partitions(
     out: str,
     parts: list[dict],
     partition_by: list[str],
-    allow_empty_staging: bool = False,
 ) -> None:
-    """Shared swap tail for partition-scoped rewrites (upsert + delete):
-    pre-flight addressability checks, then per-partition rename-aside
-    swap. ``allow_empty_staging`` is for delete, where every touched
-    partition may legitimately end up empty (all rows removed)."""
+    """Swap tail of the partitioned upsert: pre-flight addressability
+    checks, then per-partition rename-aside swap."""
     # Pre-flight: the swap addresses partition directories by the names
     # _hive_part_value constructs. If Spark's own rendering of any staged
     # partition diverges from ours (it trims fraction zeros in timestamps,
@@ -361,9 +355,7 @@ def _swap_touched_partitions(
     # exist. An empty walk means the staging dir vanished out from under
     # us (external interference); proceeding would read every touched
     # partition as "emptied" and delete live data while reporting success.
-    # (Delete passes allow_empty_staging: an all-rows-removed batch
-    # legitimately stages nothing.)
-    if not staged and not allow_empty_staging:
+    if not staged:
         raise RuntimeError(
             f"partitioned upsert aborted (sink untouched): staging dir {out} "
             "is empty or missing after a non-empty merge was written"
@@ -538,197 +530,3 @@ def run_incremental(
             new_mark = new_mark.isoformat(sep=" ")
         wm.write(new_mark)
     return n
-
-
-def delete_parquet(
-    spark: SparkSession,
-    victims: DataFrame,
-    sink_path: str,
-    keys: list[str],
-    partition_by: list[str] | None = None,
-) -> None:
-    """Idempotent id-keyed DELETE from a parquet sink — the
-    right-to-be-forgotten counterpart of :func:`upsert_parquet` (remove
-    every row whose key appears in ``victims``).
-
-    Partitioned sink: only partitions owning a matching key are rewritten
-    (located by the same column-pruned semi-join probe as upsert), each
-    swapped in with the rename-aside crash contract; a partition emptied
-    by the delete is removed. Untouched partitions stay byte-identical —
-    a forget request is O(partitions hit), not O(sink).
-
-    Unpartitioned sink: anti-join rewrite with the whole-sink rename-aside
-    swap. A sink with no parquet files left (a previous delete emptied it
-    entirely) is treated as empty: the call converges as a no-op instead
-    of failing schema inference, so forget-request replays stay
-    idempotent even after total deletion.
-    """
-    backup = sink_path.rstrip("/") + ".upsert_bak"
-    if not os.path.exists(sink_path) and os.path.exists(backup):
-        os.rename(backup, sink_path)
-    _recover_partitioned(sink_path)
-    if not os.path.exists(sink_path) or not _has_parquet_files(sink_path):
-        return
-
-    existing = spark.read.parquet(sink_path)
-    victim_keys = victims.select(*keys).distinct()
-
-    if partition_by:
-        parts = [
-            r.asDict()
-            for r in _null_safe_key_join(
-                existing.select(*{*keys, *partition_by}),
-                victim_keys,
-                keys,
-                "left_semi",
-            )
-            .select(*partition_by)
-            .distinct()
-            .collect()
-        ]
-        if not parts:
-            return
-
-        kept = _null_safe_key_join(
-            existing.where(_touched_predicate(parts, partition_by)),
-            victim_keys,
-            keys,
-            "left_anti",
-        )
-        tmp = _staging_dir(sink_path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        out = os.path.join(tmp, "data")
-        kept.write.mode("overwrite").partitionBy(*partition_by).parquet(out)
-        # Empty staging is legitimate ONLY when the write completed and
-        # genuinely produced nothing (the delete emptied every touched
-        # partition) — witnessed by Spark's _SUCCESS marker. If the
-        # marker is missing, something external destroyed the staging
-        # dir after the write; the swap would then delete live
-        # partitions including surviving rows, so the vanished-staging
-        # guard stays armed.
-        _swap_touched_partitions(
-            sink_path,
-            tmp,
-            out,
-            parts,
-            partition_by,
-            allow_empty_staging=os.path.exists(os.path.join(out, "_SUCCESS")),
-        )
-        return
-
-    kept = _null_safe_key_join(existing, victim_keys, keys, "left_anti")
-    tmp = _staging_dir(sink_path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    out = os.path.join(tmp, "data")
-    kept.write.mode("overwrite").parquet(out)
-    shutil.rmtree(backup, ignore_errors=True)
-    os.rename(sink_path, backup)
-    os.rename(out, sink_path)
-    shutil.rmtree(backup, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    sink_path: str,
-    partition_by: list[str] | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files: int = 2,
-) -> int:
-    """Small-file compaction for a sink that incremental upserts/deletes
-    have fragmented — the maintenance third of the sink lifecycle.
-
-    Partitioned: each partition with more than ``min_files`` data files
-    is rewritten to ceil(bytes/target) files through the same
-    rename-aside swap as upsert/delete (crash leaves the partition fully
-    old or fully new; untouched partitions stay byte-identical).
-    Unpartitioned: whole-sink rewrite under the same contract. Returns
-    the number of partitions (or 1 for the whole sink) compacted.
-
-    At 100 TB this runs as a periodic job over hot partitions only — the
-    per-partition file census is filesystem metadata, no data read; the
-    rewrite reads each fragmented partition once.
-    """
-    import math
-
-    # Same crash-recovery preamble as upsert/delete: a crash between the
-    # unpartitioned swap's two renames leaves the sink absent with its
-    # backup intact — restore it first, or this run (and every reader)
-    # would see the sink as missing while reporting success.
-    backup = sink_path.rstrip("/") + ".upsert_bak"
-    if not os.path.exists(sink_path) and os.path.exists(backup):
-        os.rename(backup, sink_path)
-    _recover_partitioned(sink_path)
-    if not os.path.exists(sink_path):
-        return 0
-
-    def census(d: str) -> tuple[int, int]:
-        n, size = 0, 0
-        for root, _, files in os.walk(d):
-            for f in files:
-                if f.endswith(".parquet"):
-                    n += 1
-                    size += os.path.getsize(os.path.join(root, f))
-        return n, size
-
-    if not partition_by:
-        n_files, size = census(sink_path)
-        if n_files <= min_files:
-            return 0
-        existing = spark.read.parquet(sink_path)
-        tmp = _staging_dir(sink_path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        out = os.path.join(tmp, "data")
-        existing.repartition(
-            max(1, math.ceil(size / target_file_bytes))
-        ).write.mode("overwrite").parquet(out)
-        backup = sink_path.rstrip("/") + ".upsert_bak"
-        shutil.rmtree(backup, ignore_errors=True)
-        os.rename(sink_path, backup)
-        os.rename(out, sink_path)
-        shutil.rmtree(backup, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-        return 1
-
-    # partitioned: census each leaf partition directory
-    fragmented: list[tuple[str, int]] = []  # (rel_path, n_target_files)
-    for root, subdirs, files in os.walk(sink_path):
-        if subdirs or root == sink_path:
-            continue
-        rel = os.path.relpath(root, sink_path)
-        if ".upsert" in rel:
-            continue
-        n_files, size = census(root)
-        if n_files > min_files:
-            fragmented.append(
-                (rel, max(1, math.ceil(size / target_file_bytes)))
-            )
-    if not fragmented:
-        return 0
-
-    tmp = _staging_dir(sink_path)
-    shutil.rmtree(tmp, ignore_errors=True)
-    out = os.path.join(tmp, "data")
-    # Rewrite each fragmented partition: read just that directory (no
-    # full-sink scan), coalesce to the target file count, stage under the
-    # same hive-style relative path the swap addresses.
-    for rel, n_target in fragmented:
-        part_df = spark.read.parquet(os.path.join(sink_path, rel))
-        part_df.coalesce(n_target).write.mode("overwrite").parquet(
-            os.path.join(out, rel)
-        )
-
-    bakroot = sink_path.rstrip("/") + ".upsert_bak_parts"
-    shutil.rmtree(bakroot, ignore_errors=True)
-    os.makedirs(bakroot)
-    for rel, _ in fragmented:
-        live = os.path.join(sink_path, rel)
-        new = os.path.join(out, rel)
-        bak = os.path.join(bakroot, rel)
-        os.makedirs(os.path.dirname(bak), exist_ok=True)
-        os.rename(live, bak)
-        os.makedirs(os.path.dirname(live), exist_ok=True)
-        os.rename(new, live)
-    shutil.rmtree(bakroot, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    return len(fragmented)

@@ -24,7 +24,6 @@ SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 # `pytest tests/ -m "" --durations=100`.
 _SLOW_TESTS = {
     "test_diagnostics.py::test_cluster_stats_consistent_with_corpus_dedup",
-    "test_diagnostics.py::test_heavy_hitter_tick_guarantee_across_splits",
     "test_diagnostics.py::test_mg_heavy_hitters_guarantee_any_partitioning",
     "test_diagnostics_property.py::test_apportionment_matches_python",
     "test_diagnostics_property.py::test_cusum_argmax_matches_python",
@@ -58,24 +57,17 @@ _SLOW_TESTS = {
     "test_sketch_property.py::test_kmv_matches_python_replay",
     "test_sketch_property.py::test_snm_pairs_match_naive_definition",
     "test_sketch_property.py::test_textrank_differential",
-    "test_streaming.py::test_compact_parquet_partitioned",
-    "test_streaming.py::test_hierarchy_incremental_equals_full",
     "test_streaming.py::test_jobs_cli_settings_file",
     "test_streaming.py::test_run_incremental_partitioned_sink",
     "test_streaming.py::test_streaming_dedup_equals_full_recompute",
     "test_streaming.py::test_upsert_null_key_replay_converges",
     "test_warehouse.py::test_ntile_from_rank_matches_sql_ntile",
     "test_warehouse.py::test_ranking_operators_degenerate_inputs",
-    "test_wave10.py::TestHllTick::test_incremental_equals_batch_and_idempotent",
     "test_wave10.py::TestHllTick::test_null_keys_excluded",
     "test_wave11.py::TestEmbeddingPca::test_python_differential_exact",
     "test_wave11.py::TestMixtureTemperature::test_sub_ppm_source_boost_is_null_both_engines",
     "test_wave7.py::test_histogram_quantiles_bracket_exact_rank",
     "test_wave8.py::TestJoinContainment::test_directed_asymmetry",
-    "test_wave8.py::test_kmv_tick_merge_and_replay_idempotence",
-    "test_wave8.py::test_mrl_tick_bounds_hold_under_any_batch_split",
-    "test_wave8.py::test_mrl_tick_compaction_keeps_state_bounded_and_honest",
-    "test_wave8.py::test_rank_sample_state_excludes_nulls",
 }
 
 

@@ -5,9 +5,13 @@ CORRECTNESS gate — run at sf0.001 for speed (the driver uses sf0.01).
 
 from __future__ import annotations
 
+import ast
 import functools
+import glob
+import importlib
 import json
 import os
+import pkgutil
 
 import pytest
 
@@ -126,3 +130,113 @@ def test_registry_loads_once_returns_copies():
     a.pop(next(iter(a)))
     oa.clear()
     assert Q.all_queries() == b and Q.all_oracle()
+
+
+# Top-level defs that no front door reaches but that stay, one reason each.
+_STREAMING = "Structured Streaming surface, which PAPER.md names"
+_UNREACHED_KEPT = {
+    f"modevetl_spark.streaming.structured.{name}": reason
+    for name, reason in {
+        "events_stream": f"{_STREAMING}: the events source",
+        "tumbling_counts": f"{_STREAMING}: watermarked tumbling windows",
+        "session_counts": f"{_STREAMING}: native session windows",
+        "deduped": f"{_STREAMING}: watermark-bounded dedup",
+        "stateful_sessions": f"{_STREAMING}: applyInPandasWithState sessions",
+        "run_to_sink": f"{_STREAMING}: append-mode file sink",
+        "run_foreach_batch_upsert": f"{_STREAMING}: foreachBatch upsert sink",
+        "documents_stream": f"{_STREAMING}: the documents source",
+        "run_streaming_dedup": f"{_STREAMING}: the dedup job's stream form",
+        "run_streaming_scd2": f"{_STREAMING}: the scd2 job's stream form",
+        "run_streaming_curate": f"{_STREAMING}: the curate job's stream form",
+    }.items()
+}
+
+
+def _front_door_roots(w: GE.Walker) -> list[int]:
+    """Walker nodes of what the three front doors call: every registry
+    callable, the cron CLI's ``jobs.main``, the names each query module's
+    top-level statements load (its oracle strings are built there), and
+    the package names ``__spark_entry__.py``, ``bench.py`` and
+    ``perfbench/`` import."""
+    from modevetl_spark import jobs
+    from modevetl_spark import queries as Q
+
+    objs = [*_QUERIES.values(), jobs.main]
+    roots = []
+    for name in Q._MODULES:
+        mod = importlib.import_module(f"{GE.PKG}.queries.{name}")
+        with open(mod.__file__, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for s in tree.body:
+            if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                s.body = [ast.Pass()]  # runs when called, not on import
+        roots += w._refs(tree, dict(vars(mod)), mod.__package__)
+    doors = [os.path.join(GE.ROOT, p) for p in ("__spark_entry__.py", "bench.py")]
+    for path in doors + sorted(glob.glob(os.path.join(GE.ROOT, "perfbench", "*.py"))):
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom) and GE._ours(n.module):
+                mod = importlib.import_module(n.module)
+                objs += [getattr(mod, a.name) for a in n.names]
+    return roots + [i for i in map(w.node, objs) if i is not None]
+
+
+def test_every_def_reached_from_a_front_door():
+    """Every top-level def and class of the package is reached from a
+    front door (registry, cron CLI, benchmark) or kept on purpose in
+    _UNREACHED_KEPT; code only tests call is deleted with its tests."""
+    w = GE.Walker()
+    reached: set[int] = set()
+    for root in _front_door_roots(w):
+        if root not in reached:
+            reached |= w.reach(root)
+    import modevetl_spark
+
+    unreached = {}
+    for info in pkgutil.walk_packages(modevetl_spark.__path__, f"{GE.PKG}."):
+        if info.name == GE.REGISTRY:
+            continue
+        mod = importlib.import_module(info.name)
+        with open(mod.__file__, encoding="utf-8") as f:
+            body = ast.parse(f.read()).body
+        for s in body:
+            if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if w.node(getattr(mod, s.name)) not in reached:
+                    unreached[f"{info.name}.{s.name}"] = s.end_lineno - s.lineno + 1
+    stray = sorted(set(unreached) - set(_UNREACHED_KEPT))
+    assert not stray, (
+        f"{len(stray)} defs ({sum(unreached[k] for k in stray)} lines) "
+        f"reached by no front door: {stray}"
+    )
+    gone = sorted(set(_UNREACHED_KEPT) - set(unreached))
+    assert not gone, f"kept entries now reached or gone, drop them: {gone}"
+
+
+def test_slow_tier_entries_name_existing_tests():
+    """conftest's _SLOW_TESTS is matched against collected node ids, and
+    an entry that names no test is silently ignored: every entry must
+    name a test function that exists in its file."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(here, "conftest.py"), encoding="utf-8") as f:
+        conftest = ast.parse(f.read())
+    (entries,) = [
+        ast.literal_eval(n.value)
+        for n in conftest.body
+        if isinstance(n, ast.Assign)
+        and any(isinstance(t, ast.Name) and t.id == "_SLOW_TESTS" for t in n.targets)
+    ]
+    defined: dict[str, set[str]] = {}
+    missing = []
+    for entry in sorted(entries):
+        fname, *scope = entry.split("[", 1)[0].split("::")
+        if fname not in defined:
+            with open(os.path.join(here, fname), encoding="utf-8") as f:
+                defined[fname] = {
+                    n.name
+                    for n in ast.walk(ast.parse(f.read()))
+                    if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+                }
+        if scope[-1] not in defined[fname]:
+            missing.append(entry)
+    assert not missing, f"_SLOW_TESTS entries naming no test: {missing}"

@@ -216,44 +216,6 @@ def test_zipf_plan_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in p, p
 
 
-def test_hits_closed_form_star(spark):
-    """On a star graph (spokes → center) the center is the unique
-    authority (score 1) and every spoke an equal hub; the center's hub
-    score and spokes' authority scores are 0."""
-    from modevetl_spark.operators.graph import hits
-
-    edges = spark.createDataFrame(
-        [(s, 0) for s in range(1, 6)], "src long, dst long"
-    )
-    out = {r.node: (r.authority, r.hub) for r in hits(edges, iterations=4).collect()}
-    assert out[0][0] == 1.0 and out[0][1] == 0.0
-    for s in range(1, 6):
-        assert out[s][0] == 0.0
-        assert abs(out[s][1] - 0.2) < 1e-9
-
-
-def test_hits_scores_are_l1_normalized(spark, sf_dir):
-    """Authority and hub vectors each sum to ~1 (9dp quantization
-    aside) over ALL nodes — checked on the full operator output, before
-    the query's top-30 cut."""
-    from modevetl_spark.operators.graph import hits
-
-    from modevetl_spark.sources.catalog import load
-
-    part = load(spark, sf_dir, "part")
-    edges = part.where(F.col("p_partkey") >= 2).select(
-        F.col("p_partkey").alias("src"),
-        ((F.col("p_partkey") * F.col("p_partkey")) % 97).alias("dst"),
-    )
-    sums = (
-        hits(edges, iterations=3)
-        .agg(F.sum("authority").alias("sa"), F.sum("hub").alias("sh"))
-        .collect()[0]
-    )
-    assert abs(sums.sa - 1.0) < 1e-5
-    assert abs(sums.sh - 1.0) < 1e-5
-
-
 def test_interval_overlap_plan_no_nested_loop(spark, sf_dir):
     """The overlap join must be the bucketed equi-join — a theta
     formulation degrades to BroadcastNestedLoop/Cartesian, quadratic in
@@ -1129,37 +1091,6 @@ def test_threshold_curve_monotone(spark, sf_dir):
     at_half = out[out["k"] == 5].iloc[0]
     assert at_half["n_exact"] == pr.n_exact
     assert at_half["n_found"] == pr.n_tp
-
-
-def test_heavy_hitter_tick_guarantee_across_splits(spark, tmp_path):
-    """Folding a stream through ticks in arbitrary batch splits keeps
-    the lifetime-guarantee: every item with total freq > 2n/(k+1)
-    retains a positive counter, the state never exceeds k+1 rows, and
-    the sentinel total is exact."""
-    from modevetl_spark.operators.sketches import run_heavy_hitters_tick
-
-    freqs = {"hot": 120, "warm": 60, **{f"z{i}": 2 for i in range(40)}}
-    stream = [t for t, c in freqs.items() for _ in range(c)]
-    n = len(stream)  # 260
-    k = 10
-    for split in ([260], [100, 100, 60], [26] * 10):
-        path = str(tmp_path / f"hh_{len(split)}")
-        i = 0
-        for size in split:
-            batch = spark.createDataFrame(
-                [(t,) for t in stream[i : i + size]], "tok string"
-            ).repartition(4)
-            run_heavy_hitters_tick(spark, batch, "tok", k=k, state_path=path)
-            i += size
-        rows = spark.read.parquet(path).collect()
-        state = {r.tok: r.cnt for r in rows if r.tok is not None}
-        total = sum(r.cnt for r in rows if r.tok is None)
-        assert total == n
-        assert len(state) <= k
-        bound = 2 * n / (k + 1)
-        for t, c in freqs.items():
-            if c > bound:
-                assert t in state and state[t] > 0, (split, t, state)
 
 
 def test_mi_nonnegative_and_bounded(spark, sf_dir):

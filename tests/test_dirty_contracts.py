@@ -184,7 +184,7 @@ def test_dirty_unique_key_parity(spark, dirty_unique_dir, key):
 
 
 # the round-11 cosine contract (r10 ADVICE, medium): operators/
-# similarity.cosine() is F.try_divide and every cos-EMITTING family key
+# similarity.cosine_pre() is F.try_divide and every cos-EMITTING family key
 # routes through the shared well_formed/CLEAN_EMB_SQL exclusion, so an
 # ALL-ZERO embedding vector (len > 0 but norm 0 — in the dirty twin
 # since round 11) can neither abort a job NOR reach a scored set where
@@ -280,17 +280,29 @@ def test_promoted_twin_builders_preserve_schema(tmp_path):
 
 def test_cosine_pre_bit_identical_to_cosine(spark, tmp_path):
     """The round-12 hot-loop refactor contract: cosine_pre() over
-    per-row precomputed norms (nrm()) must be BIT-identical to the
-    reference cosine() — sqrt(fold(a))·sqrt(fold(b)) is the same IEEE
-    tree whether the sqrt runs before or after the join — including the
-    degenerate rows (zero-norm → NULL under try_divide on both forms).
-    Pinned on adversarial shapes: subnormals, huge components, zero
-    vectors, negative-heavy vectors."""
+    per-row precomputed norms (nrm()) must be BIT-identical to folding
+    both norms inside the pair loop — sqrt(fold(a))·sqrt(fold(b)) is the
+    same IEEE tree whether the sqrt runs before or after the join —
+    including the degenerate rows (zero-norm → NULL under try_divide on
+    both forms). Pinned on adversarial shapes: subnormals, huge
+    components, zero vectors, negative-heavy vectors."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from modevetl_spark.operators.similarity import cosine, cosine_pre, nrm
+    from modevetl_spark.operators.similarity import cosine_pre, dot, nrm
+
+    def pair_loop_cosine(a, b):
+        def fold_norm(v):
+            return F.sqrt(
+                F.aggregate(
+                    v,
+                    F.lit(0.0),
+                    lambda acc, x: acc + x.cast("double") * x.cast("double"),
+                )
+            )
+
+        return F.try_divide(dot(a, b), fold_norm(a) * fold_norm(b))
 
     vecs = [
         [0.5, -1.5, 2.0],
@@ -324,7 +336,7 @@ def test_cosine_pre_bit_identical_to_cosine(spark, tmp_path):
         .select(
             "ia",
             "ib",
-            cosine(F.col("va"), F.col("vb")).alias("ref"),
+            pair_loop_cosine(F.col("va"), F.col("vb")).alias("ref"),
             cosine_pre(
                 F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
             ).alias("pre"),

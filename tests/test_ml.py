@@ -442,7 +442,6 @@ def test_range_search_bucketed_self_join_is_exchange_free(spark, sf_dir):
     self-join plans with ZERO shuffle exchanges."""
     from modevetl_spark.sources.catalog import load
     from modevetl_spark.operators.clustering import dec_fold_sum
-    from modevetl_spark.sources.formats import write_bucketed
 
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
@@ -456,7 +455,7 @@ def test_range_search_bucketed_self_join_is_exchange_free(spark, sf_dir):
         12,
     )
     normed = emb.select("vec_id", "label", "v", nrm.alias("nrm"))
-    write_bucketed(normed, "normed_b", ["label"], 4)
+    normed.write.mode("overwrite").bucketBy(4, "label").saveAsTable("normed_b")
     try:
         t = spark.table("normed_b")
         a = t.select(
@@ -477,45 +476,6 @@ def test_range_search_bucketed_self_join_is_exchange_free(spark, sf_dir):
         assert tree.count("- Exchange (") == 0, tree
     finally:
         spark.sql("DROP TABLE IF EXISTS normed_b")
-
-
-def test_kmeans_tick_state_invariants(spark, tmp_path):
-    """Standing mini-batch clustering: state count mass == rows × dims
-    after every tick; tick-1 assignment equals a pure assignment against
-    the seed centroids; centroids move once mass accumulates."""
-    from modevetl_spark.operators.clustering import (
-        _assign,
-        centroids_from_state,
-        run_kmeans_assign_tick,
-    )
-
-    state = str(tmp_path / "cstate")
-    rows1 = [(i, [float(i % 3), float((i * 7) % 5) / 2.0]) for i in range(12)]
-    rows2 = [(100 + i, [2.0 + (i % 2), 0.5 * (i % 4)]) for i in range(8)]
-    b1 = spark.createDataFrame(rows1, "vec_id: long, v: array<double>")
-    b2 = spark.createDataFrame(rows2, "vec_id: long, v: array<double>")
-
-    a1 = run_kmeans_assign_tick(spark, b1, state, k=3)
-    st = spark.read.parquet(state)
-    assert st.agg(F.sum("n")).collect()[0][0] == 12 * 2
-    # tick-1 assignment is the pure function of (batch, seed centroids)
-    seed = b1.where(F.col("vec_id") < 3).select(
-        F.col("vec_id").cast("int").alias("cluster"), F.col("v").alias("cv")
-    )
-    pure = {
-        r.vec_id: r.cluster for r in _assign(b1, seed, "vec_id", "v").collect()
-    }
-    assert {r.vec_id: r.cluster for r in a1.collect()} == pure
-
-    seeds_cv = {r.cluster: r.cv for r in seed.collect()}
-    run_kmeans_assign_tick(spark, b2, state, k=3)
-    st2 = spark.read.parquet(state)
-    assert st2.agg(F.sum("n")).collect()[0][0] == (12 + 8) * 2
-    moved = {
-        r.cluster: r.cv for r in centroids_from_state(st2).collect()
-    }
-    assert moved != seeds_cv  # mass accumulated, centroids drifted
-    assert all(len(v) == 2 for v in moved.values())
 
 
 def test_curate_job_split_equivalence_and_replay(spark, tmp_path, sf_dir):

@@ -8,12 +8,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from modevetl_spark.operators.closure import transitive_closure
-from modevetl_spark.operators.dedup import (
-    dedup_corpus,
-    minhash_signature,
-    minhash_signatures,
-    simhash_candidates,
-)
+from modevetl_spark.operators.dedup import dedup_corpus, simhash_candidates
 from modevetl_spark.operators.multimodal import extract_features, with_binary_payload
 from modevetl_spark.operators.similarity import brute_force_topk, ivf_topk, lsh_topk
 from modevetl_spark.operators.text import tokens, word_shingles
@@ -84,24 +79,6 @@ def test_closure_handles_cycles(spark):
         for r in transitive_closure(edges, strategy="doubling").collect()
     }
     assert got2 == got
-
-
-def test_minhash_forms_agree(spark, sf_dir):
-    """Expression-form and explode-form signatures are the same function."""
-    d = load(spark, sf_dir, "documents").where(F.col("doc_id") < 50)
-    expr_form = d.select(
-        "doc_id",
-        minhash_signature(word_shingles(tokens("text"), 3), 8).alias("sig"),
-    ).where(F.col("sig").isNotNull())
-    row_form = minhash_signatures(d, shingle_n=3, k=8)
-    joined = expr_form.join(row_form, "doc_id")
-    mismatches = joined.where(
-        ~(
-            F.col("sig")
-            == F.array(*[F.col(f"m{i}") for i in range(8)])
-        )
-    ).count()
-    assert mismatches == 0 and joined.count() > 0
 
 
 def test_simhash_self_similarity(spark, sf_dir):
@@ -540,16 +517,11 @@ def test_review_fix_regressions(spark, sf_dir):
 
     from modevetl_spark.operators.sampling import hash_split
     from modevetl_spark.operators.text import build_vocab, encode_tokens
-    from modevetl_spark.sources.formats import zorder_value
 
     # (1) sorted-order float accumulation (.11+.34+.55 drifts past 1.0)
     d = load(spark, sf_dir, "documents").select("doc_id")
     splits = hash_split(d, "doc_id", {"a": 0.55, "b": 0.34, "c": 0.11})
     assert sum(v.count() for v in splits.values()) == d.count()
-
-    # (5) z-order must refuse keys that spill past the 63 value bits
-    with _pytest.raises(ValueError, match="63"):
-        zorder_value([F.col("a"), F.col("b"), F.col("c"), F.col("d")], bits=16)
 
     # (8) zero-token docs survive encoding as ([], 0)
     docs = spark.createDataFrame(
@@ -600,9 +572,9 @@ def test_incremental_minhash_equals_full_recompute(spark, sf_dir):
     from modevetl_spark.operators.dedup import (
         build_minhash_index,
         incremental_minhash_candidates,
-        minhash_candidates,
     )
     from modevetl_spark.sources.catalog import load
+    from tests.dedup_reference import full_minhash_candidates
 
     docs = load(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 5 != 0)
@@ -611,7 +583,7 @@ def test_incremental_minhash_equals_full_recompute(spark, sf_dir):
     index = build_minhash_index(corpus)
     inc_pairs, new_rows = incremental_minhash_candidates(batch, index)
 
-    full = minhash_candidates(docs)
+    full = full_minhash_candidates(docs)
     batch_ids = {r.doc_id for r in batch.select("doc_id").collect()}
     expected = {
         (r.id_a, r.id_b)
@@ -639,19 +611,14 @@ def test_incremental_index_bucketed_probe_no_index_exchange(spark, sf_dir):
     run. The delta-sized batch side is the only thing that moves."""
     from modevetl_spark.operators.dedup import build_minhash_index
     from modevetl_spark.sources.catalog import load
-    from modevetl_spark.sources.formats import write_bucketed
     from tests.test_plans import plan
 
     docs = load(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 5 != 0)
     batch = docs.where(F.col("doc_id") % 5 == 0)
-    write_bucketed(
-        build_minhash_index(corpus),
-        "lsh_index_b",
-        ["band_hash"],
-        4,
-        sort_cols=["band_hash"],
-    )
+    build_minhash_index(corpus).write.mode("overwrite").bucketBy(
+        4, "band_hash"
+    ).sortBy("band_hash").saveAsTable("lsh_index_b")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         probe = build_minhash_index(batch).withColumnRenamed(
@@ -732,11 +699,9 @@ def test_run_dedup_incremental_batches_equal_full(spark, sf_dir, tmp_path):
     """Feeding the corpus through the standing incremental job in three
     arrival batches must reproduce the full-corpus LSH pair set exactly —
     each pair surfaces on the run where its later doc arrives."""
-    from modevetl_spark.operators.dedup import (
-        minhash_candidates,
-        run_dedup_incremental,
-    )
+    from modevetl_spark.operators.dedup import run_dedup_incremental
     from modevetl_spark.sources.catalog import load
+    from tests.dedup_reference import full_minhash_candidates
 
     docs = load(spark, sf_dir, "documents")
     index_path = str(tmp_path / "lsh_index")
@@ -747,7 +712,7 @@ def test_run_dedup_incremental_batches_equal_full(spark, sf_dir, tmp_path):
         total += run_dedup_incremental(
             spark, batch, index_path, pairs_path
         )
-    full = {(r.id_a, r.id_b) for r in minhash_candidates(docs).collect()}
+    full = {(r.id_a, r.id_b) for r in full_minhash_candidates(docs).collect()}
     got = {
         (r.id_a, r.id_b)
         for r in spark.read.parquet(pairs_path).distinct().collect()

@@ -14,7 +14,7 @@ import pyspark.sql.functions as F
 from modevetl_spark.operators.dedup import (
     dedup_corpus,
     jaccard_pairs,
-    minhash_candidates,
+    minhash_candidates_md5,
 )
 from modevetl_spark.operators.sampling import pack_by_budget
 from modevetl_spark.operators.text import (
@@ -34,7 +34,7 @@ def test_dedup_chunk_encode_pack_pipeline(spark, sf_dir):
 
     # 1) near-dup removal: LSH candidates -> exact-Jaccard verify -> one
     #    canonical survivor per duplicate cluster
-    cands = minhash_candidates(docs, shingle_n=3, k=16, bands=4)
+    cands = minhash_candidates_md5(docs, shingle_n=3, k=16, bands=4)
     pairs = jaccard_pairs(docs, cands, shingle_n=3).where(F.col("jaccard") >= 0.8)
     survivors = dedup_corpus(docs, pairs).cache()
     n_surv = survivors.count()
@@ -153,7 +153,7 @@ def test_quality_gate_and_redaction_front_end(spark, sf_dir):
     )
 
     # gated corpus flows into the dedup stage with ids intact
-    cands = minhash_candidates(kept, shingle_n=3, k=16, bands=4)
+    cands = minhash_candidates_md5(kept, shingle_n=3, k=16, bands=4)
     pairs = jaccard_pairs(kept, cands, shingle_n=3).where(
         F.col("jaccard") >= 0.8
     )

@@ -488,43 +488,6 @@ def test_textrank_differential(spark, tmp_path_factory, docs):
         assert abs(got[v] - want[v]) < 2e-8, v
 
 
-# --- MRL compaction (round-8 tick): pure-function differential ----------
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    pts=st.lists(
-        st.tuples(
-            st.floats(0, 1000, allow_nan=False, allow_infinity=False),
-            st.integers(1, 50),
-        ),
-        min_size=1,
-        max_size=200,
-    ),
-    eps=st.sampled_from([1 / 8, 1 / 16, 1 / 32]),
-)
-def test_mrl_compact_matches_python_invariants(pts, eps):
-    """_mrl_compact vs first principles on arbitrary weighted point
-    sets: (1) total weight is preserved exactly; (2) kept points are a
-    subset of input points (block minima); (3) for EVERY threshold the
-    compacted cumulative weight never undercounts the input cumulative
-    and overcounts by at most the returned ledger increment — the
-    invariant run_mrl_tick's error accounting composes on."""
-    from modevetl_spark.operators.sketches import _mrl_compact
-
-    w_total = sum(w for _, w in pts)
-    out, added = _mrl_compact(list(pts), w_total, eps)
-    assert sum(w for _, w in out) == w_total
-    assert {v for v, _ in out} <= {v for v, _ in pts}
-    assert added >= 0
-    spts = sorted(pts)
-    thresholds = sorted({v for v, _ in pts})
-    for t in thresholds:
-        in_cum = sum(w for v, w in spts if v <= t)
-        out_cum = sum(w for v, w in out if v <= t)
-        assert in_cum <= out_cum <= in_cum + added, (t, in_cum, out_cum, added)
-
-
 # --- Sorted-neighborhood blocking (round-8: seam-repair differential) ----
 
 

@@ -214,32 +214,6 @@ def test_stream_dedup(spark, sf_dir, tmp_path):
     assert got.count() == got.distinct().count()
 
 
-def test_hierarchy_incremental_equals_full(spark, sf_dir, tmp_path):
-    """Frontier-incremental hierarchy across two split batches must equal
-    the one-shot full recompute (insert-only edge stream)."""
-    from modevetl_spark.plans.jobs import hierarchy_job, hierarchy_job_incremental
-
-    full_sink = str(tmp_path / "full")
-    hierarchy_job(spark, sf_dir, full_sink, str(tmp_path / "full_state.json"))
-    full = {
-        (r.ancestor, r.n_descendants, r.min_node, r.max_node)
-        for r in spark.read.parquet(full_sink).collect()
-    }
-
-    inc_sink = str(tmp_path / "inc")
-    inc_state = str(tmp_path / "inc_state.json")
-    n1 = hierarchy_job_incremental(spark, sf_dir, inc_sink, inc_state, upper_bound=100)
-    n2 = hierarchy_job_incremental(spark, sf_dir, inc_sink, inc_state)
-    assert n1 > 0 and n2 > 0
-    inc = {
-        (r.ancestor, r.n_descendants, r.min_node, r.max_node)
-        for r in spark.read.parquet(inc_sink).collect()
-    }
-    assert inc == full
-    # third run: nothing pending
-    assert hierarchy_job_incremental(spark, sf_dir, inc_sink, inc_state) == 0
-
-
 def test_stateful_sessions_parity(spark, sf_dir, tmp_path):
     """applyInPandasWithState sessionizer vs an independent driver-side
     fold over the same events: every closed session must agree. Sessions
@@ -563,12 +537,12 @@ def test_streaming_dedup_equals_full_recompute(spark, sf_dir, tmp_path):
     """The Structured Streaming dedup job (file-per-micro-batch arrivals
     through foreachBatch) must reproduce the full-corpus LSH pair set —
     the streaming twin of the batch-loop equivalence gate."""
-    from modevetl_spark.operators.dedup import minhash_candidates
     from modevetl_spark.sources.catalog import load
     from modevetl_spark.streaming.structured import (
         documents_stream,
         run_streaming_dedup,
     )
+    from tests.dedup_reference import full_minhash_candidates
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     arrivals = str(tmp_path / "arrivals")
@@ -586,114 +560,12 @@ def test_streaming_dedup_equals_full_recompute(spark, sf_dir, tmp_path):
         str(tmp_path / "ckpt"),
     )
 
-    full = {(r.id_a, r.id_b) for r in minhash_candidates(docs).collect()}
+    full = {(r.id_a, r.id_b) for r in full_minhash_candidates(docs).collect()}
     got = {
         (r.id_a, r.id_b)
         for r in spark.read.parquet(pairs_path).distinct().collect()
     }
     assert got == full
-
-
-def test_delete_parquet_partition_scoped(spark, tmp_path):
-    """Keyed delete rewrites ONLY partitions owning a victim key;
-    untouched partitions stay byte-identical, and a fully-emptied
-    partition directory is removed."""
-    from modevetl_spark.streaming.incremental import delete_parquet
-
-    sink = str(tmp_path / "sink")
-    rows = [(i, f"p{i % 3}", i * 10.0) for i in range(30)]
-    df = spark.createDataFrame(rows, "id long, part string, v double")
-    df.write.partitionBy("part").parquet(sink)
-    before_p2 = _part_files(sink, "part=p2")
-
-    # victims: every id in p0 (empties it), plus one id from p1
-    victims = spark.createDataFrame(
-        [(i,) for i in range(0, 30, 3)] + [(1,)], "id long"
-    )
-    delete_parquet(spark, victims, sink, ["id"], ["part"])
-
-    got = spark.read.parquet(sink)
-    assert got.where(F.col("id") % 3 == 0).count() == 0
-    assert got.where(F.col("id") == 1).count() == 0
-    assert got.count() == 30 - 10 - 1
-    # p0 emptied -> directory gone
-    import os
-
-    assert not os.path.exists(os.path.join(sink, "part=p0"))
-    # p2 untouched byte-for-byte
-    assert _part_files(sink, "part=p2") == before_p2
-
-    # idempotent: replaying the same forget request changes nothing
-    delete_parquet(spark, victims, sink, ["id"], ["part"])
-    assert spark.read.parquet(sink).count() == 19
-
-
-def test_delete_parquet_unpartitioned_and_null_keys(spark, tmp_path):
-    """Unpartitioned delete via the whole-sink swap; a NULL victim key
-    matches the NULL-keyed row (null-safe join, same contract as upsert)."""
-    from modevetl_spark.streaming.incremental import delete_parquet
-
-    sink = str(tmp_path / "sink")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b"), (None, "c"), (4, "d")], "id long, v string"
-    ).write.parquet(sink)
-    victims = spark.createDataFrame([(2,), (None,)], "id long")
-    delete_parquet(spark, victims, sink, ["id"])
-    got = {r.v for r in spark.read.parquet(sink).collect()}
-    assert got == {"a", "d"}
-
-
-def test_compact_parquet_partitioned(spark, tmp_path):
-    """Compaction rewrites only fragmented partitions (fewer files, same
-    rows); partitions already at the file target stay byte-identical."""
-    import os
-
-    from modevetl_spark.streaming.incremental import compact_parquet
-
-    sink = str(tmp_path / "sink")
-    base = spark.createDataFrame(
-        [(i, f"p{i % 2}", float(i)) for i in range(20)],
-        "id long, part string, v double",
-    )
-    base.repartition("part").write.partitionBy("part").parquet(sink)
-    # fragment p0 with single-file appends (data-file schema excludes the
-    # partition column); leave p1 untouched
-    for i in range(4):
-        spark.createDataFrame(
-            [(100 + i, float(i))], "id long, v double"
-        ).coalesce(1).write.mode("append").parquet(os.path.join(sink, "part=p0"))
-    before = spark.read.parquet(sink).orderBy("id").collect()
-    before_p1 = _part_files(sink, "part=p1")
-
-    def nfiles(p):
-        return len(
-            [f for f in os.listdir(os.path.join(sink, p)) if f.endswith(".parquet")]
-        )
-
-    assert nfiles("part=p0") > 2
-    n = compact_parquet(spark, sink, ["part"], min_files=2)
-    assert n == 1  # only p0 was fragmented
-    assert nfiles("part=p0") == 1
-    assert _part_files(sink, "part=p1") == before_p1
-    after = spark.read.parquet(sink).orderBy("id").collect()
-    assert after == before
-    # idempotent: nothing left to compact
-    assert compact_parquet(spark, sink, ["part"], min_files=2) == 0
-
-
-def test_compact_parquet_unpartitioned(spark, tmp_path):
-    from modevetl_spark.streaming.incremental import compact_parquet
-
-    sink = str(tmp_path / "sink")
-    df = spark.createDataFrame([(i, float(i)) for i in range(50)], "id long, v double")
-    df.repartition(8).write.parquet(sink)
-    before = {tuple(r) for r in spark.read.parquet(sink).collect()}
-    assert compact_parquet(spark, sink) == 1
-    import os
-
-    n_files = len([f for f in os.listdir(sink) if f.endswith(".parquet")])
-    assert n_files == 1
-    assert {tuple(r) for r in spark.read.parquet(sink).collect()} == before
 
 
 def test_watermark_hadoop_fs_uri(spark, tmp_path):
@@ -726,13 +598,13 @@ def test_fs_exists_scheme_routing(spark, tmp_path):
 
 
 def test_fs_root_parquet_files_scheme_routing(spark, tmp_path):
-    """The round-8 flat-layout detector and single-file delete must
-    follow the path's scheme like the rest of the fs seam: same answers
-    through the Hadoop FileSystem (file:) as through plain os paths,
-    non-recursive (partition-dir files don't count), and ordered."""
+    """The round-8 flat-layout detector must follow the path's scheme
+    like the rest of the fs seam: same answers through the Hadoop
+    FileSystem (file:) as through plain os paths, non-recursive
+    (partition-dir files don't count), and ordered."""
     import os
 
-    from modevetl_spark.sources.fs import fs_delete, fs_root_parquet_files
+    from modevetl_spark.sources.fs import fs_root_parquet_files
 
     root = tmp_path / "sink"
     (root / "_batch=1").mkdir(parents=True)
@@ -754,13 +626,6 @@ def test_fs_root_parquet_files_scheme_routing(spark, tmp_path):
     # missing roots answer empty, never raise
     assert fs_root_parquet_files(spark, str(tmp_path / "nope")) == []
     assert fs_root_parquet_files(spark, "file:" + str(tmp_path / "nope")) == []
-
-    fs_delete(spark, "file:" + str(root / "flat-a.parquet"))
-    fs_delete(spark, str(root / "flat-b.parquet"))
-    fs_delete(spark, str(root / "flat-b.parquet"))  # idempotent
-    assert fs_root_parquet_files(spark, str(root)) == []
-    # the partition-dir file was never touched
-    assert (root / "_batch=1" / "part-0.parquet").exists()
 
 
 def test_fs_rename_into_dir_scheme_routing(spark, tmp_path):
@@ -864,16 +729,13 @@ def test_fs_rename_into_dir_failed_rename_raises(spark, tmp_path):
 
 
 def test_upsert_after_total_delete(spark, tmp_path):
-    """A sink emptied by delete_parquet (markers left, zero data files)
+    """A sink whose rows were all deleted (markers left, zero data files)
     must behave as nonexistent for the next upsert instead of failing
     parquet schema inference forever."""
-    from modevetl_spark.streaming.incremental import delete_parquet
-
+    (tmp_path / "sink").mkdir()
+    (tmp_path / "sink" / "_SUCCESS").write_text("")
     sink = str(tmp_path / "sink")
     df = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"])
-    upsert_parquet(spark, df, sink, keys=["id"])
-    delete_parquet(spark, df.select("id"), sink, keys=["id"])
-    # sink dir may remain with only markers; the next upsert must succeed
     upsert_parquet(spark, df, sink, keys=["id"])
     got = {(r.id, r.v) for r in spark.read.parquet(sink).collect()}
     assert got == {(1, "a"), (2, "b")}
@@ -1026,6 +888,27 @@ def test_aggregate_state_null_keys(spark, tmp_path):
         for r in spark.read.parquet(state).collect()
     }
     assert rows == {(None, 3, 35.0), ("a", 1, 1.0)}
+
+
+def test_aggregate_state_tick_job_count(spark, tmp_path, jobs_launched):
+    """A merge tick into an existing state reads it with the partials'
+    schema, so no schema-inference job runs: 10 jobs (11 before)."""
+    from modevetl_spark.operators.aggstate import merge_aggregate_state
+
+    state = str(tmp_path / "state")
+    m = {"n": ("count", "v"), "total": ("sum", "v"), "last": ("max", "v")}
+    schema = "k int, v double"
+    first = spark.createDataFrame([(i % 7, float(i)) for i in range(40)], schema)
+    second = spark.createDataFrame([(i % 5, float(i)) for i in range(40, 60)], schema)
+    merge_aggregate_state(spark, first, state, ["k"], m)
+    n = []
+    jobs = jobs_launched(
+        lambda: n.append(merge_aggregate_state(spark, second, state, ["k"], m))
+    )
+    assert n == [5]
+    assert jobs <= 10
+    rows = {(r.k, r.n) for r in spark.read.parquet(state).collect()}
+    assert rows == {(k, 10) for k in range(5)} | {(5, 5), (6, 5)}
 
 
 def test_fs_scheme_without_session_raises(tmp_path):

@@ -453,177 +453,6 @@ class TestKmvJaccard:
         assert r["abs_err"] == 0.0
 
 
-def test_kmv_tick_merge_and_replay_idempotence(spark, tmp_path):
-    """Ticking a stream through ANY batch split yields the same state
-    as one-shot sketching the whole stream (union-mergeability), and
-    replaying a batch leaves the state bit-identical (set union is
-    idempotent — the MG tick can't say that)."""
-    from pyspark.sql import functions as F
-
-    from modevetl_spark.operators.sketches import kmv_state, run_kmv_tick
-
-    vals = [(i * 104729) % 5003 for i in range(4000)]
-    k = 64
-    whole = spark.createDataFrame([(v,) for v in vals], "v int")
-    hashed = whole.select(
-        F.conv(F.substring(F.md5(F.col("v").cast("string")), 1, 8), 16, 10)
-        .cast("bigint")
-        .alias("h")
-    )
-    oneshot = sorted(
-        r["h"]
-        for r in kmv_state(hashed, k).distinct().orderBy("h").limit(k).collect()
-    )
-
-    states = []
-    for split in ([4000], [1500, 1500, 1000], [400] * 10):
-        path = str(tmp_path / f"kmv_{len(split)}")
-        i = 0
-        for size in split:
-            batch = spark.createDataFrame(
-                [(v,) for v in vals[i : i + size]], "v int"
-            ).repartition(4)
-            run_kmv_tick(spark, batch, "v", k=k, state_path=path)
-            i += size
-        states.append(
-            sorted(r["h"] for r in spark.read.parquet(path).collect())
-        )
-    assert states[0] == states[1] == states[2] == oneshot
-
-    # replay the last batch: state must not move
-    path = str(tmp_path / "kmv_10")
-    replay = spark.createDataFrame(
-        [(v,) for v in vals[3600:4000]], "v int"
-    )
-    run_kmv_tick(spark, replay, "v", k=k, state_path=path)
-    assert (
-        sorted(r["h"] for r in spark.read.parquet(path).collect()) == oneshot
-    )
-
-
-def _mrl_exact_check(spark, path, raw_vals, probs=(0.10, 0.50, 0.90, 0.99)):
-    """Assert the consumer-facing rank guarantee of a persisted MRL
-    state against the EXACT ranks of the raw stream: for each prob,
-    count(v < est) < target and count(v <= est) >= target − err."""
-    from modevetl_spark.operators.sketches import mrl_quantile_estimates
-
-    sv = sorted(raw_vals)
-    for e in mrl_quantile_estimates(spark, path, list(probs)):
-        assert e["n_total"] == len(raw_vals)
-        rank_lo = sum(1 for v in sv if v < e["est"])
-        rank_hi = sum(1 for v in sv if v <= e["est"])
-        assert rank_lo < e["target"], e
-        assert rank_hi >= e["target"] - e["err_bound"], e
-
-
-def test_mrl_tick_bounds_hold_under_any_batch_split(spark, tmp_path):
-    """The rank-quantile tick (round-8: completes the tick family —
-    MG/KMV/HLL had standing ticks, the MRL sketch didn't): ticking a
-    stream through ANY batch split yields a state whose estimates honor
-    the stored error ledger against the exact ranks of the whole
-    stream, and the state stays bounded by config."""
-    from modevetl_spark.operators.sketches import run_mrl_tick
-
-    vals = [float((i * 104729) % 9973) + ((i * 31) % 7) / 10 for i in range(6000)]
-    for split in ([6000], [2500, 2500, 1000], [600] * 10):
-        path = str(tmp_path / f"mrl_{len(split)}")
-        i = 0
-        for size in split:
-            batch = spark.createDataFrame(
-                [(v, str(i + j)) for j, v in enumerate(vals[i : i + size])],
-                "x double, k string",
-            ).repartition(4)
-            run_mrl_tick(spark, batch, "x", "k", path, eps=1 / 64, p=8)
-            i += size
-        rows = spark.read.parquet(path).collect()
-        n_pts = sum(1 for r in rows if r["v"] is not None)
-        assert n_pts <= 2048 + 1
-        meta = [r for r in rows if r["v"] is None]
-        assert len(meta) == 1 and meta[0]["w"] == 6000
-        # weights of the data rows sum exactly to the stream size
-        assert sum(r["w"] for r in rows if r["v"] is not None) == 6000
-        _mrl_exact_check(spark, path, vals)
-
-
-def test_mrl_tick_compaction_keeps_state_bounded_and_honest(spark, tmp_path):
-    """Force compaction every tick (tiny k_max): the state never
-    exceeds its configured bound no matter how many ticks run, the
-    error ledger grows to cover the measured compaction excess, and
-    the exact-rank guarantee still holds at the end."""
-    from modevetl_spark.operators.sketches import run_mrl_tick
-
-    vals = [float((i * 7919) % 4001) for i in range(5000)]
-    path = str(tmp_path / "mrl_small")
-    i = 0
-    for size in [500] * 10:
-        batch = spark.createDataFrame(
-            [(v, str(i + j)) for j, v in enumerate(vals[i : i + size])],
-            "x double, k string",
-        ).repartition(3)
-        run_mrl_tick(spark, batch, "x", "k", path, eps=1 / 32, p=4, k_max=96)
-        i += size
-        rows = spark.read.parquet(path).collect()
-        assert sum(1 for r in rows if r["v"] is not None) <= 96 + 4 * 33
-    _mrl_exact_check(spark, path, vals)
-
-
-def test_rank_sample_state_is_exact_weighted_cover(spark):
-    """The batch sketch itself: weights sum to n exactly, size is
-    config-bounded, and for EVERY threshold the sketch cumulative
-    weight sits in [true_count, true_count + floor(eps*n)] — the
-    invariant the merge/compose proof stands on."""
-    from modevetl_spark.operators.sketches import rank_sample_state
-
-    vals = [float((i * 613) % 500) for i in range(3000)]
-    df = spark.createDataFrame(
-        [(v, str(i)) for i, v in enumerate(vals)], "x double, k string"
-    ).repartition(5)
-    eps, p = 1 / 16, 8
-    pts = [
-        (r["v"], r["w"])
-        for r in rank_sample_state(df, "x", "k", eps=eps, p=p).collect()
-    ]
-    assert sum(w for _, w in pts) == len(vals)
-    assert len(pts) <= p * (int(1 / eps) + 1)
-    sv = sorted(vals)
-    slack = int(eps * len(vals))
-    for t in sorted({v for v, _ in pts} | {0.0, 250.0, 499.0}):
-        true_cum = sum(1 for v in sv if v <= t)
-        sk_cum = sum(w for v, w in pts if v <= t)
-        assert true_cum <= sk_cum <= true_cum + slack, (t, true_cum, sk_cum)
-
-
-def test_rank_sample_state_excludes_nulls(spark, tmp_path):
-    """Round-9 advice: NULL val/key rows must be filtered like every
-    other sketch operator here — a NULL v sorts first under the block
-    window (kept forever as a block minimum), crashes the tick's
-    float(None) fold, and in persisted state would collide with the
-    v-IS-NULL meta-row sentinel. NULLs are excluded from the weight
-    total by contract."""
-    from modevetl_spark.operators.sketches import (
-        mrl_quantile_estimates,
-        rank_sample_state,
-        run_mrl_tick,
-    )
-
-    rows = [(float(i), str(i)) for i in range(200)]
-    dirty = rows + [(None, "n1"), (None, "n2"), (5.0, None), (None, None)]
-    df = spark.createDataFrame(dirty, "x double, k string").repartition(3)
-    pts = [(r["v"], r["w"]) for r in rank_sample_state(df, "x", "k").collect()]
-    assert all(v is not None for v, _ in pts)
-    # weight total == clean rowcount: the NULL rows carry no weight
-    assert sum(w for _, w in pts) == len(rows)
-    # the standing tick survives a dirty batch end-to-end
-    path = str(tmp_path / "mrl_nulls")
-    run_mrl_tick(spark, df, "x", "k", path)
-    state = spark.read.parquet(path).collect()
-    meta = [r for r in state if r["v"] is None]
-    assert len(meta) == 1 and meta[0]["w"] == len(rows)
-    (med,) = mrl_quantile_estimates(spark, path, [0.5])
-    assert med["n_total"] == len(rows)
-    assert abs(med["est"] - 100.0) <= 0.03125 * len(rows) + 1
-
-
 def test_wave8_keys_registered():
     assert set(QUERIES) == {
         "q_sketch_merge_quantiles",

@@ -368,8 +368,8 @@ class TestCountMin:
         assert all(got_est[t] >= c for t, c in counts.items())
 
     def test_null_keys_excluded_from_state(self, spark):
-        """Round-9 hardening (the rank_sample_state advice class,
-        applied family-wide): NULL keys hash to d b=NULL bucket rows no
+        """Round-9 hardening (the NULL-key advice class, applied
+        family-wide): NULL keys hash to d b=NULL bucket rows no
         probe can ever join back to — dead mass that skews any
         total-mass audit. The state from a dirty count table must equal
         the clean one's exactly."""
