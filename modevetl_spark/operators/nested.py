@@ -12,7 +12,7 @@ side, tiny) into a literal array<struct<path,value>> projection + explode
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
 

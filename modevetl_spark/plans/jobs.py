@@ -172,8 +172,17 @@ def scd2_job(
     crashed tick that merged-but-didn't-advance replays only the one
     delta — merge is deterministic, so the keyed upsert rewrites the
     same rows (convergent, though the tick itself is not idempotent
-    under arbitrary replays of OLDER data)."""
+    under arbitrary replays of OLDER data).
+
+    Count and mark are observed on the delta by the merge's own action,
+    so the delta is scanned once, with no cache and no aggregate of its
+    own. An empty delta touches no user: the merge writes nothing and the
+    mark stays. AQE then prunes the delta's empty stage and its observed
+    metrics with it, so the observation is read only for a non-empty
+    delta."""
     import os
+
+    from pyspark.sql import Observation
 
     from modevetl_spark.operators.scd2 import merge_scd2_state
 
@@ -181,21 +190,18 @@ def scd2_job(
         "event_id", "ts", "user_id", "event_type"
     )
     wm = Watermark(state_path, spark=spark)
-    pending = pull_newer(events, "event_id", wm.read()).cache()
-    try:
-        stats = pending.agg(
-            F.count(F.lit(1)).alias("n"), F.max("event_id").alias("mark")
-        ).collect()[0]
-        if stats.n == 0:
-            return 0
-        merge_scd2_state(
-            spark, pending, os.path.join(sink_path, "scd2_dimension")
-        )
-        if stats.mark is not None:
-            wm.write(stats.mark)
-        return stats.n
-    finally:
-        pending.unpersist()
+    stats = Observation()
+    pending = pull_newer(events, "event_id", wm.read()).observe(
+        stats, F.count(F.lit(1)).alias("n"), F.max("event_id").alias("mark")
+    )
+    if not merge_scd2_state(
+        spark, pending, os.path.join(sink_path, "scd2_dimension")
+    ):
+        return 0
+    n, mark = stats.get["n"], stats.get["mark"]
+    if mark is not None:
+        wm.write(mark)
+    return n
 
 
 def curate_transform(docs: DataFrame) -> DataFrame:

@@ -4,6 +4,22 @@ Scale notes (100 TB north star): AQE on (runtime coalesce + skew-join),
 UTC session timezone so timestamp semantics match the oracle, shuffle
 partitions sized from the harness CPU count locally — on a real cluster
 AQE's coalescePartitions makes the static number mostly irrelevant.
+
+Generated-code cache: Spark keeps the classes its code generation
+compiles in an LRU of ``spark.sql.codegen.cache.maxEntries`` entries
+(100 by default). A round of queries whose distinct classes outnumber
+the cache recompiles nearly all of them every time it runs, each class
+a Janino compile. Distinct classes one pass compiles (Spark 4.1.2): the
+9 perfbench relational keys 132 at sf0.001 and sf0.01 (``collect``);
+the 40 ``bench.HEADLINE`` keys 944 at sf0.01 (``scripts/measure.py``:
+``count`` plus the noop sink); all 274 registry keys 3,557 at sf0.001
+and 3,561 at sf0.01 (``toPandas`` of each ``__spark_entry__.queries()``
+frame). Rule: the cache holds the largest working set, rounded up to a
+power of two (``CODEGEN_CACHE_ENTRIES``), so a repeated round compiles
+only classes whose code inlines a literal that changed; re-measure when
+the registry grows. The setting is static: it applies only to a session
+this factory creates. ``queries.prep`` cannot change it on a session
+the caller already built, which keeps Spark's default.
 """
 
 from __future__ import annotations
@@ -11,6 +27,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def default_parallelism() -> int:
@@ -36,6 +55,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

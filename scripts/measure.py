@@ -1,20 +1,32 @@
-"""Round-13 measurement harness (guide §1): per-query wall time with the
-noop sink, job/stage counts, and .explain("formatted") capture.
+"""Per-query measurement: wall time with the noop sink, Spark job counts,
+classes compiled by code generation, and .explain("formatted") capture.
 
 Usage:
     python scripts/measure.py [--plans DIR] [--runs N] [--queries a,b,c]
+                              [--sf-dir DIR]
 
-Times each headline query (or the given list) with BOTH the bench's
-count() action (comparability with BENCH_r12) and the noop sink
-(guide §1.4 — computes every column, no pruning). Also records how many
-Spark jobs each query submits (driver-latency proxy: at sf0.1 each job
-costs ~0.2 s of scheduler latency) and writes the formatted plan to
---plans/<name>_before.txt when --plans is given.
+Runs the headline queries (or the given list) in ``--runs`` passes; each
+pass runs every query once, in order, with BOTH the bench's count()
+action (comparability with bench.py) and the noop sink (computes every
+column, no pruning). Per query it reports the best time of each action,
+how many Spark jobs one run submits (driver-latency proxy: at sf0.1 each
+job costs ~0.2 s of scheduler latency), and the classes code generation
+compiled for it on the first pass (``compiles_first``) and on the last
+(``compiles_repeat``). A pass is the unit because the generated-class
+cache is shared: a query repeated on its own finds its classes cached,
+while a pass over many queries can evict them before their next run.
+The summary line gives the first pass's total, the distinct classes the
+queries need when the cache holds them all, the last pass's total, the
+recompiles a warm round pays, and the JVM's metaspace in use at the end.
+Writes each formatted plan to --plans/<name><suffix>.txt when --plans
+is given.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import json
 import os
 import sys
@@ -44,45 +56,49 @@ def main() -> None:
 
     spark.range(1000).count()
     tracker = sc.statusTracker()
+    codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
-    out: dict[str, dict] = {}
-    for name in names:
-        fn = queries[name]
-        sc.setJobDescription(name)
-        best_count = best_noop = None
-        jobs = 0
-        for i in range(args.runs):
+    def compiled() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
+    inf = float("inf")
+    out = {n: {"count_s": inf, "noop_s": inf, "jobs": 0} for n in names}
+    for i in range(args.runs):
+        for name in names:
+            fn, rec = queries[name], out[name]
+            sc.setJobDescription(name)
+            c0 = compiled()
             j0 = set(tracker.getJobIdsForGroup(None) or [])
             t0 = time.perf_counter()
-            df = fn(spark, args.sf_dir)
-            df.count()
+            fn(spark, args.sf_dir).count()
             e1 = time.perf_counter() - t0
-            j1 = set(tracker.getJobIdsForGroup(None) or [])
-            jobs = max(jobs, len(j1 - j0))
-            best_count = e1 if best_count is None else min(best_count, e1)
+            rec["jobs"] = max(rec["jobs"], len(set(tracker.getJobIdsForGroup(None) or []) - j0))
             t0 = time.perf_counter()
-            df2 = fn(spark, args.sf_dir)
-            df2.write.format("noop").mode("overwrite").save()
+            fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
             e2 = time.perf_counter() - t0
-            best_noop = e2 if best_noop is None else min(best_noop, e2)
-        out[name] = {
-            "count_s": round(best_count, 3),
-            "noop_s": round(best_noop, 3),
-            "jobs": jobs,
-        }
-        print(f"# {name}: count={best_count:.3f}s noop={best_noop:.3f}s jobs~{jobs}", file=sys.stderr)
+            rec["compiles_first" if i == 0 else "compiles_repeat"] = compiled() - c0
+            rec["count_s"] = min(e1, rec["count_s"])
+            rec["noop_s"] = min(e2, rec["noop_s"])
+            sc.setJobDescription(None)
+    for name, rec in out.items():
+        rec["count_s"], rec["noop_s"] = round(rec["count_s"], 3), round(rec["noop_s"], 3)
+        print(
+            f"# {name}: count={rec['count_s']:.3f}s noop={rec['noop_s']:.3f}s jobs~{rec['jobs']}"
+            f" compiles={rec['compiles_first']}/{rec.get('compiles_repeat', '-')}",
+            file=sys.stderr,
+        )
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
-            import contextlib
-            import io
-
-            df = fn(spark, args.sf_dir)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
+                queries[name](spark, args.sf_dir).explain("formatted")
             with open(os.path.join(args.plans, f"{name}{args.suffix}.txt"), "w") as f:
                 f.write(buf.getvalue())
-        sc.setJobDescription(None)
+    first = sum(r["compiles_first"] for r in out.values())
+    repeat = sum(r.get("compiles_repeat", 0) for r in out.values())
+    pools = sc._jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+    meta = next(p.getUsage().getUsed() for p in pools if p.getName() == "Metaspace")
+    print(f"# compiles: first pass {first}, last pass {repeat}; metaspace {meta / 2**20:.1f} MB", file=sys.stderr)
     print(json.dumps(out, indent=1))
     spark.stop()
 

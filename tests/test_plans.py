@@ -6,10 +6,8 @@ window-group-limit for top-k, no Python in JVM-only paths."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from modevetl_spark.queries import all_queries
-from modevetl_spark.sources.catalog import load
 
 _Q = all_queries()
 
@@ -205,6 +203,29 @@ def test_whole_stage_codegen_on_hot_path(spark, sf_dir):
     # '*(n)' prefixes mark whole-stage-codegen'd stages; both the partial
     # and final aggregate must be inside one
     assert "*(1) HashAggregate" in p and "*(2) HashAggregate" in p
+
+
+def test_repeat_round_compiles_no_generated_class(spark, sf_dir):
+    """A second round of the benchmark's relational keys compiles no
+    class: the session's codegen cache holds the round's working set
+    (132 classes). Spark's default cache of 100 entries recompiled about
+    124 of them every round."""
+    import os
+    import runpy
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # perfbench/ is a directory of scripts, not a package
+    keys = runpy.run_path(os.path.join(root, "perfbench", "workloads.py"))["RELATIONAL_KEYS"]
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def round_compiles() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for key in keys:
+            _Q[key](spark, sf_dir).collect()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    round_compiles()
+    assert round_compiles() == 0
 
 
 def test_adaptive_salted_join_broadcasts_hot_map(spark, sf_dir):

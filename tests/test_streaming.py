@@ -1064,11 +1064,12 @@ def _one_tick_jobs(spark, sf_dir, tmp_path, job, jobs_launched) -> int:
 
 
 def test_scd2_tick_job_count(spark, sf_dir, tmp_path, jobs_launched):
-    """One scd2_job tick builds the touched users' tail once and reads
-    its stores without schema inference: 9 jobs (24 before)."""
+    """One scd2_job tick builds the touched users' tail once, reads its
+    stores without schema inference and observes count and mark on the
+    merge's own action: 6 jobs (24, then 9, before)."""
     from modevetl_spark.plans.jobs import scd2_job
 
-    assert _one_tick_jobs(spark, sf_dir, tmp_path, scd2_job, jobs_launched) <= 9
+    assert _one_tick_jobs(spark, sf_dir, tmp_path, scd2_job, jobs_launched) <= 6
 
 
 def test_reviews_tick_job_count(spark, sf_dir, tmp_path, jobs_launched):

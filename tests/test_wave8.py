@@ -5,13 +5,11 @@ inputs the fixture never produces, plus plan-shape gates.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from modevetl_spark.queries.wave8 import (
     QUERIES,
-    _SK_EPS,
     _T_CONTAIN,
     join_containment,
     sim_topk_ivf_sq,
