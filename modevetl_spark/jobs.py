@@ -9,6 +9,7 @@ module is that front door for the Spark engine:
     python -m modevetl_spark.jobs reviews   --settings settings.json
     python -m modevetl_spark.jobs dedup     --settings settings.json
     python -m modevetl_spark.jobs scd2      --settings settings.json
+    python -m modevetl_spark.jobs curate    --settings settings.json
     python -m modevetl_spark.jobs all       --settings settings.json
 
 Settings schema (JSON)::
@@ -25,10 +26,11 @@ Settings schema (JSON)::
       }
     }
 
-Each run is one cron tick of the incremental contract: pull rows newer
-than the stored watermark, transform, id-keyed upsert into the sink,
-advance the mark. Re-running with no new data is a no-op (exit prints
-``rows=0``), exactly like the reference's get_pending gate.
+Each run is one cron tick of the incremental contract
+(``streaming/incremental.tick``): pull rows newer than the stored
+watermark, transform, write into the sink, advance the mark.
+Re-running with no new data is a no-op (exit prints ``rows=0``),
+exactly like the reference's get_pending gate.
 """
 
 from __future__ import annotations

@@ -16,16 +16,15 @@ cluster. These are their engine-equivalents over the driver tables:
 
 from __future__ import annotations
 
+import os
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from modevetl_spark.operators.closure import transitive_closure
 from modevetl_spark.sources.catalog import load
-from modevetl_spark.streaming.incremental import (
-    Watermark,
-    pull_newer,
-    run_incremental,
-)
+from modevetl_spark.streaming.incremental import tick, upsert_parquet
 
 
 def hierarchy_transform(edges: DataFrame) -> DataFrame:
@@ -53,7 +52,7 @@ def hierarchy_job(
         F.col("p_partkey").alias("modified_seq"),  # stand-in modified_ts
     )
 
-    def transform(pending: DataFrame) -> DataFrame:
+    def body(pending: DataFrame, mark) -> None:
         # Closure is a global property: a changed edge can alter counts for
         # ancestors far outside the pending subset, so pending only *gates*
         # the run — the recompute uses the full edge set (the reference
@@ -61,17 +60,10 @@ def hierarchy_job(
         # hierarchy is rebuilt from all current docs). An
         # affected-subgraph-only recompute is the optimization to add when
         # the edge table outgrows full-recompute budgets.
-        return hierarchy_transform(edges.select("node", "ancestor"))
+        result = hierarchy_transform(edges.select("node", "ancestor"))
+        upsert_parquet(spark, result, sink_path, keys=["ancestor"])
 
-    return run_incremental(
-        spark,
-        edges,
-        ts_col="modified_seq",
-        transform=transform,
-        sink_path=sink_path,
-        keys=["ancestor"],
-        state_path=state_path,
-    )
+    return tick(spark, edges, "modified_seq", state_path, body)
 
 
 def reviews_transform(events: DataFrame) -> DataFrame:
@@ -103,15 +95,26 @@ def reviews_transform(events: DataFrame) -> DataFrame:
 def reviews_job(
     spark: SparkSession, sf_dir: str, sink_path: str, state_path: str
 ) -> int:
-    events = load(spark, sf_dir, "events")
-    return run_incremental(
-        spark,
-        events,
-        ts_col="ts",
-        transform=reviews_transform,
-        sink_path=sink_path,
-        keys=["day", "user_id"],
-        state_path=state_path,
+    events = load(spark, sf_dir, "events").select("ts", "user_id", "event_type")
+
+    def body(delta: DataFrame, mark) -> None:
+        upsert_parquet(spark, reviews_transform(delta), sink_path, ["day", "user_id"])
+
+    return tick(spark, events, "ts", state_path, body)
+
+
+def dedup_batch(delta: DataFrame, batch_id, sink_path: str) -> int:
+    """The near-dup job's body: probe the persisted LSH index under
+    ``sink_path`` with one delta, append its new candidate pairs and its
+    band rows (operators/dedup.run_dedup_incremental). Returns the new
+    pairs."""
+    from modevetl_spark.operators.dedup import run_dedup_incremental
+
+    return run_dedup_incremental(
+        delta.sparkSession,
+        delta,
+        os.path.join(sink_path, "lsh_index"),
+        os.path.join(sink_path, "pairs"),
     )
 
 
@@ -129,33 +132,20 @@ def dedup_job(
     invariant). Index and pair stores live under ``sink_path`` and are
     addressed through the Hadoop-FS seam, so the job runs unmodified
     with an object-store sink."""
-    import os
-
-    from modevetl_spark.operators.dedup import run_dedup_incremental
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    wm = Watermark(state_path, spark=spark)
-    # cache the delta: it feeds the count/mark stats, the signature
-    # build, and the index append — uncached, each would re-scan the
-    # source (3 corpus reads per tick at scale)
-    pending = pull_newer(docs, "doc_id", wm.read()).cache()
-    try:
-        stats = pending.agg(
-            F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("mark")
-        ).collect()[0]
-        if stats.n == 0:
-            return 0
-        run_dedup_incremental(
-            spark,
-            pending,
-            os.path.join(sink_path, "lsh_index"),
-            os.path.join(sink_path, "pairs"),
-        )
-        if stats.mark is not None:
-            wm.write(stats.mark)
-        return stats.n
-    finally:
-        pending.unpersist()
+    body = partial(dedup_batch, sink_path=sink_path)
+    return tick(spark, docs, "doc_id", state_path, body)
+
+
+def scd2_batch(delta: DataFrame, batch_id, sink_path: str) -> int:
+    """The SCD-2 job's body: merge one change delta O(delta) into the
+    interval store under ``sink_path`` (operators/scd2.merge_scd2_state —
+    only touched users' open tails rebuild). Returns the users touched."""
+    from modevetl_spark.operators.scd2 import merge_scd2_state
+
+    return merge_scd2_state(
+        delta.sparkSession, delta, os.path.join(sink_path, "scd2_dimension")
+    )
 
 
 def scd2_job(
@@ -163,45 +153,21 @@ def scd2_job(
 ) -> int:
     """Standing SCD-2 dimension maintenance as a cron tick: pull events
     newer than the stored mark (event_id — the fixture's arrival order,
-    ts-monotone by construction), merge them O(delta) into the persisted
-    interval store under the sink (operators/scd2.merge_scd2_state —
-    only touched users' open tails rebuild), advance the mark.
+    ts-monotone by construction), merge them into the persisted interval
+    store (:func:`scd2_batch`), advance the mark.
 
     The watermark pull guarantees the merge's append-only contract
     (batch events never predate the open interval they extend), and a
     crashed tick that merged-but-didn't-advance replays only the one
     delta — merge is deterministic, so the keyed upsert rewrites the
     same rows (convergent, though the tick itself is not idempotent
-    under arbitrary replays of OLDER data).
-
-    Count and mark are observed on the delta by the merge's own action,
-    so the delta is scanned once, with no cache and no aggregate of its
-    own. An empty delta touches no user: the merge writes nothing and the
-    mark stays. AQE then prunes the delta's empty stage and its observed
-    metrics with it, so the observation is read only for a non-empty
-    delta."""
-    import os
-
-    from pyspark.sql import Observation
-
-    from modevetl_spark.operators.scd2 import merge_scd2_state
-
+    under arbitrary replays of OLDER data). A stream of change events
+    keeps the same contract: its micro-batches arrive in source order."""
     events = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    wm = Watermark(state_path, spark=spark)
-    stats = Observation()
-    pending = pull_newer(events, "event_id", wm.read()).observe(
-        stats, F.count(F.lit(1)).alias("n"), F.max("event_id").alias("mark")
-    )
-    if not merge_scd2_state(
-        spark, pending, os.path.join(sink_path, "scd2_dimension")
-    ):
-        return 0
-    n, mark = stats.get["n"], stats.get["mark"]
-    if mark is not None:
-        wm.write(mark)
-    return n
+    body = partial(scd2_batch, sink_path=sink_path)
+    return tick(spark, events, "event_id", state_path, body)
 
 
 def curate_transform(docs: DataFrame) -> DataFrame:
@@ -259,64 +225,17 @@ def curate_job(
     the LSH index). Two appends; everything through the Hadoop-FS seam
     / Spark writers."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    wm = Watermark(state_path, spark=spark)
-    pending = pull_newer(docs, "doc_id", wm.read()).cache()
-    try:
-        stats = pending.agg(
-            F.count(F.lit(1)).alias("n"), F.max("doc_id").alias("mark")
-        ).collect()[0]
-        if stats.n == 0:
-            return 0
-        n_out = curate_batch(
-            spark,
-            pending,
-            sink_path,
-            min_quality,
-            min_tokens,
-            # deterministic for the delta (the watermark pins its lower
-            # bound, this is its max id) — a crash replay of the same
-            # delta overwrites the same curated partition
-            batch_id=stats.mark,
-        )
-        if stats.mark is not None:
-            wm.write(stats.mark)
-        return n_out
-    finally:
-        pending.unpersist()
+    n_out = 0
 
+    def body(delta: DataFrame, mark) -> None:
+        nonlocal n_out
+        # the mark is deterministic for the delta (the watermark pins its
+        # lower bound, this is its max id) — a crash replay of the same
+        # delta overwrites the same curated partition
+        n_out = curate_batch(delta, mark, sink_path, min_quality, min_tokens)
 
-def _migrate_flat_curated(spark: SparkSession, curated: str) -> None:
-    """One-time layout migration for sinks written by the
-    pre-partitioned ``curate_batch``: flat parquet files at the curated
-    root, with ``_batch=`` partition directories about to land beside
-    them, are exactly the mixed layout parquet partition discovery
-    rejects — so the first partitioned append into an old sink would
-    corrupt it for every reader (round-8 advice). MOVE each flat file
-    into the reserved ``_batch=legacy/`` partition directory: the
-    Hive-layout convention supplies ``_batch`` from the directory name,
-    and a pre-partitioned writer never stored that column in the files,
-    so a renamed file reads back identically to one rewritten there.
-
-    Loss-proof by construction (round-9 advice): the earlier
-    rewrite-then-delete form could lose curated rows — a crash midway
-    through the delete loop leaves survivors whose next replay
-    dynamic-OVERWRITES ``_batch=legacy`` with only the surviving files'
-    rows, silently discarding the already-deleted files' rows; a stale
-    unpartitioned writer dropping new flat files after a completed
-    migration triggers the same destructive overwrite. A per-file
-    rename has no such window: each file is either still at the root
-    (the next run migrates it) or already inside ``legacy/`` (done) —
-    its rows always exist in exactly one readable place, any partial
-    run is resumable, and late flat files APPEND to the legacy
-    partition instead of replacing it."""
-    from modevetl_spark.sources.fs import fs_rename_into_dir, fs_root_parquet_files
-
-    flat = fs_root_parquet_files(spark, curated)
-    if not flat:
-        return
-    legacy_dir = curated.rstrip("/") + "/_batch=legacy"
-    for f in flat:
-        fs_rename_into_dir(spark, f, legacy_dir)
+    tick(spark, docs, "doc_id", state_path, body)
+    return n_out
 
 
 def _append_seen(survivors: DataFrame, seen_path: str) -> None:
@@ -327,19 +246,18 @@ def _append_seen(survivors: DataFrame, seen_path: str) -> None:
 
 
 def curate_batch(
-    spark: SparkSession,
     batch_docs: DataFrame,
+    batch_id: int | str | None,
     sink_path: str,
     min_quality: float = 0.5,
     min_tokens: int = 5,
-    batch_id: int | str | None = None,
 ) -> int:
     """One curation micro-batch over an already-delimited delta — the
-    shared core of :func:`curate_job` (watermark cadence) and
-    ``streaming.structured.run_streaming_curate`` (foreachBatch
-    cadence). Scores, filters, exact-dedups within the batch (min
-    doc_id per hash) and against the persisted seen-hash store, writes
-    survivors + hashes. Returns survivors written.
+    body of :func:`curate_job` (watermark cadence) and of
+    ``streaming.structured.run_foreach_batch`` (foreachBatch cadence).
+    Scores, filters, exact-dedups within the batch (min doc_id per
+    hash) and against the persisted seen-hash store, writes survivors +
+    hashes. Returns survivors written.
 
     Crash atomicity (single-writer): the curated write and the
     seen-hash write cannot be one atomic rename (two directories), so
@@ -359,48 +277,46 @@ def curate_batch(
     as id'd batches (mixing flat files and partition directories in one
     sink would break parquet partition discovery), but WITHOUT the
     replay guarantee (appends duplicate on replay)."""
-    import os
-
     from modevetl_spark.sources.fs import fs_has_parquet_files
 
+    spark = batch_docs.sparkSession
     scored = curate_transform(batch_docs)
     good = scored.where(
         (F.col("quality") >= min_quality) & (F.col("n_tokens") >= min_tokens)
     )
     # within-batch first occurrence per content hash
-    first = good.groupBy("text_md5").agg(F.min("doc_id").alias("keep_id"))
-    batch_unique = good.join(
-        first,
-        (good.text_md5 == first.text_md5) & (good.doc_id == first.keep_id),
-    ).select(good["*"])
+    keep_id = F.min("doc_id").over(Window.partitionBy("text_md5"))
+    batch_unique = (
+        good.withColumn("keep_id", keep_id)
+        .where(F.col("doc_id") == F.col("keep_id"))
+        .drop("keep_id")
+    )
     seen_path = os.path.join(sink_path, "seen_hashes")
     if fs_has_parquet_files(spark, seen_path):
-        seen = spark.read.parquet(seen_path)
+        seen = spark.read.schema("text_md5 STRING").parquet(seen_path)
         survivors = batch_unique.join(seen, "text_md5", "left_anti")
     else:
         survivors = batch_unique
-    survivors = survivors.cache()
-    try:
-        n_out = survivors.count()
-        if n_out:
-            curated = os.path.join(sink_path, "curated")
-            _migrate_flat_curated(spark, curated)
-            if batch_id is None:
-                (
-                    survivors.withColumn("_batch", F.lit("adhoc"))
-                    .write.partitionBy("_batch")
-                    .mode("append")
-                    .parquet(curated)
-                )
-            else:
-                (
-                    survivors.withColumn("_batch", F.lit(str(batch_id)))
-                    .write.partitionBy("_batch")
-                    .mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .parquet(curated)
-                )
-            _append_seen(survivors, seen_path)
-    finally:
-        survivors.unpersist()
+    # Counted, then written twice: build it once. The count is its first
+    # action and materializes it (AQE-coalesced, unlike a cache).
+    survivors = survivors.localCheckpoint(eager=False)
+    n_out = survivors.count()
+    if n_out:
+        curated = os.path.join(sink_path, "curated")
+        if batch_id is None:
+            (
+                survivors.withColumn("_batch", F.lit("adhoc"))
+                .write.partitionBy("_batch")
+                .mode("append")
+                .parquet(curated)
+            )
+        else:
+            (
+                survivors.withColumn("_batch", F.lit(str(batch_id)))
+                .write.partitionBy("_batch")
+                .mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .parquet(curated)
+            )
+        _append_seen(survivors, seen_path)
     return n_out

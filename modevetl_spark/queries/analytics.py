@@ -17,9 +17,7 @@ from pyspark.sql import functions as F
 
 from modevetl_spark.functions.compat import (
     davg,
-    dsum,
     sql_davg,
-    sql_dsum,
     sql_tavg,
     sql_tsum,
     tavg,

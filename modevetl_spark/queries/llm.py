@@ -15,8 +15,6 @@ engine-specific sketch internals).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -44,8 +42,6 @@ from modevetl_spark.operators.similarity import (
 from modevetl_spark.operators.text import (
     EN_STOPWORDS,
     doc_fingerprint,
-    en_score,
-    mean_token_len,
     quality_score,
     stopword_ratio,
     tokens,

@@ -78,81 +78,6 @@ def fs_has_parquet_files(spark: SparkSession | None, path: str) -> bool:
     return False
 
 
-def fs_root_parquet_files(spark: SparkSession | None, path: str) -> list[str]:
-    """The .parquet data files sitting DIRECTLY at ``path`` (non-recursive)
-    — files inside partition subdirectories don't count. This is the
-    detector for a mixed flat-file/partition-directory parquet layout,
-    which Spark's partition discovery rejects: a sink written by
-    pre-partitioned code holds flat files at the root, and the first
-    partitioned append next to them corrupts the sink for every reader.
-    """
-    if not _require_session(spark, path):
-        if not os.path.isdir(path):
-            return []
-        return sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-            and os.path.isfile(os.path.join(path, f))
-        )
-    fs, hpath = _fs_and_path(spark, path)
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for status in fs.listStatus(hpath):
-        p = status.getPath()
-        if status.isFile() and p.getName().endswith(".parquet"):
-            out.append(p.toString())
-    return sorted(out)
-
-
-def fs_rename_into_dir(
-    spark: SparkSession | None, src_file: str, dest_dir: str
-) -> str:
-    """Move one file into ``dest_dir`` (created if absent), keeping its
-    basename — the loss-proof primitive for layout migrations: unlike
-    rewrite-then-delete, a rename is individually replayable (the file
-    is either still at the source or already inside the destination,
-    never in a state where its rows exist nowhere). If the destination
-    name is taken, a numeric prefix is added rather than overwriting.
-    Returns the destination path used. On HDFS the rename is atomic; on
-    object stores it is copy+delete, which still never destroys the
-    source before the copy committed."""
-    base = src_file.rstrip("/").rsplit("/", 1)[-1]
-    if not _require_session(spark, src_file) and not has_scheme(dest_dir):
-        os.makedirs(dest_dir, exist_ok=True)
-        dest = os.path.join(dest_dir, base)
-        k = 0
-        while os.path.exists(dest):
-            k += 1
-            dest = os.path.join(dest_dir, f"m{k}-{base}")
-        os.rename(src_file, dest)
-        return dest
-    if spark is None:
-        raise ValueError(
-            f"renaming {src_file!r} -> {dest_dir!r} needs a SparkSession "
-            "to reach the Hadoop FileSystem API"
-        )
-    fs, hsrc = _fs_and_path(spark, src_file)
-    jvm = spark._jvm
-    hdir = jvm.org.apache.hadoop.fs.Path(dest_dir)
-    # Hadoop FileSystem reports most failures (source vanished under a
-    # concurrent run, cross-filesystem rename, permissions) by returning
-    # false rather than throwing — an unchecked false here would report
-    # success while the file is still at the source, recreating the mixed
-    # flat/partitioned layout this migration exists to prevent.
-    if not fs.mkdirs(hdir):
-        raise IOError(f"mkdirs {dest_dir!r} failed")
-    dest = jvm.org.apache.hadoop.fs.Path(hdir, base)
-    k = 0
-    while fs.exists(dest):
-        k += 1
-        dest = jvm.org.apache.hadoop.fs.Path(hdir, f"m{k}-{base}")
-    if not fs.rename(hsrc, dest):
-        raise IOError(f"rename {src_file!r} -> {dest.toString()} failed")
-    return dest.toString()
-
-
 def read_json_state(spark: SparkSession | None, path: str):
     """Small JSON state file -> dict, or None if absent.
 

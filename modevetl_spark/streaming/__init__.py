@@ -1,8 +1,8 @@
 from modevetl_spark.streaming.incremental import (
     Watermark,
     pull_newer,
-    run_incremental,
+    tick,
     upsert_parquet,
 )
 
-__all__ = ["Watermark", "pull_newer", "run_incremental", "upsert_parquet"]
+__all__ = ["Watermark", "pull_newer", "tick", "upsert_parquet"]

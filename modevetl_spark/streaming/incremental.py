@@ -10,6 +10,8 @@ the mark. This module reproduces that contract on parquet:
   on a cluster this lives in the job's state store).
 - :func:`pull_newer` — the watermark-filtered scan (predicate pushes into
   the parquet reader).
+- :func:`tick` — one cron run: pull the delta once, run the job's
+  body on it, advance the mark.
 - :func:`upsert_parquet` — id-keyed idempotent merge: existing rows whose
   keys collide with incoming rows are replaced (anti-join + union +
   atomic directory swap). The Delta/Iceberg MERGE is the managed-table
@@ -43,7 +45,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -503,30 +505,36 @@ def _java_double_str(x: float) -> str:
     return f"{sign}{mantissa}E{adj}"
 
 
-def run_incremental(
-    spark: SparkSession,
-    source: DataFrame,
-    ts_col: str,
-    transform,
-    sink_path: str,
-    keys: list[str],
-    state_path: str,
-    partition_by: list[str] | None = None,
+def tick(
+    spark: SparkSession, source: DataFrame, mark_col: str, state_path: str, body
 ) -> int:
-    """One cron-style incremental run: pull -> transform -> upsert ->
-    advance mark. Returns number of source rows processed. Pass
-    ``partition_by`` to keep the sink partitioned and each run's rewrite
-    scoped to the partitions the delta touches — the layout that keeps a
-    daily job O(day), not O(history)."""
+    """One cron tick: pull the rows of ``source`` newer than the stored
+    mark, run ``body(delta, mark)`` on them, advance the mark. Returns the
+    delta's row count; an empty delta returns 0 without running ``body``.
+
+    The delta is pulled once, as an eager ``localCheckpoint`` that
+    observes its count and max ``mark_col`` on the way: one Spark job,
+    and count, mark and body all read the same rows, however many land
+    in the source meanwhile. An observation read after the body's own
+    action would be lost whenever AQE prunes the observed stage: on an
+    empty delta, and on one whose rows the body filters away before its
+    first exchange. ``body`` is a foreachBatch-shaped callable, so the
+    same body runs under ``streaming.structured.run_foreach_batch``.
+    A timestamp mark is stored in ISO form."""
     wm = Watermark(state_path, spark=spark)
-    pending = pull_newer(source, ts_col, wm.read())
-    n, new_mark = pending.agg(F.count(F.lit(1)), F.max(ts_col)).collect()[0]
+    stats = Observation()
+    delta = (
+        pull_newer(source, mark_col, wm.read())
+        .observe(
+            stats, F.count(F.lit(1)).alias("n"), F.max(mark_col).alias("mark")
+        )
+        .localCheckpoint()
+    )
+    n, mark = stats.get["n"], stats.get["mark"]
     if n == 0:
         return 0
-    result = transform(pending)
-    upsert_parquet(spark, result, sink_path, keys, partition_by)
-    if new_mark is not None:
-        if hasattr(new_mark, "isoformat"):
-            new_mark = new_mark.isoformat(sep=" ")
-        wm.write(new_mark)
+    if hasattr(mark, "isoformat"):
+        mark = mark.isoformat(sep=" ")
+    body(delta, mark)
+    wm.write(mark)
     return n

@@ -171,31 +171,20 @@ def run_to_sink(
     )
 
 
-def run_foreach_batch_upsert(
-    result: DataFrame,
-    sink_path: str,
-    keys: list[str],
-    checkpoint_dir: str,
-    mode: str = "update",
-    partition_by: list[str] | None = None,
-) -> None:
-    """foreachBatch upsert: every micro-batch merges id-keyed into the
-    sink — the streaming twin of the reference's bulk-upsert push. Pass
-    ``partition_by`` to get partition-scoped merges (only partitions the
-    micro-batch touches are rewritten), which is what keeps a continuous
-    upsert stream O(batch), not O(sink), at 100 TB."""
-    from modevetl_spark.streaming.incremental import upsert_parquet
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        upsert_parquet(
-            batch_df.sparkSession, batch_df, sink_path, keys, partition_by
-        )
-
+def run_foreach_batch(stream: DataFrame, checkpoint_dir: str, body) -> None:
+    """Drain the stream once (availableNow) through ``body(batch_df,
+    batch_id)`` per micro-batch: the same bodies the cron ticks run
+    (plans/jobs ``dedup_batch``, ``scd2_batch``, ``curate_batch``, or an
+    ``upsert_parquet`` call), with the checkpointed epoch id as the
+    batch id. The checkpoint makes the loop restartable at batch
+    granularity. Update mode: a streaming aggregation hands each batch
+    its changed groups, to be upserted by key; any other stream reads
+    as append."""
     (
-        result.writeStream.outputMode(mode)
+        stream.writeStream.outputMode("update")
         .trigger(availableNow=True)
         .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
+        .foreachBatch(body)
         .start()
         .awaitTermination()
     )
@@ -217,40 +206,6 @@ def documents_stream(spark: SparkSession, docs_dir: str) -> DataFrame:
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(docs_dir)
-    )
-
-
-def run_streaming_dedup(
-    stream: DataFrame,
-    index_path: str,
-    pairs_path: str,
-    checkpoint_dir: str,
-    **dedup_kwargs,
-) -> None:
-    """Structured Streaming face of the standing near-dup job: every
-    micro-batch of documents probes the persisted LSH index, appends its
-    new candidate pairs, and appends its band rows
-    (operators/dedup.py run_dedup_incremental). The checkpoint makes the
-    loop restartable; each micro-batch stays O(batch) — the corpus is
-    only ever touched through the index equi-join."""
-    from modevetl_spark.operators.dedup import run_dedup_incremental
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        run_dedup_incremental(
-            batch_df.sparkSession,
-            batch_df,
-            index_path,
-            pairs_path,
-            **dedup_kwargs,
-        )
-
-    (
-        stream.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-        .awaitTermination()
     )
 
 
@@ -303,70 +258,3 @@ def attribution_join(
         ),
         "inner",
     ).select("user_id", "buy_id", "buy_ts", "click_id", "click_ts")
-
-
-def run_streaming_scd2(
-    stream: DataFrame,
-    state_path: str,
-    checkpoint_dir: str,
-    **scd2_kwargs,
-) -> None:
-    """Structured Streaming face of the standing SCD-2 job: every
-    micro-batch of change events merges O(batch) into the persisted
-    interval store (operators/scd2.merge_scd2_state — only touched
-    users' open tails rebuild). The stream's ordering IS the watermark
-    contract: micro-batches arrive in source order, so batch events
-    never predate the open intervals they extend; the checkpoint makes
-    the loop restartable at batch granularity."""
-    from modevetl_spark.operators.scd2 import merge_scd2_state
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_scd2_state(
-            batch_df.sparkSession, batch_df, state_path, **scd2_kwargs
-        )
-
-    (
-        stream.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-        .awaitTermination()
-    )
-
-
-def run_streaming_curate(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint_dir: str,
-    **curate_kwargs,
-) -> None:
-    """Structured Streaming face of the standing curation job: every
-    micro-batch of documents is scored, threshold-filtered, exact-
-    deduped within itself and against the persisted seen-hash store,
-    and written (plans/jobs.curate_batch — the same core the watermark
-    job runs). The checkpoint makes the loop restartable at batch
-    granularity; the checkpointed epoch id keys each batch's curated
-    partition, so a crash replay either overwrites the same partition
-    with identical content (crash between the curated and seen-hash
-    writes) or anti-joins to nothing (crash after both) — convergent
-    in every window, same guarantee as the batch tick."""
-    from modevetl_spark.plans.jobs import curate_batch
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        curate_batch(
-            batch_df.sparkSession,
-            batch_df,
-            sink_path,
-            batch_id=batch_id,
-            **curate_kwargs,
-        )
-
-    (
-        stream.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
-        .awaitTermination()
-    )

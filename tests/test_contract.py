@@ -143,11 +143,8 @@ _UNREACHED_KEPT = {
         "deduped": f"{_STREAMING}: watermark-bounded dedup",
         "stateful_sessions": f"{_STREAMING}: applyInPandasWithState sessions",
         "run_to_sink": f"{_STREAMING}: append-mode file sink",
-        "run_foreach_batch_upsert": f"{_STREAMING}: foreachBatch upsert sink",
+        "run_foreach_batch": f"{_STREAMING}: the cron jobs' bodies per micro-batch",
         "documents_stream": f"{_STREAMING}: the documents source",
-        "run_streaming_dedup": f"{_STREAMING}: the dedup job's stream form",
-        "run_streaming_scd2": f"{_STREAMING}: the scd2 job's stream form",
-        "run_streaming_curate": f"{_STREAMING}: the curate job's stream form",
     }.items()
 }
 
@@ -211,6 +208,60 @@ def test_every_def_reached_from_a_front_door():
     )
     gone = sorted(set(_UNREACHED_KEPT) - set(unreached))
     assert not gone, f"kept entries now reached or gone, drop them: {gone}"
+
+
+def _unloaded_imports(path: str) -> list[str]:
+    """``path:line name`` for each name an import binds in a scope (the
+    module or a function) that no code of that scope, nested scopes
+    included, loads. Imports marked ``noqa: F401`` are kept on purpose."""
+    with open(path, encoding="utf-8") as f:
+        src = f.read()
+    lines = src.splitlines()
+    out = []
+
+    def scope(node):
+        imports, todo = [], list(ast.iter_child_nodes(node))
+        while todo:
+            n = todo.pop()
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                scope(n)
+                continue
+            if isinstance(n, (ast.Import, ast.ImportFrom)):
+                imports.append(n)
+            todo.extend(ast.iter_child_nodes(n))
+        loads = {
+            n.id
+            for n in ast.walk(node)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        for imp in imports:
+            if getattr(imp, "module", None) == "__future__":
+                continue
+            if "noqa: F401" in lines[imp.lineno - 1]:
+                continue
+            for a in imp.names:
+                name = (a.asname or a.name).split(".")[0]
+                if name not in loads:
+                    out.append(f"{os.path.relpath(path, GE.ROOT)}:{imp.lineno} {name}")
+
+    scope(ast.parse(src))
+    return out
+
+
+def test_no_unused_imports():
+    """Every imported name is loaded in its scope, in the package, its
+    tests, its scripts and the entry files. Package ``__init__``
+    re-exports are exempt. Neither pyflakes nor ruff ships with the
+    toolchain, so this is the only check of it."""
+    paths = [
+        p
+        for pat in ("*.py", "modevetl_spark/**/*.py", "scripts/*.py", "tests/*.py")
+        for p in sorted(glob.glob(os.path.join(GE.ROOT, pat), recursive=True))
+        if os.path.basename(p) != "__init__.py"
+    ]
+    assert len(paths) > 50
+    unused = [u for p in paths for u in _unloaded_imports(p)]
+    assert not unused, f"imported, never loaded: {unused}"
 
 
 def test_slow_tier_entries_name_existing_tests():

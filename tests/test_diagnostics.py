@@ -628,8 +628,6 @@ def test_ewma_bounded_by_trailing_window(spark, sf_dir):
 def test_weighted_median_mass_invariant(spark, sf_dir):
     """At least half the quantity mass sits at-or-below the reported
     median and at least half at-or-above, per group."""
-    import pandas as pd
-
     from modevetl_spark.sources.catalog import load
 
     med = {

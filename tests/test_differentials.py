@@ -20,7 +20,7 @@ import math
 import duckdb
 import pytest
 
-from __spark_entry__ import oracle_sql, queries  # noqa: F401
+from __spark_entry__ import queries
 
 _Q = queries()
 
@@ -603,7 +603,6 @@ def test_rfm_matches_quintile_replay(spark, sf_dir):
     independent exact-NTILE(5) cuts (recency asc / frequency desc /
     monetary desc, custkey ties) — the triple application of the
     ranking machinery checked against the definition."""
-    import datetime
     from decimal import ROUND_HALF_UP, Decimal
 
     rows = duckdb.connect().execute(

@@ -537,95 +537,14 @@ def test_curate_batch_adhoc_shares_partition_layout(spark, tmp_path, sf_dir):
     docs = load(spark, sf_dir, "documents")
     cut = docs.approxQuantile("doc_id", [0.5], 0.0)[0]
     sink = str(tmp_path / "mixed")
-    n_a = curate_batch(spark, docs.where(F.col("doc_id") <= cut), sink, batch_id=1)
-    n_b = curate_batch(
-        spark, docs.where(F.col("doc_id") > cut), sink, batch_id=None
-    )
+    n_a = curate_batch(docs.where(F.col("doc_id") <= cut), 1, sink)
+    n_b = curate_batch(docs.where(F.col("doc_id") > cut), None, sink)
     assert n_a > 0 and n_b > 0
     curated = spark.read.parquet(f"{sink}/curated")
     assert "_batch" in curated.columns
     parts = {r._batch for r in curated.select("_batch").distinct().collect()}
     assert parts == {"1", "adhoc"}
     assert curated.count() == n_a + n_b
-
-
-def test_curate_batch_migrates_flat_legacy_sink(spark, tmp_path, sf_dir):
-    """Round-8 advice: a sink created by the OLD unpartitioned
-    curate_batch holds flat parquet files at the curated root; the
-    first partitioned append next to them would produce exactly the
-    mixed flat-file/partition-directory layout parquet partition
-    discovery rejects. The migration guard must rewrite the flat files
-    into _batch=legacy so one spark.read of curated/ sees BOTH cohorts,
-    nothing lost."""
-    from modevetl_spark.plans.jobs import curate_batch, curate_transform
-    from modevetl_spark.sources.catalog import load
-    from modevetl_spark.sources.fs import fs_root_parquet_files
-
-    docs = load(spark, sf_dir, "documents")
-    cut = docs.approxQuantile("doc_id", [0.5], 0.0)[0]
-    sink = str(tmp_path / "legacy")
-    curated = f"{sink}/curated"
-    # simulate the pre-partitioned sink: flat files directly at the root
-    legacy = curate_transform(docs.where(F.col("doc_id") <= cut)).where(
-        (F.col("quality") >= 0.0) & (F.col("n_tokens") >= 1)
-    )
-    legacy.coalesce(2).write.parquet(curated)
-    n_legacy = legacy.count()
-    assert fs_root_parquet_files(spark, curated), "fixture must be flat"
-
-    n_new = curate_batch(
-        spark, docs.where(F.col("doc_id") > cut), sink, batch_id=None
-    )
-    assert n_new > 0
-    # no flat files survive, and partition discovery sees both cohorts
-    assert fs_root_parquet_files(spark, curated) == []
-    merged = spark.read.parquet(curated)
-    parts = {r._batch for r in merged.select("_batch").distinct().collect()}
-    assert parts == {"legacy", "adhoc"}
-    assert merged.where(F.col("_batch") == "legacy").count() == n_legacy
-    assert merged.count() == n_legacy + n_new
-
-
-def test_flat_migration_is_loss_proof(spark, tmp_path, sf_dir):
-    """Round-9 advice: the migration must be per-file renames, so (a) a
-    crash midway (some files already moved, some still flat) resumes
-    with zero loss instead of overwriting _batch=legacy with only the
-    survivors, and (b) a stale unpartitioned writer dropping NEW flat
-    files after a completed migration APPENDS them to legacy rather
-    than replacing the earlier cohort."""
-    from modevetl_spark.plans.jobs import _migrate_flat_curated, curate_transform
-    from modevetl_spark.sources.catalog import load
-    from modevetl_spark.sources.fs import fs_rename_into_dir, fs_root_parquet_files
-
-    docs = load(spark, sf_dir, "documents")
-    cut = docs.approxQuantile("doc_id", [0.5], 0.0)[0]
-    curated = str(tmp_path / "curated")
-    first = curate_transform(docs.where(F.col("doc_id") <= cut))
-    first.repartition(3).write.parquet(curated)
-    n_first = first.count()
-
-    # (a) simulate a crash midway: one file already inside legacy/
-    flat = fs_root_parquet_files(spark, curated)
-    assert len(flat) == 3
-    fs_rename_into_dir(spark, flat[0], curated + "/_batch=legacy")
-    _migrate_flat_curated(spark, curated)  # the resume run
-    assert fs_root_parquet_files(spark, curated) == []
-    after = spark.read.parquet(curated)
-    assert after.count() == n_first  # every row from every file survived
-    assert {r._batch for r in after.select("_batch").distinct().collect()} == {
-        "legacy"
-    }
-
-    # (b) a stale old writer appends flat files AFTER the migration
-    late = curate_transform(docs.where(F.col("doc_id") > cut))
-    late.coalesce(1).write.mode("append").parquet(curated)
-    n_late = late.count()
-    assert fs_root_parquet_files(spark, curated), "stale writer fixture"
-    _migrate_flat_curated(spark, curated)
-    assert fs_root_parquet_files(spark, curated) == []
-    final = spark.read.parquet(curated)
-    # the earlier legacy cohort was appended to, never replaced
-    assert final.count() == n_first + n_late
 
 
 def test_curate_crash_between_writes_converges(spark, tmp_path, sf_dir, monkeypatch):
@@ -679,10 +598,11 @@ def test_streaming_curate_matches_batch_job(spark, tmp_path, sf_dir):
     """A file-per-slice document stream lands exactly on the single-shot
     curate_job output (same curated hash set) — batch/stream symmetry
     for the flagship pipeline."""
-    import shutil
-    from modevetl_spark.plans.jobs import curate_job
+    from functools import partial
+
+    from modevetl_spark.plans.jobs import curate_batch, curate_job
     from modevetl_spark.sources.catalog import load
-    from modevetl_spark.streaming.structured import run_streaming_curate
+    from modevetl_spark.streaming.structured import run_foreach_batch
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
 
@@ -708,7 +628,8 @@ def test_streaming_curate_matches_batch_job(spark, tmp_path, sf_dir):
         .parquet(f"{src}/*")
     )
     sink_s = str(tmp_path / "stream_sink")
-    run_streaming_curate(stream, sink_s, str(tmp_path / "ckpt"))
+    body = partial(curate_batch, sink_path=sink_s)
+    run_foreach_batch(stream, str(tmp_path / "ckpt"), body)
     got = {
         r.text_md5
         for r in spark.read.parquet(f"{sink_s}/curated").select("text_md5").collect()
@@ -866,7 +787,8 @@ def test_containment_detects_planted_subset(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id: long, text: string")
     from modevetl_spark.queries.mining import text_containment
-    import tempfile, os, shutil
+    import shutil
+    import tempfile
 
     tmp = tempfile.mkdtemp()
     try:

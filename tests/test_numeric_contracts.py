@@ -232,7 +232,6 @@ def test_compat_folds_are_structurally_hostile_proof(spark):
       (the driver's parity contract, minus the fixture).
     """
     import duckdb
-    from pyspark.sql import functions as F
 
     from modevetl_spark.functions.compat import (
         davg,

@@ -5,7 +5,6 @@ expression-vs-row-form equivalences, multimodal plumbing."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from modevetl_spark.operators.closure import transitive_closure
 from modevetl_spark.operators.dedup import dedup_corpus, simhash_candidates
@@ -513,8 +512,6 @@ def test_hash_split_disjoint_exhaustive_deterministic(spark, sf_dir):
 
 def test_review_fix_regressions(spark, sf_dir):
     """Pin the fixes from the round-2 adversarial review."""
-    import pytest as _pytest
-
     from modevetl_spark.operators.sampling import hash_split
     from modevetl_spark.operators.text import build_vocab, encode_tokens
 
@@ -646,8 +643,6 @@ def test_incremental_index_bucketed_probe_no_index_exchange(spark, sf_dir):
 def test_token_entropy_closed_forms(spark):
     """Entropy sanity against closed forms: all-identical tokens -> 0;
     n distinct uniform tokens -> log2(n)."""
-    import math
-
     from modevetl_spark.queries.analytics import token_entropy
 
     rows = [

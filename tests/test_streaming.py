@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 import pyspark.sql.functions as F
 import pytest
@@ -289,20 +290,20 @@ def test_foreach_batch_upsert_partitioned(spark, sf_dir, tmp_path):
     sink equals the batch aggregate (id-keyed merge across micro-batches,
     partition-scoped rewrites inside each batch)."""
     from modevetl_spark.sources.catalog import load
-    from modevetl_spark.streaming.structured import run_foreach_batch_upsert
+    from modevetl_spark.streaming.structured import run_foreach_batch
 
     stream = events_stream(spark, sf_dir)
     result = stream.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
     sink = str(tmp_path / "fbu")
-    run_foreach_batch_upsert(
-        result,
-        sink,
-        keys=["user_id", "event_type"],
-        checkpoint_dir=str(tmp_path / "ckpt_fbu"),
-        partition_by=["event_type"],
-    )
+
+    def body(batch_df, batch_id):
+        upsert_parquet(
+            spark, batch_df, sink, ["user_id", "event_type"], ["event_type"]
+        )
+
+    run_foreach_batch(result, str(tmp_path / "ckpt_fbu"), body)
     got = spark.read.parquet(sink).select("user_id", "event_type", "n")
     batch = (
         load(spark, sf_dir, "events")
@@ -489,10 +490,10 @@ def test_upsert_partitioned_crash_recovery(spark, tmp_path):
 
 
 def test_run_incremental_partitioned_sink(spark, tmp_path):
-    """Cron-contract loop with a partitioned sink: each run rewrites only
+    """Cron-contract loop with a partitioned sink: each tick rewrites only
     the partitions its delta touches, the watermark advances, and a rerun
     is a no-op."""
-    from modevetl_spark.streaming.incremental import run_incremental
+    from modevetl_spark.streaming.incremental import tick
 
     src1 = spark.createDataFrame(
         [(1, 10, 100, "a"), (2, 10, 200, "b"), (3, 20, 300, "c")],
@@ -501,13 +502,12 @@ def test_run_incremental_partitioned_sink(spark, tmp_path):
     sink = str(tmp_path / "inc_sink")
     state = str(tmp_path / "inc_state.json")
 
-    def ident(df):
-        return df.select("id", "day", "v")
+    def body(delta, mark):
+        upsert_parquet(
+            spark, delta.select("id", "day", "v"), sink, ["id"], ["day"]
+        )
 
-    n1 = run_incremental(
-        spark, src1, "seq", ident, sink, keys=["id"], state_path=state,
-        partition_by=["day"],
-    )
+    n1 = tick(spark, src1, "seq", state, body)
     assert n1 == 3
     before_d10 = _part_files(sink, "day=10")
 
@@ -515,32 +515,24 @@ def test_run_incremental_partitioned_sink(spark, tmp_path):
     src2 = src1.unionByName(
         spark.createDataFrame([(4, 20, 400, "d")], ["id", "day", "seq", "v"])
     )
-    n2 = run_incremental(
-        spark, src2, "seq", ident, sink, keys=["id"], state_path=state,
-        partition_by=["day"],
-    )
+    n2 = tick(spark, src2, "seq", state, body)
     assert n2 == 1  # only the new row was pending
     assert _part_files(sink, "day=10") == before_d10
     got = {(r.id, r.day, r.v) for r in spark.read.parquet(sink).collect()}
     assert got == {(1, 10, "a"), (2, 10, "b"), (3, 20, "c"), (4, 20, "d")}
     # replay with no new data -> no-op
-    assert (
-        run_incremental(
-            spark, src2, "seq", ident, sink, keys=["id"], state_path=state,
-            partition_by=["day"],
-        )
-        == 0
-    )
+    assert tick(spark, src2, "seq", state, body) == 0
 
 
 def test_streaming_dedup_equals_full_recompute(spark, sf_dir, tmp_path):
     """The Structured Streaming dedup job (file-per-micro-batch arrivals
     through foreachBatch) must reproduce the full-corpus LSH pair set —
     the streaming twin of the batch-loop equivalence gate."""
+    from modevetl_spark.plans.jobs import dedup_batch
     from modevetl_spark.sources.catalog import load
     from modevetl_spark.streaming.structured import (
         documents_stream,
-        run_streaming_dedup,
+        run_foreach_batch,
     )
     from tests.dedup_reference import full_minhash_candidates
 
@@ -551,13 +543,12 @@ def test_streaming_dedup_equals_full_recompute(spark, sf_dir, tmp_path):
             "append"
         ).parquet(arrivals)
 
-    index_path = str(tmp_path / "lsh_index")
-    pairs_path = str(tmp_path / "pairs")
-    run_streaming_dedup(
+    sink = str(tmp_path / "dedup")
+    pairs_path = os.path.join(sink, "pairs")
+    run_foreach_batch(
         documents_stream(spark, arrivals),
-        index_path,
-        pairs_path,
         str(tmp_path / "ckpt"),
+        partial(dedup_batch, sink_path=sink),
     )
 
     full = {(r.id_a, r.id_b) for r in full_minhash_candidates(docs).collect()}
@@ -595,137 +586,6 @@ def test_fs_exists_scheme_routing(spark, tmp_path):
     assert fs_exists(spark, "file:" + str(p))
     assert not fs_exists(spark, "file:" + str(tmp_path / "missing"))
     assert fs_exists(None, str(p))  # no-session local fallback
-
-
-def test_fs_root_parquet_files_scheme_routing(spark, tmp_path):
-    """The round-8 flat-layout detector must follow the path's scheme
-    like the rest of the fs seam: same answers through the Hadoop
-    FileSystem (file:) as through plain os paths, non-recursive
-    (partition-dir files don't count), and ordered."""
-    import os
-
-    from modevetl_spark.sources.fs import fs_root_parquet_files
-
-    root = tmp_path / "sink"
-    (root / "_batch=1").mkdir(parents=True)
-    (root / "flat-b.parquet").write_text("stub")
-    (root / "flat-a.parquet").write_text("stub")
-    (root / "_SUCCESS").write_text("")
-    (root / "_batch=1" / "part-0.parquet").write_text("stub")
-
-    local = fs_root_parquet_files(spark, str(root))
-    assert [os.path.basename(p) for p in local] == [
-        "flat-a.parquet",
-        "flat-b.parquet",
-    ]
-    via_fs = fs_root_parquet_files(spark, "file:" + str(root))
-    assert [p.rsplit("/", 1)[-1] for p in via_fs] == [
-        "flat-a.parquet",
-        "flat-b.parquet",
-    ]
-    # missing roots answer empty, never raise
-    assert fs_root_parquet_files(spark, str(tmp_path / "nope")) == []
-    assert fs_root_parquet_files(spark, "file:" + str(tmp_path / "nope")) == []
-
-
-def test_fs_rename_into_dir_scheme_routing(spark, tmp_path):
-    """The loss-proof migration primitive (round-9 advice): moves a
-    file into a directory keeping its basename, creates the directory,
-    never overwrites an existing destination (numeric prefix instead),
-    and follows the path's scheme like the rest of the fs seam."""
-    import os
-
-    from modevetl_spark.sources.fs import fs_rename_into_dir
-
-    root = tmp_path / "sink"
-    root.mkdir()
-    (root / "a.parquet").write_text("one")
-    dest_dir = str(root / "_batch=legacy")
-    dest = fs_rename_into_dir(spark, str(root / "a.parquet"), dest_dir)
-    assert os.path.basename(dest) == "a.parquet"
-    assert not (root / "a.parquet").exists()
-    assert open(dest).read() == "one"
-    # a second file with the SAME name must not clobber the first
-    (root / "a.parquet").write_text("two")
-    dest2 = fs_rename_into_dir(spark, str(root / "a.parquet"), dest_dir)
-    assert dest2 != dest and os.path.basename(dest2) == "m1-a.parquet"
-    assert open(dest).read() == "one" and open(dest2).read() == "two"
-    # Hadoop-FS route (file: scheme) lands beside the os-route files
-    (root / "b.parquet").write_text("three")
-    dest3 = fs_rename_into_dir(
-        spark, "file:" + str(root / "b.parquet"), "file:" + dest_dir
-    )
-    assert dest3.rsplit("/", 1)[-1] == "b.parquet"
-    assert not (root / "b.parquet").exists()
-    assert sorted(os.listdir(dest_dir)) == [
-        "a.parquet",
-        "b.parquet",
-        "m1-a.parquet",
-    ]
-    # scheme'd path with no session fails loudly, like the whole seam
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="scheme"):
-        fs_rename_into_dir(None, "s3a://bucket/x.parquet", "s3a://bucket/d")
-
-
-def test_fs_rename_into_dir_failed_rename_raises(spark, tmp_path):
-    """Round-10 ADVICE fix: Hadoop FileSystem.rename reports most
-    failures by returning FALSE, not throwing — an unchecked false
-    would report the migration as done while the flat file survives,
-    recreating the mixed-layout corruption. A rename whose source
-    vanished (the canonical concurrent-migrator race) must raise, so
-    the partitioned append can never land beside un-migrated files."""
-    import pytest as _pytest
-
-    from modevetl_spark.sources import fs as fsmod
-
-    # a missing source fails loudly on the JVM route (this Hadoop build
-    # throws FileNotFoundException from RawLocalFileSystem; builds that
-    # return false instead hit our explicit raise — either way, never a
-    # silent success)
-    missing = "file:" + str(tmp_path / "never-written.parquet")
-    with _pytest.raises(Exception, match="rename|never-written"):
-        fsmod.fs_rename_into_dir(spark, missing, "file:" + str(tmp_path / "d"))
-    # the os route raises natively on a missing source too
-    with _pytest.raises(OSError):
-        fsmod.fs_rename_into_dir(
-            spark, str(tmp_path / "also-missing.parquet"), str(tmp_path / "d2")
-        )
-
-    # the returns-false contract itself (object stores, permission
-    # failures): stub the FileSystem handle so rename/mkdirs report
-    # failure the Hadoop way, and assert the explicit raise fires
-    class _FalseFs:
-        def __init__(self, mkdirs_ok=True):
-            self._mkdirs_ok = mkdirs_ok
-
-        def mkdirs(self, p):
-            return self._mkdirs_ok
-
-        def exists(self, p):
-            return False
-
-        def rename(self, a, b):
-            return False
-
-    src = tmp_path / "real.parquet"
-    src.write_text("x")
-    orig = fsmod._fs_and_path
-    try:
-        fsmod._fs_and_path = lambda s, p: (_FalseFs(), orig(s, p)[1])
-        with _pytest.raises(IOError, match="rename .* failed"):
-            fsmod.fs_rename_into_dir(
-                spark, "file:" + str(src), "file:" + str(tmp_path / "d3")
-            )
-        fsmod._fs_and_path = lambda s, p: (_FalseFs(mkdirs_ok=False), orig(s, p)[1])
-        with _pytest.raises(IOError, match="mkdirs .* failed"):
-            fsmod.fs_rename_into_dir(
-                spark, "file:" + str(src), "file:" + str(tmp_path / "d4")
-            )
-    finally:
-        fsmod._fs_and_path = orig
-    assert src.read_text() == "x"  # the source was never destroyed
 
 
 def test_upsert_after_total_delete(spark, tmp_path):
@@ -990,7 +850,8 @@ def test_streaming_scd2_equals_full_build(spark, sf_dir, tmp_path):
     )
 
     from modevetl_spark.operators.scd2 import scd2_build
-    from modevetl_spark.streaming.structured import run_streaming_scd2
+    from modevetl_spark.plans.jobs import scd2_batch
+    from modevetl_spark.streaming.structured import run_foreach_batch
 
     ev = (
         spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -1028,8 +889,10 @@ def test_streaming_scd2_equals_full_build(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
     )
-    store = str(tmp_path / "scd2_store")
-    run_streaming_scd2(stream, store, str(tmp_path / "ckpt"))
+    sink = str(tmp_path / "scd2")
+    body = partial(scd2_batch, sink_path=sink)
+    run_foreach_batch(stream, str(tmp_path / "ckpt"), body)
+    store = os.path.join(sink, "scd2_dimension")
 
     got = spark.read.parquet(store)
     want = scd2_build(ev)
@@ -1037,45 +900,206 @@ def test_streaming_scd2_equals_full_build(spark, sf_dir, tmp_path):
     assert want.exceptAll(got).count() == 0
 
 
-def _one_tick_jobs(spark, sf_dir, tmp_path, job, jobs_launched) -> int:
-    """Spark jobs of one ``job`` tick on a growing event log, landed the
-    way perfbench's etl_ticks lands it: ``events.parquet`` is a directory
-    of part files. The first 70 % of the log (event_id order) is loaded
-    untimed; the rest lands as a second part file and one tick runs."""
+def _one_tick_jobs(
+    spark, sf_dir, tmp_path, job, jobs_launched, table="events", key="event_id"
+):
+    """Spark jobs of one ``job`` tick on a growing ``table``, landed the
+    way perfbench's etl_ticks lands the event log: ``<table>.parquet`` is
+    a directory of part files. The first 70 % of the table (``key``
+    order) is loaded untimed; the rest lands as a second part file and
+    one tick runs. Returns the tick's jobs, both ticks' results and the
+    two parts' row counts."""
     import pyarrow.parquet as pq
 
-    events = pq.read_table(f"{sf_dir}/events.parquet").sort_by("event_id")
-    parts = tmp_path / "sf" / "events.parquet"
+    rows = pq.read_table(f"{sf_dir}/{table}.parquet").sort_by(key)
+    parts = tmp_path / "sf" / f"{table}.parquet"
     parts.mkdir(parents=True)
-    cut = events.num_rows * 7 // 10
-    pq.write_table(events.slice(0, cut), parts / "part-00000.parquet")
+    cut = rows.num_rows * 7 // 10
+    pq.write_table(rows.slice(0, cut), parts / "part-00000.parquet")
     args = (
         spark,
         str(tmp_path / "sf"),
         str(tmp_path / "sink"),
         str(tmp_path / "state.json"),
     )
-    assert job(*args) == cut
-    pq.write_table(events.slice(cut), parts / "part-00001.parquet")
+    first = job(*args)
+    pq.write_table(rows.slice(cut), parts / "part-00001.parquet")
     n = []
     jobs = jobs_launched(lambda: n.append(job(*args)))
-    assert n == [events.num_rows - cut]
-    return jobs
+    return jobs, [first, *n], [cut, rows.num_rows - cut]
 
 
 def test_scd2_tick_job_count(spark, sf_dir, tmp_path, jobs_launched):
-    """One scd2_job tick builds the touched users' tail once, reads its
-    stores without schema inference and observes count and mark on the
-    merge's own action: 6 jobs (24, then 9, before)."""
+    """One scd2_job tick pulls its delta in one checkpointed pass that
+    takes count and mark, builds the touched users' tail once and reads
+    its stores without schema inference: 7 jobs (24, then 9, then 6 with
+    an observation that only the merge's own action filled)."""
     from modevetl_spark.plans.jobs import scd2_job
 
-    assert _one_tick_jobs(spark, sf_dir, tmp_path, scd2_job, jobs_launched) <= 6
+    jobs, got, delta = _one_tick_jobs(
+        spark, sf_dir, tmp_path, scd2_job, jobs_launched
+    )
+    assert got == delta
+    assert jobs <= 7
 
 
 def test_reviews_tick_job_count(spark, sf_dir, tmp_path, jobs_launched):
-    """One reviews_job tick takes count and mark from one aggregate and
-    reads its sink without schema inference: 6 jobs (9 before)."""
-    assert _one_tick_jobs(spark, sf_dir, tmp_path, reviews_job, jobs_launched) <= 6
+    """One reviews_job tick takes count and mark from its checkpointed
+    delta and reads its sink without schema inference: 5 jobs (9, then
+    6 with a count-and-max aggregate of its own)."""
+    jobs, got, delta = _one_tick_jobs(
+        spark, sf_dir, tmp_path, reviews_job, jobs_launched
+    )
+    assert got == delta
+    assert jobs <= 5
+
+
+def test_etl_tick_pair_job_count(spark, sf_dir, tmp_path, jobs_launched):
+    """scd2_job plus reviews_job, the pair perfbench's etl_ticks runs
+    each tick: 12 jobs together."""
+    from modevetl_spark.plans.jobs import scd2_job
+
+    def pair(spark, sf, sink, state):
+        return (
+            scd2_job(spark, sf, f"{sink}/scd2", f"{state}.scd2"),
+            reviews_job(spark, sf, f"{sink}/reviews", f"{state}.reviews"),
+        )
+
+    jobs, got, delta = _one_tick_jobs(spark, sf_dir, tmp_path, pair, jobs_launched)
+    assert got == [(n, n) for n in delta]
+    assert jobs <= 12
+
+
+def test_dedup_tick_job_count(spark, sf_dir, tmp_path, jobs_launched):
+    """One dedup_job tick: 16 jobs (18 with a cached delta and a
+    count-and-max aggregate of its own)."""
+    from modevetl_spark.plans.jobs import dedup_job
+
+    jobs, got, delta = _one_tick_jobs(
+        spark, sf_dir, tmp_path, dedup_job, jobs_launched, "documents", "doc_id"
+    )
+    assert got == delta
+    assert jobs <= 16
+
+
+def test_curate_tick_job_count(spark, sf_dir, tmp_path, jobs_launched):
+    """One curate_job tick: 7 jobs (12 with a cached delta, a
+    count-and-max aggregate of its own, a self-join for the first
+    occurrence per hash and an inferred read of the seen store). It
+    returns the survivors it appended."""
+    from modevetl_spark.plans.jobs import curate_job
+
+    jobs, got, delta = _one_tick_jobs(
+        spark, sf_dir, tmp_path, curate_job, jobs_launched, "documents", "doc_id"
+    )
+    assert all(0 < g <= d for g, d in zip(got, delta))
+    assert jobs <= 7
+
+
+def test_hierarchy_tick_job_count(spark, sf_dir, tmp_path, jobs_launched):
+    """One hierarchy_job tick: 15 jobs (16 with a count-and-max aggregate
+    of its own). Parts 0 and 1 have no parent edge."""
+    from modevetl_spark.plans.jobs import hierarchy_job
+
+    jobs, got, delta = _one_tick_jobs(
+        spark, sf_dir, tmp_path, hierarchy_job, jobs_launched, "part", "p_partkey"
+    )
+    assert got == [delta[0] - 2, delta[1]]
+    assert jobs <= 15
+
+
+@pytest.mark.parametrize("name", ["hierarchy", "reviews", "dedup", "scd2", "curate"])
+def test_empty_tick_job_count(spark, sf_dir, tmp_path, jobs_launched, name):
+    """A tick with nothing new is its one pull job: it returns 0 and
+    leaves the mark file as it was."""
+    from modevetl_spark.jobs import JOBS
+
+    state = tmp_path / "state.json"
+    args = (spark, sf_dir, str(tmp_path / "sink"), str(state))
+    assert JOBS[name](*args) > 0
+    before = (state.read_bytes(), state.stat().st_mtime_ns)
+    n = []
+    assert jobs_launched(lambda: n.append(JOBS[name](*args))) <= 1
+    assert n == [0]
+    assert (state.read_bytes(), state.stat().st_mtime_ns) == before
+
+
+def _within(seconds, fn):
+    """``fn()`` on a daemon thread; fails the test if it has not returned
+    within ``seconds``, and the session goes on without it."""
+    import threading
+
+    out = []
+
+    def run():
+        try:
+            out.append(fn())
+        except Exception as e:
+            out.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"still running after {seconds} s"
+    if isinstance(out[0], Exception):
+        raise out[0]
+    return out[0]
+
+
+@pytest.mark.parametrize("name", ["reviews", "curate"])
+def test_tick_on_an_all_filtered_delta(spark, sf_dir, tmp_path, name):
+    """A delta the body filters away entirely (only 'view' events for
+    reviews_job, only below-threshold documents for curate_job) still
+    advances the mark past it and leaves the sink as it was. Count and
+    mark come from the pull itself: an observation read after the
+    body's own action would wait forever here, as AQE prunes the
+    observed stage."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from modevetl_spark.jobs import JOBS
+    from modevetl_spark.plans.jobs import curate_transform
+    from modevetl_spark.sources.catalog import load
+
+    table, key, mark_col, stores = {
+        "reviews": ("events", "event_id", "ts", [""]),
+        "curate": ("documents", "doc_id", "doc_id", ["curated", "seen_hashes"]),
+    }[name]
+    rows = pq.read_table(f"{sf_dir}/{table}.parquet").sort_by(key)
+    cut = rows.num_rows * 7 // 10
+    tail = rows.slice(cut)
+    if name == "reviews":
+        tail = tail.filter(pc.equal(tail["event_type"], "view"))
+    else:
+        low = curate_transform(
+            spark.createDataFrame(tail.select(["doc_id", "text"]).to_pylist())
+        ).where((F.col("quality") < 0.5) | (F.col("n_tokens") < 5))
+        ids = pa.array([r.doc_id for r in low.select("doc_id").collect()])
+        tail = tail.filter(pc.is_in(tail["doc_id"], value_set=ids))
+    assert tail.num_rows > 0
+    parts = tmp_path / "sf" / f"{table}.parquet"
+    parts.mkdir(parents=True)
+    pq.write_table(rows.slice(0, cut), parts / "part-00000.parquet")
+    sink, state = tmp_path / "sink", tmp_path / "state.json"
+    args = (spark, str(tmp_path / "sf"), str(sink), str(state))
+    assert JOBS[name](*args) > 0
+
+    def contents():
+        return [
+            sorted(map(tuple, spark.read.parquet(str(sink / s)).collect()))
+            for s in stores
+        ]
+
+    before = contents()
+    pq.write_table(tail, parts / "part-00001.parquet")
+    n = _within(60, lambda: JOBS[name](*args))
+    assert n == (tail.num_rows if name == "reviews" else 0)
+    want = load(spark, str(tmp_path / "sf"), table).agg(F.max(mark_col)).first()[0]
+    if name == "reviews":
+        want = want.isoformat(sep=" ")
+    assert Watermark(str(state)).read() == want
+    assert contents() == before
 
 
 @pytest.mark.parametrize("partition_by", [None, ["p"]], ids=["flat", "partitioned"])

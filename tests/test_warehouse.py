@@ -535,7 +535,7 @@ def test_triangles_closed_form(spark, sf_dir):
 def test_vocab_encode_roundtrip(spark, sf_dir):
     """Encoded streams: id count equals token count, ids are in
     [-1, 49], and the most frequent corpus token encodes as id 0."""
-    from modevetl_spark.operators.text import build_vocab, tokens
+    from modevetl_spark.operators.text import build_vocab
     from modevetl_spark.sources.catalog import load
 
     d = load(spark, sf_dir, "documents")

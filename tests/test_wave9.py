@@ -109,8 +109,6 @@ class TestFilterBloom:
     def test_no_false_negatives_even_saturated(self, spark, tmp_path):
         """Saturate the filter (build keys >> m): fp_rate degrades
         toward 1 but the superset guarantee must hold exactly."""
-        import modevetl_spark.queries.wave9 as w9
-
         n = 30000
         orders = pd.DataFrame(
             {
