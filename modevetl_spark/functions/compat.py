@@ -112,15 +112,6 @@ def dmul(a: Column | str, b: Column | str) -> Column:
     return _c(a).try_cast(DEC) * _c(b).try_cast(DEC)
 
 
-# Pre-r13 names for the try-fold variants, kept as aliases so the
-# round-11/12 call sites read unchanged: the raw-cast originals were
-# retired in round 13 (structural close of the one-dirty-row abort
-# class), which made the t* twins THE definitions.
-tsum = dsum
-tavg = davg
-tmoney = money
-
-
 def round_sig(col: Column | str, digits: int) -> Column:
     """Round to significant digits — the reference's ``Math.round(value,
     digits=n)`` (``pyLibrary/maths/__init__.py``) rounds to significant
@@ -199,9 +190,3 @@ def sql_dmul(a: str, b: str) -> str:
         f"CAST(TRY_CAST({a} AS DECIMAL(18,6)) AS DECIMAL(19,6))"
         f" * CAST(TRY_CAST({b} AS DECIMAL(18,6)) AS DECIMAL(19,6))"
     )
-
-
-# Pre-r13 aliases, same rationale as the engine-side trio above.
-sql_tsum = sql_dsum
-sql_tavg = sql_davg
-sql_tmoney = sql_money

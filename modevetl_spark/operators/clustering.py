@@ -33,30 +33,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_DEC = "decimal(38,12)"
+from modevetl_spark.functions.jvmnum import _DEC, dec_fold_sum
 
 # fast-path flush threshold: per-task int64 pico-unit accumulators are
 # flushed to a partial record batch before |sum| can approach 2^63
 # (4e6 rows × 1e12 pico-units/row = 4e18 < 9.2e18)
 _FAST_FLUSH_ROWS = 4_000_000
-
-
-def dec_fold_sum(arr: Column) -> Column:
-    """Left fold of an array of DECIMAL(38,12) terms in ARRAY ORDER.
-
-    NOT the exact decimal sum (r13 measurement): the lambda's
-    DECIMAL(38,12) + DECIMAL(38,12) add wants precision 39, which
-    Spark's allowPrecisionLoss rule re-types as DECIMAL(38,11) — every
-    step HALF_UP-rounds the running sum at 11dp before the cast back to
-    scale 12 (so every fold result's 12th decimal digit is 0). The fold
-    IS deterministic and partition-invariant (the order is the array's
-    element order), and the external-replay contract holds — an
-    external engine replays it stepwise, as _kmeans_argmin does — but
-    any claim that it equals SUM() of the terms is wrong by up to
-    ~5e-12 per element."""
-    return F.aggregate(
-        arr, F.lit(0).cast(_DEC), lambda acc, x: (acc + x).cast(_DEC)
-    )
 
 
 def sq_dist(a: Column, b: Column) -> Column:
@@ -322,8 +304,8 @@ def _kmeans_units(p):
     the int64 ``u`` with ``ROUND(p, 12) CAST DECIMAL(38,12) == u/1e12``
     EXACTLY — Spark's round routes double→BigDecimal through
     ``BigDecimal.valueOf`` = ``Double.toString``, i.e. HALF_UP on the
-    SHORTEST decimal repr (see queries/wave11._round9 and its 16k-value
-    probe battery), and for |p| ≤ 4 the rounded double then survives
+    SHORTEST decimal repr (see functions/jvmnum.round_repr and its
+    16k-value probe battery), and for |p| ≤ 4 the rounded double then survives
     the decimal cast losslessly (≤ 13 sig digits; two distinct 12dp
     decimals are 1e-12 apart ≫ ulp(4) ≈ 8.9e-16, so repr round-trips).
 
@@ -331,7 +313,7 @@ def _kmeans_units(p):
     so the half-up decision is certain except near a .5 boundary;
     every element within 1e-3 of one (repr-vs-exact divergence is
     bounded by ulp(4)·1e12 ≈ 9e-4) is recomputed through the exact
-    repr-based Decimal path. Same recipe as queries/wave11._pca_units
+    repr-based Decimal path. Same recipe as queries/ml._pca_units
     with the window widened for the larger magnitude bound.
     """
     import decimal
@@ -522,7 +504,7 @@ def _kmeans_fast(
     ONE Arrow pass → k×dims bounded partials → driver-side centroid
     update with the exact JVM mirrors (decimal-scale shift is exact,
     int→double and the divide are the same correctly-rounded IEEE ops,
-    the quantize round is shortest-repr HALF_UP via _round_repr); the
+    the quantize round is shortest-repr HALF_UP via round_repr); the
     final assignment is one more Arrow pass returned LAZY. Every
     collect is bounded by k, dims, or 1 row — never data-sized.
 
@@ -536,7 +518,7 @@ def _kmeans_fast(
 
     import numpy as np
 
-    from modevetl_spark.queries.wave11 import _round_repr
+    from modevetl_spark.functions.jvmnum import round_repr
 
     cents = sorted(
         ((cid, np.asarray(cv, dtype=np.float64)) for cid, cv in seeds),
@@ -563,7 +545,7 @@ def _kmeans_fast(
         for cl in sorted(bycl):
             m = np.empty(dims, dtype=np.float64)
             for pos, (s, n) in bycl[cl].items():
-                m[pos] = _round_repr(
+                m[pos] = round_repr(
                     float(decimal.Decimal(s).scaleb(-12)) / n, quantize_dp
                 )
             cents.append((cl, m))

@@ -485,7 +485,7 @@ def histogram_quantiles(
     """Mergeable fixed-width histogram quantile sketch with a rank-check
     verdict — locate each requested quantile to a bucket of a K-bucket
     equi-width histogram WITHOUT ever sorting or range-exchanging the
-    data (-> ``queries/wave7.q_sketch_quantiles`` for the oracle-graded
+    data (-> ``queries/sketches.q_sketch_quantiles`` for the oracle-graded
     face and the full plan-shape story).
 
     Returns one row per prob: ``(p_label, n, est_bucket, bounds_ok)``

@@ -39,11 +39,8 @@ _MODULES = [
     "ml",
     "mining",
     "diagnostics",
-    "wave7",
-    "wave8",
-    "wave9",
-    "wave10",
-    "wave11",
+    "sketches",
+    "corpus",
 ]
 
 # The driver grades the first 50 keys the registry emits, so emission

@@ -18,14 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modevetl_spark.functions.compat import (
-    dsum,
-    sql_dsum,
-    sql_tavg,
-    sql_tsum,
-    tavg,
-    tsum,
-)
+from modevetl_spark.functions.compat import davg, dsum, sql_davg, sql_dsum
 from modevetl_spark.queries import prep
 from modevetl_spark.queries._registry import make_registry
 from modevetl_spark.sources.catalog import load
@@ -36,10 +29,10 @@ QUERIES, ORACLE, q = make_registry()
 _BASIC_ORACLE = f"""
 SELECT COUNT(*) AS n_rows,
        COUNT(l_quantity) AS n_qty,
-       {sql_tsum('l_quantity', 'sum_qty')},
+       {sql_dsum('l_quantity', 'sum_qty')},
        MIN(l_quantity) AS min_qty,
        MAX(l_quantity) AS max_qty,
-       {sql_tavg('l_quantity', 'avg_qty')}
+       {sql_davg('l_quantity', 'avg_qty')}
 FROM lineitem
 """
 
@@ -52,10 +45,10 @@ def agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("l_quantity").alias("n_qty"),
-        tsum("l_quantity").alias("sum_qty"),
+        dsum("l_quantity").alias("sum_qty"),
         F.min("l_quantity").alias("min_qty"),
         F.max("l_quantity").alias("max_qty"),
-        tavg("l_quantity").alias("avg_qty"),
+        davg("l_quantity").alias("avg_qty"),
     )
 
 
@@ -266,11 +259,11 @@ def agg_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GROUPBY_ORACLE = f"""
 SELECT l_returnflag,
        l_linestatus,
-       {sql_tsum('l_quantity', 'sum_qty')},
-       {sql_tsum('l_extendedprice', 'sum_base_price')},
-       {sql_tsum('l_extendedprice * (1 - l_discount)', 'sum_disc_price')},
-       {sql_tavg('l_quantity', 'avg_qty')},
-       {sql_tavg('l_discount', 'avg_disc')},
+       {sql_dsum('l_quantity', 'sum_qty')},
+       {sql_dsum('l_extendedprice', 'sum_base_price')},
+       {sql_dsum('l_extendedprice * (1 - l_discount)', 'sum_disc_price')},
+       {sql_davg('l_quantity', 'avg_qty')},
+       {sql_davg('l_discount', 'avg_disc')},
        COUNT(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '2001-09-02'
@@ -288,11 +281,11 @@ def groupby_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     disc_price = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     return li.groupBy("l_returnflag", "l_linestatus").agg(
-        tsum("l_quantity").alias("sum_qty"),
-        tsum("l_extendedprice").alias("sum_base_price"),
-        tsum(disc_price).alias("sum_disc_price"),
-        tavg("l_quantity").alias("avg_qty"),
-        tavg("l_discount").alias("avg_disc"),
+        dsum("l_quantity").alias("sum_qty"),
+        dsum("l_extendedprice").alias("sum_base_price"),
+        dsum(disc_price).alias("sum_disc_price"),
+        davg("l_quantity").alias("avg_qty"),
+        davg("l_discount").alias("avg_disc"),
         F.count(F.lit(1)).alias("count_order"),
     )
 

@@ -15,14 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from modevetl_spark.functions.compat import (
-    davg,
-    sql_davg,
-    sql_tavg,
-    sql_tsum,
-    tavg,
-    tsum,
-)
+from modevetl_spark.functions.compat import davg, dsum, sql_davg, sql_dsum
 from modevetl_spark.operators.text import tokens
 from modevetl_spark.queries import prep
 from modevetl_spark.queries._registry import make_registry
@@ -36,8 +29,8 @@ DEC = "decimal(18,6)"
 _Q1_ORACLE = f"""
 SELECT l_returnflag,
        l_linestatus,
-       {sql_tsum("l_quantity", "sum_qty")},
-       {sql_tsum("l_extendedprice", "sum_base_price")},
+       {sql_dsum("l_quantity", "sum_qty")},
+       {sql_dsum("l_extendedprice", "sum_base_price")},
        ROUND(CAST(SUM(CAST(TRY_CAST(l_extendedprice AS DECIMAL(18,6)) AS DECIMAL(19,6))
                       * CAST(TRY_CAST(1 - l_discount AS DECIMAL(18,6)) AS DECIMAL(19,6)))
                   AS DOUBLE), 2) AS sum_disc_price,
@@ -45,9 +38,9 @@ SELECT l_returnflag,
                       * CAST(TRY_CAST((1 - l_discount) * (1 + l_tax)
                                       AS DECIMAL(18,6)) AS DECIMAL(19,6)))
                   AS DOUBLE), 2) AS sum_charge,
-       {sql_tavg("l_quantity", "avg_qty")},
-       {sql_tavg("l_extendedprice", "avg_price")},
-       {sql_tavg("l_discount", "avg_disc")},
+       {sql_davg("l_quantity", "avg_qty")},
+       {sql_davg("l_extendedprice", "avg_price")},
+       {sql_davg("l_discount", "avg_disc")},
        COUNT(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-12-01'
@@ -73,8 +66,8 @@ def tpch_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.filter(F.col("l_shipdate") <= F.lit("1998-12-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            tsum("l_quantity").alias("sum_qty"),
-            tsum("l_extendedprice").alias("sum_base_price"),
+            dsum("l_quantity").alias("sum_qty"),
+            dsum("l_extendedprice").alias("sum_base_price"),
             F.round(
                 F.sum(
                     F.col("l_extendedprice").try_cast(DEC)
@@ -88,9 +81,9 @@ def tpch_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 2,
             ).alias("sum_charge"),
-            tavg("l_quantity").alias("avg_qty"),
-            tavg("l_extendedprice").alias("avg_price"),
-            tavg("l_discount").alias("avg_disc"),
+            davg("l_quantity").alias("avg_qty"),
+            davg("l_extendedprice").alias("avg_price"),
+            davg("l_discount").alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
     )

@@ -1,40 +1,15 @@
-"""Corpus-statistics and linkage operators.
+"""Corpus statistics over the documents table: token associations and
+dispersion, tokenizer training, keywords, language-model scores, and
+each source's divergence from the corpus.
 
-- ``q_sketch_hll`` — deterministic HyperLogLog (Flajolet et al. 2007):
-  the canonical production cardinality sketch beside the KMV estimator
-  — md5-derived registers, leading-zero ranks from integer-arg log2,
-  harmonic mean over exact powers of two. The full register state is
-  replayable in ANSI SQL, unlike ``approx_count_distinct``'s opaque
-  HLL++ blob (q_agg_approx_sketches), so the estimate itself is graded
-  as data, not just bounded.
-- ``q_cooccur_pmi`` — windowed co-occurrence PPMI associations: the
-  word-association table (PPMI matrix rows) distributional-semantics
-  pipelines precompute; pairs generated ROW-LOCALLY from the token
-  array (no self-join), PMI as integer-arg log2 ± chains.
-- ``q_linkage_weights`` — Fellegi–Sunter-style record-linkage scoring
-  over blocked candidate pairs: frequency-based agreement weights
-  (rarer agreeing values ⇒ stronger match evidence), exact integer
-  micro-bit weights via the decimal fold.
-- ``q_token_burstiness`` — Fisher variance-to-mean dispersion of
-  per-document token counts (zeros included algebraically): the
-  Church–Gale content-vs-function-word diagnostic.
-- ``q_bpe_merges`` — BPE merge training (Sennrich et al. 2016): the
-  tokenizer-learning loop over the word-frequency table; strings and
-  integer counts only, so cross-engine parity is structural.
-- ``q_textrank_keywords`` — TextRank keyword extraction (Mihalcea &
-  Tarau 2004): weighted PageRank over the skip-gram co-occurrence
-  graph, composing the shared pair front-end with the
-  operators/graph.pagerank iteration discipline.
-- ``q_doc_lm_score`` — per-document unigram cross-entropy against the
-  corpus LM in bits/token: the CCNet-style LM quality filter, the
-  document-level companion to the source-level KL drift score.
-- ``q_unseen_mass`` — Good–Turing unseen-mass estimate per source
-  (P₀ = hapax/N): the vocabulary-saturation signal that tells a
-  curation loop which sources still surprise.
-
-Reference parity: SURVEY.md §2's sketch/dedup families; re-expressed
-per SURVEY §0's protocol with bounded formulations chosen for the
-1000-executor case.
+- ``q_cooccur_pmi`` — windowed co-occurrence PPMI associations.
+- ``q_textrank_keywords`` — TextRank keywords over the co-occurrence graph.
+- ``q_token_burstiness`` — variance-to-mean dispersion of token counts.
+- ``q_bpe_merges`` — the first BPE merges learned from the vocabulary.
+- ``q_doc_lm_score`` — per-document cross-entropy against the corpus LM.
+- ``q_unseen_mass`` — Good–Turing unseen-mass estimate per source.
+- ``q_source_kl_divergence`` — KL divergence of each source from the corpus.
+- ``q_source_js_divergence`` — Jensen–Shannon divergence of each source.
 """
 
 from __future__ import annotations
@@ -47,142 +22,6 @@ from modevetl_spark.queries._registry import make_registry
 from modevetl_spark.sources.catalog import load
 
 QUERIES, ORACLE, q = make_registry()
-
-
-# --- Deterministic HyperLogLog over lineitem part keys --------------------
-
-_HLL_B = 6  # register-index bits
-_HLL_M = 1 << _HLL_B  # 64 registers
-_HLL_WBITS = 32 - _HLL_B  # 26-bit rank word
-_HLL_ALPHA = 0.709  # alpha_64 (Flajolet et al. 2007, m = 64)
-
-_HLL_ORACLE = f"""
-WITH h AS (
-    -- NULL keys carry no identity (COUNT DISTINCT semantics) — mirrors
-    -- the engine-side .where(isNotNull) filter in hll_state; without it
-    -- md5(NULL)=NULL yields a j=NULL register row that inflates n_regs
-    -- while contributing nothing to s_hit.
-    SELECT CAST(('0x' || substr(md5(CAST(l_partkey AS VARCHAR)), 1, 8))
-                AS BIGINT) AS h32
-    FROM lineitem
-    WHERE l_partkey IS NOT NULL
-),
-jr AS (
-    SELECT h32 // {1 << _HLL_WBITS} AS j,
-           h32 % {1 << _HLL_WBITS} AS w
-    FROM h
-),
-reg AS (
-    SELECT j,
-           MAX(CASE WHEN w = 0 THEN {_HLL_WBITS + 1}
-                    ELSE {_HLL_WBITS + 1} - CAST(length(bin(w)) AS BIGINT)
-               END) AS mj
-    FROM jr GROUP BY 1
-),
-s AS (
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_regs,
-           SUM(CAST(1 AS DOUBLE)
-               / CAST((CAST(1 AS BIGINT) << mj) AS DOUBLE)) AS s_hit
-    FROM reg
-),
-ex AS (
-    SELECT CAST(COUNT(DISTINCT l_partkey) AS BIGINT) AS exact_distinct
-    FROM lineitem
-)
-SELECT CAST({_HLL_M} AS BIGINT) AS m,
-       s.n_regs,
-       CAST({_HLL_M} - s.n_regs AS BIGINT) AS v_zeros,
-       CAST({_HLL_M} - s.n_regs AS DOUBLE) + s.s_hit AS harmonic_sum,
-       CAST({_HLL_ALPHA} AS DOUBLE) * {_HLL_M} * {_HLL_M}
-           / (CAST({_HLL_M} - s.n_regs AS DOUBLE) + s.s_hit) AS est_hll,
-       ex.exact_distinct,
-       (CAST({_HLL_ALPHA} AS DOUBLE) * {_HLL_M} * {_HLL_M}
-            / (CAST({_HLL_M} - s.n_regs AS DOUBLE) + s.s_hit)
-        - ex.exact_distinct) / ex.exact_distinct AS rel_err,
-       ABS(CAST({_HLL_ALPHA} AS DOUBLE) * {_HLL_M} * {_HLL_M}
-               / (CAST({_HLL_M} - s.n_regs AS DOUBLE) + s.s_hit)
-           - ex.exact_distinct) / ex.exact_distinct
-           <= {2 * 1.04} / sqrt({_HLL_M}) AS ok_2sigma
-FROM s CROSS JOIN ex
-"""
-
-
-@q("q_sketch_hll", oracle_sql=_HLL_ORACLE)
-def sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9++++ [EXT]: deterministic HyperLogLog (Flajolet–Fusy–Gandouet–
-    Meunier 2007) distinct count of lineitem part keys, m={M}
-    registers — the canonical production cardinality sketch beside the
-    KMV estimator (q_sketch_distinct_kmv) and Spark's own opaque HLL++
-    (q_agg_approx_sketches). Here the WHOLE sketch is replayable: the
-    shared 32-bit md5 idiom splits into a {B}-bit register index j and
-    a {W}-bit rank word w; the register rank is the leading-zero count
-    rho = {W}+1 (w=0) else {W}+1 − length(bin(w)) — derived from BIT
-    LENGTH (pure integer/string ops, both engines drop leading zeros),
-    no transcendental at all; registers are a {M}-row max-aggregate.
-
-    Float discipline: every harmonic term 2^−M[j] is computed as
-    1.0 / (1 << M[j]) — an EXACT power of two (no pow(), the
-    q_decayed_value rule) — and the sum of ≤{M} exact powers of two
-    spanning 2^−{Wp1}..2^6 fits a 52-bit mantissa, so the harmonic sum
-    is EXACT regardless of accumulation order: no decimal fold needed.
-    The estimate α_m·m²/S is then a fixed tree of IEEE ops on exact
-    inputs — bit-identical across engines, emitted raw (the round-7
-    no-rounding lesson). Both fixture SFs sit in the raw-estimator
-    regime (distinct ≥ 200 > 2.5m = 160), so the linear-counting
-    small-range branch — whose ln() is NOT portable — never fires;
-    v_zeros is emitted as data so the regime is itself graded. The
-    estimator's 2σ band (2·1.04/√m ≈ 26%) is asserted as a verdict
-    column, and exactness/mergeability (registers merge by elementwise
-    max) are pinned by pytest.
-
-    Plan shape: one streaming scan → {M}-row register max-aggregate
-    (map-side combine collapses everything: the exchange carries at
-    most {M} rows per task); the exact-verify tier is the one
-    data-sized distinct and exists to be graded. At 100 TB the sketch
-    path alone is a scan plus a {M}-row exchange — and the register
-    table is the mergeable shard/stream state."""
-    from modevetl_spark.operators.sketches import hll_state
-
-    prep(spark)
-    li = load(spark, sf_dir, "lineitem")
-    reg = hll_state(li, "l_partkey", b=_HLL_B)
-    s = reg.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_regs"),
-        F.sum(
-            F.lit(1.0) / F.expr("shiftleft(cast(1 as bigint), mj)").cast("double")
-        ).alias("s_hit"),
-    )
-    ex = li.agg(
-        F.count_distinct("l_partkey").cast("bigint").alias("exact_distinct")
-    )
-    m = F.lit(_HLL_M)
-    harmonic = (m - F.col("n_regs")).cast("double") + F.col("s_hit")
-    est = F.lit(_HLL_ALPHA) * m * m / harmonic
-    rel = (est - F.col("exact_distinct")) / F.col("exact_distinct")
-    return s.crossJoin(F.broadcast(ex)).select(
-        m.cast("bigint").alias("m"),
-        "n_regs",
-        (m - F.col("n_regs")).cast("bigint").alias("v_zeros"),
-        harmonic.alias("harmonic_sum"),
-        est.alias("est_hll"),
-        "exact_distinct",
-        rel.alias("rel_err"),
-        (
-            F.abs(est - F.col("exact_distinct")) / F.col("exact_distinct")
-            <= F.lit(2 * 1.04) / F.sqrt(m.cast("double"))
-        ).alias("ok_2sigma"),
-    )
-
-
-_doc = sketch_hll.__doc__
-for _k, _v in (
-    ("{M}", str(_HLL_M)),
-    ("{B}", str(_HLL_B)),
-    ("{W}", str(_HLL_WBITS)),
-    ("{Wp1}", str(_HLL_WBITS + 1)),
-):
-    _doc = _doc.replace(_k, _v)
-sketch_hll.__doc__ = _doc
 
 
 # --- Windowed co-occurrence PPMI associations ------------------------------
@@ -352,179 +191,168 @@ for _k, _v in (("{K}", str(_PMI_K)), ("{W}", str(_PMI_W)), ("{MIN}", str(_PMI_MI
 cooccur_pmi.__doc__ = _doc
 
 
-# --- Frequency-weighted record-linkage scoring (Fellegi–Sunter u-weights) --
+# --- TextRank keyword extraction (weighted PageRank on the word graph) -----
 
-_LINK_K = 100
-_LINK_SHIFT = 100_000  # cents shift: acctbal >= -1000 => shifted >= 0
+_TR_ITERS = 6
+_TR_K = 20
 
-_LINK_ORACLE = f"""
-WITH c AS (
-    SELECT c_custkey, c_nationkey, c_mktsegment,
-           TRY_CAST(ROUND(c_acctbal * 100) AS BIGINT) + {_LINK_SHIFT} AS cents
-    FROM customer
+
+def _textrank_oracle() -> str:
+    """Unrolls the weighted-PageRank recurrence CTE-per-iteration (the
+    q_graph_pagerank oracle pattern): per-edge terms round at 9dp into
+    DECIMAL(18,9) (exact, order-free), the teleport is written as
+    arithmetic `1.0 - 0.85` (0.15 literal differs in binary), and each
+    new score re-rounds at 9dp so every iteration is bit-replayable."""
+    head = rf"""WITH t AS (
+    SELECT list_filter(regexp_split_to_array(lower(text), '\s+'),
+                       x -> x <> '') AS tk
+    FROM documents
 ),
-f AS (
-    SELECT c_custkey, c_nationkey, c_mktsegment, cents,
-           cents // 10000 AS band
-    FROM c
+p0 AS (
+    SELECT unnest(flatten(list_transform(range(1, {_PMI_W + 1}),
+               d -> list_transform(range(1, len(tk) - d + 1),
+                    i -> {{'a': tk[i], 'b': tk[i+d]}})))) AS pr
+    FROM t
 ),
-n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM f),
-wseg AS (
-    SELECT CAST(FLOOR(CAST(ROUND(2 * log2(n.n) - log2(s.s2), 9)
-                           AS DECIMAL(18,9)) * 1000000) AS BIGINT) AS w
-    FROM (SELECT CAST(SUM(cnt * cnt) AS BIGINT) AS s2
-          FROM (SELECT COUNT(*) AS cnt FROM f GROUP BY c_mktsegment)) s
-    CROSS JOIN n
+cab AS MATERIALIZED (
+    SELECT least(pr.a, pr.b) AS tok_a, greatest(pr.a, pr.b) AS tok_b,
+           CAST(COUNT(*) AS BIGINT) AS c
+    FROM p0 WHERE pr.a <> pr.b
+    GROUP BY 1, 2
+    HAVING COUNT(*) >= {_PMI_MIN}
 ),
-wband AS (
-    SELECT CAST(FLOOR(CAST(ROUND(2 * log2(n.n) - log2(s.s2), 9)
-                           AS DECIMAL(18,9)) * 1000000) AS BIGINT) AS w
-    FROM (SELECT CAST(SUM(cnt * cnt) AS BIGINT) AS s2
-          FROM (SELECT COUNT(*) AS cnt FROM f GROUP BY band)) s
-    CROSS JOIN n
+adj AS MATERIALIZED (
+    SELECT tok_a AS s, tok_b AS d2, c FROM cab
+    UNION ALL
+    SELECT tok_b AS s, tok_a AS d2, c FROM cab
 ),
-wcents AS (
-    SELECT CAST(FLOOR(CAST(ROUND(2 * log2(n.n) - log2(s.s2), 9)
-                           AS DECIMAL(18,9)) * 1000000) AS BIGINT) AS w
-    FROM (SELECT CAST(SUM(cnt * cnt) AS BIGINT) AS s2
-          FROM (SELECT COUNT(*) AS cnt FROM f GROUP BY cents)) s
-    CROSS JOIN n
-),
-pairs AS (
-    SELECT a.c_custkey AS cust_a, b.c_custkey AS cust_b,
-           CAST(a.c_mktsegment = b.c_mktsegment AS BIGINT) AS same_seg,
-           CAST(a.band = b.band AS BIGINT) AS same_band,
-           CAST(a.cents = b.cents AS BIGINT) AS same_cents
-    FROM f a JOIN f b
-      ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
-)
-SELECT p.cust_a, p.cust_b, p.same_seg, p.same_band, p.same_cents,
-       CAST(p.same_seg * ws.w + p.same_band * wb.w + p.same_cents * wc.w
-            AS BIGINT) AS score_microbits
-FROM pairs p CROSS JOIN wseg ws CROSS JOIN wband wb CROSS JOIN wcents wc
-ORDER BY score_microbits DESC, p.cust_a, p.cust_b
-LIMIT {_LINK_K}
-"""
+wt AS MATERIALIZED (SELECT s, CAST(SUM(c) AS BIGINT) AS wtot FROM adj GROUP BY 1),
+verts AS MATERIALIZED (SELECT DISTINCT s AS node FROM adj),
+r0 AS MATERIALIZED (SELECT node, CAST(1.0 AS DOUBLE) AS score FROM verts)"""
+    step = """r{k} AS MATERIALIZED (
+    SELECT v.node,
+           ROUND((CAST(1.0 AS DOUBLE) - 0.85e0)
+                 + 0.85e0 * COALESCE(c.s_in, 0.0e0), 9) AS score
+    FROM verts v
+    LEFT JOIN (
+        SELECT a.d2 AS node,
+               CAST(SUM(CAST(ROUND(r.score * a.c / w.wtot, 9)
+                             AS DECIMAL(18,9))) AS DOUBLE) AS s_in
+        FROM adj a
+        JOIN r{p} r ON r.node = a.s
+        JOIN wt w ON w.s = a.s
+        GROUP BY a.d2
+    ) c ON c.node = v.node
+)"""
+    parts = [head] + [
+        step.format(k=k, p=k - 1) for k in range(1, _TR_ITERS + 1)
+    ]
+    return ",\n".join(parts) + f"""
+SELECT r.node AS tok, w2.wtot AS weight_total, ROUND(r.score, 8) AS score
+FROM r{_TR_ITERS} r JOIN wt w2 ON w2.s = r.node
+ORDER BY score DESC, tok
+LIMIT {_TR_K}"""
 
 
-@q("q_linkage_weights", oracle_sql=_LINK_ORACLE)
-def linkage_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L1+18 [EXT]: frequency-weighted record-linkage scoring — the
-    Fellegi–Sunter (1969) agreement-weight construction in its
-    frequency-based (u-weight) form: within nation blocks, candidate
-    customer pairs score Σ_f agree_f · w_f over three fields
-    (market segment, $100 balance band, exact balance cents), where
-    w_f = −log2(u_f) and u_f = Σ_v c_v²/N² is the chance-agreement
-    probability — agreeing on a RARE value (exact cents) is strong
-    match evidence, agreeing on a 5-value segment is weak. This is the
-    classic entity-resolution scoring tier that sits on top of any
-    blocking family (SNM, LSH, containment) already in the registry.
+@q("q_textrank_keywords", oracle_sql=_textrank_oracle())
+def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L3+7 [EXT]: TextRank keyword extraction (Mihalcea & Tarau 2004)
+    — the top-{K} corpus keywords by weighted PageRank over the word
+    co-occurrence graph: nodes are tokens, undirected edges weighted by
+    skip-gram co-occurrence counts (the q_cooccur_pmi pair convention,
+    support floor {MIN}), scores iterated {R} rounds of
+    WS(v) = (1−d) + d·Σ_u (w_uv / Σ_x w_ux)·WS(u), d = 0.85. This
+    composes two existing disciplines: the shared co-occurrence
+    front-end and operators/graph.pagerank's bit-replayable iteration
+    contract (per-edge terms rounded 9dp → DECIMAL(18,9) exact sums →
+    new scores re-rounded 9dp; teleport written `1.0 − 0.85`, never
+    the 0.15 literal, which differs in binary).
 
-    Exactness: u expands to w = 2·log2(N) − log2(Σ c_v²) — integer-arg
-    log2 (engine-identical) — rounded at 9dp, scaled to exact BIGINT
-    MICRO-BITS; the pair score is then pure integer arithmetic
-    (parity structural, the q_mixture_weights shape). Balances shift
-    by +$1000 in cents before banding so integer division never sees
-    a negative operand (Spark div truncates toward zero, DuckDB //
-    floors — they agree only on non-negatives). Deterministic top-k
-    tie-break by (cust_a, cust_b).
+    The undirected co-occurrence graph has no dangling nodes (every
+    node entered via an edge), so the dangling-mass term of the
+    PageRank recurrence vanishes structurally — one fewer per-iteration
+    aggregate than q_graph_pagerank.
 
-    Plan shape: the pair stage is a BLOCKED equi-self-join on the
-    nation key (fan-out Σ_blocks b², never N² — the blocking-join
-    family's contract; at 100 TB the block key widens to
-    nation × balance-band to bound b). ALL THREE field histograms come
-    from ONE grouping-sets aggregate (grouping sets expand map-side —
-    the q_privacy_kanonymity trick — so the dim is scanned once for
-    every weight, not twice per field), pivoted by grouping_id into a
-    single one-row weight table broadcast into the pair stream; the
-    top-k compiles to TakeOrderedAndProject."""
+    Plan shape: one corpus scan to the pair aggregate; the graph
+    relations (adjacency, weight totals, vertices) are
+    vocabulary-bounded and checkpointed once; each iteration is ONE
+    src-keyed join + ONE dst-keyed map-side-combined aggregate over
+    the bounded adjacency — the q_graph_pagerank per-iteration shape
+    minus the dangling scalar. Top-k compiles to
+    TakeOrderedAndProject. At 100 TB the corpus is touched once;
+    iterations cost |edges| ≤ |vocabulary|² rows bounded by the
+    support floor."""
     prep(spark)
-    cust = load(spark, sf_dir, "customer")
-    f = cust.select(
-        "c_custkey",
-        "c_nationkey",
-        "c_mktsegment",
-        # try_cast: a 1e300 balance overflows BIGINT at the cents
-        # quantization and must NULL out (the row then agrees with
-        # nothing on cents/band), not abort the stage (COVERAGE.md M11)
-        (
-            F.round(F.col("c_acctbal") * 100).try_cast("bigint")
-            + F.lit(_LINK_SHIFT)
-        ).alias("cents"),
-    ).withColumn("band", F.expr("cents div 10000"))
-
-    # one pass for all three per-field value histograms; gid bit = 1
-    # marks an AGGREGATED column, so (seg)=3, (band)=5, (cents)=6
-    cells = f.groupingSets(
-        [["c_mktsegment"], ["band"], ["cents"]],
-        "c_mktsegment",
-        "band",
-        "cents",
-    ).agg(F.count(F.lit(1)).alias("cnt"), F.grouping_id().alias("gid"))
-    stats = cells.groupBy("gid").agg(
-        F.sum(F.col("cnt") * F.col("cnt")).cast("bigint").alias("s2"),
-        F.sum("cnt").cast("bigint").alias("n"),
+    cab = _skipgram_pair_counts(spark, sf_dir).where(
+        F.col("c_ab") >= _PMI_MIN
     )
-    wmicro = (
-        F.floor(
-            F.round(2 * F.log2("n") - F.log2("s2"), 9).cast("decimal(18,9)")
-            * 1000000
+    adj = (
+        cab.select(
+            F.col("tok_a").alias("s"), F.col("tok_b").alias("d2"), "c_ab"
         )
-        .cast("bigint")
-        .alias("w")
+        .unionByName(
+            cab.select(
+                F.col("tok_b").alias("s"), F.col("tok_a").alias("d2"), "c_ab"
+            )
+        )
+        .localCheckpoint()
     )
-    ws = stats.select("gid", wmicro)
-    wrow = ws.agg(
-        F.max(F.when(F.col("gid") == 3, F.col("w"))).alias("w_seg"),
-        F.max(F.when(F.col("gid") == 5, F.col("w"))).alias("w_band"),
-        F.max(F.when(F.col("gid") == 6, F.col("w"))).alias("w_cents"),
+    wt = adj.groupBy("s").agg(F.sum("c_ab").cast("bigint").alias("wtot"))
+    adjw = (
+        adj.join(wt.select(F.col("s").alias("ws"), "wtot"),
+                 F.col("s") == F.col("ws"))
+        .select("s", "d2", "c_ab", "wtot")
+        .localCheckpoint()
     )
-
-    a = f.select(
-        F.col("c_custkey").alias("cust_a"),
-        F.col("c_nationkey").alias("nat_a"),
-        F.col("c_mktsegment").alias("seg_a"),
-        F.col("cents").alias("cents_a"),
-        F.col("band").alias("band_a"),
-    )
-    b = f.select(
-        F.col("c_custkey").alias("cust_b"),
-        F.col("c_nationkey").alias("nat_b"),
-        F.col("c_mktsegment").alias("seg_b"),
-        F.col("cents").alias("cents_b"),
-        F.col("band").alias("band_b"),
-    )
-    pairs = a.join(
-        b,
-        (F.col("nat_a") == F.col("nat_b"))
-        & (F.col("cust_a") < F.col("cust_b")),
-    ).select(
-        "cust_a",
-        "cust_b",
-        (F.col("seg_a") == F.col("seg_b")).cast("bigint").alias("same_seg"),
-        (F.col("band_a") == F.col("band_b")).cast("bigint").alias("same_band"),
-        (F.col("cents_a") == F.col("cents_b"))
-        .cast("bigint")
-        .alias("same_cents"),
-    )
-    score = (
-        F.col("same_seg") * F.col("w_seg")
-        + F.col("same_band") * F.col("w_band")
-        + F.col("same_cents") * F.col("w_cents")
-    ).cast("bigint")
+    verts = adj.select(F.col("s").alias("node")).distinct().localCheckpoint()
+    scores = verts.select("node", F.lit(1.0).alias("score"))
+    for _ in range(_TR_ITERS):
+        s_in = (
+            adjw.join(
+                scores.select(F.col("node").alias("rn"), "score"),
+                F.col("s") == F.col("rn"),
+            )
+            .select(
+                F.col("d2").alias("sn"),
+                F.round(F.col("score") * F.col("c_ab") / F.col("wtot"), 9)
+                .cast("decimal(18,9)")
+                .alias("term"),
+            )
+            .groupBy("sn")
+            .agg(F.sum("term").cast("double").alias("s_in"))
+        )
+        scores = (
+            verts.join(s_in, F.col("node") == F.col("sn"), "left")
+            .select(
+                "node",
+                F.round(
+                    (F.lit(1.0) - F.lit(0.85))
+                    + F.lit(0.85) * F.coalesce(F.col("s_in"), F.lit(0.0)),
+                    9,
+                ).alias("score"),
+            )
+            .localCheckpoint()
+        )
     return (
-        pairs.crossJoin(F.broadcast(wrow))
-        .select(
-            "cust_a",
-            "cust_b",
-            "same_seg",
-            "same_band",
-            "same_cents",
-            score.alias("score_microbits"),
+        scores.join(
+            F.broadcast(wt.select(F.col("s").alias("wn"), "wtot")),
+            F.col("node") == F.col("wn"),
         )
-        .orderBy(F.col("score_microbits").desc(), "cust_a", "cust_b")
-        .limit(_LINK_K)
+        .select(
+            F.col("node").alias("tok"),
+            F.col("wtot").alias("weight_total"),
+            F.round("score", 8).alias("score"),
+        )
+        .orderBy(F.col("score").desc(), "tok")
+        .limit(_TR_K)
     )
+
+
+_doc = textrank_keywords.__doc__
+for _k, _v in (("{K}", str(_TR_K)), ("{MIN}", str(_PMI_MIN)),
+               ("{R}", str(_TR_ITERS))):
+    _doc = _doc.replace(_k, _v)
+textrank_keywords.__doc__ = _doc
 
 
 # --- Token burstiness (variance-to-mean dispersion) ------------------------
@@ -813,170 +641,6 @@ bpe_merges.__doc__ = _doc.replace("{R}", str(_BPE_ROUNDS)).replace(
 )
 
 
-# --- TextRank keyword extraction (weighted PageRank on the word graph) -----
-
-_TR_ITERS = 6
-_TR_K = 20
-
-
-def _textrank_oracle() -> str:
-    """Unrolls the weighted-PageRank recurrence CTE-per-iteration (the
-    q_graph_pagerank oracle pattern): per-edge terms round at 9dp into
-    DECIMAL(18,9) (exact, order-free), the teleport is written as
-    arithmetic `1.0 - 0.85` (0.15 literal differs in binary), and each
-    new score re-rounds at 9dp so every iteration is bit-replayable."""
-    head = rf"""WITH t AS (
-    SELECT list_filter(regexp_split_to_array(lower(text), '\s+'),
-                       x -> x <> '') AS tk
-    FROM documents
-),
-p0 AS (
-    SELECT unnest(flatten(list_transform(range(1, {_PMI_W + 1}),
-               d -> list_transform(range(1, len(tk) - d + 1),
-                    i -> {{'a': tk[i], 'b': tk[i+d]}})))) AS pr
-    FROM t
-),
-cab AS MATERIALIZED (
-    SELECT least(pr.a, pr.b) AS tok_a, greatest(pr.a, pr.b) AS tok_b,
-           CAST(COUNT(*) AS BIGINT) AS c
-    FROM p0 WHERE pr.a <> pr.b
-    GROUP BY 1, 2
-    HAVING COUNT(*) >= {_PMI_MIN}
-),
-adj AS MATERIALIZED (
-    SELECT tok_a AS s, tok_b AS d2, c FROM cab
-    UNION ALL
-    SELECT tok_b AS s, tok_a AS d2, c FROM cab
-),
-wt AS MATERIALIZED (SELECT s, CAST(SUM(c) AS BIGINT) AS wtot FROM adj GROUP BY 1),
-verts AS MATERIALIZED (SELECT DISTINCT s AS node FROM adj),
-r0 AS MATERIALIZED (SELECT node, CAST(1.0 AS DOUBLE) AS score FROM verts)"""
-    step = """r{k} AS MATERIALIZED (
-    SELECT v.node,
-           ROUND((CAST(1.0 AS DOUBLE) - 0.85e0)
-                 + 0.85e0 * COALESCE(c.s_in, 0.0e0), 9) AS score
-    FROM verts v
-    LEFT JOIN (
-        SELECT a.d2 AS node,
-               CAST(SUM(CAST(ROUND(r.score * a.c / w.wtot, 9)
-                             AS DECIMAL(18,9))) AS DOUBLE) AS s_in
-        FROM adj a
-        JOIN r{p} r ON r.node = a.s
-        JOIN wt w ON w.s = a.s
-        GROUP BY a.d2
-    ) c ON c.node = v.node
-)"""
-    parts = [head] + [
-        step.format(k=k, p=k - 1) for k in range(1, _TR_ITERS + 1)
-    ]
-    return ",\n".join(parts) + f"""
-SELECT r.node AS tok, w2.wtot AS weight_total, ROUND(r.score, 8) AS score
-FROM r{_TR_ITERS} r JOIN wt w2 ON w2.s = r.node
-ORDER BY score DESC, tok
-LIMIT {_TR_K}"""
-
-
-@q("q_textrank_keywords", oracle_sql=_textrank_oracle())
-def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L3+7 [EXT]: TextRank keyword extraction (Mihalcea & Tarau 2004)
-    — the top-{K} corpus keywords by weighted PageRank over the word
-    co-occurrence graph: nodes are tokens, undirected edges weighted by
-    skip-gram co-occurrence counts (the q_cooccur_pmi pair convention,
-    support floor {MIN}), scores iterated {R} rounds of
-    WS(v) = (1−d) + d·Σ_u (w_uv / Σ_x w_ux)·WS(u), d = 0.85. This
-    composes two existing disciplines: the shared co-occurrence
-    front-end and operators/graph.pagerank's bit-replayable iteration
-    contract (per-edge terms rounded 9dp → DECIMAL(18,9) exact sums →
-    new scores re-rounded 9dp; teleport written `1.0 − 0.85`, never
-    the 0.15 literal, which differs in binary).
-
-    The undirected co-occurrence graph has no dangling nodes (every
-    node entered via an edge), so the dangling-mass term of the
-    PageRank recurrence vanishes structurally — one fewer per-iteration
-    aggregate than q_graph_pagerank.
-
-    Plan shape: one corpus scan to the pair aggregate; the graph
-    relations (adjacency, weight totals, vertices) are
-    vocabulary-bounded and checkpointed once; each iteration is ONE
-    src-keyed join + ONE dst-keyed map-side-combined aggregate over
-    the bounded adjacency — the q_graph_pagerank per-iteration shape
-    minus the dangling scalar. Top-k compiles to
-    TakeOrderedAndProject. At 100 TB the corpus is touched once;
-    iterations cost |edges| ≤ |vocabulary|² rows bounded by the
-    support floor."""
-    prep(spark)
-    cab = _skipgram_pair_counts(spark, sf_dir).where(
-        F.col("c_ab") >= _PMI_MIN
-    )
-    adj = (
-        cab.select(
-            F.col("tok_a").alias("s"), F.col("tok_b").alias("d2"), "c_ab"
-        )
-        .unionByName(
-            cab.select(
-                F.col("tok_b").alias("s"), F.col("tok_a").alias("d2"), "c_ab"
-            )
-        )
-        .localCheckpoint()
-    )
-    wt = adj.groupBy("s").agg(F.sum("c_ab").cast("bigint").alias("wtot"))
-    adjw = (
-        adj.join(wt.select(F.col("s").alias("ws"), "wtot"),
-                 F.col("s") == F.col("ws"))
-        .select("s", "d2", "c_ab", "wtot")
-        .localCheckpoint()
-    )
-    verts = adj.select(F.col("s").alias("node")).distinct().localCheckpoint()
-    scores = verts.select("node", F.lit(1.0).alias("score"))
-    for _ in range(_TR_ITERS):
-        s_in = (
-            adjw.join(
-                scores.select(F.col("node").alias("rn"), "score"),
-                F.col("s") == F.col("rn"),
-            )
-            .select(
-                F.col("d2").alias("sn"),
-                F.round(F.col("score") * F.col("c_ab") / F.col("wtot"), 9)
-                .cast("decimal(18,9)")
-                .alias("term"),
-            )
-            .groupBy("sn")
-            .agg(F.sum("term").cast("double").alias("s_in"))
-        )
-        scores = (
-            verts.join(s_in, F.col("node") == F.col("sn"), "left")
-            .select(
-                "node",
-                F.round(
-                    (F.lit(1.0) - F.lit(0.85))
-                    + F.lit(0.85) * F.coalesce(F.col("s_in"), F.lit(0.0)),
-                    9,
-                ).alias("score"),
-            )
-            .localCheckpoint()
-        )
-    return (
-        scores.join(
-            F.broadcast(wt.select(F.col("s").alias("wn"), "wtot")),
-            F.col("node") == F.col("wn"),
-        )
-        .select(
-            F.col("node").alias("tok"),
-            F.col("wtot").alias("weight_total"),
-            F.round("score", 8).alias("score"),
-        )
-        .orderBy(F.col("score").desc(), "tok")
-        .limit(_TR_K)
-    )
-
-
-_doc = textrank_keywords.__doc__
-for _k, _v in (("{K}", str(_TR_K)), ("{MIN}", str(_PMI_MIN)),
-               ("{R}", str(_TR_ITERS))):
-    _doc = _doc.replace(_k, _v)
-textrank_keywords.__doc__ = _doc
-
-
 # --- Per-document LM score (unigram cross-entropy quality filter) ----------
 
 _LM_ORACLE = r"""
@@ -1154,4 +818,267 @@ def unseen_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast("double")
             / F.sum("c")
         ).alias("unseen_mass"),
+    )
+
+
+# --- Per-source KL divergence vs the corpus LM (domain-shift audit) ------
+
+_KL_ORACLE = r"""
+WITH tok AS (
+    SELECT source,
+           unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
+                              x -> x <> '')) AS tok
+    FROM documents
+),
+sw AS (
+    SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS c_sw
+    FROM tok GROUP BY 1, 2
+),
+s_tot AS (
+    SELECT source, CAST(SUM(c_sw) AS BIGINT) AS n_s,
+           CAST(COUNT(*) AS BIGINT) AS vocab_s
+    FROM sw GROUP BY 1
+),
+corpus AS (
+    SELECT tok, CAST(SUM(c_sw) AS BIGINT) AS c_w FROM sw GROUP BY 1
+),
+tot AS (SELECT CAST(SUM(c_w) AS BIGINT) AS n FROM corpus),
+terms AS (
+    SELECT sw.source,
+           CAST(sw.c_sw AS DECIMAL(10,0))
+             * CAST(ROUND(log2(CAST(sw.c_sw AS DOUBLE))
+                          - log2(CAST(st.n_s AS DOUBLE))
+                          - log2(CAST(c.c_w AS DOUBLE))
+                          + log2(CAST(t.n AS DOUBLE)), 9)
+                    AS DECIMAL(18,9)) AS contrib
+    FROM sw
+    JOIN s_tot st ON st.source = sw.source
+    JOIN corpus c ON c.tok = sw.tok
+    CROSS JOIN tot t
+)
+SELECT tm.source, st.n_s AS n_tokens, st.vocab_s AS vocab,
+       ROUND(CAST(SUM(tm.contrib) AS DOUBLE) / st.n_s, 6) AS kl_bits
+FROM terms tm JOIN s_tot st ON st.source = tm.source
+GROUP BY 1, 2, 3
+"""
+
+
+@q("q_source_kl_divergence", oracle_sql=_KL_ORACLE)
+def source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L3+2 [EXT]: per-source KL divergence D(p_source ‖ p_corpus) over
+    unigram token distributions, in bits — the domain-shift score a
+    mixture-curation pipeline ranks sources by (which slices drift
+    furthest from the blend they feed). KL(s) = Σ_w (c_sw/n_s) ·
+    log2((c_sw/n_s)/(c_w/n)); always ≥ 0, and 0 iff the source speaks
+    exactly the corpus distribution.
+
+    Float discipline: each log term expands to the ± chain
+    log2(c_sw) − log2(n_s) − log2(c_w) + log2(n) — log2 of INTEGER
+    arguments only, which the engines agree on bit-for-bit (log2 of
+    rationals drifts 1 ulp ~28% of the time; the q_token_entropy
+    lesson) — rounded to 9dp, scaled by the exact integer count c_sw
+    as a DECIMAL multiply, decimal-summed (order-free), and the final
+    /n_s mean rounded at 6dp (the q_bigram_surprisal shape).
+
+    Plan shape: ONE document scan feeds explode → (source, token) hash
+    agg with map-side combine; both marginals (per-source totals,
+    corpus token counts) are rollups OF THAT AGG, never a second fact
+    scan (the Catalyst no-CTE-reuse lesson: aggregate once, derive
+    margins from the output). The (source, token) stream joins the
+    20-row source table and the vocabulary-sized corpus table — both
+    broadcast here (the fixture vocabulary is tiny); the grand total
+    rides a one-row broadcast cross join. At 100 TB one exchange
+    reaches the (source, token) agg and the |sources| margins stay
+    broadcast; only if the vocabulary outgrows broadcast (~100M+
+    tokens) does the corpus-margin join drop the hint and fall back
+    to a hash exchange keyed on token — linear in the AGG's size
+    (vocabulary × sources), never in corpus rows."""
+    from modevetl_spark.operators.text import tokens
+
+    prep(spark)
+    d = load(spark, sf_dir, "documents")
+    sw = (
+        d.select("source", F.explode(tokens("text")).alias("tok"))
+        .groupBy("source", "tok")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c_sw"))
+        .localCheckpoint()
+    )
+    s_tot = sw.groupBy(F.col("source").alias("st_source")).agg(
+        F.sum("c_sw").cast("bigint").alias("n_s"),
+        F.count(F.lit(1)).cast("bigint").alias("vocab_s"),
+    )
+    corpus = sw.groupBy(F.col("tok").alias("c_tok")).agg(
+        F.sum("c_sw").cast("bigint").alias("c_w")
+    )
+    tot = corpus.agg(F.sum("c_w").cast("bigint").alias("n"))
+    term9 = F.round(
+        F.log2(F.col("c_sw").cast("double"))
+        - F.log2(F.col("n_s").cast("double"))
+        - F.log2(F.col("c_w").cast("double"))
+        + F.log2(F.col("n").cast("double")),
+        9,
+    ).cast("decimal(18,9)")
+    terms = (
+        sw.join(F.broadcast(s_tot), F.col("source") == F.col("st_source"))
+        .join(F.broadcast(corpus), F.col("tok") == F.col("c_tok"))
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "source",
+            "n_s",
+            "vocab_s",
+            (F.col("c_sw").cast("decimal(10,0)") * term9).alias("contrib"),
+        )
+    )
+    return terms.groupBy("source", "n_s", "vocab_s").agg(
+        F.round(
+            F.sum("contrib").cast("double") / F.col("n_s").cast("double"), 6
+        ).alias("kl_bits")
+    ).select(
+        "source",
+        F.col("n_s").alias("n_tokens"),
+        F.col("vocab_s").alias("vocab"),
+        "kl_bits",
+    )
+
+
+# --- Per-source Jensen-Shannon divergence vs the corpus LM ----------------
+
+_JS_ORACLE = r"""
+WITH tok AS (
+    SELECT source,
+           unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
+                              x -> x <> '')) AS tok
+    FROM documents
+),
+sw AS (
+    SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS a
+    FROM tok GROUP BY 1, 2
+),
+s_tot AS (
+    SELECT source, CAST(SUM(a) AS BIGINT) AS n_s,
+           CAST(COUNT(*) AS BIGINT) AS vocab_s
+    FROM sw GROUP BY 1
+),
+corpus AS (
+    SELECT tok, CAST(SUM(a) AS BIGINT) AS b FROM sw GROUP BY 1
+),
+tot AS (SELECT CAST(SUM(b) AS BIGINT) AS n FROM corpus),
+terms AS (
+    SELECT sw.source,
+           CAST(sw.a AS DECIMAL(10,0))
+             * CAST(ROUND(1 + log2(CAST(sw.a * t.n AS DOUBLE))
+                            - log2(CAST(sw.a * t.n + c.b * st.n_s
+                                        AS DOUBLE)), 9)
+                    AS DECIMAL(18,9)) AS klp,
+           CAST(c.b AS DECIMAL(10,0))
+             * CAST(ROUND(1 + log2(CAST(c.b * st.n_s AS DOUBLE))
+                            - log2(CAST(sw.a * t.n + c.b * st.n_s
+                                        AS DOUBLE)), 9)
+                    AS DECIMAL(18,9)) AS klq,
+           c.b AS b
+    FROM sw
+    JOIN s_tot st ON st.source = sw.source
+    JOIN corpus c ON c.tok = sw.tok
+    CROSS JOIN tot t
+)
+SELECT tm.source, st.n_s AS n_tokens, st.vocab_s AS vocab,
+       ROUND((CAST(SUM(tm.klp) AS DOUBLE) / st.n_s
+              + CAST(SUM(tm.klq) + (t.n - SUM(tm.b)) AS DOUBLE) / t.n)
+             / 2, 6) AS js_bits
+FROM terms tm
+JOIN s_tot st ON st.source = tm.source
+CROSS JOIN tot t
+GROUP BY 1, 2, 3, t.n
+"""
+
+
+@q("q_source_js_divergence", oracle_sql=_JS_ORACLE)
+def source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L3+9 [EXT]: per-source Jensen–Shannon divergence
+    JSD(p_source ‖ p_corpus) over unigram distributions, in bits — the
+    BOUNDED companion to q_source_kl_divergence (JSD ∈ [0,1] bits, is
+    symmetric, and never blows up on tokens one side lacks), i.e. the
+    drift score that stays comparable across sources of wildly
+    different vocabularies. JSD = ½·KL(P‖M) + ½·KL(Q‖M), M = (P+Q)/2.
+
+    Float discipline (the KL key's, extended): with p_w = a/A and
+    q_w = b/B, the mixture ratio collapses to INTEGER-arg log2 chains —
+    p_w/m_w = 2aB/(aB+bA) ⇒ term 1 + log2(aB) − log2(aB+bA) — each
+    rounded 9dp, scaled by the exact integer count as a decimal
+    multiply, decimal-summed. The Q-side mass on tokens the SOURCE
+    LACKS (a = 0, where the term is exactly 1) is added ALGEBRAICALLY
+    as (B − Σ_present b) — no densified source×vocabulary grid, the
+    q_token_burstiness zeros trick. Products a·B, b·A < 2⁶³ (DuckDB
+    BIGINT is overflow-checked; corpus token counts keep them far
+    inside). Final ROUND at 6dp absorbs the decimal-sum cast ulp.
+
+    Plan shape: identical to the KL key — ONE document scan to the
+    checkpointed (source, token) agg; both marginals are rollups of
+    that agg (no second fact scan, the no-CTE-reuse lesson); margins
+    broadcast, grand total a one-row cross join. At 100 TB one
+    exchange reaches the agg; the corpus-margin join falls back to a
+    token-keyed hash exchange only past broadcast vocabulary size —
+    linear in vocabulary × sources, never corpus rows."""
+    from modevetl_spark.operators.text import tokens
+
+    prep(spark)
+    d = load(spark, sf_dir, "documents")
+    sw = (
+        d.select("source", F.explode(tokens("text")).alias("tok"))
+        .groupBy("source", "tok")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("a"))
+        .localCheckpoint()
+    )
+    s_tot = sw.groupBy(F.col("source").alias("st_source")).agg(
+        F.sum("a").cast("bigint").alias("n_s"),
+        F.count(F.lit(1)).cast("bigint").alias("vocab_s"),
+    )
+    corpus = sw.groupBy(F.col("tok").alias("c_tok")).agg(
+        F.sum("a").cast("bigint").alias("b")
+    )
+    tot = corpus.agg(F.sum("b").cast("bigint").alias("n"))
+    mix = (F.col("a") * F.col("n") + F.col("b") * F.col("n_s")).cast("double")
+    t_p = F.round(
+        F.lit(1) + F.log2((F.col("a") * F.col("n")).cast("double")) - F.log2(mix),
+        9,
+    ).cast("decimal(18,9)")
+    t_q = F.round(
+        F.lit(1)
+        + F.log2((F.col("b") * F.col("n_s")).cast("double"))
+        - F.log2(mix),
+        9,
+    ).cast("decimal(18,9)")
+    terms = (
+        sw.join(F.broadcast(s_tot), F.col("source") == F.col("st_source"))
+        .join(F.broadcast(corpus), F.col("tok") == F.col("c_tok"))
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "source",
+            "n_s",
+            "vocab_s",
+            "n",
+            "b",
+            (F.col("a").cast("decimal(10,0)") * t_p).alias("klp"),
+            (F.col("b").cast("decimal(10,0)") * t_q).alias("klq"),
+        )
+    )
+    return (
+        terms.groupBy("source", "n_s", "vocab_s", "n")
+        .agg(
+            F.round(
+                (
+                    F.sum("klp").cast("double") / F.col("n_s").cast("double")
+                    + (F.sum("klq") + (F.col("n") - F.sum("b"))).cast("double")
+                    / F.col("n").cast("double")
+                )
+                / 2,
+                6,
+            ).alias("js_bits")
+        )
+        .select(
+            "source",
+            F.col("n_s").alias("n_tokens"),
+            F.col("vocab_s").alias("vocab"),
+            "js_bits",
+        )
     )

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modevetl_spark.functions.compat import dsum, sql_dsum, sql_tsum, tsum
+from modevetl_spark.functions.compat import dsum, sql_dsum
 from modevetl_spark.operators.cube import (
     default_domain,
     densify,
@@ -77,7 +77,7 @@ def cube_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ROLLUP_ORACLE = f"""
 SELECT o_orderstatus, o_orderpriority,
        COUNT(*) AS n_orders,
-       {sql_tsum('o_totalprice', 'total_value')}
+       {sql_dsum('o_totalprice', 'total_value')}
 FROM orders
 GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """
@@ -90,7 +90,7 @@ def rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     return o.rollup("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        tsum("o_totalprice").alias("total_value"),
+        dsum("o_totalprice").alias("total_value"),
     )
 
 
@@ -103,7 +103,7 @@ WITH months AS (
 agg AS (
     SELECT date_trunc('month', o_orderdate) AS order_month,
            COUNT(*) AS n_orders,
-           {sql_tsum('o_totalprice', 'total_value')}
+           {sql_dsum('o_totalprice', 'total_value')}
     FROM orders
     GROUP BY 1
 )
@@ -125,7 +125,7 @@ def cube_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("month", F.col("o_orderdate")).alias("order_month")
     ).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        tsum("o_totalprice").alias("total_value"),
+        dsum("o_totalprice").alias("total_value"),
     )
     grid = [time_domain(spark, "order_month", "1995-01-01", "2001-08-01", "1 MONTH")]
     return densify(
@@ -249,7 +249,7 @@ WITH flags AS (SELECT unnest(['N', 'R', '<null>']) AS flag),
      agg AS (
          SELECT COALESCE(nullif(l_returnflag, 'A'), '<null>') AS flag,
                 COUNT(*) AS n,
-                {sql_tsum('l_quantity', 'sum_qty')}
+                {sql_dsum('l_quantity', 'sum_qty')}
          FROM lineitem
          GROUP BY 1
      )
@@ -269,7 +269,7 @@ def cube_allow_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         "flag", F.coalesce(F.nullif(F.col("l_returnflag"), F.lit("A")), F.lit("<null>"))
     )
     agg = li.groupBy("flag").agg(
-        F.count(F.lit(1)).alias("n"), tsum("l_quantity").alias("sum_qty")
+        F.count(F.lit(1)).alias("n"), dsum("l_quantity").alias("sum_qty")
     )
     grid = [set_domain(spark, "flag", ["N", "R", "<null>"])]
     return densify(

@@ -37,6 +37,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from modevetl_spark.functions.compat import sql_money
 from modevetl_spark.operators.text import tokens
 from modevetl_spark.queries import prep
 from modevetl_spark.queries._registry import make_registry
@@ -911,9 +912,10 @@ def _hits_replay(
 ) -> tuple[dict[int, float], dict[int, float]]:
     """Driver-side replay of the HITS recurrence over the class-collapsed
     state — bit-identical to the per-node in-DAG form the oracle unrolls:
-    ``_round9`` is Spark's ROUND(double, 9) (HALF_UP on the double's
-    SHORTEST decimal repr — the JVM's ``BigDecimal.valueOf`` path, see
-    the ``_round9`` docstring and probe battery), ``_dec9`` the
+    ``round_repr(·, 9)`` is Spark's ROUND(double, 9) (HALF_UP on the
+    double's SHORTEST decimal repr — the JVM's ``BigDecimal.valueOf``
+    path, see functions/jvmnum.round_repr and its probe battery),
+    ``dec9`` the
     double→DECIMAL(18,9) cast (same shortest-repr quantization —
     Spark's Cast routes double→Decimal through ``BigDecimal.decimal`` =
     ``valueOf``), decimal sums are exact/order-free in both engines,
@@ -923,24 +925,24 @@ def _hits_replay(
     degenerate input. Returns (authority per class, hub per class)
     after ``iterations`` rounds.
     """
-    from modevetl_spark.queries.wave11 import _dec9, _round9
+    from modevetl_spark.functions.jvmnum import dec9, round_repr
 
     classes = sorted(cnt)
     n_src = sum(cnt.values())
     n = n_src + sum(1 for d in classes if d not in src96)
-    h = {d: _round9(1.0 / n) for d in classes}
+    h = {d: round_repr(1.0 / n, 9) for d in classes}
     a = {}
     for _ in range(iterations):
         # ink_k(d) = ROUND(CAST(Σ_{s→d} DEC9(h(s)) AS DOUBLE), 9); every
         # source in class d holds h(d), so the exact decimal sum is
         # cnt(d) × DEC9(h(d))
-        ink = {d: _round9(float(cnt[d] * _dec9(h[d]))) for d in classes}
-        sa = _round9(float(sum(_dec9(v) for v in ink.values())))
-        a = {d: _round9(ink[d] / sa) for d in classes}
+        ink = {d: round_repr(float(cnt[d] * dec9(h[d])), 9) for d in classes}
+        sa = round_repr(float(sum(dec9(v) for v in ink.values())), 9)
+        a = {d: round_repr(ink[d] / sa, 9) for d in classes}
         # out_k(s) = ROUND(CAST(DEC9(a(d(s))) AS DOUBLE), 9) = a(d(s))
         # (single-term fold of an already-9dp value — exact identity)
-        sh = _round9(float(sum(cnt[d] * _dec9(a[d]) for d in classes)))
-        h = {d: _round9(a[d] / sh) for d in classes}
+        sh = round_repr(float(sum(cnt[d] * dec9(a[d]) for d in classes)), 9)
+        h = {d: round_repr(a[d] / sh, 9) for d in classes}
     return a, h
 
 
@@ -1219,13 +1221,13 @@ def ewma_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     prep(spark)
     o = load(spark, sf_dir, "orders")
-    # tsum: one 1e300 price row must NULL out of the daily fold, not
+    # dsum: one 1e300 price row must NULL out of the daily fold, not
     # abort the stage (COVERAGE.md M11)
-    from modevetl_spark.functions.compat import tsum
+    from modevetl_spark.functions.compat import dsum
 
     daily = o.groupBy(
         F.date_trunc("day", "o_orderdate").alias("day")
-    ).agg(tsum("o_totalprice", 2).alias("revenue"))
+    ).agg(dsum("o_totalprice", 2).alias("revenue"))
     w = Window.orderBy("day")
     lags = [F.lag("revenue", k).over(w).alias(f"x{k}") for k in range(10)]
     lagged = daily.select("day", "revenue", *lags)
@@ -1519,14 +1521,14 @@ def runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed exact-IEEE tree over integer counts, rounded 9dp.
     """
     prep(spark)
-    # tsum: one 1e300 price row must NULL out of the daily fold, not
+    # dsum: one 1e300 price row must NULL out of the daily fold, not
     # abort the stage (COVERAGE.md M11)
-    from modevetl_spark.functions.compat import tsum
+    from modevetl_spark.functions.compat import dsum
 
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.date_trunc("day", "o_orderdate").alias("day")
-    ).agg(tsum("o_totalprice", 2).alias("revenue"))
+    ).agg(dsum("o_totalprice", 2).alias("revenue"))
     w_day = Window.orderBy("day")
     prev = F.lag("revenue").over(w_day)
     signs = daily.select(
@@ -1616,15 +1618,13 @@ def events_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- ABC (Pareto) inventory classification ------------------------------
 
-from modevetl_spark.functions.compat import sql_tmoney as _sql_tmoney
-
 _ABC_ORACLE = f"""
 WITH per_part AS (
-    -- sql_tmoney: TRY_CAST at Spark's (18,6) admitted range, then a
+    -- sql_money: TRY_CAST at Spark's (18,6) admitted range, then a
     -- lossless (19,6) widen for DuckDB's non-widening decimal multiply
-    -- (see functions/compat.sql_tmoney — the single source of truth)
+    -- (see functions/compat.sql_money — the single source of truth)
     SELECT l_partkey,
-           SUM({_sql_tmoney("l_extendedprice", "l_discount")}) AS rev
+           SUM({sql_money("l_extendedprice", "l_discount")}) AS rev
     FROM lineitem GROUP BY l_partkey
 ),
 ranked AS (
@@ -1677,13 +1677,13 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     prep(spark)
     li = load(spark, sf_dir, "lineitem")
-    # tmoney, not money: one 1e300 price row must NULL out of the fold,
+    # try-folded money: one 1e300 price row must NULL out of the fold,
     # not abort the stage (extreme-numerics contract, COVERAGE.md M11)
-    from modevetl_spark.functions.compat import tmoney
+    from modevetl_spark.functions.compat import money
     from modevetl_spark.operators.ranking import global_running
 
     per_part = li.groupBy("l_partkey").agg(
-        F.sum(tmoney("l_extendedprice", "l_discount")).alias("rev")
+        F.sum(money("l_extendedprice", "l_discount")).alias("rev")
     )
     run = global_running(
         per_part,
@@ -1768,19 +1768,19 @@ def changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles with a deterministic tie-break.
     """
     prep(spark)
-    # tsum at the fact fold: one 1e300 price row NULLs out instead of
+    # dsum at the fact fold: one 1e300 price row NULLs out instead of
     # aborting the stage (COVERAGE.md M11); since r13 the downstream
     # folds (davg mean, running CUSUM cast) are try folds too — the
     # compat helpers retired their raw variants, and the running-sum
     # cast follows the same convention (a deviation can only leave
     # (18,6) range on twin-scale revenues, but the convention is
     # structural, not reachability-argued)
-    from modevetl_spark.functions.compat import davg, tsum
+    from modevetl_spark.functions.compat import davg, dsum
 
     o = load(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.date_trunc("day", "o_orderdate").alias("day")
-    ).agg(tsum("o_totalprice", 2).alias("revenue"))
+    ).agg(dsum("o_totalprice", 2).alias("revenue"))
     m = daily.agg(davg("revenue", 6).alias("mean_rev"))
     dev = daily.crossJoin(F.broadcast(m)).select(
         "day", F.round(F.col("revenue") - F.col("mean_rev"), 6).alias("d")
@@ -4073,13 +4073,13 @@ def growth_mom(spark: SparkSession, sf_dir: str) -> DataFrame:
     the month series.
     """
     prep(spark)
-    from modevetl_spark.functions.compat import tsum
+    from modevetl_spark.functions.compat import dsum
 
     o = load(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.date_trunc("month", "o_orderdate").alias("month")
     ).agg(
-        tsum("o_totalprice", 2).alias("revenue"),
+        dsum("o_totalprice", 2).alias("revenue"),
         F.count(F.lit(1)).cast("long").alias("n_orders"),
     )
     w = Window.orderBy("month")
@@ -4247,12 +4247,12 @@ def theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp.
     """
     prep(spark)
-    from modevetl_spark.functions.compat import tsum
+    from modevetl_spark.functions.compat import dsum
 
     o = load(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.date_trunc("month", "o_orderdate").alias("month")
-    ).agg(tsum("o_totalprice", 2).alias("y"))
+    ).agg(dsum("o_totalprice", 2).alias("y"))
     indexed = monthly.select(
         F.row_number().over(Window.orderBy("month")).cast("long").alias("i"),
         "y",

@@ -10,14 +10,19 @@ withWatermark, dropDuplicatesWithinWatermark, foreachBatch upsert) live in
 
 Oracle note: events.ts is ns in parquet; every oracle SQL casts to µs
 TIMESTAMP to match Spark's read path.
+
+Also here:
+
+- ``q_session_stitch`` — cross-device identity stitching.
+- ``q_dedup_latest_wins`` — latest event per user as one aggregation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from modevetl_spark.functions.compat import sql_tsum, tsum
+from modevetl_spark.functions.compat import dsum, sql_dsum
 from modevetl_spark.queries import prep
 from modevetl_spark.queries._registry import make_registry
 from modevetl_spark.sources.catalog import load
@@ -29,7 +34,7 @@ _TUMBLING_ORACLE = f"""
 SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
        event_type,
        COUNT(*) AS n_events,
-       {sql_tsum('value', 'total_value')}
+       {sql_dsum('value', 'total_value')}
 FROM events
 WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01'
 GROUP BY 1, 2
@@ -57,7 +62,7 @@ def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            tsum("value").alias("total_value"),
+            dsum("value").alias("total_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -261,4 +266,171 @@ def events_session_terminal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("converted"),
+    )
+
+
+# --- Cross-device identity stitching (connected components) -------------
+
+_STITCH_ORACLE = """
+WITH RECURSIVE s AS (
+    SELECT user_id, event_id,
+           CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
+    FROM events WHERE event_type = 'signup'
+),
+fl AS (
+    SELECT user_id,
+           arg_min(k, event_id) AS dev_k,
+           arg_max(k, event_id) AS email_k
+    FROM s GROUP BY user_id
+),
+e AS (
+    SELECT user_id AS a, 100000 + dev_k AS b FROM fl
+    UNION
+    SELECT user_id AS a, 200000 + email_k AS b FROM fl
+),
+links AS (SELECT a, b FROM e UNION SELECT b AS a, a AS b FROM e),
+reach AS (
+    SELECT a, b FROM links
+    UNION
+    SELECT r.a, l.b FROM reach r JOIN links l ON l.a = r.b
+),
+lab AS (SELECT a AS node, LEAST(a, MIN(b)) AS comp FROM reach GROUP BY a),
+users AS (SELECT node, comp FROM lab WHERE node < 100000),
+sizes AS (
+    SELECT comp, CAST(COUNT(*) AS BIGINT) AS n_users FROM users GROUP BY comp
+)
+SELECT u.node AS user_id, u.comp AS stitched_id, z.n_users
+FROM users u JOIN sizes z ON z.comp = u.comp
+"""
+
+
+@q("q_session_stitch", oracle_sql=_STITCH_ORACLE)
+def session_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T7+ [EXT]: cross-device identity stitching — resolve each user to
+    a stitched identity by connecting users through shared device /
+    email identifiers, the identity-resolution step upstream of any
+    per-person sessionization or attribution. Fixture linkage (real
+    schemas carry device ids; the fixture derives them): a user's
+    "device" is the ``k`` prop of their FIRST signup event and their
+    "email" the ``k`` of their LAST (min/max ``event_id`` —
+    deterministic arg-extremes), giving a bipartite user↔identifier
+    graph whose connected components are the stitched identities
+    (stitched id = min user id in the component; identifier node ids
+    are offset into disjoint ranges so the min is always a user).
+    The range arithmetic is GUARDED, not assumed: every user id and
+    identifier key is range-checked inline (``raise_error`` branch
+    fused into the node expression, so Catalyst cannot prune it) —
+    a key outside [0, 100000) would silently collide the user /
+    device / email node spaces and merge unrelated identities while
+    the oracle, replicating the same encoding, stayed green.
+
+    Plan shape: edge derivation is one user-keyed aggregate of the
+    signup slice (two ``min_by``/``max_by`` — no window, no sort);
+    stitching reuses ``operators/components.connected_components`` —
+    per-round cost one node-keyed join + hash agg, O(diameter) rounds,
+    lineage checkpoint-truncated. Identifier hubs (one device shared
+    by many users) are exactly the star graphs label propagation
+    resolves in 2 rounds. Oracle: DuckDB recursive-CTE reachability
+    closure + min-label (the q_graph_closure pattern) — a REAL
+    component computation, not a closed form."""
+    from modevetl_spark.operators.components import connected_components
+
+    prep(spark)
+    ev = load(spark, sf_dir, "events")
+    s = ev.where(F.col("event_type") == "signup").select(
+        "user_id",
+        "event_id",
+        F.get_json_object("props", "$.k").cast("bigint").alias("k"),
+    )
+    fl = s.groupBy("user_id").agg(
+        F.min_by("k", "event_id").alias("dev_k"),
+        F.max_by("k", "event_id").alias("email_k"),
+    )
+
+    lim = 100000
+
+    def _ranged(col: Column, offset: int) -> Column:
+        # Range-guard fused into the node id so it survives pruning:
+        # any id outside [0, lim) aborts the job instead of silently
+        # colliding node spaces (user < lim <= device < 2·lim <= email).
+        ok = (col >= 0) & (col < F.lit(lim))
+        return F.when(ok, F.lit(offset) + col).otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit(f"session_stitch: id out of [0, {lim}): "),
+                    col.cast("string"),
+                )
+            )
+        )
+
+    edges = fl.select(
+        _ranged(F.col("user_id"), 0).alias("src"),
+        _ranged(F.col("dev_k"), lim).alias("dst"),
+    ).union(
+        fl.select(
+            _ranged(F.col("user_id"), 0).alias("src"),
+            _ranged(F.col("email_k"), 2 * lim).alias("dst"),
+        )
+    )
+    comp = connected_components(edges)
+    users = comp.where(F.col("node") < 100000)
+    sizes = users.groupBy("component").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_users")
+    )
+    return users.join(sizes, "component").select(
+        F.col("node").alias("user_id"),
+        F.col("component").alias("stitched_id"),
+        "n_users",
+    )
+
+
+# --- Latest-version-per-key dedup, window-free --------------------------
+
+_LATEST_WINS_ORACLE = """
+SELECT user_id, CAST(ts AS TIMESTAMP) AS last_ts,
+       event_id AS last_event_id, event_type AS last_event_type,
+       n_versions
+FROM (
+    SELECT user_id, ts, event_id, event_type,
+           ROW_NUMBER() OVER (PARTITION BY user_id
+                              ORDER BY ts DESC, event_id DESC) AS rn,
+           CAST(COUNT(*) OVER (PARTITION BY user_id) AS BIGINT) AS n_versions
+    FROM events
+)
+WHERE rn = 1
+"""
+
+
+@q("q_dedup_latest_wins", oracle_sql=_LATEST_WINS_ORACLE)
+def dedup_latest_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L1+/W3 scale path [EXT]: latest-version-per-key dedup as ONE hash
+    aggregation — keep each user's most recent event (by ``(ts,
+    event_id)``, the unique id breaking timestamp ties) via
+    ``max(struct(ts, event_id, event_type))``: struct comparison is
+    lexicographic, so the max struct IS the ``ORDER BY ts DESC, id
+    DESC LIMIT 1`` row. The CDC-compaction / snapshot-dedup primitive,
+    graded against the classic ``row_number() = 1`` oracle to prove
+    the rewrite exact.
+
+    Why not the window: ``row_number() OVER (PARTITION BY key ORDER BY
+    ts DESC)`` shuffles EVERY version of every row, then sorts each
+    partition, only to discard all but one row per key. The max-struct
+    aggregate does the discard map-side: partial aggregation collapses
+    each task's rows to one candidate per key before the exchange, so
+    the shuffle carries |keys| rows, not |rows| — at 100 TB of
+    versioned events with long histories that is orders of magnitude
+    less traffic, and there is no sort at all. ``n_versions`` rides
+    the same agg for free."""
+    prep(spark)
+    ev = load(spark, sf_dir, "events")
+    agg = ev.groupBy("user_id").agg(
+        F.max(F.struct("ts", "event_id", "event_type")).alias("last"),
+        F.count(F.lit(1)).cast("bigint").alias("n_versions"),
+    )
+    return agg.select(
+        "user_id",
+        F.col("last.ts").alias("last_ts"),
+        F.col("last.event_id").alias("last_event_id"),
+        F.col("last.event_type").alias("last_event_type"),
+        "n_versions",
     )

@@ -3,6 +3,10 @@ rounding (F4 — the reference's distinctive ``Math.round(value, digits)``),
 approximate-sketch aggregates (the 100 TB path of A5/A7), and skew-safe
 rewrites (§4) graded against the plain-shape oracle to prove the rewrite
 is semantics-preserving.
+
+Also here:
+
+- ``q_graph_adamic_adar`` — Adamic-Adar link prediction on the order-part graph.
 """
 
 from __future__ import annotations
@@ -10,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modevetl_spark.functions.compat import round_sig, sql_tsum, tsum
+from modevetl_spark.functions.compat import dsum, round_sig, sql_dsum
 from modevetl_spark.operators.skew import adaptive_salted_join, salted_agg, salted_join
 from modevetl_spark.queries import prep
 from modevetl_spark.queries._registry import make_registry
@@ -22,7 +26,7 @@ QUERIES, ORACLE, q = make_registry()
 _CUBE_SUBTOTALS_ORACLE = f"""
 SELECT o_orderstatus, o_orderpriority,
        COUNT(*) AS n_orders,
-       {sql_tsum('o_totalprice', 'total_value')}
+       {sql_dsum('o_totalprice', 'total_value')}
 FROM orders
 GROUP BY CUBE (o_orderstatus, o_orderpriority)
 """
@@ -35,7 +39,7 @@ def cube_subtotals(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     return o.cube("o_orderstatus", "o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        tsum("o_totalprice").alias("total_value"),
+        dsum("o_totalprice").alias("total_value"),
     )
 
 
@@ -134,7 +138,7 @@ def agg_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SALTED_AGG_ORACLE = f"""
 SELECT user_id,
        COUNT(*) AS n_events,
-       {sql_tsum('value', 'total_value')}
+       {sql_dsum('value', 'total_value')}
 FROM events
 GROUP BY user_id
 """
@@ -355,17 +359,17 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # final contract: ROUND(rank, 8), top 50 by (rank DESC, node ASC).
         # Select on the ROUNDED key (8dp ties can straddle distinct 9dp
         # ranks), emitting ascending node ids inside each tied group.
-        from modevetl_spark.queries.wave11 import _round_repr
+        from modevetl_spark.functions.jvmnum import round_repr
 
         segs = sorted(
             size_segments(m),
-            key=lambda s: (-_round_repr(r_by_size[s[2]], 8), s[0]),
+            key=lambda s: (-round_repr(r_by_size[s[2]], 8), s[0]),
         )
         rows: list[tuple[int, float]] = []
         i = 0
         while len(rows) < 50 and i < len(segs):
-            r8 = _round_repr(r_by_size[segs[i][2]], 8)
-            tied = [s for s in segs if _round_repr(r_by_size[s[2]], 8) == r8]
+            r8 = round_repr(r_by_size[segs[i][2]], 8)
+            tied = [s for s in segs if round_repr(r_by_size[s[2]], 8) == r8]
             ids = sorted(
                 v for lo, hi, _sz in tied for v in range(lo, hi + 1)
             )
@@ -388,17 +392,17 @@ def _pagerank_heap_replay(
     """Driver-side replay of :func:`modevetl_spark.operators.graph.
     pagerank` over the heap tree's subtree-size classes — bit-identical
     to the in-DAG form on contiguous partkeys ``1..m``: out-degree is 1
-    everywhere (``round9(rank / 1) = rank``, already 9dp), the per-node
+    everywhere (``round_repr(rank / 1, 9) = rank``, already 9dp), the per-node
     contribution sum has ≤ 2 terms (the children), accumulated as exact
-    DECIMAL(18,9) (``_dec9`` = the double→decimal cast, shortest-repr
+    DECIMAL(18,9) (``dec9`` = the double→decimal cast, shortest-repr
     HALF_UP) and re-entered as a correctly-rounded double; the dangling
     mass is the root's rank (the only node without an out-edge); the
     rank update mirrors the operator's left-associated IEEE tree
     ``(teleport + damping·s_in) + (damping·dm)/n`` with the same
-    ``_round9`` quantization. Returns the final rank per subtree size.
+    9dp ``round_repr`` quantization. Returns the final rank per subtree size.
     State is O(log m) floats — bounded by the tree DEPTH, not the data.
     """
-    from modevetl_spark.queries.wave11 import _dec9, _round9
+    from modevetl_spark.functions.jvmnum import dec9, round_repr
     from modevetl_spark.operators.heaptree import child_sizes
 
     n = m
@@ -412,22 +416,22 @@ def _pagerank_heap_replay(
         sizes.add(s)
         left, right = child_sizes(s)
         stack.extend((left, right))
-    r = {s: _round9(1.0 / n) for s in sizes}
-    dm = float(_dec9(r[m]))
+    r = {s: round_repr(1.0 / n, 9) for s in sizes}
+    dm = float(dec9(r[m]))
     for _ in range(iterations):
         nxt: dict[int, float] = {}
         for s in sizes:
             left, right = child_sizes(s)
             if left or right:
-                acc = _dec9(r[left]) if left else 0
+                acc = dec9(r[left]) if left else 0
                 if right:
-                    acc += _dec9(r[right])
+                    acc += dec9(r[right])
                 s_in = float(acc)
             else:
                 s_in = 0.0  # leaf: left-join NULL → COALESCE(0.0)
-            nxt[s] = _round9((teleport + damping * s_in) + (damping * dm) / n)
+            nxt[s] = round_repr((teleport + damping * s_in) + (damping * dm) / n, 9)
         r = nxt
-        dm = float(_dec9(r[m]))
+        dm = float(dec9(r[m]))
     return r
 
 
@@ -525,4 +529,115 @@ def agg_incremental_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("total_spend").cast("double"), 2).alias("total_spend"),
         "first_order",
         "last_order",
+    )
+
+
+# --- Adamic-Adar link prediction over the order-part bipartite graph -----
+
+_AA_TOPK = 25
+
+_AA_ORACLE = f"""
+WITH b AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+sz AS (SELECT ok, CAST(COUNT(*) AS BIGINT) AS s FROM b GROUP BY 1),
+w AS (
+    SELECT ok,
+           CAST(ROUND(CAST(1 AS DOUBLE) / log2(CAST(s AS DOUBLE)), 9)
+                AS DECIMAL(18,9)) AS w9
+    FROM sz WHERE s >= 2
+),
+pairs AS (
+    SELECT a.ok, a.pk AS pa, c.pk AS pb
+    FROM b a JOIN b c ON c.ok = a.ok AND a.pk < c.pk
+),
+agg AS (
+    SELECT p.pa, p.pb,
+           CAST(COUNT(*) AS BIGINT) AS common_orders,
+           SUM(w.w9) AS s9
+    FROM pairs p JOIN w ON w.ok = p.ok
+    GROUP BY 1, 2
+),
+deg AS (SELECT pk, CAST(COUNT(*) AS BIGINT) AS dg FROM b GROUP BY 1)
+SELECT g.pa AS part_a, g.pb AS part_b, g.common_orders,
+       da.dg AS deg_a, db.dg AS deg_b,
+       CAST(g.common_orders AS DOUBLE)
+           / (da.dg + db.dg - g.common_orders) AS jaccard,
+       CAST(FLOOR(CAST(g.s9 AS DECIMAL(26,12)) * 1000000) AS BIGINT)
+           AS aa_micro
+FROM agg g
+JOIN deg da ON da.pk = g.pa
+JOIN deg db ON db.pk = g.pb
+QUALIFY ROW_NUMBER() OVER (ORDER BY aa_micro DESC, part_a, part_b)
+    <= {_AA_TOPK}
+"""
+
+
+@q("q_graph_adamic_adar", oracle_sql=_AA_ORACLE)
+def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J9+++ graph family [EXT]: Adamic-Adar link prediction (Adamic &
+    Adar 2003) over the order-part bipartite graph — the standard
+    related-items score that discounts each shared neighbor by its
+    popularity: AA(a,b) = sum over shared orders o of 1/log2(|basket
+    o|), alongside the raw common-neighbor count and the neighborhood
+    Jaccard. The log2-denominated variant keeps every term a ratio of
+    an exact double and an INTEGER-argument log2 (engine-identical,
+    unlike log2 on rationals); terms are rounded to 9dp and accumulated
+    in DECIMAL (the q_token_entropy fold), and the score is emitted as
+    exact BIGINT micro-units — no order-sensitive float sum, no
+    decimal-to-double cast at a ROUND boundary.
+
+    Plan shape: baskets dedup once; pair generation is a self
+    equi-join on the order key (fan-out bounded by basket size squared
+    — the fixture maxes at 13; a production guard caps baskets before
+    pairing, the standard market-basket discipline); the per-order
+    weight joins on the same key so all three legs share the exchange;
+    part degrees (|parts| rows, dimension-sized) broadcast into the
+    scoring join; top-k is TakeOrdered on the exact integer score,
+    never a global window. At 100 TB: cost scales with sum of squared
+    basket sizes, not pairs of parts — the co-occurrence shape that
+    makes basket link prediction tractable at all."""
+    prep(spark)
+    li = load(spark, sf_dir, "lineitem")
+    b = li.select(
+        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
+    ).distinct()
+    sz = b.groupBy("ok").agg(F.count(F.lit(1)).cast("bigint").alias("s"))
+    w = sz.where(F.col("s") >= 2).select(
+        "ok",
+        F.round(F.lit(1.0) / F.log2(F.col("s").cast("double")), 9)
+        .cast("decimal(18,9)")
+        .alias("w9"),
+    )
+    pa = b.select(F.col("ok").alias("oka"), F.col("pk").alias("pa"))
+    pb = b.select(F.col("ok").alias("okb"), F.col("pk").alias("pb"))
+    pairs = (
+        pa.join(pb, F.col("oka") == F.col("okb"))
+        .where(F.col("pa") < F.col("pb"))
+        .join(w, F.col("oka") == F.col("ok"))
+    )
+    agg = pairs.groupBy("pa", "pb").agg(
+        F.count(F.lit(1)).cast("bigint").alias("common_orders"),
+        F.sum("w9").alias("s9"),
+    )
+    deg = b.groupBy("pk").agg(F.count(F.lit(1)).cast("bigint").alias("dg"))
+    da = deg.select(F.col("pk").alias("dka"), F.col("dg").alias("deg_a"))
+    db = deg.select(F.col("pk").alias("dkb"), F.col("dg").alias("deg_b"))
+    return (
+        agg.join(F.broadcast(da), F.col("pa") == F.col("dka"))
+        .join(F.broadcast(db), F.col("pb") == F.col("dkb"))
+        .select(
+            F.col("pa").alias("part_a"),
+            F.col("pb").alias("part_b"),
+            "common_orders",
+            "deg_a",
+            "deg_b",
+            (
+                F.col("common_orders").cast("double")
+                / (F.col("deg_a") + F.col("deg_b") - F.col("common_orders"))
+            ).alias("jaccard"),
+            F.floor(F.col("s9").cast("decimal(26,12)") * F.lit(1000000))
+            .cast("bigint")
+            .alias("aa_micro"),
+        )
+        .orderBy(F.col("aa_micro").desc(), "part_a", "part_b")
+        .limit(_AA_TOPK)
     )

@@ -10,11 +10,15 @@ explicitly ``F.broadcast``; fact-fact joins shuffle on the key and AQE
 handles skew. Semi/anti joins never materialize the probe side's payload.
 The closure query uses semi-naive iteration with lineage checkpoints
 (operators/closure.py).
+
+Also here:
+
+- ``q_join_containment`` — exact directed containment join (prefix filter).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from modevetl_spark.functions.compat import dsum, sql_dsum
@@ -328,3 +332,122 @@ def join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.crossJoin(b).where(F.col("ka") < F.col("kb")).select(
         "region_a", "region_b"
     )
+
+
+# --- Exact containment join via lossless prefix filter ------------------
+
+_T_CONTAIN = 0.6
+
+_CONTAIN_JOIN_ORACLE = rf"""
+WITH w AS (
+    SELECT doc_id,
+           list_filter(regexp_split_to_array(lower(text), '\s+'),
+                       x -> x <> '') AS w
+    FROM documents
+),
+toks AS (
+    SELECT DISTINCT doc_id, tok FROM (
+        SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS tok
+        FROM w, UNNEST(range(1, GREATEST(len(w) - 1, 1))) AS t(i)
+        WHERE i + 2 <= len(w)
+    )
+),
+sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM toks GROUP BY 1),
+inter AS (
+    SELECT a.doc_id AS a_id, b.doc_id AS b_id, CAST(COUNT(*) AS BIGINT) AS shared
+    FROM toks a JOIN toks b ON a.tok = b.tok AND a.doc_id <> b.doc_id
+    GROUP BY 1, 2
+)
+SELECT i.a_id, i.b_id, i.shared,
+       ROUND(CAST(i.shared AS DOUBLE) / sa.n, 6) AS containment
+FROM inter i JOIN sizes sa ON sa.doc_id = i.a_id
+WHERE CAST(i.shared AS DOUBLE) / sa.n >= CAST({_T_CONTAIN} AS DOUBLE)
+"""
+
+
+@q("q_join_containment", oracle_sql=_CONTAIN_JOIN_ORACLE)
+def join_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J7+/L1+ [EXT]: exact DIRECTED containment join — every ordered
+    pair (A, B) with trigram-shingle-set containment |A∩B|/|A| ≥ t={T},
+    via the LOSSLESS prefix filter. ``q_text_containment`` is the
+    heuristic sibling (df-banded shingles — the band is part of its
+    semantics and pairs witnessed only by df=1 or boilerplate shingles
+    are invisible to it); this is the exact algorithmic one: if
+    C(A→B) ≥ t then fewer than |A| − ⌈t·|A|⌉ + 1 of A's shingles miss
+    B, so A's prefix of that length (shingles ordered rarest-global-df
+    first) provably shares a shingle with B — candidates from
+    (A-prefix ⋈ B-full) lose nothing, and the oracle stays plain
+    all-pairs SQL. Shingle (not single-word) sets are the semantics:
+    word sets over a shared vocabulary make near-universal containment
+    (measured: 201k of 250k ordered pairs at t=0.6 on this fixture),
+    while 3-shingles are near-unique so containment means quotation.
+
+    Asymmetry matters: the probe side prefixes, the indexed side keeps
+    FULL postings (containment can't truncate B losslessly). The
+    df-first token order makes prefixes the RAREST tokens of each set,
+    so hot-token postings only join against the few probes whose whole
+    set is hot — the expected-cost argument of All-Pairs/PPJoin.
+    Containment divides two integers — one exact IEEE op,
+    engine-identical (and t·|A| is one double multiply both engines
+    evaluate identically).
+
+    Plan shape: one explode → token-keyed df agg; prefix rank is a
+    doc-partitioned window (balanced); candidate generation is a
+    token-keyed equi-join probe-prefix × full-postings; verification
+    joins the ≤|cand| pairs back to the per-doc token arrays by id and
+    intersects in-task. At 100 TB postings would be bucketed by token
+    (``DataFrameWriter.bucketBy``) making the candidate join
+    co-located."""
+    from modevetl_spark.operators._util import spread
+    from modevetl_spark.operators.text import tokens, word_shingles
+
+    prep(spark)
+    d = spread(load(spark, sf_dir, "documents"))
+    docs = d.select(
+        "doc_id",
+        F.array_distinct(word_shingles(tokens("text"), 3)).alias("toks"),
+    ).withColumn("n", F.size("toks"))
+    sets = docs.select("doc_id", "n", F.explode("toks").alias("tok"))
+    docfreq = sets.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    ranked = sets.join(docfreq, "tok").withColumn(
+        "rn",
+        F.row_number().over(
+            Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("tok"))
+        ),
+    )
+    prefix_len = F.col("n") - F.ceil(F.lit(_T_CONTAIN) * F.col("n")) + 1
+    prefix = ranked.where(F.col("rn") <= prefix_len).select("doc_id", "tok")
+    a = prefix.select(F.col("doc_id").alias("a_id"), "tok")
+    b = sets.select(F.col("doc_id").alias("b_id"), "tok")
+    cand = (
+        a.join(b, on="tok")
+        .where(F.col("a_id") != F.col("b_id"))
+        .select("a_id", "b_id")
+        .distinct()
+    )
+    ta = docs.select(
+        F.col("doc_id").alias("a_id"),
+        F.col("toks").alias("ta"),
+        F.col("n").alias("n_a"),
+    )
+    tb = docs.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("tb"))
+    shared = F.size(F.array_intersect("ta", "tb")).cast("bigint")
+    # try_divide: a zero-token a-side (dirty data — empty text under a
+    # duplicated doc_id) yields NULL instead of an ANSI DIVIDE_BY_ZERO
+    # job abort; NULL >= threshold is NULL, so the pair drops on both
+    # engines (DuckDB's / is NULL on zero denominators too).
+    containment = F.try_divide(shared.cast("double"), F.col("n_a"))
+    return (
+        cand.join(ta, "a_id")
+        .join(tb, "b_id")
+        .where(containment >= F.lit(_T_CONTAIN))
+        .select(
+            "a_id",
+            "b_id",
+            shared.alias("shared"),
+            F.round(containment, 6).alias("containment"),
+        )
+    )
+
+
+join_containment.__doc__ = join_containment.__doc__.format(T=_T_CONTAIN)

@@ -11,6 +11,10 @@ xxhash64 twins (JVM-intrinsic, no DuckDB equivalent) remain the
 non-graded fast path. Queries that stay rows-only say why in their
 docstring (approximate recall by design, per-partition greedy, or
 engine-specific sketch internals).
+
+Also here:
+
+- ``q_dedup_substring_runs`` — exact-substring duplicated runs per document.
 """
 
 from __future__ import annotations
@@ -1473,3 +1477,147 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_pairs(d, pairs, shingle_n=3, sets=sets).where(
         F.col("jaccard") >= 0.5
     )
+
+
+# --- Exact-substring duplicated runs (removal-planning dedup) ------------
+
+_RUNS_N = 8  # gram width in tokens
+
+_RUNS_ORACLE = rf"""
+WITH t AS (
+    SELECT doc_id,
+           list_filter(regexp_split_to_array(lower(text), '\s+'),
+                       x -> x <> '') AS tk
+    FROM documents
+),
+g AS (
+    SELECT doc_id,
+           unnest(range(1, len(tk) - {_RUNS_N - 2})) AS pos,
+           unnest(list_transform(range(1, len(tk) - {_RUNS_N - 2}),
+               i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' '
+                    || tk[i+3] || ' ' || tk[i+4] || ' ' || tk[i+5]
+                    || ' ' || tk[i+6] || ' ' || tk[i+7])) AS gram
+    FROM t WHERE len(tk) >= {_RUNS_N}
+),
+cnt AS (SELECT gram, COUNT(*) AS c FROM g GROUP BY 1),
+d AS (
+    SELECT g.doc_id, g.pos FROM g JOIN cnt USING (gram) WHERE cnt.c > 1
+),
+l AS (
+    SELECT doc_id, pos,
+           CASE WHEN LAG(pos) OVER w IS NULL
+                  OR pos - LAG(pos) OVER w > {_RUNS_N}
+                THEN 1 ELSE 0 END AS brk
+    FROM d WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
+),
+isl AS (
+    SELECT doc_id, pos,
+           SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS run_id
+    FROM l
+),
+runs AS (
+    SELECT doc_id, run_id,
+           MAX(pos) - MIN(pos) + {_RUNS_N} AS run_tokens
+    FROM isl GROUP BY 1, 2
+),
+nt AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens FROM t)
+SELECT r.doc_id, nt.n_tokens,
+       CAST(COUNT(*) AS BIGINT) AS n_runs,
+       CAST(SUM(run_tokens) AS BIGINT) AS dup_tokens,
+       CAST(MAX(run_tokens) AS BIGINT) AS longest_run,
+       CAST(SUM(run_tokens) AS DOUBLE) / nt.n_tokens AS dup_ratio
+FROM runs r JOIN nt USING (doc_id)
+GROUP BY 1, 2
+"""
+
+
+@q("q_dedup_substring_runs", oracle_sql=_RUNS_ORACLE)
+def dedup_substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L1+17 [EXT]: exact-substring duplicated RUNS — the removal-
+    planning step of exact-substring deduplication (cf. Lee et al.
+    2022, "Deduplicating Training Data Makes Language Models Better"):
+    where q_dedup_spans reports each document's duplicated-gram RATIO,
+    this emits the maximal duplicated REGIONS a curation pass would
+    actually cut — per document: run count, total duplicated tokens,
+    longest run, duplicated-token ratio. A word {N}-gram is duplicated
+    when it occurs more than once in the corpus (any document,
+    including elsewhere in the SAME one — internal boilerplate repeats
+    are removal targets too); overlapping or touching duplicated grams
+    (position gap ≤ {N}) merge into one run, so run_tokens =
+    last_pos − first_pos + {N} is the exact union length of the
+    covered token intervals, never double-counted.
+
+    Cross-engine parity is structural: positions and run lengths are
+    integers; dup_ratio is ONE raw double division of two BIGINTs
+    (identical IEEE op both engines, driver-normalized at 8dp).
+
+    Plan shape: positional grams via posexplode (Spark) / aligned
+    parallel unnest (oracle); the gram-frequency agg collapses
+    singleton grams map-side (the vast majority — partial agg does the
+    heavy lifting), and the join back to positions is keyed on the
+    gram hash, co-partitioned with the agg's own exchange. Run
+    assembly is lag + running-sum windows partitioned BY DOCUMENT —
+    per-task work bounded by the largest doc, never a global window.
+    At 100 TB this is the standard Spark re-expression of
+    suffix-array ExactSubstr: one gram-keyed exchange + doc-keyed
+    windows riding one doc-keyed exchange; nothing all-pairs."""
+    from modevetl_spark.operators.text import tokens, word_shingles
+
+    prep(spark)
+    d = load(spark, sf_dir, "documents")
+    t = d.select("doc_id", tokens("text").alias("tk"))
+    g = t.select(
+        "doc_id",
+        F.posexplode(word_shingles(F.col("tk"), _RUNS_N)).alias(
+            "pos0", "gram"
+        ),
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "gram")
+    cnt = g.groupBy("gram").agg(F.count(F.lit(1)).alias("c"))
+    dpos = (
+        g.join(cnt.where(F.col("c") > 1), "gram")
+        .select("doc_id", "pos")
+    )
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    brk = F.when(
+        F.lag("pos").over(w).isNull()
+        | ((F.col("pos") - F.lag("pos").over(w)) > _RUNS_N),
+        1,
+    ).otherwise(0)
+    isl = dpos.withColumn("brk", brk).withColumn(
+        "run_id",
+        F.sum("brk").over(
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+    )
+    runs = isl.groupBy("doc_id", "run_id").agg(
+        (F.max("pos") - F.min("pos") + _RUNS_N).alias("run_tokens")
+    )
+    nt = t.select("doc_id", F.size("tk").cast("bigint").alias("n_tokens"))
+    return (
+        runs.groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_runs"),
+            F.sum("run_tokens").cast("bigint").alias("dup_tokens"),
+            F.max("run_tokens").cast("bigint").alias("longest_run"),
+        )
+        .join(nt, "doc_id")
+        .select(
+            "doc_id",
+            "n_tokens",
+            "n_runs",
+            "dup_tokens",
+            "longest_run",
+            # try_divide: NULL on a zero-token doc (possible only under
+            # dirty data — e.g. a duplicated doc_id carrying empty text)
+            # instead of an ANSI DIVIDE_BY_ZERO job abort; DuckDB's /
+            # yields NULL on zero denominators, so the oracle agrees.
+            F.try_divide(
+                F.col("dup_tokens").cast("double"), F.col("n_tokens")
+            ).alias("dup_ratio"),
+        )
+    )
+
+
+dedup_substring_runs.__doc__ = dedup_substring_runs.__doc__.replace(
+    "{N}", str(_RUNS_N)
+)

@@ -14,6 +14,11 @@ Float discipline: surprisal terms are differences of integer-argument
 log2 calls (engine-identical on integers, unlike rationals — the
 q_token_entropy lesson), rounded to 9dp and decimal-summed; everything
 else is integer/count arithmetic.
+
+Also here:
+
+- ``q_decayed_value`` — exponentially time-decayed customer value.
+- ``q_churn_hazard`` — discrete-time churn hazard and survival curves.
 """
 
 from __future__ import annotations
@@ -1186,3 +1191,191 @@ def order_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(gap_days, 0.5)").cast("double").alias("median_gap"),
         F.max("gap_days").cast("long").alias("max_gap"),
     )
+
+
+# --- Exponential time-decay aggregation (exact powers of two) -----------
+
+_DECAY_HL_DAYS = 28
+_DECAY_MAX_W = 10
+
+_DECAY_ORACLE = f"""
+WITH anchor AS (SELECT MAX(o_orderdate) AS a FROM orders),
+base AS (
+    SELECT o_custkey, o_totalprice,
+           CAST(FLOOR(date_diff('day', o_orderdate, (SELECT a FROM anchor))
+                      / {_DECAY_HL_DAYS}.0) AS INTEGER) AS w
+    FROM orders
+)
+SELECT o_custkey,
+       CAST(COUNT(*) AS BIGINT) AS n_orders,
+       CAST(FLOOR(CAST(SUM(CAST(TRY_CAST(o_totalprice AS DECIMAL(12,2))
+                                AS DECIMAL(19,2))
+                           * CAST(CAST(1 AS DOUBLE) / (1 << w)
+                                  AS DECIMAL(19,10)))
+                       AS DECIMAL(26,12)) * 1000000) AS BIGINT)
+           AS decayed_micro
+FROM base
+WHERE w BETWEEN 0 AND {_DECAY_MAX_W}
+GROUP BY 1
+"""
+
+
+@q("q_decayed_value", oracle_sql=_DECAY_ORACLE)
+def decayed_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A10++ feature path [EXT]: exponentially time-decayed customer
+    value — Σ price·2^(−w), w = elapsed {HL}-day half-lives at the
+    corpus anchor (max order date), window capped at w ≤ {W} — the
+    standard recency-weighted LTV / engagement feature, computed with
+    ZERO transcendentals: a half-life weight of 2^(−w) for integer w is
+    an exact power of two (1.0 / (1 << w) — one exact IEEE division,
+    and an exact {W}dp DECIMAL), so every term price(2dp)·2^(−w) is an
+    exact ≤12dp decimal, the sum accumulates exactly and order-free,
+    and the output is floor(sum·10⁶) as BIGINT — no double rounding
+    anywhere, immune to every .5-boundary trap by construction. This is
+    the repo's decimal-fold discipline taken to its limit: the entire
+    aggregate is integer-exact end to end. (pow(0.5, x) would be the
+    naive spelling — pow is not correctly rounded and not portable.)
+
+    Plan shape: the anchor is a one-row broadcast scalar; the decay
+    window (w ≤ {W} ⇒ orders newer than {WIN} days) prunes the scan —
+    at 100 TB with date-partitioned storage this is partition pruning,
+    and the aggregate is one hash agg by customer with map-side
+    combine. Incremental story: a stored decayed sum re-anchors by one
+    scalar multiply (decay is an exponential: S(t+Δ) = S(t)·2^(−Δ/hl)),
+    so per-segment states merge and roll forward without rescanning
+    history."""
+    prep(spark)
+    o = load(spark, sf_dir, "orders")
+    anchor = o.agg(F.max("o_orderdate").alias("anchor"))
+    base = (
+        o.crossJoin(F.broadcast(anchor))
+        .withColumn(
+            "w",
+            F.floor(
+                F.datediff(F.col("anchor"), F.col("o_orderdate"))
+                / F.lit(float(_DECAY_HL_DAYS))
+            ).cast("int"),
+        )
+        .where(F.col("w").between(0, _DECAY_MAX_W))
+    )
+    weight = (F.lit(1.0) / F.expr("shiftleft(1, w)")).cast("decimal(11,10)")
+    # try convention at the input fold seam (r13 inline-fold cohort): a
+    # price outside DECIMAL(12,2) NULLs its term on BOTH engines — the
+    # oracle TRY_CASTs at this SAME (12,2) before its lossless (19,2)
+    # widen, so the admitted range is engine-identical (the r11 money
+    # lesson: an oracle admitting a wider range keeps values the engine
+    # drops)
+    term = F.col("o_totalprice").try_cast("decimal(12,2)") * weight
+    return (
+        base.groupBy("o_custkey")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+            F.sum(term).alias("s"),
+        )
+        .select(
+            "o_custkey",
+            "n_orders",
+            F.floor(F.col("s").cast("decimal(26,12)") * F.lit(1000000))
+            .cast("bigint")
+            .alias("decayed_micro"),
+        )
+    )
+
+
+decayed_value.__doc__ = decayed_value.__doc__.format(
+    HL=_DECAY_HL_DAYS, W=_DECAY_MAX_W, WIN=_DECAY_HL_DAYS * (_DECAY_MAX_W + 1)
+)
+
+
+# --- Discrete-time survival / churn hazard --------------------------------
+
+_HAZARD_MAX_J = 20
+
+_HAZARD_ORACLE = f"""
+WITH n AS (
+    SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS c
+    FROM orders GROUP BY 1
+),
+dist AS (SELECT c, CAST(COUNT(*) AS BIGINT) AS cnt FROM n GROUP BY 1),
+total AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n_total FROM dist),
+grid AS (SELECT CAST(j AS BIGINT) AS j FROM UNNEST(range(1, {_HAZARD_MAX_J + 1})) AS t(j)),
+curve AS (
+    SELECT g.j,
+           CAST(SUM(d.cnt) AS BIGINT) AS n_at_risk,
+           CAST(SUM(CASE WHEN d.c = g.j THEN d.cnt ELSE 0 END) AS BIGINT)
+               AS n_churned,
+           CAST(SUM(CASE WHEN d.c > g.j THEN d.cnt ELSE 0 END) AS BIGINT)
+               AS n_survived
+    FROM grid g JOIN dist d ON d.c >= g.j
+    GROUP BY 1
+)
+SELECT c.j AS order_rank, c.n_at_risk, c.n_churned, c.n_survived,
+       CAST(c.n_churned AS DOUBLE) / c.n_at_risk AS hazard,
+       CAST(c.n_survived AS DOUBLE) / t.n_total AS survival
+FROM curve c, total t
+WHERE c.n_at_risk > 0
+"""
+
+
+@q("q_churn_hazard", oracle_sql=_HAZARD_ORACLE)
+def churn_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T10+ lifecycle analytics [EXT]: discrete-time survival — the
+    churn curve over order rank j: of the customers who reached their
+    j-th order, what fraction stopped there (hazard) and what fraction
+    of the whole cohort went past it (survival)? The life-table shape
+    (Kaplan-Meier on a discrete clock) that retention/q_cohort_ltv do
+    not cover: hazard(j) = |n = j| / |n >= j|, survival(j) =
+    |n > j| / |cohort|, both exact integer divisions on identical
+    integers in both engines, so the doubles are emitted RAW — no
+    rounding, no fold, no .5-boundary exposure.
+
+    Plan shape: ONE map-side-combined count by customer, collapsed to
+    its counts-of-counts distribution (<= max-orders-per-customer rows,
+    a tiny relation) — the life table then derives from a broadcast
+    theta-join of the literal rank grid (j <= {J}, config-bounded)
+    against that distribution: at 100 TB the only data-sized exchange
+    is the per-customer count; everything after operates on dozens of
+    rows. No window anywhere — the at-risk cumulative is the grid
+    theta-join, not a running sum over a data-derived relation."""
+    prep(spark)
+    o = load(spark, sf_dir, "orders")
+    n = o.groupBy("o_custkey").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    dist = (
+        n.groupBy("c")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        .localCheckpoint(eager=True)  # tiny; read by curve + total
+    )
+    total = dist.agg(F.sum("cnt").cast("bigint").alias("n_total"))
+    grid = spark.range(1, _HAZARD_MAX_J + 1).select(F.col("id").alias("j"))
+    curve = (
+        grid.join(F.broadcast(dist), F.col("c") >= F.col("j"))
+        .groupBy("j")
+        .agg(
+            F.sum("cnt").cast("bigint").alias("n_at_risk"),
+            F.sum(F.when(F.col("c") == F.col("j"), F.col("cnt")).otherwise(0))
+            .cast("bigint")
+            .alias("n_churned"),
+            F.sum(F.when(F.col("c") > F.col("j"), F.col("cnt")).otherwise(0))
+            .cast("bigint")
+            .alias("n_survived"),
+        )
+    )
+    return (
+        curve.crossJoin(F.broadcast(total))
+        .where(F.col("n_at_risk") > 0)
+        .select(
+            F.col("j").alias("order_rank"),
+            "n_at_risk",
+            "n_churned",
+            "n_survived",
+            (F.col("n_churned").cast("double") / F.col("n_at_risk")).alias(
+                "hazard"
+            ),
+            (F.col("n_survived").cast("double") / F.col("n_total")).alias(
+                "survival"
+            ),
+        )
+    )
+
+
+churn_hazard.__doc__ = churn_hazard.__doc__.format(J=_HAZARD_MAX_J)

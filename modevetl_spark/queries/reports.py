@@ -20,6 +20,10 @@ Float discipline: every money sum goes through the decimal-exact compat
 layer (`dsum_money`/`sql_dsum_money`); ratios divide two already-rounded
 doubles and round the quotient, so both engines see bit-identical
 inputs to a correctly-rounded IEEE division.
+
+Also here:
+
+- ``q_tpch_late_shipments`` — TPC-H Q12: late line items by priority class.
 """
 
 from __future__ import annotations
@@ -730,3 +734,63 @@ def tpch_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return best.join(
         F.broadcast(s), F.col("supplier_no") == F.col("s_suppkey")
     ).select("s_suppkey", "s_name", "total_revenue")
+
+
+# --- TPC-H Q12 shape: late shipments by priority class ------------------
+
+_Q12_ORACLE = """
+SELECT CASE CAST(l.l_partkey % 3 AS INT)
+         WHEN 0 THEN 'AIR' WHEN 1 THEN 'RAIL' ELSE 'SHIP' END AS shipmode,
+       CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
+                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+       CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+FROM lineitem l
+JOIN orders o ON o.o_orderkey = l.l_orderkey
+WHERE l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
+GROUP BY 1
+"""
+
+
+@q("q_tpch_late_shipments", oracle_sql=_Q12_ORACLE)
+def tpch_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """M1+: TPC-H Q12 shape — how many high- vs low-priority line items
+    shipped late, per ship mode. Fixture adaptation (documented, the
+    same policy as the other Q shapes): the fixture has no
+    ``l_shipmode`` / commit / receipt dates, so the mode is a derived
+    3-way carrier assignment by part (``l_partkey % 3``) and "late"
+    is shipped more than 60 days after the order date — the shape
+    (fact-fact equi join, conjunct date predicate spanning both sides,
+    CASE-split counts over a tiny derived key) is Q12's exactly.
+
+    Plan shape: the ship-late predicate needs columns from BOTH sides,
+    so the join itself cannot be avoided: a plain orderkey equi join
+    with no strategy hint — at sf the orders side broadcasts under
+    AQE, at 100 TB both sides are fact-sized and it degrades to a
+    shuffled hash join on the natural join key with no code change.
+    The date filter applies immediately post-join (before any other
+    column is touched) and the aggregation key has 3 values, so the
+    final agg is map-side-combined down to 3 rows per task before a
+    negligible exchange."""
+    prep(spark)
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey", "l_shipdate"
+    )
+    o = load(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderdate", "o_orderpriority"
+    )
+    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
+    mode = (
+        F.when(F.col("l_partkey") % 3 == 0, "AIR")
+        .when(F.col("l_partkey") % 3 == 1, "RAIL")
+        .otherwise("SHIP")
+    )
+    return (
+        li.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
+        .where(F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
+        .groupBy(mode.alias("shipmode"))
+        .agg(
+            F.sum(F.when(high, 1).otherwise(0)).cast("bigint").alias("high_line_count"),
+            F.sum(F.when(high, 0).otherwise(1)).cast("bigint").alias("low_line_count"),
+        )
+    )

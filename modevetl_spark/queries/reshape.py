@@ -2,6 +2,10 @@
 form of the reference's cube Matrix output) and gap-fill /
 forward-fill (standard analytics-engine time-series operators built on
 the densify + window primitives).
+
+Also here:
+
+- ``q_gapfill_percentile`` — day-grid gap fill with each user's lower median.
 """
 
 from __future__ import annotations
@@ -181,3 +185,114 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     return stats.select(F.explode(per_col).alias("s")).select("s.*")
+
+
+# --- Gap fill with the per-key lower median -----------------------------
+
+_MEDIAN_FILL_ORACLE = """
+WITH daily AS (
+    SELECT user_id, CAST(ts AS DATE) AS day,
+           ROUND(CAST(SUM(TRY_CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS v
+    FROM events
+    WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01'
+    GROUP BY 1, 2
+),
+span AS (SELECT user_id, MIN(day) AS lo, MAX(day) AS hi FROM daily GROUP BY 1),
+grid AS (
+    SELECT user_id,
+           CAST(UNNEST(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day
+    FROM span
+),
+ranked AS (
+    SELECT user_id, v,
+           ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY v, day) AS rn,
+           COUNT(*) OVER (PARTITION BY user_id) AS cnt
+    FROM daily WHERE v IS NOT NULL
+),
+med AS (
+    SELECT user_id, v AS med_v FROM ranked
+    WHERE rn = CAST(CEIL(cnt / CAST(2 AS DOUBLE)) AS BIGINT)
+)
+SELECT g.user_id, CAST(g.day AS TIMESTAMP) AS day,
+       COALESCE(d.v, m.med_v) AS value_filled,
+       d.v IS NOT NULL AS observed
+FROM grid g
+LEFT JOIN daily d ON d.user_id = g.user_id AND d.day = g.day
+JOIN med m ON m.user_id = g.user_id
+"""
+
+
+@q("q_gapfill_percentile", oracle_sql=_MEDIAN_FILL_ORACLE)
+def gapfill_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """D2+/T2+ [EXT]: gap fill with the per-key LOWER MEDIAN — densify
+    each user's daily metric to a full day grid and fill missing days
+    with the user's median observed daily value: the robust-statistic
+    fill that completes the family next to last-observation
+    (``q_gapfill_ffill``) and linear interpolation
+    (``q_gapfill_interp``); medians shrug off the outlier days that
+    poison a mean fill.
+
+    Lower median on purpose (rank ``ceil(n/2)`` in ``(v, day)``
+    order): it SELECTS an existing 6dp value instead of averaging the
+    middle pair, so no new float is manufactured and the cross-engine
+    .5-boundary rounding trap (round-5 k-means lesson) cannot occur —
+    the oracle picks the identical row by the identical rank rule.
+    NULL daily sums (a user-day whose every ``value`` is NULL) are
+    excluded from the median rank on BOTH engines — Spark orders NULLs
+    first while SQL ROW_NUMBER orders them last, so letting them into
+    the rank would silently shift the pick (and could even fill gaps
+    with NULL); the fill for such a day still comes from the non-null
+    median via COALESCE.
+
+    Plan shape: one (user, day) hash agg; the per-user median is a
+    user-partitioned window rank (balanced — partitioned by key, never
+    global) picking one row per user; the grid is generated from each
+    user's min/max span (|users|·|days| rows — produced, never
+    scanned) and takes the fill via two user-keyed joins that share
+    the aggregation's hash partitioning. At 100 TB nothing windows or
+    sorts globally. The valid-event-time guard (mirrored in the
+    oracle) bounds the span a single malformed year-9999 row could
+    otherwise explode to ~2.9M grid rows — the q_gapfill_interp
+    poison-pill class."""
+    prep(spark)
+    ev = load(spark, sf_dir, "events").where(
+        (F.col("ts") >= F.lit("1900-01-01").cast("timestamp"))
+        & (F.col("ts") < F.lit("2100-01-01").cast("timestamp"))
+    )
+    daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
+        # try_cast at the fold seam: one 1e300 value row NULLs out
+        # instead of aborting the stage (COVERAGE.md M11)
+        F.round(
+            F.sum(F.col("value").try_cast("decimal(18,6)")).cast("double"), 6
+        ).alias("v")
+    )
+    w_rank = Window.partitionBy("user_id").orderBy("v", "day")
+    w_cnt = Window.partitionBy("user_id")
+    med = (
+        daily.where(F.col("v").isNotNull())
+        .select(
+            "user_id",
+            "v",
+            F.row_number().over(w_rank).alias("rn"),
+            F.count(F.lit(1)).over(w_cnt).alias("cnt"),
+        )
+        .where(
+            F.col("rn")
+            == F.ceil(F.col("cnt") / F.lit(2.0)).cast("bigint")
+        )
+        .select("user_id", F.col("v").alias("med_v"))
+    )
+    span = daily.groupBy("user_id").agg(
+        F.min("day").alias("lo"), F.max("day").alias("hi")
+    )
+    grid = span.select("user_id", F.explode(F.sequence("lo", "hi")).alias("day"))
+    return (
+        grid.join(daily, ["user_id", "day"], "left")
+        .join(med, "user_id")
+        .select(
+            "user_id",
+            F.col("day").cast("timestamp").alias("day"),
+            F.coalesce("v", "med_v").alias("value_filled"),
+            F.col("v").isNotNull().alias("observed"),
+        )
+    )

@@ -14,6 +14,12 @@ Float discipline matches the rest of the repo: money sums go through the
 decimal-exact compat layer; percentile/interpolation outputs are rounded
 to 6 dp (the grade established by q_agg_median/q_agg_percentile);
 sampling priorities are pure BIGINT arithmetic — no float anywhere.
+
+Also here:
+
+- ``q_sample_reservoir`` — exactly-k uniform sample of orders.
+- ``q_sample_reservoir_weighted`` — exactly-k weighted reservoir sample.
+- ``q_linkage_weights`` — Fellegi–Sunter frequency-weighted linkage scores.
 """
 
 from __future__ import annotations
@@ -1478,4 +1484,331 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .orderBy(F.desc("n_orders"), "part_a", "part_b")
         .limit(20)
+    )
+
+
+# --- Deterministic fixed-size reservoir sample --------------------------
+
+_RESERVOIR_ORACLE = """
+SELECT o_orderkey, o_totalprice,
+       CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))
+            AS BIGINT) AS priority
+FROM orders
+ORDER BY priority, o_orderkey
+LIMIT 200
+"""
+
+
+@q("q_sample_reservoir", oracle_sql=_RESERVOIR_ORACLE)
+def sample_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L2+ [EXT]: deterministic reservoir sample — EXACTLY k=200 orders,
+    uniform over the key space, independent of row order and partition
+    layout. ``q_sample_hash`` is Bernoulli (a rate, size varies);
+    training-data recipes routinely need an exact row budget — the
+    classic reservoir. Determinism replaces the RNG: each row's
+    priority is the shared 32-bit md5 idiom on its key
+    (``conv(substr(md5(k),1,8),16,10)``, engine-identical), and the
+    sample is the k smallest priorities with the unique key as
+    tie-break — the bottom-k-by-random-priority formulation of
+    reservoir sampling, replayable by any engine.
+
+    Plan shape: ``ORDER BY priority LIMIT k`` compiles to
+    TakeOrderedAndProject — each task keeps a k-row heap, the driver
+    merges |tasks|·k candidate rows; NO global sort, no shuffle of the
+    data. At 100 TB the cost is one streaming scan plus k·P rows of
+    driver merge — the same bound as the repo's other TakeOrdered
+    cuts (vocab build, Misra–Gries candidates)."""
+    prep(spark)
+    o = load(spark, sf_dir, "orders")
+    priority = F.conv(
+        F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10
+    ).cast("bigint")
+    return (
+        o.select("o_orderkey", "o_totalprice", priority.alias("priority"))
+        .orderBy("priority", "o_orderkey")
+        .limit(200)
+    )
+
+
+# --- Weighted reservoir sample (A-ES, min-of-replica priorities) ---------
+
+_WRES_K = 200
+
+_WRES_ORACLE = f"""
+WITH base AS (
+    SELECT o_orderkey, o_totalprice,
+           GREATEST(6 - COALESCE(
+                        TRY_CAST(substr(o_orderpriority, 1, 1) AS INTEGER),
+                        5), 1)
+               AS weight
+    FROM orders
+),
+pri AS (
+    SELECT o_orderkey, weight, o_totalprice,
+           list_min(list_transform(range(1, weight + 1),
+               i -> CAST(('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)
+                                            || '#' || CAST(i AS VARCHAR)),
+                                         1, 8)) AS BIGINT)
+           )) AS priority
+    FROM base
+)
+SELECT o_orderkey, CAST(weight AS BIGINT) AS weight, o_totalprice, priority
+FROM pri ORDER BY priority NULLS LAST, o_orderkey LIMIT {_WRES_K}
+"""
+
+
+@q("q_sample_reservoir_weighted", oracle_sql=_WRES_ORACLE)
+def sample_reservoir_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L2+16 [EXT]: weighted reservoir sample — EXACTLY k={K} orders
+    where an order's inclusion odds scale with an integer importance
+    weight (urgency: '1-URGENT' ⇒ w=5 … '5-LOW' ⇒ w=1), the weighted
+    row-budget cut every curation recipe needs (oversample the rare
+    high-value stratum without a separate stratified pass).
+
+    Method: the A-ES weighted-reservoir ordering (Efraimidis &
+    Spirakis 2006) keeps the k rows with the best priority u^(1/w) —
+    equivalently, the minimum of w independent uniform draws, because
+    min(u_1..u_w) has CDF 1−(1−x)^w, the same order statistic. The
+    min-of-w-draws form needs NO pow() (not correctly rounded, not
+    portable — the q_decayed_value lesson); each draw is the shared
+    deterministic 32-bit md5 idiom on (key, replica-index), so the
+    sample replays bit-identically in any engine. Two malformed-input
+    guards keep parity structural: weight is clamped to ≥1 in BOTH
+    engines (a priority digit ≥6 would give w≤0, where Spark's
+    sequence(1, w) runs DESCENDING while DuckDB's range(1, w+1) is
+    empty→NULL — a silent divergence), and null priorities are pinned
+    NULLS LAST in BOTH engines (Spark's asc default is NULLS FIRST,
+    DuckDB's NULLS LAST). Weight mix in the fixture sample confirms
+    the gradient (w=5 lands ~3x more rows than w=1 at sf0.01).
+
+    Plan shape: the w replica hashes materialize as a ROW-LOCAL array
+    (transform over sequence(1, w)) folded by array_min — no explode,
+    no per-replica rows, no shuffle of any kind; then ORDER BY priority
+    LIMIT k compiles to TakeOrderedAndProject (per-task k-row heaps,
+    driver merges |tasks|·k rows) exactly like q_sample_reservoir. At
+    100 TB: one streaming scan, k·P-row driver merge, weights bounded
+    by the priority domain (≤5 hashes per row)."""
+    prep(spark)
+    o = load(spark, sf_dir, "orders")
+    # try_cast + COALESCE(·, 5): a malformed priority digit (empty or
+    # non-numeric string in dirty data) clamps to the minimum weight 1
+    # instead of an ANSI CAST_INVALID_INPUT job abort; the oracle's
+    # TRY_CAST/COALESCE pair implements the identical rule.
+    weight = F.greatest(
+        F.lit(6)
+        - F.coalesce(
+            F.substring(F.col("o_orderpriority"), 1, 1).try_cast("int"),
+            F.lit(5),
+        ),
+        F.lit(1),
+    ).alias("weight")
+    replica_hash = lambda i: F.conv(  # noqa: E731
+        F.substring(
+            F.md5(
+                F.concat(
+                    F.col("o_orderkey").cast("string"),
+                    F.lit("#"),
+                    i.cast("string"),
+                )
+            ),
+            1,
+            8,
+        ),
+        16,
+        10,
+    ).cast("bigint")
+    priority = F.array_min(
+        F.transform(F.sequence(F.lit(1), F.col("weight")), replica_hash)
+    )
+    return (
+        o.select("o_orderkey", weight, "o_totalprice")
+        .withColumn("priority", priority)
+        .select(
+            "o_orderkey",
+            F.col("weight").cast("bigint").alias("weight"),
+            "o_totalprice",
+            "priority",
+        )
+        .orderBy(F.col("priority").asc_nulls_last(), "o_orderkey")
+        .limit(_WRES_K)
+    )
+
+
+sample_reservoir_weighted.__doc__ = sample_reservoir_weighted.__doc__.format(
+    K=_WRES_K
+)
+
+
+# --- Frequency-weighted record-linkage scoring (Fellegi–Sunter u-weights) --
+
+_LINK_K = 100
+_LINK_SHIFT = 100_000  # cents shift: acctbal >= -1000 => shifted >= 0
+
+_LINK_ORACLE = f"""
+WITH c AS (
+    SELECT c_custkey, c_nationkey, c_mktsegment,
+           TRY_CAST(ROUND(c_acctbal * 100) AS BIGINT) + {_LINK_SHIFT} AS cents
+    FROM customer
+),
+f AS (
+    SELECT c_custkey, c_nationkey, c_mktsegment, cents,
+           cents // 10000 AS band
+    FROM c
+),
+n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM f),
+wseg AS (
+    SELECT CAST(FLOOR(CAST(ROUND(2 * log2(n.n) - log2(s.s2), 9)
+                           AS DECIMAL(18,9)) * 1000000) AS BIGINT) AS w
+    FROM (SELECT CAST(SUM(cnt * cnt) AS BIGINT) AS s2
+          FROM (SELECT COUNT(*) AS cnt FROM f GROUP BY c_mktsegment)) s
+    CROSS JOIN n
+),
+wband AS (
+    SELECT CAST(FLOOR(CAST(ROUND(2 * log2(n.n) - log2(s.s2), 9)
+                           AS DECIMAL(18,9)) * 1000000) AS BIGINT) AS w
+    FROM (SELECT CAST(SUM(cnt * cnt) AS BIGINT) AS s2
+          FROM (SELECT COUNT(*) AS cnt FROM f GROUP BY band)) s
+    CROSS JOIN n
+),
+wcents AS (
+    SELECT CAST(FLOOR(CAST(ROUND(2 * log2(n.n) - log2(s.s2), 9)
+                           AS DECIMAL(18,9)) * 1000000) AS BIGINT) AS w
+    FROM (SELECT CAST(SUM(cnt * cnt) AS BIGINT) AS s2
+          FROM (SELECT COUNT(*) AS cnt FROM f GROUP BY cents)) s
+    CROSS JOIN n
+),
+pairs AS (
+    SELECT a.c_custkey AS cust_a, b.c_custkey AS cust_b,
+           CAST(a.c_mktsegment = b.c_mktsegment AS BIGINT) AS same_seg,
+           CAST(a.band = b.band AS BIGINT) AS same_band,
+           CAST(a.cents = b.cents AS BIGINT) AS same_cents
+    FROM f a JOIN f b
+      ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
+)
+SELECT p.cust_a, p.cust_b, p.same_seg, p.same_band, p.same_cents,
+       CAST(p.same_seg * ws.w + p.same_band * wb.w + p.same_cents * wc.w
+            AS BIGINT) AS score_microbits
+FROM pairs p CROSS JOIN wseg ws CROSS JOIN wband wb CROSS JOIN wcents wc
+ORDER BY score_microbits DESC, p.cust_a, p.cust_b
+LIMIT {_LINK_K}
+"""
+
+
+@q("q_linkage_weights", oracle_sql=_LINK_ORACLE)
+def linkage_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """L1+18 [EXT]: frequency-weighted record-linkage scoring — the
+    Fellegi–Sunter (1969) agreement-weight construction in its
+    frequency-based (u-weight) form: within nation blocks, candidate
+    customer pairs score Σ_f agree_f · w_f over three fields
+    (market segment, $100 balance band, exact balance cents), where
+    w_f = −log2(u_f) and u_f = Σ_v c_v²/N² is the chance-agreement
+    probability — agreeing on a RARE value (exact cents) is strong
+    match evidence, agreeing on a 5-value segment is weak. This is the
+    classic entity-resolution scoring tier that sits on top of any
+    blocking family (SNM, LSH, containment) already in the registry.
+
+    Exactness: u expands to w = 2·log2(N) − log2(Σ c_v²) — integer-arg
+    log2 (engine-identical) — rounded at 9dp, scaled to exact BIGINT
+    MICRO-BITS; the pair score is then pure integer arithmetic
+    (parity structural, the q_mixture_weights shape). Balances shift
+    by +$1000 in cents before banding so integer division never sees
+    a negative operand (Spark div truncates toward zero, DuckDB //
+    floors — they agree only on non-negatives). Deterministic top-k
+    tie-break by (cust_a, cust_b).
+
+    Plan shape: the pair stage is a BLOCKED equi-self-join on the
+    nation key (fan-out Σ_blocks b², never N² — the blocking-join
+    family's contract; at 100 TB the block key widens to
+    nation × balance-band to bound b). ALL THREE field histograms come
+    from ONE grouping-sets aggregate (grouping sets expand map-side —
+    the q_privacy_kanonymity trick — so the dim is scanned once for
+    every weight, not twice per field), pivoted by grouping_id into a
+    single one-row weight table broadcast into the pair stream; the
+    top-k compiles to TakeOrderedAndProject."""
+    prep(spark)
+    cust = load(spark, sf_dir, "customer")
+    f = cust.select(
+        "c_custkey",
+        "c_nationkey",
+        "c_mktsegment",
+        # try_cast: a 1e300 balance overflows BIGINT at the cents
+        # quantization and must NULL out (the row then agrees with
+        # nothing on cents/band), not abort the stage (COVERAGE.md M11)
+        (
+            F.round(F.col("c_acctbal") * 100).try_cast("bigint")
+            + F.lit(_LINK_SHIFT)
+        ).alias("cents"),
+    ).withColumn("band", F.expr("cents div 10000"))
+
+    # one pass for all three per-field value histograms; gid bit = 1
+    # marks an AGGREGATED column, so (seg)=3, (band)=5, (cents)=6
+    cells = f.groupingSets(
+        [["c_mktsegment"], ["band"], ["cents"]],
+        "c_mktsegment",
+        "band",
+        "cents",
+    ).agg(F.count(F.lit(1)).alias("cnt"), F.grouping_id().alias("gid"))
+    stats = cells.groupBy("gid").agg(
+        F.sum(F.col("cnt") * F.col("cnt")).cast("bigint").alias("s2"),
+        F.sum("cnt").cast("bigint").alias("n"),
+    )
+    wmicro = (
+        F.floor(
+            F.round(2 * F.log2("n") - F.log2("s2"), 9).cast("decimal(18,9)")
+            * 1000000
+        )
+        .cast("bigint")
+        .alias("w")
+    )
+    ws = stats.select("gid", wmicro)
+    wrow = ws.agg(
+        F.max(F.when(F.col("gid") == 3, F.col("w"))).alias("w_seg"),
+        F.max(F.when(F.col("gid") == 5, F.col("w"))).alias("w_band"),
+        F.max(F.when(F.col("gid") == 6, F.col("w"))).alias("w_cents"),
+    )
+
+    a = f.select(
+        F.col("c_custkey").alias("cust_a"),
+        F.col("c_nationkey").alias("nat_a"),
+        F.col("c_mktsegment").alias("seg_a"),
+        F.col("cents").alias("cents_a"),
+        F.col("band").alias("band_a"),
+    )
+    b = f.select(
+        F.col("c_custkey").alias("cust_b"),
+        F.col("c_nationkey").alias("nat_b"),
+        F.col("c_mktsegment").alias("seg_b"),
+        F.col("cents").alias("cents_b"),
+        F.col("band").alias("band_b"),
+    )
+    pairs = a.join(
+        b,
+        (F.col("nat_a") == F.col("nat_b"))
+        & (F.col("cust_a") < F.col("cust_b")),
+    ).select(
+        "cust_a",
+        "cust_b",
+        (F.col("seg_a") == F.col("seg_b")).cast("bigint").alias("same_seg"),
+        (F.col("band_a") == F.col("band_b")).cast("bigint").alias("same_band"),
+        (F.col("cents_a") == F.col("cents_b"))
+        .cast("bigint")
+        .alias("same_cents"),
+    )
+    score = (
+        F.col("same_seg") * F.col("w_seg")
+        + F.col("same_band") * F.col("w_band")
+        + F.col("same_cents") * F.col("w_cents")
+    ).cast("bigint")
+    return (
+        pairs.crossJoin(F.broadcast(wrow))
+        .select(
+            "cust_a",
+            "cust_b",
+            "same_seg",
+            "same_band",
+            "same_cents",
+            score.alias("score_microbits"),
+        )
+        .orderBy(F.col("score_microbits").desc(), "cust_a", "cust_b")
+        .limit(_LINK_K)
     )

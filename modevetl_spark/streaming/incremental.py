@@ -48,6 +48,8 @@ import shutil
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from modevetl_spark.functions.jvmnum import java_double_str
+
 
 class Watermark:
     """Durable high-water mark (epoch micros or any orderable scalar).
@@ -461,48 +463,13 @@ def _hive_part_value(v) -> str:
         if v.microsecond:
             s += f".{v.microsecond:06d}".rstrip("0")
     elif isinstance(v, float):
-        s = _java_double_str(v)
+        s = java_double_str(v)
     else:
         s = str(v)
     return "".join(
         f"%{ord(ch):02X}" if (ch in _HIVE_ESCAPED or ord(ch) < 32) else ch
         for ch in s
     )
-
-
-def _java_double_str(x: float) -> str:
-    """Java ``Double.toString`` rendering — what Spark writes in partition
-    paths for double values ('1.0E-7', '600000.0', 'NaN'), which diverges
-    from Python's repr ('1e-07', 'nan'): decimal notation for
-    1e-3 <= |x| < 1e7, otherwise scientific 'd.dddEe' with no '+' and no
-    exponent padding. Both languages print the shortest digit string that
-    round-trips, so only the framing differs. (FloatType partition
-    columns can still diverge — Float.toString uses float32 shortest
-    digits — and then the swap's pre-flight aborts loudly rather than
-    mis-addressing.)"""
-    import math
-    from decimal import Decimal
-
-    if math.isnan(x):
-        return "NaN"
-    if math.isinf(x):
-        return "Infinity" if x > 0 else "-Infinity"
-    if x == 0.0:
-        return "-0.0" if math.copysign(1.0, x) < 0 else "0.0"
-    sign = "-" if x < 0 else ""
-    d = Decimal(repr(abs(x)))
-    digits = "".join(map(str, d.as_tuple().digits)).rstrip("0") or "0"
-    adj = d.adjusted()  # exponent of the leading digit
-    if -3 <= adj < 7:
-        if adj >= 0:
-            ip = digits[: adj + 1].ljust(adj + 1, "0")
-            fp = digits[adj + 1 :] or "0"
-        else:
-            ip = "0"
-            fp = "0" * (-adj - 1) + digits
-        return f"{sign}{ip}.{fp}"
-    mantissa = digits[0] + "." + (digits[1:] or "0")
-    return f"{sign}{mantissa}E{adj}"
 
 
 def tick(

@@ -138,6 +138,9 @@ class Walker:
                         if not hasattr(mod, a.name):  # a submodule
                             importlib.import_module(f"{name}.{a.name}")
                         scope[a.asname or a.name] = getattr(mod, a.name)
+                    # the edge to each imported object hashes its content;
+                    # where it is imported from does not change the key
+                    n.module, n.level = None, 0
 
         def resolve(e):
             if isinstance(e, ast.Name) and not e.id.startswith("__"):  # not __file__ etc.

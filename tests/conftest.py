@@ -34,12 +34,14 @@ _SLOW_TESTS = {
     "test_dirty_contracts.py::test_dirty_parity[q_sim_topk_lsh]",
     "test_dirty_contracts.py::test_event_time_guards_bound_hostile_timestamps",
     "test_hardening_property.py::test_try_fold_equals_raw_fold_on_in_range_data",
+    "test_joins.py::TestJoinContainment::test_directed_asymmetry",
     "test_jx_property.py::test_aggstate_any_split_equals_full",
     "test_jx_property.py::test_gapfill_interp_linearity_on_random_series",
     "test_jx_property.py::test_global_rank_any_data_any_width",
     "test_jx_property.py::test_global_running_any_data_any_width",
     "test_jx_property.py::test_scd2_incremental_any_time_split_equals_full",
     "test_jx_property.py::test_sequential_poisson_priority_is_layout_invariant",
+    "test_ml.py::TestEmbeddingPca::test_python_differential_exact",
     "test_ml.py::test_curate_job_split_equivalence_and_replay",
     "test_ml.py::test_kmeans_fast_path_tie_break_and_empty_cluster",
     "test_ml.py::test_kmeans_fast_profile_guard",
@@ -49,25 +51,21 @@ _SLOW_TESTS = {
     "test_operators.py::test_pagerank_closed_forms",
     "test_operators.py::test_pagerank_unquantized_mode",
     "test_operators.py::test_run_dedup_incremental_batches_equal_full",
+    "test_pipeline.py::TestMixtureTemperature::test_sub_ppm_source_boost_is_null_both_engines",
     "test_pipeline.py::test_dedup_chunk_encode_pack_pipeline",
-    "test_plans.py::test_no_data_sized_global_windows",
-    "test_plans.py::test_no_python_udf_in_jvm_paths",
     "test_sketch_property.py::test_bpe_merges_differential",
     "test_sketch_property.py::test_hh_grouped_matches_python_exact_rule",
     "test_sketch_property.py::test_kmv_matches_python_replay",
     "test_sketch_property.py::test_snm_pairs_match_naive_definition",
     "test_sketch_property.py::test_textrank_differential",
+    "test_sketches.py::TestHllTick::test_null_keys_excluded",
+    "test_sketches.py::test_histogram_quantiles_bracket_exact_rank",
     "test_streaming.py::test_jobs_cli_settings_file",
     "test_streaming.py::test_run_incremental_partitioned_sink",
     "test_streaming.py::test_streaming_dedup_equals_full_recompute",
     "test_streaming.py::test_upsert_null_key_replay_converges",
     "test_warehouse.py::test_ntile_from_rank_matches_sql_ntile",
     "test_warehouse.py::test_ranking_operators_degenerate_inputs",
-    "test_wave10.py::TestHllTick::test_null_keys_excluded",
-    "test_wave11.py::TestEmbeddingPca::test_python_differential_exact",
-    "test_wave11.py::TestMixtureTemperature::test_sub_ppm_source_boost_is_null_both_engines",
-    "test_wave7.py::test_histogram_quantiles_bracket_exact_rank",
-    "test_wave8.py::TestJoinContainment::test_directed_asymmetry",
 }
 
 

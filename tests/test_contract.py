@@ -8,10 +8,11 @@ from __future__ import annotations
 import ast
 import functools
 import glob
-import importlib
+import importlib.util
 import json
 import os
 import pkgutil
+import sys
 
 import pytest
 
@@ -102,6 +103,32 @@ def test_fingerprints_independent_of_hash_seed():
     # its own hash seed
     entry = _committed_grading()["q_agg_incremental_state"]
     assert entry["round"] > 0 and entry["fp"] == one["q_agg_incremental_state"]
+
+
+def test_fingerprint_ignores_import_path(tmp_path, monkeypatch):
+    """Two defs that import the same object by two paths hash alike: the
+    edge to the object carries its content, so moving a helper between
+    modules re-queues no key that only imports it."""
+    src = tmp_path / "fp_probe.py"
+    src.write_text(
+        "def by_package():\n"
+        "    from modevetl_spark.streaming import tick\n"
+        "    return tick\n"
+        "\n"
+        "\n"
+        "def by_module():\n"
+        "    from modevetl_spark.streaming.incremental import tick\n"
+        "    return tick\n"
+    )
+    name = f"{GE.PKG}._fp_probe"
+    spec = importlib.util.spec_from_file_location(name, src)
+    mod = importlib.util.module_from_spec(spec)
+    monkeypatch.setitem(sys.modules, name, mod)
+    spec.loader.exec_module(mod)
+    w = GE.Walker()
+    a, b = w.node(mod.by_package), w.node(mod.by_module)
+    assert w.edges[a] == w.edges[b] and w.edges[a]
+    assert w.digest[a] == w.digest[b]
 
 
 def test_load_all_raises_on_missing_module(monkeypatch, request):
@@ -208,6 +235,34 @@ def test_every_def_reached_from_a_front_door():
     )
     gone = sorted(set(_UNREACHED_KEPT) - set(unreached))
     assert not gone, f"kept entries now reached or gone, drop them: {gone}"
+
+
+def test_no_module_below_queries_imports_it():
+    """The query modules are the top layer: no other package module
+    imports ``modevetl_spark.queries``. A helper that a query and an
+    operator share lives in ``functions/`` or ``operators/``."""
+    top = f"{GE.PKG}.queries"
+    pkg = os.path.join(GE.ROOT, GE.PKG)
+    offenders = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, GE.ROOT)
+        parts = rel[: -len(".py")].split(os.sep)
+        if parts[1] == "queries":
+            continue
+        package = ".".join(parts[:-1])
+        with open(path, encoding="utf-8") as f:
+            tree = ast.parse(f.read())
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Import):
+                names = [a.name for a in n.names]
+            elif isinstance(n, ast.ImportFrom):
+                base = importlib.util.resolve_name("." * n.level + (n.module or ""), package)
+                names = [base, *(f"{base}.{a.name}" for a in n.names)]
+            else:
+                continue
+            if any(x == top or x.startswith(top + ".") for x in names):
+                offenders.append(f"{rel}:{n.lineno}")
+    assert not offenders, f"modules below the query layer import it: {offenders}"
 
 
 def _unloaded_imports(path: str) -> list[str]:

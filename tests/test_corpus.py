@@ -1,137 +1,79 @@
-"""Unit tests for the wave10 keys (queries/wave10.py): full python
-replays of the deterministic sketches, merge laws, plan-shape gates, and
-the registration contract.
+"""Tests for the corpus-statistics keys (queries/corpus.py): python
+replays of the association, dispersion, tokenizer, keyword, LM-score and
+divergence operators, and their plan shapes.
 """
 
 from __future__ import annotations
 
-import hashlib
+import math
 
 import pandas as pd
-from pyspark.sql import functions as F
-
-from modevetl_spark.queries.wave10 import QUERIES
 
 
-def test_wave10_drained_into_the_window():
-    """Every wave10 key is registered with an oracle (their graded
-    evidence is checked registry-wide by
-    test_contract.py::test_grading_evidence_current)."""
-    from modevetl_spark import queries as Q
+class TestSourceKL:
+    def test_fixture_nonneg_and_shape(self, spark, sf_dir):
+        from modevetl_spark.queries.corpus import source_kl_divergence
 
-    qs, oracle = Q.all_queries(), Q.all_oracle()
-    assert set(QUERIES) <= set(qs)
-    assert set(QUERIES) <= set(oracle)
+        rows = source_kl_divergence(spark, sf_dir).collect()
+        assert len(rows) == 20
+        for r in rows:
+            # KL >= 0 (Gibbs); the 9dp term rounding cannot push a real
+            # corpus below zero
+            assert r["kl_bits"] >= 0.0
+            assert r["n_tokens"] > 0 and r["vocab"] > 0
+            assert r["vocab"] <= r["n_tokens"]
 
+    def test_identical_distributions_give_zero(self, spark, tmp_path):
+        """Two sources speaking the exact corpus distribution: every
+        log term is exactly 0, so KL is exactly 0 for both."""
+        from modevetl_spark.queries.corpus import source_kl_divergence
 
-class TestHll:
-    def _py_registers(self, keys, b=6):
-        wbits = 32 - b
-        reg: dict = {}
-        for k in keys:
-            h = int(hashlib.md5(str(k).encode()).hexdigest()[:8], 16)
-            j, w = h >> wbits, h & ((1 << wbits) - 1)
-            rho = wbits + 1 if w == 0 else wbits - (w.bit_length() - 1)
-            reg[j] = max(reg.get(j, 0), rho)
-        return reg
-
-    def test_fixture_full_python_replay(self, spark, sf_dir):
-        """The whole sketch — registers, harmonic sum, estimate —
-        replays exactly from hashlib + python floats (every harmonic
-        term is an exact power of two, so even the float sum is
-        order-free and exact)."""
-        import duckdb
-
-        from modevetl_spark.queries.wave10 import (
-            _HLL_ALPHA,
-            _HLL_M,
-            sketch_hll,
-        )
-
-        r = sketch_hll(spark, sf_dir).collect()[0]
-        keys = [
-            k
-            for (k,) in duckdb.connect()
-            .execute(
-                f"SELECT l_partkey FROM read_parquet('{sf_dir}/lineitem.parquet')"
-            )
-            .fetchall()
-        ]
-        reg = self._py_registers(keys)
-        s = (_HLL_M - len(reg)) + sum(1.0 / (1 << mj) for mj in reg.values())
-        assert r["n_regs"] == len(reg)
-        assert r["v_zeros"] == _HLL_M - len(reg)
-        assert r["harmonic_sum"] == s
-        assert r["est_hll"] == _HLL_ALPHA * _HLL_M * _HLL_M / s
-        assert r["exact_distinct"] == len(set(keys))
-        assert r["ok_2sigma"] == (
-            abs(r["est_hll"] - r["exact_distinct"]) / r["exact_distinct"]
-            <= 2 * 1.04 / _HLL_M**0.5
-        )
-
-    def test_registers_merge_by_max_and_dedupe_free(self, spark):
-        """HLL is max-mergeable: state(A ⊎ B) == per-register max of
-        state(A), state(B) — and duplicates change nothing (insert
-        idempotence), the property KMV needs a distinct() for."""
-        from modevetl_spark.operators.sketches import hll_state
-
-        a = spark.createDataFrame([(i,) for i in range(50)], "k long")
-        b = spark.createDataFrame(
-            [(i,) for i in range(30, 120)] * 3, "k long"  # overlaps + dups
-        )
-        sa = {r["j"]: r["mj"] for r in hll_state(a, "k").collect()}
-        sb = {r["j"]: r["mj"] for r in hll_state(b, "k").collect()}
-        both = a.unionByName(b)
-        sab = {r["j"]: r["mj"] for r in hll_state(both, "k").collect()}
-        merged = {
-            j: max(sa.get(j, 0), sb.get(j, 0)) for j in set(sa) | set(sb)
+        pd.DataFrame(
+            {
+                "doc_id": [0, 1],
+                "text": ["x y x y", "x y x y"],
+                "source": ["srcA", "srcB"],
+            }
+        ).to_parquet(str(tmp_path / "documents.parquet"))
+        got = {
+            r["source"]: r
+            for r in source_kl_divergence(spark, str(tmp_path)).collect()
         }
-        assert merged == sab
-        assert sab == self._py_registers(list(range(120)))
+        assert got["srcA"]["kl_bits"] == 0.0
+        assert got["srcB"]["kl_bits"] == 0.0
+        assert got["srcA"]["n_tokens"] == 4 and got["srcA"]["vocab"] == 2
 
-    def test_plan_bounded_exchange_no_python(self, spark, sf_dir):
-        from modevetl_spark.queries.wave10 import sketch_hll
+    def test_disjoint_vocabularies_give_one_bit(self, spark, tmp_path):
+        """Two equal-mass sources with disjoint vocabularies: each
+        source's tokens are exactly 2x over-represented vs the corpus,
+        so KL = log2(2) = 1 bit exactly, via integer-arg log2 terms."""
+        from modevetl_spark.queries.corpus import source_kl_divergence
+
+        pd.DataFrame(
+            {
+                "doc_id": [0, 1],
+                "text": ["a a a", "b b b"],
+                "source": ["srcA", "srcB"],
+            }
+        ).to_parquet(str(tmp_path / "documents.parquet"))
+        got = {
+            r["source"]: r["kl_bits"]
+            for r in source_kl_divergence(spark, str(tmp_path)).collect()
+        }
+        assert got == {"srcA": 1.0, "srcB": 1.0}
+
+    def test_plan_single_fact_scan_behind_checkpoint(self, spark, sf_dir):
+        from modevetl_spark.queries.corpus import source_kl_divergence
         from tests.test_plans import plan
 
-        p = plan(sketch_hll(spark, sf_dir))
-        assert "Python" not in p
+        p = plan(source_kl_divergence(spark, sf_dir))
+        # the (source, token) agg ran eagerly behind the checkpoint:
+        # both marginals and the term join read the materialized table,
+        # never the documents parquet (zero fact rescans)
+        assert "documents" not in p
         assert "SortMergeJoin" not in p
-        assert "Window" not in p
-
-    def test_rho_exact_on_every_power_of_two_both_engines(self, spark):
-        """Round-8 advice: pin the rank derivation on the power-of-two
-        boundary words where a floor(log2) form COULD misbucket. rho is
-        now derived from bit length — length(bin(w)) in both engines —
-        so this sweeps every boundary word w ∈ {2^0..2^25, 2^k−1,
-        2^k+1} through the Spark expression AND the DuckDB oracle
-        fragment and asserts both equal python's w.bit_length() truth."""
-        import duckdb
-
-        from pyspark.sql import functions as F
-
-        wbits = 26
-        words = sorted(
-            {1 << k for k in range(wbits)}
-            | {(1 << k) - 1 for k in range(1, wbits + 1)}
-            | {(1 << k) + 1 for k in range(1, wbits - 1)}
-        )
-        words = [w for w in words if 0 < w < (1 << wbits)]
-        truth = {w: wbits + 1 - w.bit_length() for w in words}
-        sdf = spark.createDataFrame([(w,) for w in words], "w long").select(
-            "w",
-            (F.lit(wbits + 1) - F.length(F.bin("w")).cast("bigint")).alias("rho"),
-        )
-        assert {r["w"]: r["rho"] for r in sdf.collect()} == truth
-        duck = dict(
-            duckdb.connect()
-            .execute(
-                "SELECT w, %d + 1 - CAST(length(bin(w)) AS BIGINT) "
-                "FROM (SELECT UNNEST(?::BIGINT[]) AS w)" % wbits,
-                [words],
-            )
-            .fetchall()
-        )
-        assert duck == truth
+        assert "Python" not in p
+        assert "BroadcastHashJoin" in p
 
 
 class TestCooccurPmi:
@@ -141,11 +83,7 @@ class TestCooccurPmi:
         non-self, above the support floor."""
         import math
 
-        from modevetl_spark.queries.wave10 import (
-            _PMI_K,
-            _PMI_MIN,
-            cooccur_pmi,
-        )
+        from modevetl_spark.queries.corpus import _PMI_K, _PMI_MIN, cooccur_pmi
 
         rows = cooccur_pmi(spark, sf_dir).collect()
         assert len(rows) == _PMI_K
@@ -194,11 +132,7 @@ class TestCooccurPmi:
         hand-checked against a full python reference."""
         import math
 
-        from modevetl_spark.queries.wave10 import (
-            _PMI_MIN,
-            _PMI_W,
-            cooccur_pmi,
-        )
+        from modevetl_spark.queries.corpus import _PMI_MIN, _PMI_W, cooccur_pmi
 
         # 6 docs "u v" (exclusive couple), 8 docs of shuffled frequent
         # fillers where x and y co-occur often but also roam
@@ -247,7 +181,7 @@ class TestCooccurPmi:
         assert got[("u", "v")] > got[("x", "y")]
 
     def test_plan_rowlocal_pairs_broadcast_margins(self, spark, sf_dir):
-        from modevetl_spark.queries.wave10 import cooccur_pmi
+        from modevetl_spark.queries.corpus import cooccur_pmi
         from tests.test_plans import plan
 
         p = plan(cooccur_pmi(spark, sf_dir))
@@ -258,137 +192,9 @@ class TestCooccurPmi:
         assert "documents" not in p
 
 
-class TestLinkageWeights:
-    def test_fixture_scoring_contract(self, spark, sf_dir):
-        """Scores are a pure function of the agreement pattern (all
-        rows with the same flags share one score), non-negative, and
-        monotone in agreements; ordering is deterministic."""
-        from modevetl_spark.queries.wave10 import _LINK_K, linkage_weights
-
-        rows = linkage_weights(spark, sf_dir).collect()
-        assert len(rows) == _LINK_K
-        by_pattern: dict = {}
-        for r in rows:
-            pat = (r["same_seg"], r["same_band"], r["same_cents"])
-            by_pattern.setdefault(pat, set()).add(r["score_microbits"])
-            assert r["cust_a"] < r["cust_b"]
-            assert r["score_microbits"] >= 0
-        for scores in by_pattern.values():
-            assert len(scores) == 1
-        # monotone: adding an agreement never lowers the score
-        for pat, scores in by_pattern.items():
-            for pat2, scores2 in by_pattern.items():
-                if all(a >= b for a, b in zip(pat, pat2)):
-                    assert next(iter(scores)) >= next(iter(scores2))
-        keys = [
-            (-r["score_microbits"], r["cust_a"], r["cust_b"]) for r in rows
-        ]
-        assert keys == sorted(keys)
-
-    def test_hand_built_exact_weights(self, spark, tmp_path):
-        """Six customers in one nation block, distributions chosen so
-        the u-weights are hand-computable: w_seg = log2(36/18) = 1 bit
-        exactly, w_band = log2(3) -> 1584962 microbits, w_cents =
-        log2(4.5) -> 2169925 microbits. All 15 pair scores asserted."""
-        from modevetl_spark.queries.wave10 import linkage_weights
-
-        pd.DataFrame(
-            {
-                "c_custkey": [1, 2, 3, 4, 5, 6],
-                "c_nationkey": [7] * 6,
-                "c_mktsegment": ["A", "A", "B", "B", "A", "B"],
-                "c_acctbal": [1.00, 2.00, 101.00, 102.00, 500.00, 500.00],
-            }
-        ).astype({"c_nationkey": "int32"}).to_parquet(str(tmp_path / "customer.parquet"))
-        got = {
-            (r["cust_a"], r["cust_b"]): r["score_microbits"]
-            for r in linkage_weights(spark, str(tmp_path)).collect()
-        }
-        w_seg, w_band, w_cents = 1_000_000, 1_584_962, 2_169_925
-        want = {}
-        segs = {1: "A", 2: "A", 3: "B", 4: "B", 5: "A", 6: "B"}
-        bands = {1: 10, 2: 10, 3: 11, 4: 11, 5: 15, 6: 15}
-        cents = {1: 100100, 2: 100200, 3: 110100, 4: 110200,
-                 5: 150000, 6: 150000}
-        for a_ in range(1, 7):
-            for b_ in range(a_ + 1, 7):
-                want[(a_, b_)] = (
-                    (segs[a_] == segs[b_]) * w_seg
-                    + (bands[a_] == bands[b_]) * w_band
-                    + (cents[a_] == cents[b_]) * w_cents
-                )
-        assert got == want
-        # the exact-cents collision out-scores every same-seg+band pair
-        assert want[(5, 6)] == w_band + w_cents == max(want.values())
-
-    def test_plan_blocked_join_no_cartesian(self, spark, sf_dir):
-        from modevetl_spark.queries.wave10 import linkage_weights
-        from tests.test_plans import plan
-
-        p = plan(linkage_weights(spark, sf_dir))
-        assert "Python" not in p
-        # the pair stage must key on the block (hash join on the
-        # nation key) — never an unkeyed cartesian. The only
-        # nested-loop joins allowed are the three ONE-ROW weight
-        # scalars riding broadcast cross joins (the mixture_weights
-        # shape), so every BNLJ in the plan must be a Cross build.
-        assert "CartesianProduct" not in p
-        assert "BroadcastHashJoin" in p
-        # exactly ONE nested-loop join: the one-row weight scalar
-        assert p.count("BroadcastNestedLoopJoin (") <= 1
-        assert "Expand" in p  # all three histograms from one pass
-        assert "TakeOrderedAndProject" in p
-
-
-class TestHllTick:
-    def test_null_keys_excluded(self, spark):
-        """Round-9 hardening (the NULL-key advice class, applied
-        family-wide): a NULL key hashes to a j=NULL/mj=NULL register
-        row — NULLs must be excluded like every sketch (COUNT DISTINCT
-        semantics), so a dirty batch folds to exactly the clean batch's
-        registers."""
-        from modevetl_spark.operators.sketches import hll_state
-
-        clean = spark.createDataFrame([(str(i),) for i in range(60)], "k string")
-        dirty = clean.unionAll(
-            spark.createDataFrame([(None,), (None,)], "k string")
-        )
-        want = {r["j"]: r["mj"] for r in hll_state(clean, "k").collect()}
-        got = {r["j"]: r["mj"] for r in hll_state(dirty, "k").collect()}
-        assert got == want and None not in got
-
-    def test_oracle_null_contract_matches_engine(self, spark, tmp_path):
-        """Round-10 ADVICE fix: the DuckDB oracle's sketch half must
-        carry the SAME NULL-key filter as the engine's hll_state —
-        without it md5(NULL) yields a j=NULL register row that inflates
-        n_regs while adding nothing to s_hit, so the two estimates
-        diverge on any dirty key column (invisible on the NOT NULL
-        fixtures). Differential: a NULL-containing lineitem through
-        BOTH halves must agree on every column."""
-        import duckdb
-
-        from modevetl_spark.queries.wave10 import _HLL_ORACLE, sketch_hll
-
-        pd.DataFrame(
-            {"l_partkey": pd.array(list(range(1, 241)) + [None] * 7, dtype="Int64")}
-        ).to_parquet(str(tmp_path / "lineitem.parquet"))
-        got = sketch_hll(spark, str(tmp_path)).collect()[0].asDict()
-        con = duckdb.connect()
-        con.execute(
-            f"CREATE VIEW lineitem AS "
-            f"SELECT * FROM read_parquet('{tmp_path}/lineitem.parquet')"
-        )
-        cur = con.execute(_HLL_ORACLE)
-        want = dict(zip([d[0] for d in cur.description], cur.fetchone()))
-        assert got == want
-        # the NULL rows must not have registered: exact_distinct ignores
-        # NULL by COUNT DISTINCT semantics, and the sketch half now does too
-        assert got["exact_distinct"] == 240
-
-
 class TestBurstiness:
     def test_fixture_dispersion_contract(self, spark, sf_dir):
-        from modevetl_spark.queries.wave10 import (
+        from modevetl_spark.queries.corpus import (
             _BURST_K,
             _BURST_MIN_T,
             token_burstiness,
@@ -407,7 +213,7 @@ class TestBurstiness:
         """Integer-exact poles: a token evenly spread (15 per doc,
         4 docs) has VMR exactly 0; a token dumped entirely into one
         doc (60 in doc 1) has VMR exactly 60."""
-        from modevetl_spark.queries.wave10 import token_burstiness
+        from modevetl_spark.queries.corpus import token_burstiness
 
         docs = ["h " * 60 + "f " * 15] + ["f " * 15] * 3
         pd.DataFrame(
@@ -423,7 +229,7 @@ class TestBurstiness:
         assert got["h"]["total"] == 60 and got["f"]["total"] == 60
 
     def test_plan_two_level_agg_no_rescan(self, spark, sf_dir):
-        from modevetl_spark.queries.wave10 import token_burstiness
+        from modevetl_spark.queries.corpus import token_burstiness
         from tests.test_plans import plan
 
         p = plan(token_burstiness(spark, sf_dir))
@@ -437,7 +243,7 @@ class TestBurstiness:
 
 class TestBpeMerges:
     def test_fixture_merge_contract(self, spark, sf_dir):
-        from modevetl_spark.queries.wave10 import _BPE_ROUNDS, bpe_merges
+        from modevetl_spark.queries.corpus import _BPE_ROUNDS, bpe_merges
 
         rows = sorted(
             bpe_merges(spark, sf_dir).collect(), key=lambda r: r["step"]
@@ -459,7 +265,7 @@ class TestBpeMerges:
         (Sennrich et al. 2016): all eight merges and their weighted
         counts are hand-derived, including the lexicographic
         tie-breaks among equal-count pairs."""
-        from modevetl_spark.queries.wave10 import bpe_merges
+        from modevetl_spark.queries.corpus import bpe_merges
 
         docs = {
             0: "low low low low low",
@@ -494,7 +300,7 @@ class TestBpeMerges:
         rows — so the returned plan touches neither the corpus nor any
         join/exchange (the pre-r13 form unioned 8 checkpointed one-row
         DataFrames through 8 broadcast exchanges)."""
-        from modevetl_spark.queries.wave10 import bpe_merges
+        from modevetl_spark.queries.corpus import bpe_merges
         from tests.test_plans import plan
 
         p = plan(bpe_merges(spark, sf_dir))
@@ -508,7 +314,7 @@ class TestBpeMerges:
 def test_burstiness_single_doc_corpus_empty(spark, tmp_path):
     """A one-document corpus has no between-document variance: the
     D > 1 guard empties the result instead of dividing by zero."""
-    from modevetl_spark.queries.wave10 import token_burstiness
+    from modevetl_spark.queries.corpus import token_burstiness
 
     pd.DataFrame({"doc_id": [0], "text": ["h " * 60]}).to_parquet(
         str(tmp_path / "documents.parquet")
@@ -518,7 +324,7 @@ def test_burstiness_single_doc_corpus_empty(spark, tmp_path):
 
 class TestTextRank:
     def test_fixture_score_contract(self, spark, sf_dir):
-        from modevetl_spark.queries.wave10 import _TR_K, textrank_keywords
+        from modevetl_spark.queries.corpus import _TR_K, textrank_keywords
 
         rows = textrank_keywords(spark, sf_dir).collect()
         assert len(rows) == _TR_K
@@ -534,7 +340,7 @@ class TestTextRank:
         with equal weights) has the analytic fixpoint WS = 1.0 at EVERY
         iteration: each node receives exactly half of each neighbor's
         unit score. The engines must hit 1.0 exactly."""
-        from modevetl_spark.queries.wave10 import textrank_keywords
+        from modevetl_spark.queries.corpus import textrank_keywords
 
         pd.DataFrame(
             {"doc_id": range(10), "text": ["x y z"] * 10}
@@ -552,7 +358,7 @@ class TestTextRank:
         """Hub-and-spoke: h co-occurs with both a and b, a and b only
         with h — h must out-rank the (symmetric, equal-scored)
         spokes."""
-        from modevetl_spark.queries.wave10 import textrank_keywords
+        from modevetl_spark.queries.corpus import textrank_keywords
 
         docs = ["h a"] * 6 + ["h b"] * 6
         pd.DataFrame(
@@ -567,7 +373,7 @@ class TestTextRank:
         assert got["h"] > got["a"]
 
     def test_plan_iterations_on_checkpointed_graph(self, spark, sf_dir):
-        from modevetl_spark.queries.wave10 import textrank_keywords
+        from modevetl_spark.queries.corpus import textrank_keywords
         from tests.test_plans import plan
 
         p = plan(textrank_keywords(spark, sf_dir))
@@ -580,7 +386,7 @@ class TestDocLmScore:
     def test_fixture_contract(self, spark, sf_dir):
         import duckdb
 
-        from modevetl_spark.queries.wave10 import doc_lm_score
+        from modevetl_spark.queries.corpus import doc_lm_score
 
         rows = doc_lm_score(spark, sf_dir).collect()
         n_docs = (
@@ -605,7 +411,7 @@ class TestDocLmScore:
         log2(5) — the LM-filter ordering (rare-token docs rank high)."""
         import math
 
-        from modevetl_spark.queries.wave10 import doc_lm_score
+        from modevetl_spark.queries.corpus import doc_lm_score
 
         pd.DataFrame(
             {"doc_id": [0, 1], "text": ["x x x x", "y"]}
@@ -621,7 +427,7 @@ class TestDocLmScore:
         assert got[1] > got[0]
 
     def test_plan_single_fact_scan_behind_checkpoint(self, spark, sf_dir):
-        from modevetl_spark.queries.wave10 import doc_lm_score
+        from modevetl_spark.queries.corpus import doc_lm_score
         from tests.test_plans import plan
 
         p = plan(doc_lm_score(spark, sf_dir))
@@ -633,7 +439,7 @@ class TestDocLmScore:
 
 class TestUnseenMass:
     def test_fixture_identities_and_regimes(self, spark, sf_dir):
-        from modevetl_spark.queries.wave10 import unseen_mass
+        from modevetl_spark.queries.corpus import unseen_mass
 
         rows = unseen_mass(spark, sf_dir).collect()
         assert len(rows) == 20
@@ -648,7 +454,7 @@ class TestUnseenMass:
     def test_hand_built_exact_mass(self, spark, tmp_path):
         """Source A 'x x y z': hapax {y, z}, dis {x} — unseen mass
         exactly 2/4. Source B all-repeats: exactly 0."""
-        from modevetl_spark.queries.wave10 import unseen_mass
+        from modevetl_spark.queries.corpus import unseen_mass
 
         pd.DataFrame(
             {
@@ -667,10 +473,69 @@ class TestUnseenMass:
         assert (b["hapax"], b["dis"], b["unseen_mass"]) == (0, 0, 0.0)
 
     def test_plan_two_collapsing_aggs_no_join(self, spark, sf_dir):
-        from modevetl_spark.queries.wave10 import unseen_mass
+        from modevetl_spark.queries.corpus import unseen_mass
         from tests.test_plans import plan
 
         p = plan(unseen_mass(spark, sf_dir))
         assert "Python" not in p
         assert "Join" not in p
         assert "Window" not in p
+
+
+class TestSourceJsDivergence:
+    def test_python_differential_textbook_jsd(self, spark, sf_dir):
+        """Semantics gate: the engine value must equal the TEXTBOOK
+        Jensen-Shannon divergence computed directly in probability
+        space (no folds, no algebraic zero-mass shortcut) — proving
+        the integer-log2 chains + the (B − Σb) absent-token trick ARE
+        JSD(p_source ‖ p_corpus), to well under the 6dp the query
+        emits."""
+        import duckdb
+
+        from modevetl_spark.queries.corpus import source_js_divergence
+
+        rows = duckdb.connect().execute(
+            f"SELECT source, text FROM read_parquet('{sf_dir}/documents.parquet')"
+        ).fetchall()
+        sw: dict = {}
+        for src, text in rows:
+            for t in text.lower().split():
+                if t:
+                    sw[(src, t)] = sw.get((src, t), 0) + 1
+        a_tot: dict = {}
+        b: dict = {}
+        for (src, t), c in sw.items():
+            a_tot[src] = a_tot.get(src, 0) + c
+            b[t] = b.get(t, 0) + c
+        n = sum(b.values())
+        want = {}
+        for src in a_tot:
+            A = a_tot[src]
+            klp = 0.0
+            klq = 0.0
+            for t, bc in b.items():
+                q_ = bc / n
+                p_ = sw.get((src, t), 0) / A
+                m_ = (p_ + q_) / 2
+                if p_ > 0:
+                    klp += p_ * math.log2(p_ / m_)
+                klq += q_ * math.log2(q_ / m_)
+            want[src] = (klp + klq) / 2
+        got = {
+            r["source"]: r
+            for r in source_js_divergence(spark, sf_dir).collect()
+        }
+        assert set(got) == set(want)
+        for src in want:
+            assert abs(got[src]["js_bits"] - want[src]) < 1e-5, src
+            assert 0.0 <= got[src]["js_bits"] <= 1.0, src
+            assert got[src]["n_tokens"] == a_tot[src]
+
+    def test_plan_one_scan_margins_broadcast(self, spark, sf_dir):
+        from modevetl_spark.queries.corpus import source_js_divergence
+        from tests.test_plans import plan
+
+        p = plan(source_js_divergence(spark, sf_dir))
+        assert "Python" not in p
+        assert "SortMergeJoin" not in p
+        assert "BroadcastHashJoin" in p

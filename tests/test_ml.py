@@ -4,10 +4,12 @@ paragraph-dedup conservation, attribution join shape."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
 from modevetl_spark.queries import all_queries
+from modevetl_spark.queries.ml import _PCA_D, _PCA_T
 from tests.test_plans import plan
 
 _Q = all_queries()
@@ -883,3 +885,190 @@ def test_interarrival_sane(spark, sf_dir):
     assert r.n_gaps > 0
     assert 0 <= r.median_gap <= r.max_gap
     assert 0 <= r.mean_gap <= r.max_gap
+
+
+class TestModelCalibration:
+    def test_fixture_diagram_and_ece_replay(self, spark, sf_dir):
+        from modevetl_spark.queries.ml import model_calibration
+
+        rows = model_calibration(spark, sf_dir).collect()
+        assert len(rows) == 10
+        assert len({r["ece_micro"] for r in rows}) == 1
+        n_test_total = sum(r["n_test"] for r in rows)
+        for r in rows:
+            assert r["conf"] == r["pos_train"] / r["n_train"]
+            assert r["acc"] == r["pos_test"] / r["n_test"]
+            assert abs(r["gap"] - (r["acc"] - r["conf"])) == 0.0
+        # replay the 9dp term fold exactly from the integer counts
+        acc9 = sum(
+            round(
+                abs(
+                    r["pos_test"] / r["n_test"]
+                    - r["pos_train"] / r["n_train"]
+                )
+                * (r["n_test"] / n_test_total)
+                * 10**9
+            )
+            for r in rows
+        )
+        assert rows[0]["ece_micro"] == acc9 * 10**6 // 10**9
+
+    def test_all_positive_is_perfectly_calibrated(self, spark, tmp_path):
+        """Every order urgent: conf = acc = 1 in every bin, so every gap
+        is exactly 0 and ECE is exactly 0."""
+        from modevetl_spark.queries.ml import model_calibration
+
+        pd.DataFrame(
+            {
+                "o_orderkey": range(500),
+                "o_totalprice": [1000.0 * (i % 300) for i in range(500)],
+                "o_orderpriority": ["1-URGENT"] * 500,
+            }
+        ).to_parquet(str(tmp_path / "orders.parquet"))
+        rows = model_calibration(spark, str(tmp_path)).collect()
+        assert rows
+        for r in rows:
+            assert r["conf"] == 1.0 and r["acc"] == 1.0
+            assert r["gap"] == 0.0 and r["ece_micro"] == 0
+
+    def test_plan_one_exchange_no_window(self, spark, sf_dir):
+        from modevetl_spark.queries.ml import model_calibration
+        from tests.test_plans import plan
+
+        p = plan(model_calibration(spark, sf_dir))
+        assert "Python" not in p
+        assert "SortMergeJoin" not in p
+        assert "Window" not in p
+
+
+class TestEmbeddingPca:
+    def _py_replay(self, sf_dir):
+        """Exact python replay of the whole integer-quantized pipeline:
+        9dp product folds (Fraction-exact sums), FLOOR(x·10^n) BIGINT
+        quantization at every step, floats only for the identical IEEE
+        trees — the same values both engines are REQUIRED to produce."""
+        import math
+        from fractions import Fraction
+
+        import duckdb
+
+        rows = duckdb.connect().execute(
+            f"SELECT embedding FROM read_parquet('{sf_dir}/embeddings.parquet')"
+        ).fetchall()
+        xs = [[float(v) for v in r[0]] for r in rows]
+        n = len(xs)
+        D = _PCA_D
+        m = [[Fraction(0)] * D for _ in range(D)]
+        s = [Fraction(0)] * D
+        for x in xs:
+            for j in range(D):
+                s[j] += Fraction(str(round(x[j], 9)))
+                for k in range(D):
+                    m[j][k] += Fraction(str(round(x[j] * x[k], 9)))
+        cn = [[0] * D for _ in range(D)]
+        for j in range(D):
+            for k in range(D):
+                mm = float(m[j][k])  # nearest double of the exact 9dp sum
+                smj, smk = float(s[j]), float(s[k])
+                cn[j][k] = math.floor((mm - smj * smk / n) / n * 1.0e9)
+        v = [0.125] * D
+
+        def matvec(vec):
+            out = []
+            for j in range(D):
+                acc = 0
+                for k in range(D):
+                    acc += math.floor(cn[j][k] / 1.0e9 * vec[k] * 1.0e12)
+                out.append(float(acc) / 1.0e12)
+            return out
+
+        for _ in range(_PCA_T):
+            w = matvec(v)
+            ss = sum(math.floor(wi * wi * 1.0e12) for wi in w)
+            nrm = math.sqrt(float(ss) / 1.0e12)
+            v = [float(math.floor(wi / nrm * 1.0e9)) / 1.0e9 for wi in w]
+        w = matvec(v)
+        lam_micro = math.floor(
+            float(sum(math.floor(vi * wi * 1.0e12) for vi, wi in zip(v, w)))
+            / 1.0e6
+        )
+        tr_micro = math.floor(float(sum(cn[j][j] for j in range(D))) / 1.0e3)
+        jstar = max(range(D), key=lambda j: (abs(v[j]), -j))
+        sgn = 1.0 if v[jstar] >= 0 else -1.0
+        return [sgn * vi for vi in v], lam_micro, tr_micro
+
+    def test_python_differential_exact(self, spark, sf_dir):
+        """The Spark loadings, Rayleigh micro-units and trace must equal
+        the python replay EXACTLY — every number in the pipeline is
+        either an exact BIGINT or a double produced by the same IEEE
+        tree, so there is no tolerance to grant."""
+        from modevetl_spark.queries.ml import embedding_pca
+
+        want_v, want_lam, want_tr = self._py_replay(sf_dir)
+        rows = sorted(
+            embedding_pca(spark, sf_dir).collect(), key=lambda r: r["dim"]
+        )
+        assert len(rows) == _PCA_D
+        assert rows[0]["lambda_micro"] == want_lam
+        assert rows[0]["trace_micro"] == want_tr
+        for r in rows:
+            assert r["loading"] == want_v[r["dim"] - 1], r["dim"]
+
+    def test_rayleigh_bounded_by_numpy_top_eigenvalue(self, spark, sf_dir):
+        """Semantics gate: the Rayleigh quotient of ANY unit vector is
+        ≤ the top eigenvalue of the matrix (a theorem, asserted against
+        numpy's eigh on the very covariance the query built), and after
+        {T} iterations it must have climbed well past the average
+        eigenvalue (= trace/D): the iteration is genuinely converging
+        toward the dominant direction, not wandering."""
+        import numpy as np
+
+        from modevetl_spark.queries.ml import embedding_pca
+
+        rows = sorted(
+            embedding_pca(spark, sf_dir).collect(), key=lambda r: r["dim"]
+        )
+        lam = rows[0]["lambda_micro"] / 1.0e6
+        tr = rows[0]["trace_micro"] / 1.0e6
+        v = np.array([r["loading"] for r in rows])
+        # unit norm (9dp-quantized, so within 64 quanta)
+        assert abs(float(np.linalg.norm(v)) - 1.0) < 1e-6
+        # sign canonicalization: the largest-|.| component is >= 0
+        jstar = int(np.argmax(np.abs(v)))
+        assert v[jstar] >= 0
+        # rebuild the covariance like the query and eigendecompose
+        import duckdb
+
+        raw = duckdb.connect().execute(
+            f"SELECT embedding FROM read_parquet('{sf_dir}/embeddings.parquet')"
+        ).fetchall()
+        X = np.array([r[0] for r in raw], dtype=np.float64)
+        C = np.cov(X, rowvar=False, bias=True)
+        top = float(np.linalg.eigvalsh(C)[-1])
+        assert lam <= top + 1e-4
+        assert lam > tr / _PCA_D  # beats the average eigenvalue
+        assert 0.0 < rows[0]["explained_share"] <= 1.0
+
+    def test_plan_single_corpus_pass_arrow_fold(self, spark, sf_dir):
+        """r13 shape: the corpus pass is ONE pruned scan feeding ONE
+        MapInArrow fold (the 31M-row explode + JVM decimal fold is
+        gone), with exactly the parallelism repartition and the
+        D²-bounded partial-merge exchange; everything downstream is the
+        driver-side bounded replay, so the returned DF carries no join
+        or shuffle at all."""
+        from modevetl_spark.queries.ml import _pca_partials_df, embedding_pca
+        from tests.test_plans import plan
+
+        pp = plan(_pca_partials_df(spark, sf_dir))
+        assert pp.count("MapInArrow") == 2  # one node: tree + detail
+        # formatted mode prints each operator twice (tree + detail):
+        # 2 Exchange nodes -> at most 4 mentions
+        assert pp.count("Exchange") <= 4
+        assert "Generate" not in pp  # the explode is gone
+        assert "ReadSchema: struct<embedding" in pp  # scan pruned
+        assert "SortMergeJoin" not in pp
+        assert "CartesianProduct" not in pp
+        p = plan(embedding_pca(spark, sf_dir))
+        assert "SortMergeJoin" not in p
+        assert "CartesianProduct" not in p
+        assert "Exchange" not in p

@@ -17,9 +17,8 @@ seam under ANSI mode (COVERAGE.md M11):
 - 1 × integer-div DIVIDE_BY_ZERO: a zero weight (q_sample_weighted).
 
 The fix is the cross-engine-verified mechanical swap — engine
-``.cast(...)`` → ``.try_cast(...)`` (``tsum``/``tmoney`` in
-functions/compat for the dsum/money users, plus the aggstate
-partial-sum seam) and oracle ``CAST`` → ``TRY_CAST``, with ``nullif``
+``.cast(...)`` → ``.try_cast(...)`` (the ``dsum``/``money`` folds in
+functions/compat, plus the aggstate partial-sum seam) and oracle ``CAST`` → ``TRY_CAST``, with ``nullif``
 on the one integer division. Out-of-range operands become NULL and
 fall out of SUM exactly like NULL inputs, so the swap is value-neutral
 on in-range data; Spark and DuckDB agree on the entire class, which
@@ -340,3 +339,44 @@ def test_nan_rows_never_abort(spark, hostile_nan_dir, key):
     (the r12 pruning lesson)."""
     queries = _registry()
     queries[key](spark, hostile_nan_dir).toPandas()
+
+
+class TestRound9Mirror:
+    """Pin the JVM rounding semantics the driver-side replays mirror.
+
+    Spark's ROUND(double, n) and CAST(double AS DECIMAL) both route
+    through BigDecimal.valueOf(d) = Double.toString(d): HALF_UP on the
+    double's SHORTEST decimal representation, not its exact binary
+    expansion. Probed on this build (Spark 4.1.2 / JDK 17): a 16k-value
+    battery with 8k half-ulp boundary doubles matched repr-based HALF_UP
+    16000/16000 while exact-expansion HALF_UP mismatched 2284. The two
+    pinned values below are battery members verified against Spark SQL:
+      round(CAST(7.5e-09 AS DOUBLE), 9)         = 8e-09
+      round(CAST(0.1234567885 AS DOUBLE), 9)    = 0.123456789
+    (their exact expansions are ...49999, which would round DOWN)."""
+
+    def test_round9_uses_shortest_repr(self):
+        from modevetl_spark.functions.jvmnum import round_repr
+
+        assert round_repr(7.5e-09, 9) == 8e-09
+        assert round_repr(0.1234567885, 9) == 0.123456789
+        # non-boundary values are unaffected
+        assert round_repr(0.0128733049, 9) == 0.012873305
+        assert round_repr(1.0 / 3.0, 9) == 0.333333333
+
+    def test_dec9_uses_shortest_repr(self):
+        import decimal
+
+        from modevetl_spark.functions.jvmnum import dec9
+
+        assert dec9(7.5e-09) == decimal.Decimal("8E-9")
+        assert dec9(0.1234567885) == decimal.Decimal("0.123456789")
+
+    def test_nan_inf_passthrough(self):
+        import math
+
+        from modevetl_spark.functions.jvmnum import round_repr
+
+        assert math.isnan(round_repr(float("nan"), 9))
+        assert round_repr(float("inf"), 9) == float("inf")
+        assert round_repr(None, 9) is None

@@ -19,18 +19,20 @@ def plan(df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-# The registry-wide gates each need every query's physical plan; build
-# the 274 plans once per session and share them (a second full pass
-# costs minutes for no extra signal).
+# The registry-wide gates each need every query's plans; build the 274
+# frames once per session and read both plans from each frame's one
+# QueryExecution (a second full pass costs minutes for no extra signal).
 _PLAN_CACHE: dict = {}
 
 
 def all_plans(spark, sf_dir) -> dict:
+    """``{key: (formatted physical plan, global_window_nodes)}``."""
     key = (id(spark), sf_dir)
     if key not in _PLAN_CACHE:
         _PLAN_CACHE.clear()  # one session at a time; don't hoard JVMs
+        frames = ((name, fn(spark, sf_dir)) for name, fn in _Q.items())
         _PLAN_CACHE[key] = {
-            name: plan(fn(spark, sf_dir)) for name, fn in _Q.items()
+            name: (plan(df), global_window_nodes(df)) for name, df in frames
         }
     return _PLAN_CACHE[key]
 
@@ -105,7 +107,7 @@ def test_no_python_udf_in_jvm_paths(spark, sf_dir):
     }
     plans = all_plans(spark, sf_dir)
     for name in sorted(set(_Q) - udf_queries):
-        p = plans[name]
+        p, _ = plans[name]
         assert "EvalPython" not in p and "InPandas" not in p, name
 
 
@@ -117,7 +119,7 @@ def test_no_cartesian_product_anywhere(spark, sf_dir):
     theta-join shape) or be rewritten as equi-joins; there is no
     allowlist because the measured baseline is zero offenders."""
     plans = all_plans(spark, sf_dir)
-    offenders = [n for n, p in plans.items() if "CartesianProduct" in p]
+    offenders = [n for n, (p, _) in plans.items() if "CartesianProduct" in p]
     assert not offenders, offenders
 
 
@@ -191,8 +193,9 @@ def test_no_data_sized_global_windows(spark, sf_dir):
     domain-bounded allowlist may plan a single-partition Window. New
     rank/cumsum/ntile work must go through operators/ranking
     (global_rank / global_running / ntile_from_rank) instead."""
+    plans = all_plans(spark, sf_dir)
     for name in sorted(set(_Q) - BOUNDED_GLOBAL_WINDOW_QUERIES):
-        bad = global_window_nodes(_Q[name](spark, sf_dir))
+        _, bad = plans[name]
         assert not bad, (name, [n.get("windowExpressions") for n in bad])
 
 

@@ -178,3 +178,18 @@ def test_top_supplier_keeps_ties_and_single_fact_scan(spark, sf_dir):
     out = _Q["q_tpch_top_supplier"](spark, sf_dir).collect()
     assert len(out) >= 1
     assert len({r.total_revenue for r in out}) == 1  # all rows at the max
+
+
+class TestWave7PlanGates:
+    """Pin the plan shapes the key docstrings promise."""
+
+    def test_late_shipments_scans_are_pruned(self, spark, sf_dir):
+        from modevetl_spark.queries.reports import QUERIES
+
+        df = QUERIES["q_tpch_late_shipments"](spark, sf_dir)
+        p = df._jdf.queryExecution().executedPlan().toString()
+        scans = [l for l in p.splitlines() if "FileScan parquet" in l]
+        assert len(scans) == 2
+        for s in scans:
+            cols = s.split("[", 1)[1].split("]", 1)[0].split(",")
+            assert len(cols) == 3, s  # 3 columns per side, nothing more

@@ -192,7 +192,7 @@ def _runs_python(texts: dict[int, str], n: int = 8) -> dict:
 def test_substring_runs_differential(spark, tmp_path_factory, docs):
     import pandas as pd
 
-    from modevetl_spark.queries.wave9 import dedup_substring_runs
+    from modevetl_spark.queries.llm import dedup_substring_runs
 
     texts = {i: " ".join(toks) for i, toks in enumerate(docs)}
     want = _runs_python(texts)
@@ -268,7 +268,7 @@ def test_bpe_merges_differential(spark, tmp_path_factory, words, freqs):
     string-replace rewrite."""
     import pandas as pd
 
-    from modevetl_spark.queries.wave10 import _BPE_ROUNDS, bpe_merges
+    from modevetl_spark.queries.corpus import _BPE_ROUNDS, bpe_merges
 
     wf = {w: f for w, f in zip(words, freqs)}
     want = _bpe_python(wf, _BPE_ROUNDS)
@@ -312,7 +312,7 @@ def test_linkage_weights_differential(spark, tmp_path_factory, rows):
 
     import pandas as pd
 
-    from modevetl_spark.queries.wave10 import _LINK_SHIFT, linkage_weights
+    from modevetl_spark.queries.warehouse import _LINK_SHIFT, linkage_weights
 
     tmp = tmp_path_factory.mktemp("linkdiff")
     pd.DataFrame(
@@ -386,7 +386,7 @@ def test_linkage_weights_differential(spark, tmp_path_factory, rows):
 def test_burstiness_differential(spark, tmp_path_factory, docs):
     import pandas as pd
 
-    import modevetl_spark.queries.wave10 as w10
+    import modevetl_spark.queries.corpus as corpus
 
     tmp = tmp_path_factory.mktemp("burstdiff")
     pd.DataFrame(
@@ -401,7 +401,7 @@ def test_burstiness_differential(spark, tmp_path_factory, docs):
     want = {}
     for t, m in per.items():
         total = sum(m.values())
-        if total < w10._BURST_MIN_T:
+        if total < corpus._BURST_MIN_T:
             continue
         sumsq = sum(v * v for v in m.values())
         vmr = ((sumsq - float(total) * total / d_cnt) / (d_cnt - 1)) / (
@@ -410,7 +410,7 @@ def test_burstiness_differential(spark, tmp_path_factory, docs):
         want[t] = (total, len(m), vmr)
     got = {
         r["tok"]: (r["total"], r["n_docs_with"], r["vmr"])
-        for r in w10.token_burstiness(spark, str(tmp)).collect()
+        for r in corpus.token_burstiness(spark, str(tmp)).collect()
     }
     assert got == want  # +,-,*,/ are correctly rounded: bit-equal
 
@@ -437,7 +437,7 @@ def test_textrank_differential(spark, tmp_path_factory, docs):
     rounding and 1-ulp drift absorbed by a 2e-8 tolerance)."""
     import pandas as pd
 
-    import modevetl_spark.queries.wave10 as w10
+    import modevetl_spark.queries.corpus as corpus
 
     tmp = tmp_path_factory.mktemp("trdiff")
     pd.DataFrame(
@@ -449,15 +449,15 @@ def test_textrank_differential(spark, tmp_path_factory, docs):
 
     cab: Counter = Counter()
     for d in docs:
-        for dd in range(1, w10._PMI_W + 1):
+        for dd in range(1, corpus._PMI_W + 1):
             for i in range(len(d) - dd):
                 a, b = d[i], d[i + dd]
                 if a != b:
                     cab[(min(a, b), max(a, b))] += 1
-    cab = {p: c for p, c in cab.items() if c >= w10._PMI_MIN}
+    cab = {p: c for p, c in cab.items() if c >= corpus._PMI_MIN}
     got = {
         r["tok"]: r["score"]
-        for r in w10.textrank_keywords(spark, str(tmp)).collect()
+        for r in corpus.textrank_keywords(spark, str(tmp)).collect()
     }
     if not cab:
         assert got == {}
@@ -468,7 +468,7 @@ def test_textrank_differential(spark, tmp_path_factory, docs):
         adj.setdefault(b, {})[a] = c
     wtot = {v: sum(nb.values()) for v, nb in adj.items()}
     score = {v: 1.0 for v in adj}
-    for _ in range(w10._TR_ITERS):
+    for _ in range(corpus._TR_ITERS):
         new = {}
         for v in adj:
             s_in = sum(
@@ -481,7 +481,7 @@ def test_textrank_differential(spark, tmp_path_factory, docs):
         sorted(
             ((v, round(s, 8)) for v, s in score.items()),
             key=lambda kv: (-kv[1], kv[0]),
-        )[: w10._TR_K]
+        )[: corpus._TR_K]
     )
     assert set(got) == set(want)
     for v in want:

@@ -4,6 +4,7 @@ shape. Oracle hashes prove value parity; these prove the *contracts*."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pyspark.sql.functions as F
 
 from modevetl_spark.queries import all_queries
@@ -679,3 +680,219 @@ def test_global_running_output_name_shadows_source(spark):
     }
     # Both entries cumulate the ORIGINAL cnt: 10, 30, 60.
     assert rows == {1: (10, 10), 2: (30, 30), 3: (60, 60)}
+
+
+class TestReservoirDeterminism:
+    def _sample(self, spark, parts):
+        df = spark.range(5000).repartition(parts)
+        priority = F.conv(
+            F.substring(F.md5(F.col("id").cast("string")), 1, 8), 16, 10
+        ).cast("bigint")
+        return [
+            r["id"]
+            for r in df.select("id", priority.alias("p"))
+            .orderBy("p", "id")
+            .limit(100)
+            .collect()
+        ]
+
+    def test_exact_k_and_layout_invariant(self, spark):
+        one = self._sample(spark, 1)
+        many = self._sample(spark, 13)
+        assert len(one) == 100
+        assert one == many
+
+    def test_plan_is_take_ordered(self, spark):
+        df = spark.range(5000)
+        priority = F.conv(
+            F.substring(F.md5(F.col("id").cast("string")), 1, 8), 16, 10
+        ).cast("bigint")
+        q = df.select("id", priority.alias("p")).orderBy("p", "id").limit(100)
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        assert "TakeOrderedAndProject" in plan, plan
+
+
+class TestWeightedReservoir:
+    def test_fixture_replay_and_gradient(self, spark, sf_dir):
+        """Every selected row's priority must replay exactly from
+        hashlib (min of w 32-bit md5 prefixes), and the weight mix must
+        show the A-ES gradient: urgent (w=5) orders land far more often
+        than low (w=1) orders."""
+        import hashlib
+
+        from modevetl_spark.queries.warehouse import _WRES_K, sample_reservoir_weighted
+
+        rows = sample_reservoir_weighted(spark, sf_dir).collect()
+        assert len(rows) == _WRES_K
+
+        def pri(key: int, w: int) -> int:
+            return min(
+                int(
+                    hashlib.md5(f"{key}#{i}".encode()).hexdigest()[:8], 16
+                )
+                for i in range(1, w + 1)
+            )
+
+        counts: dict = {}
+        for r in rows:
+            assert 1 <= r["weight"] <= 5
+            assert r["priority"] == pri(r["o_orderkey"], r["weight"])
+            counts[r["weight"]] = counts.get(r["weight"], 0) + 1
+        assert counts.get(5, 0) > counts.get(1, 0) > 0
+
+    def test_hand_built_exact_selection(self, spark, tmp_path):
+        """400 orders, k=200: the cut is real, and the exact selected
+        set + ordering replays from an independent python A-ES."""
+        import hashlib
+
+        from modevetl_spark.queries.warehouse import _WRES_K, sample_reservoir_weighted
+
+        n = 400
+        prios = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
+        pd.DataFrame(
+            {
+                "o_orderkey": range(n),
+                "o_orderpriority": [prios[i % 5] for i in range(n)],
+                "o_totalprice": [float(i) for i in range(n)],
+            }
+        ).to_parquet(str(tmp_path / "orders.parquet"))
+
+        def pri(key: int, w: int) -> int:
+            return min(
+                int(
+                    hashlib.md5(f"{key}#{i}".encode()).hexdigest()[:8], 16
+                )
+                for i in range(1, w + 1)
+            )
+
+        want = sorted(
+            ((pri(k, 5 - (k % 5)), k, 5 - (k % 5)) for k in range(n))
+        )[:_WRES_K]
+        got = [
+            (r["priority"], r["o_orderkey"], r["weight"])
+            for r in sample_reservoir_weighted(spark, str(tmp_path)).collect()
+        ]
+        assert got == want
+
+    def test_plan_takeordered_no_exchange(self, spark, sf_dir):
+        from modevetl_spark.queries.warehouse import sample_reservoir_weighted
+        from tests.test_plans import plan
+
+        p = plan(sample_reservoir_weighted(spark, sf_dir))
+        # ORDER BY + LIMIT must compile to per-task k-row heaps merged
+        # on the driver — one streaming scan, zero shuffles
+        assert "TakeOrderedAndProject" in p
+        assert "Exchange" not in p
+        assert "Python" not in p
+
+
+class TestWeightedReservoirMalformed:
+    def test_weight_clamped_to_one(self, spark, tmp_path):
+        """A malformed priority digit >= 6 would give w <= 0, where
+        Spark's sequence(1, w) runs DESCENDING while DuckDB's
+        range(1, w+1) is empty -> NULL: the clamp pins both engines to
+        w = 1 (single replica hash), keeping the row sampleable."""
+        import hashlib
+
+        from modevetl_spark.queries.warehouse import sample_reservoir_weighted
+
+        pd.DataFrame(
+            {
+                "o_orderkey": [1, 2, 3],
+                "o_orderpriority": ["9-BOGUS", "6-ZERO", "1-URGENT"],
+                "o_totalprice": [1.0, 2.0, 3.0],
+            }
+        ).to_parquet(str(tmp_path / "orders.parquet"))
+        rows = {
+            r["o_orderkey"]: r
+            for r in sample_reservoir_weighted(spark, str(tmp_path)).collect()
+        }
+        assert len(rows) == 3
+        assert rows[1]["weight"] == 1 and rows[2]["weight"] == 1
+        assert rows[3]["weight"] == 5
+        for k in (1, 2):
+            assert rows[k]["priority"] == int(
+                hashlib.md5(f"{k}#1".encode()).hexdigest()[:8], 16
+            )
+
+
+class TestLinkageWeights:
+    def test_fixture_scoring_contract(self, spark, sf_dir):
+        """Scores are a pure function of the agreement pattern (all
+        rows with the same flags share one score), non-negative, and
+        monotone in agreements; ordering is deterministic."""
+        from modevetl_spark.queries.warehouse import _LINK_K, linkage_weights
+
+        rows = linkage_weights(spark, sf_dir).collect()
+        assert len(rows) == _LINK_K
+        by_pattern: dict = {}
+        for r in rows:
+            pat = (r["same_seg"], r["same_band"], r["same_cents"])
+            by_pattern.setdefault(pat, set()).add(r["score_microbits"])
+            assert r["cust_a"] < r["cust_b"]
+            assert r["score_microbits"] >= 0
+        for scores in by_pattern.values():
+            assert len(scores) == 1
+        # monotone: adding an agreement never lowers the score
+        for pat, scores in by_pattern.items():
+            for pat2, scores2 in by_pattern.items():
+                if all(a >= b for a, b in zip(pat, pat2)):
+                    assert next(iter(scores)) >= next(iter(scores2))
+        keys = [
+            (-r["score_microbits"], r["cust_a"], r["cust_b"]) for r in rows
+        ]
+        assert keys == sorted(keys)
+
+    def test_hand_built_exact_weights(self, spark, tmp_path):
+        """Six customers in one nation block, distributions chosen so
+        the u-weights are hand-computable: w_seg = log2(36/18) = 1 bit
+        exactly, w_band = log2(3) -> 1584962 microbits, w_cents =
+        log2(4.5) -> 2169925 microbits. All 15 pair scores asserted."""
+        from modevetl_spark.queries.warehouse import linkage_weights
+
+        pd.DataFrame(
+            {
+                "c_custkey": [1, 2, 3, 4, 5, 6],
+                "c_nationkey": [7] * 6,
+                "c_mktsegment": ["A", "A", "B", "B", "A", "B"],
+                "c_acctbal": [1.00, 2.00, 101.00, 102.00, 500.00, 500.00],
+            }
+        ).astype({"c_nationkey": "int32"}).to_parquet(str(tmp_path / "customer.parquet"))
+        got = {
+            (r["cust_a"], r["cust_b"]): r["score_microbits"]
+            for r in linkage_weights(spark, str(tmp_path)).collect()
+        }
+        w_seg, w_band, w_cents = 1_000_000, 1_584_962, 2_169_925
+        want = {}
+        segs = {1: "A", 2: "A", 3: "B", 4: "B", 5: "A", 6: "B"}
+        bands = {1: 10, 2: 10, 3: 11, 4: 11, 5: 15, 6: 15}
+        cents = {1: 100100, 2: 100200, 3: 110100, 4: 110200,
+                 5: 150000, 6: 150000}
+        for a_ in range(1, 7):
+            for b_ in range(a_ + 1, 7):
+                want[(a_, b_)] = (
+                    (segs[a_] == segs[b_]) * w_seg
+                    + (bands[a_] == bands[b_]) * w_band
+                    + (cents[a_] == cents[b_]) * w_cents
+                )
+        assert got == want
+        # the exact-cents collision out-scores every same-seg+band pair
+        assert want[(5, 6)] == w_band + w_cents == max(want.values())
+
+    def test_plan_blocked_join_no_cartesian(self, spark, sf_dir):
+        from modevetl_spark.queries.warehouse import linkage_weights
+        from tests.test_plans import plan
+
+        p = plan(linkage_weights(spark, sf_dir))
+        assert "Python" not in p
+        # the pair stage must key on the block (hash join on the
+        # nation key) — never an unkeyed cartesian. The only
+        # nested-loop joins allowed are the three ONE-ROW weight
+        # scalars riding broadcast cross joins (the mixture_weights
+        # shape), so every BNLJ in the plan must be a Cross build.
+        assert "CartesianProduct" not in p
+        assert "BroadcastHashJoin" in p
+        # exactly ONE nested-loop join: the one-row weight scalar
+        assert p.count("BroadcastNestedLoopJoin (") <= 1
+        assert "Expand" in p  # all three histograms from one pass
+        assert "TakeOrderedAndProject" in p
