@@ -915,10 +915,10 @@ def _hits_replay(
     ``round_repr(·, 9)`` is Spark's ROUND(double, 9) (HALF_UP on the
     double's SHORTEST decimal repr — the JVM's ``BigDecimal.valueOf``
     path, see functions/jvmnum.round_repr and its probe battery),
-    ``dec9`` the
-    double→DECIMAL(18,9) cast (same shortest-repr quantization —
-    Spark's Cast routes double→Decimal through ``BigDecimal.decimal`` =
-    ``valueOf``), decimal sums are exact/order-free in both engines,
+    ``dec9`` the double→DECIMAL(18,9) cast (same shortest-repr
+    quantization — Spark's Cast routes double→Decimal through
+    ``BigDecimal.decimal`` = ``valueOf``), decimal sums are
+    exact/order-free in both engines,
     float(Decimal) and JVM Decimal.toDouble are both correctly rounded,
     and a Python ZeroDivisionError corresponds to the ANSI
     DIVIDE_BY_ZERO abort the in-DAG division raised on the same

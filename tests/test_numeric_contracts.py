@@ -18,10 +18,11 @@ seam under ANSI mode (COVERAGE.md M11):
 
 The fix is the cross-engine-verified mechanical swap — engine
 ``.cast(...)`` → ``.try_cast(...)`` (the ``dsum``/``money`` folds in
-functions/compat, plus the aggstate partial-sum seam) and oracle ``CAST`` → ``TRY_CAST``, with ``nullif``
-on the one integer division. Out-of-range operands become NULL and
-fall out of SUM exactly like NULL inputs, so the swap is value-neutral
-on in-range data; Spark and DuckDB agree on the entire class, which
+functions/compat, plus the aggstate partial-sum seam) and oracle
+``CAST`` → ``TRY_CAST``, with ``nullif`` on the one integer division.
+Out-of-range operands become NULL and fall out of SUM exactly like
+NULL inputs, so the swap is value-neutral on in-range data; Spark and
+DuckDB agree on the entire class, which
 ``test_try_cast_cross_engine_agreement`` pins directly.
 """
 
