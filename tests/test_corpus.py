@@ -10,72 +10,6 @@ import math
 import pandas as pd
 
 
-class TestSourceKL:
-    def test_fixture_nonneg_and_shape(self, spark, sf_dir):
-        from modevetl_spark.queries.corpus import source_kl_divergence
-
-        rows = source_kl_divergence(spark, sf_dir).collect()
-        assert len(rows) == 20
-        for r in rows:
-            # KL >= 0 (Gibbs); the 9dp term rounding cannot push a real
-            # corpus below zero
-            assert r["kl_bits"] >= 0.0
-            assert r["n_tokens"] > 0 and r["vocab"] > 0
-            assert r["vocab"] <= r["n_tokens"]
-
-    def test_identical_distributions_give_zero(self, spark, tmp_path):
-        """Two sources speaking the exact corpus distribution: every
-        log term is exactly 0, so KL is exactly 0 for both."""
-        from modevetl_spark.queries.corpus import source_kl_divergence
-
-        pd.DataFrame(
-            {
-                "doc_id": [0, 1],
-                "text": ["x y x y", "x y x y"],
-                "source": ["srcA", "srcB"],
-            }
-        ).to_parquet(str(tmp_path / "documents.parquet"))
-        got = {
-            r["source"]: r
-            for r in source_kl_divergence(spark, str(tmp_path)).collect()
-        }
-        assert got["srcA"]["kl_bits"] == 0.0
-        assert got["srcB"]["kl_bits"] == 0.0
-        assert got["srcA"]["n_tokens"] == 4 and got["srcA"]["vocab"] == 2
-
-    def test_disjoint_vocabularies_give_one_bit(self, spark, tmp_path):
-        """Two equal-mass sources with disjoint vocabularies: each
-        source's tokens are exactly 2x over-represented vs the corpus,
-        so KL = log2(2) = 1 bit exactly, via integer-arg log2 terms."""
-        from modevetl_spark.queries.corpus import source_kl_divergence
-
-        pd.DataFrame(
-            {
-                "doc_id": [0, 1],
-                "text": ["a a a", "b b b"],
-                "source": ["srcA", "srcB"],
-            }
-        ).to_parquet(str(tmp_path / "documents.parquet"))
-        got = {
-            r["source"]: r["kl_bits"]
-            for r in source_kl_divergence(spark, str(tmp_path)).collect()
-        }
-        assert got == {"srcA": 1.0, "srcB": 1.0}
-
-    def test_plan_single_fact_scan_behind_checkpoint(self, spark, sf_dir):
-        from modevetl_spark.queries.corpus import source_kl_divergence
-        from tests.test_plans import plan
-
-        p = plan(source_kl_divergence(spark, sf_dir))
-        # the (source, token) agg ran eagerly behind the checkpoint:
-        # both marginals and the term join read the materialized table,
-        # never the documents parquet (zero fact rescans)
-        assert "documents" not in p
-        assert "SortMergeJoin" not in p
-        assert "Python" not in p
-        assert "BroadcastHashJoin" in p
-
-
 class TestCooccurPmi:
     def test_fixture_replay_and_contract(self, spark, sf_dir):
         """Every emitted PMI must replay exactly from its own integer

@@ -4,7 +4,6 @@ paragraph-dedup conservation, attribution join shape."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
@@ -885,60 +884,6 @@ def test_interarrival_sane(spark, sf_dir):
     assert r.n_gaps > 0
     assert 0 <= r.median_gap <= r.max_gap
     assert 0 <= r.mean_gap <= r.max_gap
-
-
-class TestModelCalibration:
-    def test_fixture_diagram_and_ece_replay(self, spark, sf_dir):
-        from modevetl_spark.queries.ml import model_calibration
-
-        rows = model_calibration(spark, sf_dir).collect()
-        assert len(rows) == 10
-        assert len({r["ece_micro"] for r in rows}) == 1
-        n_test_total = sum(r["n_test"] for r in rows)
-        for r in rows:
-            assert r["conf"] == r["pos_train"] / r["n_train"]
-            assert r["acc"] == r["pos_test"] / r["n_test"]
-            assert abs(r["gap"] - (r["acc"] - r["conf"])) == 0.0
-        # replay the 9dp term fold exactly from the integer counts
-        acc9 = sum(
-            round(
-                abs(
-                    r["pos_test"] / r["n_test"]
-                    - r["pos_train"] / r["n_train"]
-                )
-                * (r["n_test"] / n_test_total)
-                * 10**9
-            )
-            for r in rows
-        )
-        assert rows[0]["ece_micro"] == acc9 * 10**6 // 10**9
-
-    def test_all_positive_is_perfectly_calibrated(self, spark, tmp_path):
-        """Every order urgent: conf = acc = 1 in every bin, so every gap
-        is exactly 0 and ECE is exactly 0."""
-        from modevetl_spark.queries.ml import model_calibration
-
-        pd.DataFrame(
-            {
-                "o_orderkey": range(500),
-                "o_totalprice": [1000.0 * (i % 300) for i in range(500)],
-                "o_orderpriority": ["1-URGENT"] * 500,
-            }
-        ).to_parquet(str(tmp_path / "orders.parquet"))
-        rows = model_calibration(spark, str(tmp_path)).collect()
-        assert rows
-        for r in rows:
-            assert r["conf"] == 1.0 and r["acc"] == 1.0
-            assert r["gap"] == 0.0 and r["ece_micro"] == 0
-
-    def test_plan_one_exchange_no_window(self, spark, sf_dir):
-        from modevetl_spark.queries.ml import model_calibration
-        from tests.test_plans import plan
-
-        p = plan(model_calibration(spark, sf_dir))
-        assert "Python" not in p
-        assert "SortMergeJoin" not in p
-        assert "Window" not in p
 
 
 class TestEmbeddingPca:

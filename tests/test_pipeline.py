@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 import pyspark.sql.functions as F
 
 from modevetl_spark.operators.dedup import (
@@ -165,226 +164,6 @@ def test_quality_gate_and_redaction_front_end(spark, sf_dir):
     assert 0 < n_surv <= n_kept
     # survivors are a subset of the quality-kept ids
     assert survivors.join(kept, "doc_id", "left_anti").count() == 0
-
-
-class TestKAnonymity:
-    def test_fixture_ladder_invariants(self, spark, sf_dir):
-        from modevetl_spark.queries.pipeline import _KANON_K, privacy_kanonymity
-
-        rows = privacy_kanonymity(spark, sf_dir).collect()
-        assert len(rows) > 0
-        assert {r["level"] for r in rows} <= {0, 1, 3}
-        for r in rows:
-            assert r["risky"] == (r["class_size"] < _KANON_K)
-            assert r["n_rows"] == r["class_size"] * r["n_classes"]
-            assert 0.0 < r["row_share"] <= 1.0
-        # every level partitions the same population
-        by_level: dict = {}
-        for r in rows:
-            by_level[r["level"]] = by_level.get(r["level"], 0) + r["n_rows"]
-        assert len(set(by_level.values())) == 1
-        # generalization only merges classes: the minimum class size is
-        # weakly increasing up the ladder
-        mins = {
-            lv: min(r["class_size"] for r in rows if r["level"] == lv)
-            for lv in by_level
-        }
-        assert mins.get(0, 1) <= mins.get(1, 10**9)
-        assert mins.get(1, 1) <= mins.get(3, 10**9)
-
-    def test_hand_built_classes(self, spark, tmp_path):
-        """Four customers, two QI classes at level 0 that merge at each
-        generalization step — the histogram is hand-checkable."""
-        from modevetl_spark.queries.pipeline import privacy_kanonymity
-
-        pd.DataFrame(
-            {
-                "c_custkey": [1, 2, 3, 4],
-                "c_nationkey": [7, 7, 7, 8],
-                "c_mktsegment": ["AUTO", "AUTO", "AUTO", "AUTO"],
-                "c_acctbal": [100.0, 200.0, 1500.0, 100.0],
-            }
-        ).astype({"c_nationkey": "int32"}).to_parquet(str(tmp_path / "customer.parquet"))
-        got = {
-            (r["level"], r["class_size"]): (r["n_classes"], r["n_rows"])
-            for r in privacy_kanonymity(spark, str(tmp_path)).collect()
-        }
-        # level 0: (7,AUTO,0)x2, (7,AUTO,1)x1, (8,AUTO,0)x1
-        assert got[(0, 2)] == (1, 2) and got[(0, 1)] == (2, 2)
-        # level 1 (balance generalized): (7,AUTO)x3, (8,AUTO)x1
-        assert got[(1, 3)] == (1, 3) and got[(1, 1)] == (1, 1)
-        # level 3 (nation too): (AUTO)x4
-        assert got[(3, 4)] == (1, 4)
-        assert len(got) == 5
-
-    def test_plan_single_scan_no_python(self, spark, sf_dir):
-        from modevetl_spark.queries.pipeline import privacy_kanonymity
-        from tests.test_plans import plan
-
-        p = plan(privacy_kanonymity(spark, sf_dir))
-        assert "Python" not in p
-        assert "SortMergeJoin" not in p
-        # the ladder's rollup ran eagerly behind the checkpoint; the
-        # visible plan must NOT rescan customer (zero file scans — both
-        # branches read the materialized class table)
-        assert "customer" not in p
-
-
-class TestMixtureWeights:
-    def test_fixture_integer_identities(self, spark, sf_dir):
-        from modevetl_spark.queries.pipeline import (
-            _MIX_BUDGET_X,
-            _MIX_SHARES_BP,
-            mixture_weights,
-        )
-
-        rows = mixture_weights(spark, sf_dir).collect()
-        assert len(rows) == 20
-        budget = _MIX_BUDGET_X * sum(r["avail_tokens"] for r in rows)
-        for r in rows:
-            assert r["share_bp"] == _MIX_SHARES_BP[r["source"]]
-            assert r["required_tokens"] == budget * r["share_bp"] // 10000
-            assert (
-                r["rate_ppm"]
-                == r["required_tokens"] * 1_000_000 // r["avail_tokens"]
-            )
-            assert r["epochs"] == -(-r["required_tokens"] // r["avail_tokens"])
-            assert r["deficit_tokens"] == max(
-                r["required_tokens"] - r["avail_tokens"], 0
-            )
-        # the target mixture is deliberately non-uniform: both regimes
-        # must be exercised at every SF
-        assert any(r["rate_ppm"] < 1_000_000 for r in rows)
-        assert any(r["rate_ppm"] > 1_000_000 for r in rows)
-        assert any(r["epochs"] > 1 for r in rows)
-
-    def test_hand_built_plan_exact(self, spark, tmp_path):
-        """Two sources (10 vs 2000 tokens) force the upsample regime on
-        the high-share tiny source; every output is hand-computed."""
-        from modevetl_spark.queries.pipeline import mixture_weights
-
-        pd.DataFrame(
-            {
-                "doc_id": [0, 1],
-                "text": ["t " * 10, "u " * 2000],
-                "source": ["src0", "src19"],
-            }
-        ).to_parquet(str(tmp_path / "documents.parquet"))
-        got = {
-            r["source"]: r
-            for r in mixture_weights(spark, str(tmp_path)).collect()
-        }
-        assert set(got) == {"src0", "src19"}
-        # budget = 2 * 2010 = 4020; src0 share 900bp, src19 175bp
-        r0 = got["src0"]
-        assert (r0["avail_tokens"], r0["required_tokens"]) == (10, 361)
-        assert r0["rate_ppm"] == 36_100_000
-        assert r0["epochs"] == 37 and r0["deficit_tokens"] == 351
-        r19 = got["src19"]
-        assert (r19["avail_tokens"], r19["required_tokens"]) == (2000, 70)
-        assert r19["rate_ppm"] == 35_000
-        assert r19["epochs"] == 1 and r19["deficit_tokens"] == 0
-
-    def test_plan_bounded_after_one_agg(self, spark, sf_dir):
-        from modevetl_spark.queries.pipeline import mixture_weights
-        from tests.test_plans import plan
-
-        p = plan(mixture_weights(spark, sf_dir))
-        assert "SortMergeJoin" not in p
-        assert "Python" not in p
-        assert "Window" not in p
-        assert "BroadcastHashJoin" in p
-        # the token-mass agg ran eagerly behind the checkpoint; neither
-        # the budget scalar nor the plan join may rescan the fact
-        assert "documents" not in p
-
-
-class TestRaterAgreement:
-    def test_fixture_confusion_identities(self, spark, sf_dir):
-        from modevetl_spark.queries.pipeline import rater_agreement
-
-        rows = rater_agreement(spark, sf_dir).collect()
-        assert len(rows) == 5
-        for r in rows:
-            assert (
-                r["n11"] + r["n10"] + r["n01"] + r["n00"] == r["n_docs"]
-            )
-            assert 0.0 <= r["agree_rate"] <= 1.0
-            if r["kappa"] is not None:
-                assert r["kappa"] <= 1.0
-                # kappa replay from the integer confusion matrix
-                n = r["n_docs"]
-                pe = (r["n11"] + r["n10"]) * (r["n11"] + r["n01"]) + (
-                    r["n01"] + r["n00"]
-                ) * (r["n10"] + r["n00"])
-                assert r["kappa"] == (n * (r["n11"] + r["n00"]) - pe) / (
-                    n * n - pe
-                )
-
-    def test_hand_built_kappa_poles(self, spark, tmp_path):
-        """Three hand-built languages hit the three poles: perfect
-        agreement (kappa=1), exact independence (kappa=0), and the
-        degenerate single-cell matrix (kappa=NULL, guarded)."""
-        from modevetl_spark.queries.pipeline import rater_agreement
-
-        good_both = "the " * 60  # A: 60>=56; B: 60 stop, 60*16>=60
-        bad_both = "zz"  # 1 token, 0 stopwords
-        a_only = "zz " * 60  # 60 tokens, 0 stopwords
-        b_only = "the"  # 1 token, 1 stopword: 16 >= 1
-        docs = (
-            [("pp", good_both)] * 2
-            + [("pp", bad_both)] * 2
-            + [("ii", good_both), ("ii", a_only), ("ii", b_only),
-               ("ii", bad_both)]
-            + [("dd", good_both)] * 3
-        )
-        pd.DataFrame(
-            {
-                "doc_id": range(len(docs)),
-                "lang": [lang for lang, _ in docs],
-                "text": [t for _, t in docs],
-            }
-        ).to_parquet(str(tmp_path / "documents.parquet"))
-        got = {
-            r["lang"]: r
-            for r in rater_agreement(spark, str(tmp_path)).collect()
-        }
-        assert got["pp"]["kappa"] == 1.0 and got["pp"]["agree_rate"] == 1.0
-        assert got["ii"]["kappa"] == 0.0 and got["ii"]["agree_rate"] == 0.5
-        assert got["dd"]["kappa"] is None and got["dd"]["agree_rate"] == 1.0
-        assert (got["ii"]["n11"], got["ii"]["n10"],
-                got["ii"]["n01"], got["ii"]["n00"]) == (1, 1, 1, 1)
-
-    def test_plan_one_agg_no_join(self, spark, sf_dir):
-        from modevetl_spark.queries.pipeline import rater_agreement
-        from tests.test_plans import plan
-
-        p = plan(rater_agreement(spark, sf_dir))
-        # row-local labeler predicates + one hash agg: no join of any
-        # kind, no window, no Python
-        assert "Join" not in p
-        assert "Window" not in p
-        assert "Python" not in p
-
-
-class TestMixtureWeightsZeroMass:
-    def test_zero_mass_source_filtered(self, spark, tmp_path):
-        """A source whose every document is empty has no sampling rate
-        (division by zero in both engines): it is filtered, and its
-        zero mass does not perturb the budget."""
-        from modevetl_spark.queries.pipeline import mixture_weights
-
-        pd.DataFrame(
-            {
-                "doc_id": [0, 1, 2],
-                "text": ["t " * 100, "", "   "],
-                "source": ["src0", "src1", "src1"],
-            }
-        ).to_parquet(str(tmp_path / "documents.parquet"))
-        rows = mixture_weights(spark, str(tmp_path)).collect()
-        assert {r["source"] for r in rows} == {"src0"}
-        # budget = 2 * 100; src0 share 900bp -> required 18
-        assert rows[0]["required_tokens"] == 18
 
 
 class TestMixtureTemperature:

@@ -1,5 +1,5 @@
 """Tests for the retrieval keys (queries/retrieval.py): quantized and
-IVF top-k, MMR greedy semantics, RBO and NDCG against python
+IVF top-k, RBO and NDCG against python
 reference replays, hard-negative mining, and plan-shape gates.
 """
 
@@ -11,12 +11,9 @@ from fractions import Fraction
 from pyspark.sql import functions as F
 
 from modevetl_spark.queries.retrieval import (
-    _MMR_K,
-    _MMR_LAMBDA,
     _NDCG_K,
     _NDCG_Q,
     _RBO_D,
-    sim_mmr_rerank,
     sim_topk_ivf_sq,
 )
 from modevetl_spark.sources.catalog import load
@@ -109,83 +106,6 @@ class TestWave8Plans:
         # no shuffle (SortMergeJoin/ShuffledHashJoin) of the corpus side
         assert "SortMergeJoin" not in plan
         assert "ShuffledHashJoin" not in plan
-
-
-class TestMmrRerank:
-    def test_fixture_shape_and_rule(self, spark, sf_dir):
-        rows = sim_mmr_rerank(spark, sf_dir).collect()
-        by_q: dict = {}
-        for r in rows:
-            by_q.setdefault(r["query_id"], {})[r["pick_rank"]] = r
-        assert len(by_q) == 10
-        for picks in by_q.values():
-            assert sorted(picks) == [1, 2, 3]
-            # distinct picks, and pick 1 is the pure-relevance argmax
-            ids = {p["neighbor_id"] for p in picks.values()}
-            assert len(ids) == 3
-            assert picks[1]["mmr_score"] == _MMR_LAMBDA * picks[1]["rel"]
-            # later picks never beat the unpenalized first score
-            assert picks[2]["mmr_score"] <= picks[1]["mmr_score"] + 1e-12
-            assert picks[3]["mmr_score"] <= picks[1]["mmr_score"] + 1e-12
-
-    def test_duplicates_forced_out(self, spark, tmp_path):
-        """A shortlist whose two most-relevant candidates are identical
-        vectors: pure top-3 would take both; MMR must take only one of
-        the pair and reach for the diverse axes. Query [1,1,1,0] sees
-        e0/e0/e1/e2 at equal relevance (1/sqrt(3)): pick 1 is the first
-        e0 copy (id tie-break), and the sim=1 penalty (0.3 under
-        lambda=0.7) then drops the twin's score to 0.7/sqrt(3)-0.3 ~
-        0.104, far below the orthogonal candidates' untouched 0.404."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        e0 = [1.0, 0.0, 0.0, 0.0]
-        e1 = [0.0, 1.0, 0.0, 0.0]
-        e2 = [0.0, 0.0, 1.0, 0.0]
-        fillers = [
-            [-1.0, 0.0, 0.0, 0.0],
-            [0.0, -1.0, 0.0, 0.0],
-            [0.0, 0.0, -1.0, 0.0],
-            [0.1, -0.9, 0.0, 0.0],
-        ]
-        q = [1.0, 1.0, 1.0, 0.0]
-        pq.write_table(
-            pa.table(
-                {
-                    "vec_id": pa.array([0, 100, 101, 104, 105, 102, 103, 106, 107]),
-                    "embedding": pa.array(
-                        [q, e0, e0, e1, e2] + fillers, type=pa.list_(pa.float32())
-                    ),
-                    "label": pa.array([0] * 9, type=pa.int32()),
-                }
-            ),
-            str(tmp_path / "embeddings.parquet"),
-        )
-        rows = sim_mmr_rerank(spark, str(tmp_path)).collect()
-        picks = [
-            r["neighbor_id"]
-            for r in sorted(rows, key=lambda r: r["pick_rank"])
-            if r["query_id"] == 0
-        ]
-        assert len(picks) == _MMR_K
-        # only ONE of the identical pair {100, 101} survives
-        assert len({100, 101} & set(picks)) == 1
-        # the orthogonal candidates displace the twin
-        assert 104 in picks and 105 in picks
-
-    def test_plan_no_corpus_shuffle_after_shortlist(self, spark, sf_dir):
-        from tests.test_plans import plan
-
-        p = plan(sim_mmr_rerank(spark, sf_dir))
-        # r13 shape: the greedy chain replays on the driver over the
-        # config-bounded shortlist, so the RETURNED plan is the ≤
-        # |q|·k-row local relation — no join, no exchange, no window
-        # (the corpus-touching work is the shortlist pass and one
-        # predicate-pushdown vector fetch at build time)
-        assert "SortMergeJoin" not in p
-        assert "Exchange" not in p
-        assert "Window" not in p
-        assert "Join" not in p
 
 
 class TestRankRbo:

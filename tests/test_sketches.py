@@ -17,11 +17,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from modevetl_spark.operators.sketches import histogram_quantiles
-from modevetl_spark.queries.sketches import (
-    _BLOOM_M,
-    filter_bloom,
-    sketch_merge_quantiles,
-)
+from modevetl_spark.queries.sketches import sketch_merge_quantiles
 from modevetl_spark.sources.catalog import load
 
 
@@ -481,244 +477,6 @@ class TestKmvJaccard:
         assert r["m_cnt"] == r["union_exact"]
         assert r["j_est"] == r["j_exact"]
         assert r["abs_err"] == 0.0
-
-
-class TestFilterBloom:
-    def test_fixture_ledger(self, spark, sf_dir):
-        r = filter_bloom(spark, sf_dir).collect()[0]
-        assert r["no_false_negatives"] is True
-        assert r["n_pass"] >= r["n_exact"]  # superset guarantee
-        assert r["n_false_pos"] == r["n_pass"] - r["n_exact"]
-        assert 0.0 <= r["fp_rate"] <= 1.0
-        assert r["m"] == _BLOOM_M
-
-    def test_no_false_negatives_even_saturated(self, spark, tmp_path):
-        """Saturate the filter (build keys >> m): fp_rate degrades
-        toward 1 but the superset guarantee must hold exactly."""
-        n = 30000
-        orders = pd.DataFrame(
-            {
-                "o_custkey": range(n),
-                "o_orderpriority": ["1-URGENT" if i % 2 == 0 else "3-MEDIUM" for i in range(n)],
-            }
-        )
-        cust = pd.DataFrame({"c_custkey": range(n)})
-        orders.to_parquet(str(tmp_path / "orders.parquet"))
-        cust.to_parquet(str(tmp_path / "customer.parquet"))
-        r = filter_bloom(spark, str(tmp_path)).collect()[0]
-        assert r["no_false_negatives"] is True
-        assert r["n_exact"] == n // 2
-        assert r["n_pass"] >= r["n_exact"]
-
-    def test_plan_probe_broadcast_pruned(self, spark, sf_dir):
-        from tests.test_plans import plan
-
-        p = plan(filter_bloom(spark, sf_dir))
-        # membership tests are broadcast semi-joins; the probe side is
-        # never sort-merge shuffled
-        assert "SortMergeJoin" not in p
-        assert "Python" not in p
-
-
-class TestHeavyHittersGrouped:
-    def test_fixture_matches_exact_rule(self, spark, sf_dir):
-        from modevetl_spark.queries.sketches import _HHG_DENOM, heavy_hitters_grouped
-        from modevetl_spark.operators._util import spread
-        from modevetl_spark.operators.text import tokens
-        from modevetl_spark.sources.catalog import load
-
-        got = {
-            (r["lang"], r["tok"]): r["cnt"]
-            for r in heavy_hitters_grouped(spark, sf_dir).collect()
-        }
-        d = spread(load(spark, sf_dir, "documents"))
-        toks = d.where(F.col("lang").isNotNull()).select(
-            "lang", F.explode(tokens("text")).alias("tok")
-        )
-        cnt = toks.groupBy("lang", "tok").count()
-        tot = toks.groupBy("lang").agg(F.count(F.lit(1)).alias("n_grp"))
-        want = {
-            (r["lang"], r["tok"]): r["count"]
-            for r in cnt.join(tot, "lang")
-            .where(F.col("count") * _HHG_DENOM > F.col("n_grp"))
-            .collect()
-        }
-        assert got == want and len(got) > 0
-
-    def test_group_isolation_and_split_invariance(self, spark):
-        """A token overwhelmingly heavy in ONE group must be reported
-        for that group only, regardless of how rows are partitioned."""
-        from modevetl_spark.operators.sketches import (
-            heavy_hitters_grouped_exact,
-        )
-
-        rows = (
-            [("a", "hot")] * 120
-            + [("a", f"z{i}") for i in range(80)]
-            + [("b", "hot")] * 2
-            + [("b", f"y{i % 25}") for i in range(198)]
-        )
-        outs = []
-        for parts in (1, 7):
-            df = spark.createDataFrame(rows, "g string, t string").repartition(
-                parts
-            )
-            got = sorted(
-                (r["g"], r["t"], r["cnt"])
-                for r in heavy_hitters_grouped_exact(
-                    df, "g", "t", k=10, denom=10
-                ).collect()
-            )
-            outs.append(got)
-        assert outs[0] == outs[1]
-        got = dict(((g, t), c) for g, t, c in outs[0])
-        assert got[("a", "hot")] == 120  # 60% of group a
-        assert ("b", "hot") not in got  # 1% of group b: not heavy there
-        # group b's modal fillers are 198/25 < 10% — nothing qualifies
-        assert not any(g == "b" for (g, _), _ in got.items())
-
-
-class TestKmvGrouped:
-    def test_fixture_per_group_contract(self, spark, sf_dir):
-        from modevetl_spark.queries.sketches import sketch_group_distinct
-
-        rows = sketch_group_distinct(spark, sf_dir).collect()
-        assert len(rows) == 5  # one per priority
-        for r in rows:
-            assert r["bounds_ok"] is True, r
-            assert r["exact_distinct"] > 0
-
-    def test_mixed_regimes_and_partition_invariance(self, spark):
-        """One group above k (estimator regime), one below (exact by
-        rule) — both correct in the same result, identical under any
-        partitioning (duplicate hashes across partitions must not crowd
-        out a group's genuine k-th value)."""
-        from modevetl_spark.operators.sketches import kmv_distinct_grouped
-
-        k = 32
-        rows = [("big", (i * 7919) % 997) for i in range(3000)] + [
-            ("small", i % 9) for i in range(300)
-        ]
-        outs = []
-        for parts in (1, 11):
-            df = spark.createDataFrame(rows, "g string, v long").repartition(
-                parts
-            )
-            outs.append(
-                sorted(
-                    map(repr, kmv_distinct_grouped(df, "g", "v", k=k).collect())
-                )
-            )
-        assert outs[0] == outs[1]
-        df = spark.createDataFrame(rows, "g string, v long").repartition(11)
-        res = {
-            r["grp"]: r for r in kmv_distinct_grouped(df, "g", "v", k=k).collect()
-        }
-        small = res["small"]
-        assert small["k"] == 9 and small["est_distinct"] == 9.0
-        assert small["rel_err"] == 0.0
-        big = res["big"]
-        assert big["k"] == k and big["exact_distinct"] == 997
-
-
-class TestCountMin:
-    def test_fixture_regime_and_verdicts(self, spark, sf_dir):
-        from modevetl_spark.queries.sketches import _CM_K, sketch_countmin
-
-        rows = sketch_countmin(spark, sf_dir).collect()
-        assert len(rows) == _CM_K
-        assert all(r["never_under"] for r in rows)
-        assert all(r["overest"] == r["est_cnt"] - r["exact_cnt"] for r in rows)
-        # w < vocabulary forces collisions: the estimator regime must
-        # actually be exercised, not vacuously exact
-        assert any(r["overest"] > 0 for r in rows)
-        assert any(r["overest"] == 0 for r in rows)  # min-of-d helps some
-
-    def test_python_md5_replay_exact(self, spark):
-        """The whole sketch is deterministic integer arithmetic on md5
-        prefixes: an independent python replay (hashlib) must reproduce
-        every bucket mass and every point estimate exactly."""
-        import hashlib
-
-        from modevetl_spark.operators.sketches import (
-            countmin_estimate,
-            countmin_state,
-        )
-
-        w, d = 8, 4
-        counts = {f"tok{i}": (i * 13) % 29 + 1 for i in range(40)}
-        counted = spark.createDataFrame(
-            list(counts.items()), "tok string, c long"
-        )
-        state = countmin_state(counted, "tok", "c", w=w, d=d)
-        est = countmin_estimate(state, counted.select("tok"), "tok", w=w, d=d)
-
-        def h(tok: str, j: int) -> int:
-            return int(hashlib.md5(tok.encode()).hexdigest()[8 * j : 8 * j + 8], 16) % w
-
-        cm: dict = {}
-        for tok, c in counts.items():
-            for j in range(d):
-                cm[(j, h(tok, j))] = cm.get((j, h(tok, j)), 0) + c
-        got_state = {(r["j"], r["b"]): r["mass"] for r in state.collect()}
-        assert got_state == cm
-        want_est = {
-            tok: min(cm[(j, h(tok, j))] for j in range(d)) for tok in counts
-        }
-        got_est = {r["tok"]: r["est_cnt"] for r in est.collect()}
-        assert got_est == want_est
-        assert all(got_est[t] >= c for t, c in counts.items())
-
-    def test_null_keys_excluded_from_state(self, spark):
-        """Round-9 hardening (the NULL-key advice class, applied
-        family-wide): NULL keys hash to d b=NULL bucket rows no
-        probe can ever join back to — dead mass that skews any
-        total-mass audit. The state from a dirty count table must equal
-        the clean one's exactly."""
-        from modevetl_spark.operators.sketches import countmin_state
-
-        w, d = 8, 3
-        clean = spark.createDataFrame(
-            [("x", 3), ("y", 5), ("z", 2)], "k string, c long"
-        )
-        dirty = clean.unionAll(
-            spark.createDataFrame([(None, 11)], "k string, c long")
-        )
-        sc = {(r["j"], r["b"]): r["mass"] for r in countmin_state(clean, "k", "c", w=w, d=d).collect()}
-        sd = {(r["j"], r["b"]): r["mass"] for r in countmin_state(dirty, "k", "c", w=w, d=d).collect()}
-        assert sd == sc
-        assert sum(sd.values()) == d * 10  # the NULL's 11 carried no mass
-
-    def test_linear_sketch_merges(self, spark):
-        """CM is a linear sketch: state(A ⊎ B) == state(A) + state(B)
-        bucket-wise — the property that makes it the streaming/shard
-        merge choice."""
-        from modevetl_spark.operators.sketches import countmin_state
-
-        w, d = 8, 2
-        a = spark.createDataFrame(
-            [("x", 3), ("y", 5), ("z", 2)], "k string, c long"
-        )
-        b = spark.createDataFrame(
-            [("x", 4), ("w", 7)], "k string, c long"
-        )
-        sa = {(r["j"], r["b"]): r["mass"] for r in countmin_state(a, "k", "c", w=w, d=d).collect()}
-        sb = {(r["j"], r["b"]): r["mass"] for r in countmin_state(b, "k", "c", w=w, d=d).collect()}
-        both = a.unionByName(b).groupBy("k").agg(F.sum("c").alias("c"))
-        sab = {(r["j"], r["b"]): r["mass"] for r in countmin_state(both, "k", "c", w=w, d=d).collect()}
-        merged: dict = {}
-        for s in (sa, sb):
-            for kk, v in s.items():
-                merged[kk] = merged.get(kk, 0) + v
-        assert merged == sab
-
-    def test_plan_broadcast_probe_no_python(self, spark, sf_dir):
-        from modevetl_spark.queries.sketches import sketch_countmin
-        from tests.test_plans import plan
-
-        p = plan(sketch_countmin(spark, sf_dir))
-        assert "SortMergeJoin" not in p
-        assert "Python" not in p
 
 
 class TestHll:

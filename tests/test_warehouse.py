@@ -712,110 +712,6 @@ class TestReservoirDeterminism:
         assert "TakeOrderedAndProject" in plan, plan
 
 
-class TestWeightedReservoir:
-    def test_fixture_replay_and_gradient(self, spark, sf_dir):
-        """Every selected row's priority must replay exactly from
-        hashlib (min of w 32-bit md5 prefixes), and the weight mix must
-        show the A-ES gradient: urgent (w=5) orders land far more often
-        than low (w=1) orders."""
-        import hashlib
-
-        from modevetl_spark.queries.warehouse import _WRES_K, sample_reservoir_weighted
-
-        rows = sample_reservoir_weighted(spark, sf_dir).collect()
-        assert len(rows) == _WRES_K
-
-        def pri(key: int, w: int) -> int:
-            return min(
-                int(
-                    hashlib.md5(f"{key}#{i}".encode()).hexdigest()[:8], 16
-                )
-                for i in range(1, w + 1)
-            )
-
-        counts: dict = {}
-        for r in rows:
-            assert 1 <= r["weight"] <= 5
-            assert r["priority"] == pri(r["o_orderkey"], r["weight"])
-            counts[r["weight"]] = counts.get(r["weight"], 0) + 1
-        assert counts.get(5, 0) > counts.get(1, 0) > 0
-
-    def test_hand_built_exact_selection(self, spark, tmp_path):
-        """400 orders, k=200: the cut is real, and the exact selected
-        set + ordering replays from an independent python A-ES."""
-        import hashlib
-
-        from modevetl_spark.queries.warehouse import _WRES_K, sample_reservoir_weighted
-
-        n = 400
-        prios = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-        pd.DataFrame(
-            {
-                "o_orderkey": range(n),
-                "o_orderpriority": [prios[i % 5] for i in range(n)],
-                "o_totalprice": [float(i) for i in range(n)],
-            }
-        ).to_parquet(str(tmp_path / "orders.parquet"))
-
-        def pri(key: int, w: int) -> int:
-            return min(
-                int(
-                    hashlib.md5(f"{key}#{i}".encode()).hexdigest()[:8], 16
-                )
-                for i in range(1, w + 1)
-            )
-
-        want = sorted(
-            ((pri(k, 5 - (k % 5)), k, 5 - (k % 5)) for k in range(n))
-        )[:_WRES_K]
-        got = [
-            (r["priority"], r["o_orderkey"], r["weight"])
-            for r in sample_reservoir_weighted(spark, str(tmp_path)).collect()
-        ]
-        assert got == want
-
-    def test_plan_takeordered_no_exchange(self, spark, sf_dir):
-        from modevetl_spark.queries.warehouse import sample_reservoir_weighted
-        from tests.test_plans import plan
-
-        p = plan(sample_reservoir_weighted(spark, sf_dir))
-        # ORDER BY + LIMIT must compile to per-task k-row heaps merged
-        # on the driver — one streaming scan, zero shuffles
-        assert "TakeOrderedAndProject" in p
-        assert "Exchange" not in p
-        assert "Python" not in p
-
-
-class TestWeightedReservoirMalformed:
-    def test_weight_clamped_to_one(self, spark, tmp_path):
-        """A malformed priority digit >= 6 would give w <= 0, where
-        Spark's sequence(1, w) runs DESCENDING while DuckDB's
-        range(1, w+1) is empty -> NULL: the clamp pins both engines to
-        w = 1 (single replica hash), keeping the row sampleable."""
-        import hashlib
-
-        from modevetl_spark.queries.warehouse import sample_reservoir_weighted
-
-        pd.DataFrame(
-            {
-                "o_orderkey": [1, 2, 3],
-                "o_orderpriority": ["9-BOGUS", "6-ZERO", "1-URGENT"],
-                "o_totalprice": [1.0, 2.0, 3.0],
-            }
-        ).to_parquet(str(tmp_path / "orders.parquet"))
-        rows = {
-            r["o_orderkey"]: r
-            for r in sample_reservoir_weighted(spark, str(tmp_path)).collect()
-        }
-        assert len(rows) == 3
-        assert rows[1]["weight"] == 1 and rows[2]["weight"] == 1
-        assert rows[3]["weight"] == 5
-        for k in (1, 2):
-            assert rows[k]["priority"] == int(
-                hashlib.md5(f"{k}#1".encode()).hexdigest()[:8], 16
-            )
-
-
 class TestLinkageWeights:
     def test_fixture_scoring_contract(self, spark, sf_dir):
         """Scores are a pure function of the agreement pattern (all
